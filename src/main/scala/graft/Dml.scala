@@ -201,6 +201,8 @@ object Dml {
     }
     def litOnly0(p: LogicalPlan): Boolean = p match {
       case _: OneRowRelation => true
+      // the dual table a FROM-less SELECT reads (Engine.mysqlTrimSemantics)
+      case l: LocalRelation => l.output.isEmpty && l.data.size == 1
       case Project(_, c) => litOnly0(c)
       case SubqueryAlias(_, c) => litOnly0(c)
       case _ => false
@@ -876,7 +878,7 @@ object Dml {
         case None =>
           val gate = whereOpt.map(cond =>
             coalesce(expr(cond).cast("boolean"), lit(false)))
-          val affected = gate.map(g => t.filter(g).count()).getOrElse(t.count())
+          val affected = Engine.localCount(gate.map(t.filter).getOrElse(t))
           val t0 = t.withColumn("__rid__", monotonically_increasing_id())
           if (!ignore && e.strictWriteMode) {
             // strict out-of-range assignment into an integral column is
@@ -1041,9 +1043,9 @@ object Dml {
         case None => whereOpt match {
           case Some(cond) =>
             val pred = coalesce(expr(cond).cast("boolean"), lit(false))
-            applyDelete(t.filter(!pred), t.filter(pred).count())
+            applyDelete(t.filter(!pred), Engine.localCount(t.filter(pred)))
           case None =>
-            applyDelete(t.limit(0), t.count())
+            applyDelete(t.limit(0), Engine.localCount(t))
         }
       }
 

@@ -326,6 +326,53 @@ object Dialect {
   * the reference's in-memory integrator semantics.
   */
 object Engine {
+  /** The rows of an optimized plan that is already local: a LocalRelation
+    * (ConvertToLocalRelation folds Filter/Project/Limit over a stored
+    * generation), or a Union of them (INSERT appends a VALUES batch to a
+    * stored generation). None when producing the rows needs a job. */
+  private[graft] def localRows(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+    plan match {
+      case l: LocalRelation => Some(l.data)
+      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+        Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
+      case _ => None
+    }
+  }
+
+  /** Row count of `df`, read from its folded plan when the rows are
+    * already local, so DML affected-row counts over stored generations
+    * run no job. */
+  private[graft] def localCount(df: DataFrame): Long =
+    localRows(df.queryExecution.optimizedPlan).map(_.size.toLong).getOrElse(df.count())
+
+  /** The rows of a stored table generation. Spark walks every
+    * constructor argument of every plan node in its expression
+    * traversals (QueryPlan.mapExpressions maps `LocalRelation.data`
+    * element by element) and hashes it in the case-class hashCode, many
+    * times per statement, and throws the mapped copy away when no
+    * expression changed. So `map` here is deferred until an element is
+    * read and then computed once (dropping the reference to the source
+    * rows), and the hash is computed once. */
+  private[graft] final class StoredRows[A] private (val length: Int,
+      private[this] var compute: () => IndexedSeq[A])
+      extends scala.collection.immutable.AbstractSeq[A] with IndexedSeq[A] {
+    private[this] var forced: IndexedSeq[A] = _
+    private def rows: IndexedSeq[A] = synchronized {
+      if (compute != null) { forced = compute(); compute = null }
+      forced
+    }
+    def apply(i: Int): A = rows(i)
+    override def iterator: Iterator[A] = rows.iterator
+    override def map[B](f: A => B): IndexedSeq[B] = new StoredRows(length, () => rows.map(f))
+    override lazy val hashCode: Int = rows.hashCode
+  }
+
+  private[graft] object StoredRows {
+    def apply[A](rows: Vector[A]): StoredRows[A] = new StoredRows(rows.length, () => rows)
+  }
+
   /** Exact JVM-global registry of information_schema scaffolding view
     * names (the views live in the shared SparkSession): catalog listings
     * hide these by MEMBERSHIP, never by name prefix, so a user table
@@ -632,8 +679,18 @@ class Engine(val spark: SparkSession) {
     * string, not Spark's character-set reading). Applied to the ANALYZED
     * plan, before the optimizer's constant folding can evaluate a literal
     * trim with the wrong semantics. GraftExtensions installs the same
-    * rule as a resolution rule for extension-built sessions. */
+    * rule as a resolution rule for extension-built sessions.
+    *
+    * A FROM-less SELECT (a Project over OneRowRelation) reads the dual
+    * table instead: a one-row, zero-column LocalRelation, which the
+    * optimizer folds to its result row (ConvertToLocalRelation), so the
+    * statement runs no job (the reference answers it from its one-row
+    * memory/dual_table.go). Only deterministic projections without
+    * subqueries fold: RAND() keeps its per-execution value, and a scalar
+    * subquery keeps the OneRowRelation OptimizeOneRowRelationSubquery
+    * matches. */
   private def mysqlTrimSemantics(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, OneRowRelation, Project}
     val plan = df.queryExecution.analyzed
     // strip BEFORE the JSON rule: native comparisons only exist for it
     // to match once the adaptive MySqlCompare nodes have been reverted
@@ -642,7 +699,12 @@ class Engine(val spark: SparkSession) {
         functions.MySqlArithRewrite.stripIdentity(
           functions.expressions.MySqlCiLocateRule(
             functions.expressions.MySqlUnixTsScaleRule(
-              functions.expressions.MySqlTrimRule(plan))))))
+              functions.expressions.MySqlTrimRule(plan)))))) match {
+      case p @ Project(list, _: OneRowRelation) if list.forall(e => e.deterministic &&
+          !org.apache.spark.sql.catalyst.expressions.SubqueryExpression.hasSubquery(e)) =>
+        p.copy(child = LocalRelation(Nil, Seq(org.apache.spark.sql.catalyst.InternalRow.empty)))
+      case other => other
+    }
     if (rewritten eq plan) df
     else org.apache.spark.sql.GraftBridge.ofRows(spark, rewritten)
   }
@@ -2275,7 +2337,7 @@ class Engine(val spark: SparkSession) {
           }
         }
     }
-    val n = coerced.count()
+    val n = Engine.localCount(coerced)
     val unioned = target.unionByName(coerced, allowMissingColumns = fillMissing)
     replaceTable(table, unioned, bumpDepth = true)
     // advance the auto-increment counter past the batch (one scalar agg
@@ -2469,10 +2531,10 @@ class Engine(val spark: SparkSession) {
     * — later rows still hold their old keys, earlier surviving rows
     * their new ones — keeps its old values instead of erroring. The
     * scan is inherently sequential (each decision feeds the next), so
-    * it runs on the driver behind the same bounded-size gate as the
-    * write path's LocalRelation compaction; UPDATE IGNORE is an OLTP
-    * shape, not a 100 TB one. Both frames carry `__rid__`. Returns the
-    * adjusted post-update frame and the number of skipped rows. */
+    * it runs on the driver behind a fixed 100,000-row gate; UPDATE
+    * IGNORE is an OLTP shape, not a 100 TB one. Both frames carry
+    * `__rid__`. Returns the adjusted post-update frame and the number of
+    * skipped rows. */
   private[graft] def applyUpdateIgnore(table: String, oldDf: DataFrame,
                                        newDf: DataFrame): (DataFrame, Long) = {
     import org.apache.spark.sql.functions.col
@@ -3002,17 +3064,32 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** Re-point the table view at a new plan, materializing to a warehouse
-    * parquet generation once the accumulated plan depth crosses
-    * MaxUnionDepth (shared by INSERT appends and UPDATE/DELETE rewrites).
+  /** Re-point the table view at a new generation (shared by INSERT
+    * appends and UPDATE/DELETE rewrites). One size rule picks where the
+    * generation lives:
     *
-    * A plan whose leaves are ALL small LocalRelations (the ScriptTest
-    * flow: CREATE TABLE + VALUES inserts + view-rewrite DML) collapses to
-    * ONE LocalRelation instead: plans stay flat across any number of
-    * statements, and union-over-values trees never reach the optimizer
-    * (Spark's PushProjectionThroughUnion mishandles correlated outer
-    * references over such unions — "key not found" at optimization time).
-    * Bulk file-backed inserts keep the union/warehouse path. */
+    *  - Small: the optimizer's size estimate of the new contents fits
+    *    `Tables.fitsBroadcast` (the session's autoBroadcastJoinThreshold,
+    *    the gate `Tables.dim` uses). The rows are kept on the driver as
+    *    ONE LocalRelation of UnsafeRows, like the reference's in-memory
+    *    table (memory/table.go). A plan the optimizer already folded to
+    *    local rows (ConvertToLocalRelation over a stored generation, a
+    *    Union of them) is stored without a job; anything else runs one
+    *    `executeCollect`. The measured bytes of the rows are checked
+    *    against the same threshold, so an estimate that undershoots (a
+    *    generator such as `explode`) falls through to the file path below
+    *    instead of keeping the rows; that one collect is bounded by the
+    *    estimate alone. Later point reads and Filter/Project/Limit
+    *    reads fold in the optimizer (ConvertToLocalRelation) and run with
+    *    no job and no file scan, plans stay flat across any number of
+    *    statements, and union-over-values trees never reach the optimizer
+    *    (Spark's PushProjectionThroughUnion mishandles correlated outer
+    *    references over such unions — "key not found" at optimization
+    *    time).
+    *  - Otherwise (or with broadcasting disabled): the view unions the new
+    *    plan over the old one until the accumulated depth crosses
+    *    MaxUnionDepth, and then materializes a warehouse parquet
+    *    generation. */
   private[graft] def replaceTable(table: String, df0: DataFrame,
                                   bumpDepth: Boolean): Unit = {
     replaceTableInner(table, df0, bumpDepth)
@@ -3067,20 +3144,26 @@ class Engine(val spark: SparkSession) {
       insertDepth(table) = 0
       return
     }
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    val localRows = leaves.map {
-      case l: LocalRelation => l.data.length
-      case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => 1
-      case _ => -1
-    }
-    if (localRows.nonEmpty && localRows.forall(_ >= 0) &&
-        localRows.sum <= 100000) {
-      import scala.jdk.CollectionConverters._
-      val rows = df.collect().toSeq
-      spark.createDataFrame(rows.asJava, df.schema)
-        .createOrReplaceTempView(table)
-      insertDepth(table) = 0
-      return
+    val qe = df.queryExecution
+    if (Tables.fitsBroadcast(spark, qe.optimizedPlan.stats.sizeInBytes)) {
+      val (output, rows0) = Engine.localRows(qe.optimizedPlan) match {
+        case Some(rows) => (qe.optimizedPlan.output, rows)
+        case None => (qe.executedPlan.output, qe.executedPlan.executeCollect().toSeq)
+      }
+      val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+        .create(org.apache.spark.sql.catalyst.types.DataTypeUtils.fromAttributes(output))
+      val rows = rows0.iterator.map {
+        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => u
+        case r => toUnsafe(r).copy()
+      }.toVector
+      if (Tables.fitsBroadcast(spark, rows.iterator.map(_.getSizeInBytes.toLong).sum)) {
+        org.apache.spark.sql.GraftBridge.ofRows(spark, LocalRelation(
+          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema),
+          Engine.StoredRows(rows)))
+          .createOrReplaceTempView(table)
+        insertDepth(table) = 0
+        return
+      }
     }
     val d = insertDepth(table) + (if (bumpDepth) 1 else 0)
     if (d < MaxUnionDepth) {
@@ -5385,9 +5468,11 @@ class Engine(val spark: SparkSession) {
     // version=10, row_format=Dynamic, empty create_options/comment)
     tables.map { t =>
       val isView = t.tableType == "VIEW" || viewDefs.contains(t.name)
-      // table_rows: exact for LocalRelation-backed stored tables via
-      // plan stats (free — no job), like the reference's live count
-      // (tables_table.go); 0 when the estimate is unavailable
+      // table_rows: the optimized plan's row count, read without a job.
+      // Exact when the rows are stored on the driver (a LocalRelation
+      // generation, see replaceTable), like the reference's live count
+      // (tables_table.go). File-backed generations, lazy CTAS views and
+      // unions over them carry no row count and report 0.
       val rowsEst: java.lang.Long =
         if (isView) null
         else scala.util.Try(

@@ -66,12 +66,17 @@ object Tables {
     * Constant-size dims (nation=25, region=5, single-row scalar frames)
     * keep their unconditional `broadcast()` hints — those are scale-safe
     * by construction. */
-  def dim(df: DataFrame): DataFrame = {
-    val threshold =
-      org.apache.spark.sql.GraftBridge.autoBroadcastThreshold(df.sparkSession)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (threshold > 0 && est <= threshold)
+  def dim(df: DataFrame): DataFrame =
+    if (fitsBroadcast(df.sparkSession, df.queryExecution.optimizedPlan.stats.sizeInBytes))
       org.apache.spark.sql.functions.broadcast(df)
     else df
+
+  /** The one "small enough for the driver" rule: `bytes` (an optimizer
+    * estimate or a measured size) fits under the session's
+    * autoBroadcastJoinThreshold, and broadcasting is enabled. `dim` and
+    * the DML write path (`Engine.replaceTable`) both gate on it. */
+  def fitsBroadcast(spark: SparkSession, bytes: BigInt): Boolean = {
+    val threshold = org.apache.spark.sql.GraftBridge.autoBroadcastThreshold(spark)
+    threshold > 0 && bytes <= threshold
   }
 }

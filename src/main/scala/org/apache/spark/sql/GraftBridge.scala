@@ -30,6 +30,12 @@ object GraftBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.sqlParser.parsePlan(text)
 
+  /** Block until the listener bus has delivered every event posted so
+    * far: SparkListener callbacks run on the bus thread, after the job
+    * that posted them has returned. */
+  def awaitListenerBus(spark: SparkSession, timeoutMs: Long = 10000L): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
   /** The session's autoBroadcastJoinThreshold in bytes (-1 = disabled). */
   def autoBroadcastThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -822,4 +822,82 @@ class EngineSpec extends AnyFunSuite {
       Seq("i", "s"))
     e.query("drop table expl_t")
   }
+
+  // ---- small DML-written tables live on the driver (Engine.replaceTable) --
+
+  private def planNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    df.queryExecution.executedPlan.collect { case p => p }
+
+  test("UPDATE keeps a small copy as one LocalRelation: point reads run no job") {
+    val s2 = spark.newSession()
+    val e = new Engine(s2)
+    e.attachDir(sfDir)
+    e.query("CREATE TABLE small_orders AS SELECT o_orderkey, o_custkey, " +
+      "o_orderpriority FROM orders").collect()
+    val k = s2.table("orders").agg(org.apache.spark.sql.functions.min("o_orderkey"))
+      .collect()(0).getLong(0)
+    val n = s2.table("orders").count()
+    assert(e.query(s"UPDATE small_orders SET o_orderpriority = 'X' " +
+      s"WHERE o_orderkey = $k").collect()(0).getLong(0) == 1L)
+    val point = e.query(s"SELECT o_orderpriority FROM small_orders WHERE o_orderkey = $k")
+    val nodes = planNodes(point)
+    assert(nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec]),
+      nodes.mkString("\n"))
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]),
+      nodes.mkString("\n"))
+    val (rows, jobs) = Jobs.count(s2)(point.collect())
+    assert(rows.map(_.getString(0)).toSeq == Seq("X"))
+    assert(jobs == 0, s"point read over the stored generation ran $jobs jobs")
+    // the affected-row counts of later DML read the folded plan: no job
+    val (counts, dmlJobs) = Jobs.count(s2)(Seq(
+      e.query(s"UPDATE small_orders SET o_custkey = o_custkey + 1 WHERE o_orderkey = $k"),
+      e.query(s"DELETE FROM small_orders WHERE o_orderkey = $k"),
+      e.query(s"INSERT INTO small_orders VALUES ($k, 7, 'Y')")
+    ).map(_.collect()(0).getLong(0)))
+    assert(counts == Seq(1L, 1L, 1L))
+    assert(dmlJobs == 0, s"UPDATE/DELETE/INSERT on the stored generation ran $dmlJobs jobs")
+    assert(e.query(s"SELECT o_custkey, o_orderpriority FROM small_orders " +
+      s"WHERE o_orderkey = $k").collect().map(_.toSeq).toSeq == Seq(Seq(7L, "Y")))
+    assert(s2.table("small_orders").count() == n)
+  }
+
+  test("a generation whose measured bytes pass the budget stays off the driver") {
+    // the optimizer sizes explode(sequence(..)) as one small row, so the
+    // estimate passes the gate; the collected rows do not, and the
+    // table keeps the union / file path with correct contents
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
+    val e = new Engine(s2)
+    e.query("CREATE TABLE exploded (n INT)")
+    val n = 2000
+    val batch = s2.sql(s"SELECT explode(sequence(1, $n)) AS n")
+    assert(Tables.fitsBroadcast(s2, batch.queryExecution.optimizedPlan.stats.sizeInBytes),
+      "premise: the optimizer's estimate of the batch passes the gate")
+    for (i <- 1 to 5) {
+      val sql = s"INSERT INTO exploded SELECT explode(sequence(1, $n))"
+      assert(e.query(sql).collect()(0).getLong(0) == n.toLong)
+      val stored = s2.table("exploded").queryExecution.optimizedPlan
+      assert(!stored.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"insert $i: a ${i * n}-row generation was kept on the driver")
+      val r = e.query("SELECT COUNT(*), SUM(n) FROM exploded").collect()(0)
+      assert(r.getLong(0) == i.toLong * n && r.get(1).toString == (i.toLong * n * (n + 1) / 2).toString)
+    }
+    // past the union depth the generation is a parquet file
+    assert(planNodes(s2.table("exploded"))
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]))
+  }
+
+  test("a FROM-less SELECT runs no job; RAND() is left unfolded") {
+    val e = new Engine(spark.newSession())
+    val df = e.query("SELECT 1 + 1, CONCAT('du', 'al'), UPPER('x') AS u")
+    val (rows, jobs) = Jobs.count(e.spark)(df.collect())
+    assert(rows.map(_.toSeq.map(String.valueOf)).toSeq == Seq(Seq("2", "dual", "X")))
+    assert(jobs == 0, s"FROM-less SELECT ran $jobs jobs")
+    val rand = e.query("SELECT RAND()")
+    assert(rand.queryExecution.analyzed.collectLeaves().exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.OneRowRelation]))
+    val v = rand.collect()(0).getDouble(0)
+    assert(v >= 0.0 && v < 1.0)
+  }
 }

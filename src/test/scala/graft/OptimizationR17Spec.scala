@@ -115,30 +115,18 @@ class OptimizationR17Spec extends AnyFunSuite {
     // job. Pin jobs <= rounds + 2 (one initial label-sum, at most one
     // partition/materialization probe) so a second per-round action can
     // never sneak back in.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    // chain of diameter 31: several pointer-doubling rounds
+    // (localEdgeCap = 0 forces the distributed loop under measurement)
+    val edges = (0L until 31L).map(i => (i, i + 1)).toDF("src", "dst")
+    val ((labels, rounds), loopJobs) = Jobs.count(spark) {
+      operators.Dedup.connectedComponents(edges, localEdgeCap = 0)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // chain of diameter 31: several pointer-doubling rounds
-      // (localEdgeCap = 0 forces the distributed loop under measurement)
-      val edges = (0L until 31L).map(i => (i, i + 1)).toDF("src", "dst")
-      jobs.set(0)
-      val (labels, rounds) =
-        operators.Dedup.connectedComponents(edges, localEdgeCap = 0)
-      Thread.sleep(1000) // listener bus is async
-      val loopJobs = jobs.get
-      assert(rounds >= 3, s"chain graph should need several rounds, got $rounds")
-      assert(loopJobs <= rounds + 2,
-        s"$loopJobs jobs for $rounds rounds — a second per-round action appeared")
-      val mm = labels.agg(min(col("lbl")), max(col("lbl"))).collect()(0)
-      assert(mm.getLong(0) === 0L && mm.getLong(1) === 0L)
-      CacheScope.drain()
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rounds >= 3, s"chain graph should need several rounds, got $rounds")
+    assert(loopJobs <= rounds + 2,
+      s"$loopJobs jobs for $rounds rounds — a second per-round action appeared")
+    val mm = labels.agg(min(col("lbl")), max(col("lbl"))).collect()(0)
+    assert(mm.getLong(0) === 0L && mm.getLong(1) === 0L)
+    CacheScope.drain()
   }
 
   // ---- runtime Bloom filters at cluster scale (q8/q9/q18) --------------

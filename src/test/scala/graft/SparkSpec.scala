@@ -21,3 +21,26 @@ object SparkSpec {
   }
   val sfDir = "/root/testdata/sf0.001"
 }
+
+/** Counts the Spark jobs a block starts, in a listener scope of its own:
+  * the bus is drained before the listener attaches and again before the
+  * count is read, so neither an earlier test's jobs nor a late delivery
+  * lands in it. */
+object Jobs {
+  def count[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.GraftBridge.awaitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftBridge.awaitListenerBus(spark)
+      (r, n.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+}
