@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.SqlRewrite.{closingParen, indexOfTopLevelWord, scanTop,
+  splitTopLevel}
 
 /** MySQL DML/DDL text dispatch over the memory backend — the SQL-text
   * front door for the statements Spark SQL cannot run against temp views
@@ -110,25 +112,6 @@ object Dml {
       }
   }
 
-  /** Index of the ')' that closes an already-open paren sitting just
-    * before `s` (depth starts at 1); '…'/"…"/`…` literals are opaque. */
-  private def closingParen(s: String): Int = {
-    var depth = 1; var i = 0; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && i + 1 < s.length) i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
   private val CreateTableLike =
     re("""(?is)^\s*CREATE\s+(TEMPORARY\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?<T>\s+LIKE\s+<T>\s*$""")
   private val AlterTable =
@@ -396,14 +379,14 @@ object Dml {
   private def cteDml(e: Engine, sql: String): Option[DataFrame] = {
     if (!sql.trim.toUpperCase.startsWith("WITH")) return None
     val idxs = Seq("DELETE", "UPDATE", "INSERT", "REPLACE")
-      .map(k => topLevelIndexOfWord(sql, k)).filter(_ >= 0)
+      .map(k => indexOfTopLevelWord(sql, k)).filter(_ >= 0)
     if (idxs.isEmpty) return None
     val idx = idxs.min
     val cteText = sql.substring(0, idx).trim
     val dmlText = sql.substring(idx)
     val listText =
       cteText.replaceFirst("(?is)^\\s*WITH\\s+(RECURSIVE\\s+)?", "")
-    val names = topLevelSplit(listText, ',').map { item =>
+    val names = splitTop(listText).map { item =>
       """(?is)^\s*`?([A-Za-z_][A-Za-z0-9_]*)`?""".r.findFirstMatchIn(item)
         .map(_.group(1))
         .getOrElse(throw new IllegalArgumentException(s"malformed CTE: $item"))
@@ -454,8 +437,8 @@ object Dml {
     // run the insert, then project the expressions over the rows this
     // statement added (post defaults / auto-increment / coercion).
     case s0 if """(?is)^\s*INSERT\b""".r.findFirstIn(s0).isDefined &&
-        topLevelIndexOfWord(s0, "RETURNING") >= 0 =>
-      val at = topLevelIndexOfWord(s0, "RETURNING")
+        indexOfTopLevelWord(s0, "RETURNING") >= 0 =>
+      val at = indexOfTopLevelWord(s0, "RETURNING")
       val stmt = s0.substring(0, at).trim
       val exprsTxt = s0.substring(at + "RETURNING".length).trim
       val table = stmt match {
@@ -657,8 +640,8 @@ object Dml {
     case InsertSet(ignoreKw, tableRaw, assignText) =>
       val table = normName(tableRaw)
       // rewrite to the column-list VALUES form and re-dispatch
-      val pairs = topLevelSplit(assignText, ',').map { a =>
-        val eq = topLevelIndexOf(a, "=")
+      val pairs = splitTop(assignText).map { a =>
+        val eq = topLevelIndexOf(a, '=')
         require(eq > 0, s"malformed INSERT SET clause: $a")
         (a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`"),
           a.substring(eq + 1).trim)
@@ -673,8 +656,8 @@ object Dml {
       // the column-list VALUES form (replace_queries.go SET cases; a
       // duplicate column in the list errors like MySQL 1110)
       val table = normName(tableRaw)
-      val pairs = topLevelSplit(assignText, ',').map { a =>
-        val eq = topLevelIndexOf(a, "=")
+      val pairs = splitTop(assignText).map { a =>
+        val eq = topLevelIndexOf(a, '=')
         require(eq > 0, s"malformed REPLACE SET clause: $a")
         (a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`"),
           a.substring(eq + 1).trim)
@@ -725,8 +708,8 @@ object Dml {
       // doubles f32 first, then f64 multiplies by the NEW f32). Kept in
       // statement order; each layer coerces to the column's type the way
       // MySQL coerces on write.
-      val assigns = topLevelSplit(assignText, ',').map { a =>
-        val eq = topLevelIndexOf(a, "=")
+      val assigns = splitTop(assignText).map { a =>
+        val eq = topLevelIndexOf(a, '=')
         require(eq > 0, s"malformed SET clause: $a")
         val name = a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
         val ex = a.substring(eq + 1).trim
@@ -1135,14 +1118,13 @@ object Dml {
       if (e.procedures.contains(name.toLowerCase))
         throw new IllegalArgumentException(
           s"PROCEDURE $name already exists (MySQL error 1304)")
-      val params = topLevelSplit(paramsText, ',').map(_.trim)
-        .filter(_.nonEmpty).map { pTxt =>
-          if ("""(?i)^(OUT|INOUT)\b""".r.findFirstIn(pTxt).isDefined)
-            throw new IllegalArgumentException(
-              "unsupported procedure parameter mode (IN only): " + pTxt)
-          val parts = pTxt.replaceFirst("(?i)^IN\\s+", "").split("\\s+", 2)
-          (stripTick(parts(0)), parts.lift(1).getOrElse("").trim)
-        }
+      val params = splitTop(paramsText).map { pTxt =>
+        if ("""(?i)^(OUT|INOUT)\b""".r.findFirstIn(pTxt).isDefined)
+          throw new IllegalArgumentException(
+            "unsupported procedure parameter mode (IN only): " + pTxt)
+        val parts = pTxt.replaceFirst("(?i)^IN\\s+", "").split("\\s+", 2)
+        (stripTick(parts(0)), parts.lift(1).getOrElse("").trim)
+      }
       var body = body0.trim.stripSuffix(";").trim
       if (body.toUpperCase.startsWith("BEGIN")) {
         if (!body.toUpperCase.endsWith("END"))
@@ -1167,21 +1149,19 @@ object Dml {
       val (params, body) = e.procedures.getOrElse(name.toLowerCase,
         throw new IllegalArgumentException(
           s"PROCEDURE $name does not exist (MySQL error 1305)"))
-      val args = Option(argsText).map(topLevelSplit(_, ',').map(_.trim)
-        .filter(_.nonEmpty)).getOrElse(Seq.empty)
+      val args = Option(argsText).map(splitTop(_)).getOrElse(Seq.empty)
       if (args.length != params.length)
         throw new IllegalArgumentException(
           s"Incorrect number of arguments for PROCEDURE $name; " +
           s"expected ${params.length}, got ${args.length} (MySQL 1318)")
       var last: Option[DataFrame] = None
-      topLevelSplit(body, ';').map(_.trim).filter(_.nonEmpty)
-        .foreach { st0 =>
-          val st = params.zip(args).foldLeft(st0) { case (t, ((pn, _), a)) =>
-            t.replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(pn) +
-              "\\b", java.util.regex.Matcher.quoteReplacement(s"($a)"))
-          }
-          last = Some(e.query(st))
+      splitTop(body, ';').foreach { st0 =>
+        val st = params.zip(args).foldLeft(st0) { case (t, ((pn, _), a)) =>
+          t.replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(pn) +
+            "\\b", java.util.regex.Matcher.quoteReplacement(s"($a)"))
         }
+        last = Some(e.query(st))
+      }
       // MySQL CALL returns the last statement's result set when it is a
       // query; writes return a bare OkResult
       Some(last.filter(df =>
@@ -1213,8 +1193,8 @@ object Dml {
       Some(ok(e, 0L))
 
     case RenameTables(listText)
-        if topLevelSplit(listText, ',').forall(RenamePair.matches) =>
-      topLevelSplit(listText, ',').foreach { item =>
+        if splitTop(listText).forall(RenamePair.matches) =>
+      splitTop(listText).foreach { item =>
         val RenamePair(oldRaw, newRaw) = item: @unchecked
         val oldN = stripTick(oldRaw.trim)
         val newN = stripTick(newRaw.trim)
@@ -1239,7 +1219,7 @@ object Dml {
       // "DROP TABLE, with multiple tables, sorts by foreign key
       // dependencies"). A cycle falls back to listing order (and drop()
       // raises 3730 exactly like MySQL would).
-      var remaining = topLevelSplit(listText, ',')
+      var remaining = splitTop(listText)
         .map(n => normName(stripTick(n.trim))).toList
       while (remaining.nonEmpty) {
         val next = remaining.find(t =>
@@ -1275,9 +1255,9 @@ object Dml {
     // BEFORE SetVar: its greedy tail would swallow a whole list as one
     // user-var expression.
     case SetList(listText) if {
-      topLevelSplit(listText, ',').forall(SetItem.matches)
+      splitTop(listText).forall(SetItem.matches)
     } =>
-      topLevelSplit(listText, ',').foreach { item =>
+      splitTop(listText).foreach { item =>
         val SetItem(target, value0) = item: @unchecked
         // a bare user-var RHS resolves here — SET statements skip the
         // front door's substitution (the TARGET must stay `@name`), so
@@ -1360,7 +1340,7 @@ object Dml {
       // quote-aware split: a string parameter containing a comma
       // ('a,b') is ONE positional binding, not two
       val params: Seq[Any] = Option(usingOpt).toSeq
-        .flatMap(s => topLevelSplit(s, ',')).map(_.trim).map { tok =>
+        .flatMap(splitTop(_)).map { tok =>
           if (tok.startsWith("@")) e.getVarRaw(tok.stripPrefix("@")).orNull
           else if (tok.startsWith("'") && tok.endsWith("'"))
             tok.substring(1, tok.length - 1).replace("''", "'")
@@ -1375,22 +1355,9 @@ object Dml {
         }
       // bind-arity check (prepared_statement_queries.go): every `?`
       // needs a USING value, and extra values are an error
-      val markers = {
-        var n = 0; var quote: Char = 0; var i = 0
-        while (i < body.length) {
-          val c = body.charAt(i)
-          if (quote != 0) {
-            if (c == '\\' && quote != '`') i += 1
-            else if (c == quote) quote = 0
-          } else c match {
-            case '\'' | '"' | '`' => quote = c
-            case '?' => n += 1
-            case _ =>
-          }
-          i += 1
-        }
-        n
-      }
+      val marks = scala.collection.mutable.ArrayBuffer.empty[Int]
+      scanTop(body) { (i, c, _) => if (c == '?') marks += i; -1 }
+      val markers = marks.length
       if (params.length < markers)
         throw new IllegalArgumentException(
           s"bind variable not provided: 'v${params.length + 1}'")
@@ -1411,23 +1378,8 @@ object Dml {
           case t: java.sql.Timestamp => s"'$t'"
           case other => String.valueOf(other)
         }
-        val sb = new StringBuilder
-        var quote: Char = 0; var i = 0; var p = 0
-        while (i < body.length) {
-          val c = body.charAt(i)
-          if (quote != 0) {
-            sb.append(c)
-            if (c == '\\' && quote != '`' && i + 1 < body.length) {
-              sb.append(body.charAt(i + 1)); i += 1
-            } else if (c == quote) quote = 0
-          } else c match {
-            case '\'' | '"' | '`' => quote = c; sb.append(c)
-            case '?' => sb.append(lit(params(p))); p += 1
-            case _ => sb.append(c)
-          }
-          i += 1
-        }
-        Some(e.query(sb.result()))
+        Some(e.query(SqlRewrite.splice(body,
+          marks.zip(params).map { case (at, v) => (at, at + 1, lit(v)) }.toSeq)))
       }
 
     case DeallocStmt(name) =>
@@ -1545,8 +1497,8 @@ object Dml {
             .flatMap(_.split(",")).map(_.trim.stripPrefix("`")
               .stripSuffix("`")).filter(_.nonEmpty)
           val sets = Option(m.group(8)).toSeq
-            .flatMap(t => topLevelSplit(t, ',')).map { a =>
-              val eq = topLevelIndexOf(a, "=")
+            .flatMap(splitTop(_)).map { a =>
+              val eq = topLevelIndexOf(a, '=')
               require(eq > 0, s"malformed LOAD DATA SET clause: $a")
               (a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`"),
                 a.substring(eq + 1).trim)
@@ -1698,7 +1650,7 @@ object Dml {
       // items are plain columns or parenthesized FUNCTIONAL expressions
       // — CREATE INDEX idx ON t ((LOWER(name))), reference
       // indexed_expressions_queries.go
-      val items = splitTop(cols).map(_.trim).filter(_.nonEmpty)
+      val items = splitTop(cols)
       val (exprItems0, colItems) = items.partition(_.startsWith("("))
       val exprItems = exprItems0
         .map(s => s.stripPrefix("(").stripSuffix(")").trim)
@@ -2061,32 +2013,10 @@ object Dml {
   /** MySQL LIKE filter for SHOW output (% and _ wildcards). */
   // ---- CREATE TABLE (col defs) / ALTER TABLE ---------------------------
 
-  /** split on top-level commas, aware of parens and '/"/` literals */
-  private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == '\\' && quote != '`' && i + 1 < s.length) {
-          cur.append(s.charAt(i + 1)); i += 1
-        } else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case ')' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.result(); cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.result()
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
+  /** `s` split on top-level `sep` (literal- and paren-aware), pieces
+    * trimmed, empty ones dropped. */
+  private def splitTop(s: String, sep: Char = ','): Seq[String] =
+    splitTopLevel(s, sep).map(_.trim).filter(_.nonEmpty)
 
   /** MySQL column type text -> Spark type (+ ENUM/SET vocabulary).
     * (reference sql/types type mapping: number.go, string.go, enum.go) */
@@ -2283,8 +2213,8 @@ object Dml {
     """(?is)\bDEFAULT(?:\s+|\s*(?=\())""".r.findFirstMatchIn(spec).map { m =>
       val s = spec.substring(m.end)
       if (s.startsWith("(")) {
-        val close = closingParen(s.substring(1))
-        if (close < 0) s else s.substring(0, close + 2)
+        val close = closingParen(s, 1)
+        if (close < 0) s else s.substring(0, close + 1)
       } else if (s.startsWith("'"))
         """'(?:[^'\\]|\\.|'')*'""".r.findPrefixOf(s)
           .getOrElse(s.takeWhile(!_.isWhitespace))
@@ -2324,7 +2254,7 @@ object Dml {
       s"incorrect prefix key '$c'; the used key part isn't a string, " +
       "the used length is longer than the key part, or the storage " +
       "engine doesn't support unique prefix keys (MySQL 1089)")
-    splitTop(colsRaw).map(_.trim).filter(_.nonEmpty).map { p =>
+    splitTop(colsRaw).map { p =>
       p match {
         case Part(c0, len0) =>
           val c = stripTick(c0)
@@ -2796,7 +2726,7 @@ object Dml {
     if (patches.nonEmpty && hasList)
       throw new IllegalArgumentException(
         s"Column count doesn't match value count at row 1 (MySQL 1136)")
-    if (patches.isEmpty) body else SqlRewrite.splicePublic(body, patches.toSeq)
+    if (patches.isEmpty) body else SqlRewrite.splice(body, patches.toSeq)
   }
 
   /** Existence gate for every CREATE TABLE form: an existing table or
@@ -2810,29 +2740,16 @@ object Dml {
     * quote-aware: returns (optionsText, Some(selectText)) or
     * (tail, None). */
   private def splitSelectTail(tail: String): (String, Option[String]) = {
-    var i = 0; var quote: Char = 0
-    while (i < tail.length) {
-      val c = tail.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"' || c == '`') quote = c
-      else if ((c == 'S' || c == 's') &&
-          tail.regionMatches(true, i, "SELECT", 0, 6) &&
-          (i == 0 || (!Character.isLetterOrDigit(tail.charAt(i - 1)) &&
-            tail.charAt(i - 1) != '_')) &&
-          (i + 6 >= tail.length ||
-            (!Character.isLetterOrDigit(tail.charAt(i + 6)) &&
-              tail.charAt(i + 6) != '_'))) {
-        val head = tail.substring(0, i).replaceAll("(?is)\\bAS\\s*$", "")
-          .replaceAll("\\(\\s*$", "") // strip an opening paren of (SELECT…)
-        return (head.trim, Some(tail.substring(i,
-          if (tail.substring(0, i).trim.endsWith("(")) tail.lastIndexOf(')')
-          else tail.length)))
-      }
-      i += 1
+    val i = scanTop(tail)((j, _, _) =>
+      if (SqlRewrite.wordAt(tail, j, "SELECT")) j else -1)
+    if (i < 0) (tail, None)
+    else {
+      val head = tail.substring(0, i).replaceAll("(?is)\\bAS\\s*$", "")
+        .replaceAll("\\(\\s*$", "") // strip an opening paren of (SELECT…)
+      (head.trim, Some(tail.substring(i,
+        if (tail.substring(0, i).trim.endsWith("(")) tail.lastIndexOf(')')
+        else tail.length)))
     }
-    (tail, None)
   }
 
   /** MySQL identifiers are limited to 64 characters (reference
@@ -4107,8 +4024,8 @@ object Dml {
     val srcColsLower = rowAlias.flatMap(_._2).getOrElse(Seq.empty)
       .map(_.toLowerCase).toSet
     val tcolsLower = t.columns.map(_.toLowerCase).toSet
-    val assigns = topLevelSplit(assignText0, ',').map { a =>
-      val eq = topLevelIndexOf(a, "=")
+    val assigns = splitTop(assignText0).map { a =>
+      val eq = topLevelIndexOf(a, '=')
       require(eq > 0, s"malformed ON DUPLICATE KEY UPDATE clause: $a")
       // the assignment target is always a TARGET-TABLE column: a foreign
       // qualifier on the lhs is MySQL's table-not-found (ODKU cannot
@@ -4359,9 +4276,8 @@ object Dml {
   private def splitOnDuplicate(body: String): (String, Option[String]) = {
     var from = 0
     while (from < body.length) {
-      val i = topLevelIndexOfWord(body.substring(from), "ON")
-      if (i < 0) return (body, None)
-      val abs = from + i
+      val abs = indexOfTopLevelWord(body, "ON", from)
+      if (abs < 0) return (body, None)
       val rest = body.substring(abs + 2)
       val m = "(?is)^\\s+DUPLICATE\\s+KEY\\s+UPDATE\\b(.*)$".r.findFirstMatchIn(rest)
       if (m.isDefined) return (body.substring(0, abs), Some(m.get.group(1)))
@@ -4413,7 +4329,7 @@ object Dml {
     }
     // ';' splits statements, but an IF … THEN … ; END IF block spans
     // one — reassemble pieces until the block closes
-    val pieces = topLevelSplit(b, ';').map(_.trim).filter(_.nonEmpty)
+    val pieces = splitTop(b, ';')
     val stmts = scala.collection.mutable.ArrayBuffer.empty[String]
     var acc = ""
     pieces.foreach { p =>
@@ -4485,8 +4401,8 @@ object Dml {
 
     // assignments: [alias.]col = expr; an unqualified column must be
     // unambiguous among the referenced tables (MySQL resolution)
-    val assigns = topLevelSplit(assignText, ',').map { a =>
-      val eq = topLevelIndexOf(a, "=")
+    val assigns = splitTop(assignText).map { a =>
+      val eq = topLevelIndexOf(a, '=')
       require(eq > 0, s"malformed SET clause: $a")
       val lhs = a.substring(0, eq).trim
       val ex = a.substring(eq + 1).trim
@@ -4668,7 +4584,7 @@ object Dml {
   }
 
   private def splitWhere(s: String): (String, Option[String]) = {
-    val i = topLevelIndexOfWord(s, "WHERE")
+    val i = indexOfTopLevelWord(s, "WHERE")
     if (i < 0) (s, None)
     else (s.substring(0, i), Some(s.substring(i + 5)))
   }
@@ -4676,8 +4592,8 @@ object Dml {
   /** Split a trailing top-level `ORDER BY …` / `LIMIT …` clause pair off
     * a DML statement tail (MySQL UPDATE/DELETE ordering + row caps). */
   private def splitOrderLimit(s: String): (String, Option[String]) = {
-    val io = topLevelIndexOfWord(s, "ORDER")
-    val il = topLevelIndexOfWord(s, "LIMIT")
+    val io = indexOfTopLevelWord(s, "ORDER")
+    val il = indexOfTopLevelWord(s, "LIMIT")
     val i = (io, il) match {
       case (-1, -1) => -1
       case (-1, b) => b
@@ -4687,63 +4603,7 @@ object Dml {
     if (i < 0) (s, None) else (s.substring(0, i), Some(s.substring(i)))
   }
 
-  private def scan(s: String)(f: (Int, Char, Int) => Int): Int = {
-    var depth = 0
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < n && (s.charAt(i) != q ||
-                 (i + 1 < n && s.charAt(i + 1) == q && { i += 1; true }))) {
-            if (s.charAt(i) == '\\' && q != '`' && i + 1 < n) i += 1
-            i += 1
-          }
-          i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case ch =>
-          val r = f(i, ch, depth)
-          if (r >= 0) return r
-          i += 1
-      }
-    }
-    -1
-  }
+  private def topLevelIndexOf(s: String, ch: Char): Int =
+    scanTop(s)((i, c, d) => if (d == 0 && c == ch) i else -1)
 
-  private def topLevelIndexOfWord(s: String, word: String): Int =
-    scan(s) { (i, ch, depth) =>
-      if (depth == 0 && ch.toUpper == word.head &&
-          i + word.length <= s.length &&
-          s.substring(i, i + word.length).equalsIgnoreCase(word) &&
-          (i == 0 || !s.charAt(i - 1).isLetterOrDigit) &&
-          (i + word.length == s.length ||
-            !s.charAt(i + word.length).isLetterOrDigit)) i else -1
-    }
-
-  private def topLevelIndexOf(s: String, tok: String): Int =
-    scan(s) { (i, ch, depth) =>
-      if (depth == 0 && ch == tok.head &&
-          s.regionMatches(i, tok, 0, tok.length)) i else -1
-    }
-
-  private def topLevelSplit(s: String, sep: Char): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var last = 0
-    var from = 0
-    var continue = true
-    while (continue) {
-      val i = scan(s.substring(from)) { (j, ch, depth) =>
-        if (depth == 0 && ch == sep) j else -1
-      }
-      if (i < 0) { parts += s.substring(last); continue = false }
-      else {
-        parts += s.substring(last, from + i)
-        from = from + i + 1
-        last = from
-      }
-    }
-    parts.result().map(_.trim).filter(_.nonEmpty)
-  }
 }

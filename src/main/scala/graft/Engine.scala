@@ -25,9 +25,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Dialect {
 
-  private def rewriteCode(code: String): String =
-    rewriteCode(code, pipesAsConcat = false)
-
   /** Set per-statement before the chunk passes run: table DDL keeps its
     * MySQL collation names (the column-def parser records them as
     * catalog metadata and maps to Spark collations itself). */
@@ -36,15 +33,7 @@ object Dialect {
   }
 
   private def rewriteCode(code: String, pipesAsConcat: Boolean): String = {
-    val chained = rewriteCode0(code, pipesAsConcat)
-    // MySQL names VALUES table-constructor columns column_0, column_1…
-    // (0-based); Spark names them col1, col2… (1-based). The generated
-    // name pattern is distinctive enough to map directly.
-    ColumnNRe.replaceAllIn(chained, m => "col" + (m.group(1).toInt + 1))
-  }
-
-  private def rewriteCode0(code: String, pipesAsConcat: Boolean): String =
-    (if (skipCollateMap.get()) code else rewriteCollate(code))
+    val chained = (if (skipCollateMap.get()) code else rewriteCollate(code))
       .replaceAll("(?i)\\bLIMIT\\s+(\\d+)\\s*,\\s*(\\d+)", "LIMIT $2 OFFSET $1")
       // CHAR(… USING charset) — the charset clause is a no-op here
       // (queries.go:8642 `char(97, 98, 99 using utf8mb4)` -> 'abc')
@@ -122,6 +111,11 @@ object Dialect {
       // `t AS OF n` resolves to the Engine.snapshot-pinned view
       .replaceAll("(?i)\\b([A-Za-z_][A-Za-z0-9_]*)\\s+AS\\s+OF\\s+(\\d+)",
         "$1__asof_$2")
+    // MySQL names VALUES table-constructor columns column_0, column_1…
+    // (0-based); Spark names them col1, col2… (1-based). The generated
+    // name pattern is distinctive enough to map directly.
+    ColumnNRe.replaceAllIn(chained, m => "col" + (m.group(1).toInt + 1))
+  }
 
   private val ColumnNRe = """(?i)\bcolumn_(\d+)\b""".r
 
@@ -235,26 +229,12 @@ object Dialect {
     base ++ locales
   }
 
-  def rewrite(sql: String): String = {
-    // token-level passes first (each is literal-aware on its own):
+  /** The dialect pass: token-level passes first (each is literal-aware
+    * on its own), then the regex chain over each code run. With
+    * PIPES_AS_CONCAT, `||` stays Spark's native string concatenation. */
+  def rewrite(sql: String, pipesAsConcat: Boolean = false): String = {
     // GROUP_CONCAT(...SEPARATOR...) -> listagg, MySQL XOR truthiness,
     // DATE_ADD/SUB(x, INTERVAL …) -> timestamp arithmetic, CONVERT -> CAST
-    val pre = SqlRewrite.optimizerHints(SqlRewrite.forUpdateClause(SqlRewrite.inSubquerySelectList(SqlRewrite.orderlessRankWindow(
-      SqlRewrite.tupleCompare(SqlRewrite.tupleSubqueryAll(SqlRewrite.jsonYearCasts(SqlRewrite.wideDecimalLiteralCast(SqlRewrite.quoteWideNumericLiterals(SqlRewrite.convertFn(
-        SqlRewrite.dateArith(SqlRewrite.xor(SqlRewrite.infixMod(SqlRewrite.groupConcat(SqlRewrite.groupConcatOrderSubquery(
-          SqlRewrite.matchAgainst(SqlRewrite.windowJsonArrayAgg(SqlRewrite.jsonArrows(
-            SqlRewrite.hoistParenUnionTail(
-              SqlRewrite.hoistNestedWith(SqlRewrite.bitLiterals(sql)))))))))))))))))))))
-    skipCollateMap.set(
-      """(?is)^\s*(?:CREATE\s+(?:TEMPORARY\s+)?TABLE|ALTER\s+TABLE)\b""".r
-        .findFirstIn(sql).isDefined)
-    try mapCode(pre)(rewriteCode)
-    finally skipCollateMap.set(false)
-  }
-
-  /** Session-aware variant: PIPES_AS_CONCAT leaves `||` as Spark's
-    * native string concatenation. */
-  def rewrite(sql: String, pipesAsConcat: Boolean): String = {
     val pre = SqlRewrite.optimizerHints(SqlRewrite.forUpdateClause(SqlRewrite.inSubquerySelectList(SqlRewrite.orderlessRankWindow(
       SqlRewrite.tupleCompare(SqlRewrite.tupleSubqueryAll(SqlRewrite.jsonYearCasts(SqlRewrite.wideDecimalLiteralCast(SqlRewrite.quoteWideNumericLiterals(SqlRewrite.convertFn(
         SqlRewrite.dateArith(SqlRewrite.xor(SqlRewrite.infixMod(SqlRewrite.groupConcat(SqlRewrite.groupConcatOrderSubquery(
@@ -273,45 +253,30 @@ object Dialect {
   }
 
   /** Apply `f` to each non-literal, non-comment run of `sql`, copying
-    * quoted literals ('…', "…", `…`) and comments through verbatim. The
-    * literal-splitting walk every text rewrite in the engine must use —
-    * a plain replaceAll over full statement text corrupts string literals
-    * that happen to contain rewrite-shaped text. */
+    * quoted literals ('…', "…", `…`) and comments through verbatim (a `#`
+    * comment becomes `--`): a plain replaceAll over full statement text
+    * corrupts string literals that happen to contain rewrite-shaped text.
+    * Literal and comment bounds come from the one lexer,
+    * [[SqlRewrite.literalEnd]] / [[SqlRewrite.commentEnd]]. */
   def mapCode(sql: String)(f: String => String): String = {
     val out = new StringBuilder
-    val code = new StringBuilder // non-literal run awaiting regex rewrites
-    def flushCode(): Unit = { out.append(f(code.result())); code.clear() }
+    var code = 0 // start of the code run awaiting `f`
     var i = 0
     val n = sql.length
     while (i < n) {
-      sql.charAt(i) match {
-        case q @ ('\'' | '"' | '`') => // copy quoted literal verbatim
-          flushCode()
-          val start = i; i += 1
-          // doubled-quote + backslash escapes ('it\'s'), as in SqlRewrite.tokenize
-          while (i < n && (sql.charAt(i) != q ||
-                 (i + 1 < n && sql.charAt(i + 1) == q && { i += 1; true }))) {
-            if (sql.charAt(i) == '\\' && q != '`' && i + 1 < n) i += 1
-            i += 1
-          }
-          i = math.min(i + 1, n)
-          out.append(sql.substring(start, i))
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' => // -- comment
-          flushCode()
-          val start = i
-          while (i < n && sql.charAt(i) != '\n') i += 1
-          out.append(sql.substring(start, i))
-        case '#' => // MySQL # comment -> --
-          flushCode()
-          out.append("--")
-          i += 1
-          while (i < n && sql.charAt(i) != '\n') { out.append(sql.charAt(i)); i += 1 }
-        case ch =>
-          code.append(ch); i += 1
-      }
+      val c = sql.charAt(i)
+      val end =
+        if (SqlRewrite.isQuote(c)) SqlRewrite.literalEnd(sql, i)
+        else SqlRewrite.commentEnd(sql, i)
+      if (end > i) {
+        out.append(f(sql.substring(code, i)))
+        if (c == '#') out.append("--").append(sql.substring(i + 1, end))
+        else out.append(sql.substring(i, end))
+        i = end
+        code = i
+      } else i += 1
     }
-    flushCode()
-    out.result()
+    out.append(f(sql.substring(code))).result()
   }
 }
 
@@ -813,31 +778,22 @@ class Engine(val spark: SparkSession) {
       var i = 0
       val n = sql.length
       while (i < n) {
-        sql.charAt(i) match {
-          case '\'' => // string literal: copy verbatim ('' + \' escapes)
-            val start = i; i += 1
-            while (i < n && (sql.charAt(i) != '\'' ||
-                   (i + 1 < n && sql.charAt(i + 1) == '\'' && { i += 1; true }))) {
-              if (sql.charAt(i) == '\\' && i + 1 < n) i += 1
-              i += 1
-            }
-            i = math.min(i + 1, n)
-            out.append(sql.substring(start, i))
-          case '`' => // already-backticked identifier: copy verbatim
-            val start = i; i += 1
-            while (i < n && sql.charAt(i) != '`') i += 1
-            i = math.min(i + 1, n)
-            out.append(sql.substring(start, i))
-          case '"' => // ANSI identifier -> backticks
-            i += 1
-            val ident = new StringBuilder
-            while (i < n && (sql.charAt(i) != '"' ||
-                   (i + 1 < n && sql.charAt(i + 1) == '"' && { i += 1; true }))) {
-              ident.append(sql.charAt(i)); i += 1
-            }
-            i = math.min(i + 1, n)
-            out.append('`').append(ident.result().replace("`", "``")).append('`')
-          case c => out.append(c); i += 1
+        val c = sql.charAt(i)
+        if (c == '"') { // ANSI identifier -> backticks
+          i += 1
+          val ident = new StringBuilder
+          while (i < n && (sql.charAt(i) != '"' ||
+                 (i + 1 < n && sql.charAt(i + 1) == '"' && { i += 1; true }))) {
+            ident.append(sql.charAt(i)); i += 1
+          }
+          i = math.min(i + 1, n)
+          out.append('`').append(ident.result().replace("`", "``")).append('`')
+        } else { // '…', `…` and comments copy verbatim
+          val end =
+            if (SqlRewrite.isQuote(c)) SqlRewrite.literalEnd(sql, i)
+            else math.max(SqlRewrite.commentEnd(sql, i), i + 1)
+          out.underlying.append(sql, i, end)
+          i = end
         }
       }
       out.result()
@@ -1214,23 +1170,13 @@ class Engine(val spark: SparkSession) {
     Seq(affected).toDF("affected_rows")
   }
 
-  /** Blank out quoted literals and parenthesized segments — leaves only
-    * a statement's TOP-LEVEL tokens for structural guards. */
+  /** Blank out literals, comments and parenthesized segments — leaves
+    * only a statement's TOP-LEVEL tokens for structural guards. */
   private def stripQuotesAndParens(s: String): String = {
     val sb = new StringBuilder
-    var depth = 0; var quote: Char = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => if (depth == 0) sb.append(c)
-      }
-      i += 1
+    SqlRewrite.scanTop(s) { (_, c, d) =>
+      if (d == 0 && c != '(' && c != ')') sb.append(c)
+      -1
     }
     sb.toString
   }
@@ -1435,11 +1381,6 @@ class Engine(val spark: SparkSession) {
             val pkPinned = fromTbl.flatMap(t =>
               tableKeys.get(canonicalTable(t))).exists(pk =>
               pk.nonEmpty && pk.forall(constPinned))
-            if (sys.env.contains("GRAFT_DEBUG_RETRY"))
-              println(s"MISSING_AGG retry: from=$fromTbl keys=" +
-                fromTbl.map(t => tableKeys.get(canonicalTable(t))) +
-                s" groupWords=$groupWords pkGrouped=$pkGrouped " +
-                s"pkPinned=$pkPinned offending=$offending")
             val fullGroupBy =
               sqlModeString.toUpperCase.contains("ONLY_FULL_GROUP_BY")
             if (fullGroupBy && !pkGrouped && !pkPinned &&
@@ -1510,10 +1451,6 @@ class Engine(val spark: SparkSession) {
                   Seq(dbq, deep, hoist, subst, derived, alias, goAlias)
                 else Seq(alias, deep, hoist, subst, derived, goAlias)
               }
-            if (sys.env.contains("GRAFT_DEBUG_RETRY"))
-              println(s"UNRESOLVED retry: nm=$nm cands=" +
-                candidates.map(f => f()).map(c =>
-                  if (c == cur) "<same>" else c).mkString(" | "))
             candidates.view.map(f => f()).find(_ != cur) match {
               case Some(fixed) => attempt(fixed, budget - 1)
               case None => throw e
@@ -1726,25 +1663,12 @@ class Engine(val spark: SparkSession) {
 
   private def splitStatements(script: String): Seq[String] = {
     val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    val n = script.length
-    while (i < n) {
-      script.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          val start = i; i += 1
-          while (i < n && (script.charAt(i) != q ||
-                 (i + 1 < n && script.charAt(i + 1) == q && { i += 1; true }))) {
-            if (script.charAt(i) == '\\' && q != '`' && i + 1 < n) i += 1
-            i += 1
-          }
-          i = math.min(i + 1, n)
-          cur.append(script.substring(start, i))
-        case ';' => out += cur.result(); cur.clear(); i += 1
-        case ch => cur.append(ch); i += 1
-      }
+    var start = 0
+    SqlRewrite.scanTop(script) { (i, c, _) =>
+      if (c == ';') { out += script.substring(start, i); start = i + 1 }
+      -1
     }
-    if (cur.result().trim.nonEmpty) out += cur.result()
+    out += script.substring(start)
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
@@ -6183,11 +6107,9 @@ class Engine(val spark: SparkSession) {
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val q = c
-        val st = i; i += 1
-        while (i < s.length && s.charAt(i) != q) i += 1
-        i = math.min(i + 1, s.length)
+      if (SqlRewrite.isQuote(c)) {
+        val st = i
+        i = SqlRewrite.literalEnd(s, i)
         sb.append(s.substring(st, i))
       } else if (c.isLetter || c == '_') {
         val st = i

@@ -9,9 +9,14 @@ import scala.collection.mutable.ArrayBuffer
   * numeric-as-boolean coercion). Spark-first answer: rewrite the SQL text
   * into forms Catalyst parses, leaving everything else byte-identical.
   *
-  * The tokenizer is literal-aware ('…', "…", `…`, -- and # comments) and
-  * every pass splices replacements back by source offset, so untouched
-  * text survives verbatim.
+  * MySQL's lexical rules — where a '…'/"…"/`…` literal ends, which
+  * escapes count, what a -- or # comment hides — live in one place:
+  * [[literalEnd]] and [[commentEnd]]. [[tokenize]], [[Dialect.mapCode]]
+  * and the depth-tracking [[scanTop]] (with [[closingParen]],
+  * [[splitTopLevel]], [[indexOfTopLevelWord]] and [[inCode]] on top of
+  * it) are built on them; every front-door text walk goes through one of
+  * these. Every pass splices replacements back by source offset, so
+  * untouched text survives verbatim.
   */
 object SqlRewrite {
 
@@ -32,23 +37,13 @@ object SqlRewrite {
       c.isLetterOrDigit || c == '_' || c == '@' || c == '.' || c == '$'
     while (i < n) {
       val c = sql.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '\'' || c == '"' || c == '`') {
-        val start = i; i += 1
-        // doubled-quote escapes everywhere; backslash escapes in '…'/"…"
-        // (MySQL default sql_mode and Spark's parser both honor \') —
-        // backticks have no backslash escape in either dialect
-        while (i < n && (sql.charAt(i) != c ||
-               (i + 1 < n && sql.charAt(i + 1) == c && { i += 1; true }))) {
-          if (sql.charAt(i) == '\\' && c != '`' && i + 1 < n) i += 1
-          i += 1
-        }
-        i = math.min(i + 1, n)
+      val skip = commentEnd(sql, i) // a comment is not a token
+      if (skip > i) i = skip
+      else if (c.isWhitespace) i += 1
+      else if (isQuote(c)) {
+        val start = i
+        i = literalEnd(sql, i)
         out += Tok(Lit, sql.substring(start, i), start, i)
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        while (i < n && sql.charAt(i) != '\n') i += 1 // comment: not a token
-      } else if (c == '#') {
-        while (i < n && sql.charAt(i) != '\n') i += 1
       } else if (isWordChar(c)) {
         val start = i
         while (i < n && isWordChar(sql.charAt(i))) i += 1
@@ -65,11 +60,114 @@ object SqlRewrite {
     out.result()
   }
 
-  /** Apply (start, end, replacement) patches to the original text. */
-  private[graft] def splicePublic(sql: String,
-      patches: Seq[(Int, Int, String)]): String = splice(sql, patches)
+  // ---- the lexer primitive -------------------------------------------
+  // Char-level, allocation-free per character: the front door runs these
+  // on every statement.
 
-  private def splice(sql: String, patches: Seq[(Int, Int, String)]): String = {
+  def isQuote(c: Char): Boolean = c == '\'' || c == '"' || c == '`'
+
+  /** Index just past the quoted literal opening at `i` (`s(i)` is a
+    * quote). Doubled quotes escape in all three styles; a backslash
+    * escapes the next character in '…' and "…" (MySQL's default sql_mode
+    * and Spark's parser both honor \') but not in `…`, which has no
+    * backslash escape in either dialect. An unterminated literal runs to
+    * the end of `s`. */
+  def literalEnd(s: String, i: Int): Int = {
+    val q = s.charAt(i)
+    val n = s.length
+    var j = i + 1
+    while (j < n) {
+      val c = s.charAt(j)
+      if (c == q) {
+        if (j + 1 < n && s.charAt(j + 1) == q) j += 2 else return j + 1
+      } else if (c == '\\' && q != '`') j += 2
+      else j += 1
+    }
+    n
+  }
+
+  /** Index of the newline ending the `--` or `#` comment that starts at
+    * `i` (or `s.length`); `i` itself when no comment starts there. */
+  def commentEnd(s: String, i: Int): Int = {
+    val c = s.charAt(i)
+    if (c == '#' || (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-')) {
+      val nl = s.indexOf('\n', i)
+      if (nl < 0) s.length else nl
+    } else i
+  }
+
+  /** Visitor for [[scanTop]]: `(index, char, depth) => result`, a result
+    * >= 0 stops the scan. A SAM of its own so the primitives stay
+    * unboxed (Function3 is not specialized). */
+  trait CodeChar { def apply(i: Int, ch: Char, depth: Int): Int }
+
+  /** Walk `s` from `from`, skipping literals and comments, and hand every
+    * other character to `f` with its paren depth relative to `from`: a
+    * '(' and its ')' both see the depth outside them. Returns the first
+    * result of `f` that is >= 0, or -1. */
+  def scanTop(s: String, from: Int = 0)(f: CodeChar): Int = {
+    var depth = 0
+    var i = from
+    val n = s.length
+    while (i < n) {
+      val c = s.charAt(i)
+      if (isQuote(c)) i = literalEnd(s, i)
+      else {
+        val skip = commentEnd(s, i)
+        if (skip > i) i = skip
+        else {
+          if (c == ')') depth -= 1
+          val r = f(i, c, depth)
+          if (r >= 0) return r
+          if (c == '(') depth += 1
+          i += 1
+        }
+      }
+    }
+    -1
+  }
+
+  /** Index of the ')' closing a paren already open before `from`, or -1. */
+  def closingParen(s: String, from: Int = 0): Int =
+    scanTop(s, from)((i, c, d) => if (c == ')' && d < 0) i else -1)
+
+  /** `s` split on `sep` outside literals, comments and parens; pieces are
+    * returned as written (untrimmed, empty ones kept). */
+  def splitTopLevel(s: String, sep: Char = ','): Seq[String] = {
+    val out = ArrayBuffer.empty[String]
+    var start = 0
+    scanTop(s) { (i, c, d) =>
+      if (c == sep && d == 0) { out += s.substring(start, i); start = i + 1 }
+      -1
+    }
+    out += s.substring(start)
+    out.toSeq
+  }
+
+  /** True when the whole word `word` (case-insensitive) starts at `i`. */
+  def wordAt(s: String, i: Int, word: String): Boolean = {
+    def boundary(j: Int) = j < 0 || j >= s.length ||
+      !(s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')
+    s.regionMatches(true, i, word, 0, word.length) &&
+      boundary(i - 1) && boundary(i + word.length)
+  }
+
+  /** Index of the first whole-word `word` at paren depth 0 (relative to
+    * `from`) outside literals and comments, or -1. */
+  def indexOfTopLevelWord(s: String, word: String, from: Int = 0): Int = {
+    val head = word.charAt(0).toLower
+    scanTop(s, from) { (i, c, d) =>
+      if (d == 0 && c.toLower == head && wordAt(s, i, word)) i else -1
+    }
+  }
+
+  /** True when position `at` is code: outside every literal and comment. */
+  def inCode(s: String, at: Int): Boolean =
+    scanTop(s)((i, _, _) => if (i >= at) i else -1) == at
+
+  /** Apply (start, end, replacement) patches to the original text. */
+  private[graft] def splice(sql: String,
+      patches: Seq[(Int, Int, String)]): String = {
     val sorted = patches.sortBy(_._1)
     val sb = new StringBuilder
     var pos = 0
@@ -132,31 +230,6 @@ object SqlRewrite {
       i += 1
     }
     out.toSet
-  }
-
-  /** Split a clause body on commas outside parens/quotes (GROUP BY /
-    * select-list item boundaries). */
-  private[graft] def splitTopLevelCommas(txt: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var depth = 0; var quote: Char = 0; var i = 0
-    while (i < txt.length) {
-      val c = txt.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') { sb.append(c); i += 1
-          if (i < txt.length) sb.append(txt.charAt(i)) }
-        else { if (c == quote) quote = 0; sb.append(c) }
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; sb.append(c)
-        case '(' => depth += 1; sb.append(c)
-        case ')' => depth -= 1; sb.append(c)
-        case ',' if depth == 0 => out += sb.result(); sb.clear()
-        case _ => sb.append(c)
-      }
-      i += 1
-    }
-    out += sb.result()
-    out.toSeq
   }
 
   /** MySQL `information_schema.X` → the session's `information_schema_X`
@@ -617,7 +690,7 @@ object SqlRewrite {
               // keeping the first occurrence (reference groupconcat.go);
               // Spark's listagg rejects the pair. Emulate with sorted
               // structs + array_distinct (first-occurrence semantics).
-              val keys = topLevelSplitText(order).map(_.trim)
+              val keys = splitTopLevel(order).map(_.trim)
                 .filter(_.nonEmpty).map { k =>
                   val desc = "(?i)\\s+DESC$".r.findFirstIn(k).isDefined
                   val base = k.replaceAll("(?i)\\s+(ASC|DESC)$", "").trim
@@ -703,31 +776,6 @@ object SqlRewrite {
     // scans the CURRENT text (match offsets come from the mutated
     // string — scanning the original would drift after the first
     // insertion and can index past its end)
-    def quoteFree(text: String, upTo: Int): Boolean = {
-      var q: Char = 0; var i = 0
-      while (i < upTo) {
-        val c = text.charAt(i)
-        if (q != 0) { if (c == '\\' && q != '`') i += 1 else if (c == q) q = 0 }
-        else if (c == '\'' || c == '"' || c == '`') q = c
-        i += 1
-      }
-      q == 0
-    }
-    def closing(text: String, from: Int): Int = {
-      var depth = 1; var i = from; var q: Char = 0
-      while (i < text.length) {
-        val c = text.charAt(i)
-        if (q != 0) { if (c == '\\' && q != '`') i += 1 else if (c == q) q = 0 }
-        else c match {
-          case '\'' | '"' | '`' => q = c
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) return i
-          case _ =>
-        }
-        i += 1
-      }
-      -1
-    }
     var text = sql
     var guard = 0
     var changed = true
@@ -735,14 +783,14 @@ object SqlRewrite {
       changed = false
       guard += 1
       re.findAllMatchIn(text).find { m =>
-        quoteFree(text, m.start) && {
-          val close = closing(text, m.end)
+        inCode(text, m.start) && {
+          val close = closingParen(text, m.end)
           close > 0 &&
             !"""(?is)\border\s+by\b""".r.findFirstIn(
               text.substring(m.end, close)).isDefined
         }
       }.foreach { m =>
-        val close = closing(text, m.end)
+        val close = closingParen(text, m.end)
         val spec = text.substring(m.end, close).trim
         val filled = if (spec.isEmpty) "order by 1" else s"$spec order by 1"
         text = text.substring(0, m.end) + filled + text.substring(close)
@@ -1443,7 +1491,7 @@ object SqlRewrite {
     val keysTxt = sql.substring(toks(groupAt + 2).start, keysEnd)
     val tailTxt = if (tailAt > 0) sql.substring(toks(tailAt).start) else ""
     // group keys must be simple (possibly qualified) columns
-    val keys = splitTopLevelCommas(keysTxt).map(_.trim)
+    val keys = splitTopLevel(keysTxt).map(_.trim)
     val KeyPat = "^(?:`?([A-Za-z_][A-Za-z0-9_]*)`?\\.)?`?" +
       "([A-Za-z_][A-Za-z0-9_]*)`?$"
     val keyParts = keys.map { k =>
@@ -1454,7 +1502,7 @@ object SqlRewrite {
     // bare output names must be unambiguous
     if (keyParts.map(_._2.toLowerCase).distinct.size != keyParts.size)
       return sql
-    val items = splitTopLevelCommas(selTxt).map(_.trim).filter(_.nonEmpty)
+    val items = splitTopLevel(selTxt).map(_.trim).filter(_.nonEmpty)
     val (probes, base) = items.partition(it =>
       "(?is)\\(\\s*select\\b".r.findFirstIn(it).isDefined)
     if (probes.isEmpty || base.isEmpty) return sql
@@ -1630,7 +1678,7 @@ object SqlRewrite {
     val listEnd = if (fromEnd < 0) sql.length else toks(fromEnd).start
     val listTxt = sql.substring(listStart, listEnd)
     if (listTxt.trim.toUpperCase.startsWith("DISTINCT")) return sql
-    val items = topLevelSplitText(listTxt)
+    val items = splitTopLevel(listTxt)
     val hasAgg = (s: String) => aggFnRe.findFirstIn(s).isDefined
     if (!wrapAll && !hadGroupBy && !items.exists(hasAgg)) return sql
     val BareCol =
@@ -1716,30 +1764,6 @@ object SqlRewrite {
     }
   }
 
-  /** Top-level comma split of raw text (string/paren aware). */
-  private def topLevelSplitText(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0; var quote = ' '; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != ' ') {
-        cur.append(c)
-        if (c == '\\' && i + 1 < s.length) { cur.append(s.charAt(i + 1)); i += 1 }
-        else if (c == quote) quote = ' '
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case ')' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.result()
-  }
-
   // ---- inline VALUES tables with mixed literal types (retry-only):
   //      Spark's inline table requires compatible types; MySQL unifies
   //      int/decimal/numeric-string positions numerically (queries.go
@@ -1784,10 +1808,10 @@ object SqlRewrite {
         }
         if (close > 0) {
           val body = sql.substring(toks(i).end, toks(close).start)
-          val tuples = topLevelSplitText(body).map(_.trim).filter(_.nonEmpty)
+          val tuples = splitTopLevel(body).map(_.trim).filter(_.nonEmpty)
             .map { t0 =>
               val t = """(?is)^ROW\s*""".r.replaceFirstIn(t0, "")
-              topLevelSplitText(t.stripPrefix("(").stripSuffix(")"))
+              splitTopLevel(t.stripPrefix("(").stripSuffix(")"))
                 .map(_.trim)
             }
           if (tuples.nonEmpty && tuples.forall(_.length == tuples.head.length)) {
@@ -2029,7 +2053,7 @@ object SqlRewrite {
             val out = scala.collection.mutable.Set.empty[String]
             aliases.values.foreach(v => out += norm(v))
             // unaliased items: the full item text is the expression
-            splitTopLevelCommas(
+            splitTopLevel(
               sql.substring(toks(s.selectAt).end, toks(s.fromAt).start))
               .foreach(it => out += norm(it))
             out
@@ -2884,7 +2908,7 @@ object SqlRewrite {
     }
     val items = sql.substring(toks(s.selectAt + 1).end, toks(s.fromAt).start)
     // each ORDER BY key wraps in min(...), keeping ASC/DESC
-    val keys = topLevelSplitText(
+    val keys = splitTopLevel(
       sql.substring(toks(orderAt + 2).start, toks(end).end)).map { k0 =>
       val k = k0.trim
       val m = "(?i)\\s+(ASC|DESC)$".r.findFirstMatchIn(k)
@@ -3330,70 +3354,50 @@ object SqlRewrite {
     * identifier chain, the right a quoted path literal. */
   def jsonArrows(sql: String): String = {
     if (!sql.contains("->")) return sql
-    val out = new StringBuilder
-    var i = 0
     val n = sql.length
-    var quote: Char = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == '\\' && quote != '`' && i + 1 < n) {
-          out.append(sql.charAt(i + 1)); i += 1
-        } else if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; out.append(c); i += 1
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '>') {
+    val patches = ArrayBuffer.empty[(Int, Int, String)]
+    var floor = 0 // end of the last patch: an operand never reaches back past it
+    def isIdent(c: Char) = c.isLetterOrDigit || c == '_' || c == '$'
+    scanTop(sql) { (i, c, _) =>
+      if (c == '-' && i >= floor && i + 1 < n && sql.charAt(i + 1) == '>') {
         val unquoting = i + 2 < n && sql.charAt(i + 2) == '>'
-        // left operand: walk back over the emitted text
-        var e = out.length
-        while (e > 0 && out.charAt(e - 1).isWhitespace) e -= 1
+        // left operand: a (backticked/qualified) identifier chain
+        var e = i
+        while (e > floor && sql.charAt(e - 1).isWhitespace) e -= 1
         var s = e
-        var ok = s > 0
-        def walkIdent(): Boolean = {
-          if (s > 0 && out.charAt(s - 1) == '`') {
-            var j = s - 2
-            while (j >= 0 && out.charAt(j) != '`') j -= 1
-            if (j < 0) return false
-            s = j
-            true
+        def walkIdent(): Boolean =
+          if (s > floor && sql.charAt(s - 1) == '`') {
+            val j = sql.lastIndexOf('`', s - 2)
+            j >= floor && { s = j; true }
           } else {
             val start = s
-            while (s > 0 && (out.charAt(s - 1).isLetterOrDigit ||
-              out.charAt(s - 1) == '_' || out.charAt(s - 1) == '$')) s -= 1
+            while (s > floor && isIdent(sql.charAt(s - 1))) s -= 1
             s < start
           }
-        }
-        ok = ok && walkIdent()
-        while (ok && s > 0 && out.charAt(s - 1) == '.') {
+        var ok = walkIdent()
+        while (ok && s > floor && sql.charAt(s - 1) == '.') {
           s -= 1
           ok = walkIdent()
         }
         // right operand: a quoted path literal
         var j = i + (if (unquoting) 3 else 2)
         while (j < n && sql.charAt(j).isWhitespace) j += 1
-        val pq = if (j < n) sql.charAt(j) else ' '
-        if (ok && (pq == '\'' || pq == '"')) {
-          val pStart = j + 1
-          var k = pStart
-          while (k < n && sql.charAt(k) != pq) {
-            if (sql.charAt(k) == '\\' && k + 1 < n) k += 1
-            k += 1
+        if (ok && j < n && (sql.charAt(j) == '\'' || sql.charAt(j) == '"')) {
+          val k = literalEnd(sql, j) - 1
+          if (k > j && sql.charAt(k) == sql.charAt(j)) {
+            val body = sql.substring(j + 1, k)
+            val path =
+              if (sql.charAt(j) == '"') body.replace("'", "''") else body
+            val extracted = s"json_extract(${sql.substring(s, e)}, '$path')"
+            patches += ((s, k + 1,
+              if (unquoting) s"json_unquote($extracted)" else extracted))
+            floor = k + 1
           }
-          if (k < n) {
-            val path = sql.substring(pStart, k).replace("'", "''")
-            val lhs = out.substring(s, e)
-            out.setLength(s)
-            val extracted = s"json_extract($lhs, '$path')"
-            out.append(
-              if (unquoting) s"json_unquote($extracted)" else extracted)
-            i = k + 1
-          } else { out.append(c); i += 1 }
-        } else { out.append(c); i += 1 }
-      } else { out.append(c); i += 1 }
+        }
+      }
+      -1
     }
-    out.result()
+    if (patches.isEmpty) sql else splice(sql, patches.toSeq)
   }
 
   def matchAgainst(sql: String): String = {
@@ -4298,7 +4302,7 @@ object SqlRewrite {
     // — `GROUP BY a+b HAVING a > 1` must NOT move (a isn't constant
     // per group)
     val gTxt = sql.substring(toks(groupAt + 2).start, toks(havingAt).start)
-    val gKeys = splitTopLevelCommas(gTxt).map(_.trim.toLowerCase)
+    val gKeys = splitTopLevel(gTxt).map(_.trim.toLowerCase)
       .collect {
         case s if s.matches("`?[a-z_][a-z0-9_]*`?") => s.replace("`", "")
       }.toSet
@@ -4794,7 +4798,7 @@ object SqlRewrite {
           val exprs = {
             // top-level comma split of the ROW(...) body
             val body = sql.substring(toks(rowOpen).end, toks(rowClose).start)
-            topLevelSplitText(body).map(_.trim)
+            splitTopLevel(body).map(_.trim)
           }
           if (aliasTok.isDefined && colsOpen > 0) {
             val colsClose = closeParenFor(toks, colsOpen)
@@ -4916,7 +4920,7 @@ object SqlRewrite {
     if (s.fromAt <= s.selectAt) return sql
     def normTxt(t: String) = t.replaceAll("\\s+", " ").trim.toLowerCase
     // aliased select items
-    val items = topLevelSplitText(
+    val items = splitTopLevel(
       sql.substring(toks(s.selectAt).end, toks(s.fromAt).start))
     val aliased = items.flatMap { it =>
       val m = "(?is)^(.*?)\\s+AS\\s+(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)\\s*$"
@@ -4952,7 +4956,7 @@ object SqlRewrite {
           }
           if (end > i + 1) {
             val span = sql.substring(toks(i + 2).start, toks(end).end)
-            val rebuilt = topLevelSplitText(span).map { item0 =>
+            val rebuilt = splitTopLevel(span).map { item0 =>
               val item = item0.trim
               val m = "(?i)\\s+(ASC|DESC)$".r.findFirstMatchIn(item)
               val (core, dir) = m match {
@@ -5201,7 +5205,7 @@ object SqlRewrite {
     val items = sql.substring(toks(s.selectAt).end, toks(s.fromAt).start)
     val fromSpan = sql.substring(toks(s.fromAt).start, toks(orderAt).start)
     val tail = sql.substring(toks(end).end)
-    val keys = topLevelSplitText(
+    val keys = splitTopLevel(
       sql.substring(toks(orderAt + 2).start, toks(end).end))
     var n = 0
     val lifted = keys.map { k0 =>

@@ -167,13 +167,8 @@ object CheckExprRender {
         i += 1
         inner // grouping parens add no extra layer
       } else if (c == '\'') {
-        val start = i; i += 1
-        while (i < s.length && (s.charAt(i) != '\'' ||
-               (i + 1 < s.length && s.charAt(i + 1) == '\'' && { i += 1; true }))) {
-          if (s.charAt(i) == '\\' && i + 1 < s.length) i += 1
-          i += 1
-        }
-        i = math.min(i + 1, s.length)
+        val start = i
+        i = graft.SqlRewrite.literalEnd(s, i)
         s.substring(start, i)
       } else if (c == '`') {
         val start = i + 1; i += 1

@@ -24,6 +24,7 @@ package graft.plans
   * parallel, no shuffle, same 100 TB shape as plans.JsonTable.
   */
 object JsonTableSql {
+  import graft.SqlRewrite.{closingParen, splitTopLevel}
 
   private case class JCol(
       name: String = "",
@@ -91,53 +92,11 @@ object JsonTableSql {
     else t
   }
 
-  /** index of the ')' closing the paren already open before `from`. */
-  private def closingParen(s: String, from: Int): Int = {
-    var depth = 1; var i = from; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && i + 1 < s.length) i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** split on top-level commas (quote/paren aware). */
-  private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var quote: Char = 0; var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && i + 1 < s.length) i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
   private val RootCols =
     """(?is)^\s*('[^']*'|"[^"]*")\s+COLUMNS\s*\((.*)\)\s*$""".r
 
   private def parseArgs(args: String): (String, String, Seq[JCol]) = {
-    val parts = splitTop(args)
+    val parts = splitTopLevel(args).map(_.trim).filter(_.nonEmpty)
     val docExpr = parts.head
     val tail = parts.tail.mkString(", ")
     tail match {
@@ -160,21 +119,22 @@ object JsonTableSql {
   private val DefaultRe =
     """(?is)\bDEFAULT\s+('(?:[^'\\]|\\.|'')*')\s+ON\s+EMPTY""".r
 
-  private def parseCols(body: String): Seq[JCol] = splitTop(body).map {
-    case NestedRe(p, nestedBody) =>
-      JCol(nestedPath = stripQuote(p), nested = parseCols(nestedBody))
-    case OrdRe(n) => JCol(name = strip(n), forOrdinality = true)
-    case ExistsRe(n, _, p) =>
-      JCol(name = strip(n), path = stripQuote(p), exists = true)
-    case PathRe(n, tpe, p, tail) =>
-      val (cast, raw) = sparkType(tpe.trim)
-      JCol(name = strip(n), path = stripQuote(p), castType = cast,
-        rawJson = raw,
-        defaultOnEmpty =
-          DefaultRe.findFirstMatchIn(tail).map(_.group(1)))
-    case other =>
-      throw new IllegalArgumentException(s"bad JSON_TABLE column: $other")
-  }
+  private def parseCols(body: String): Seq[JCol] =
+    splitTopLevel(body).map(_.trim).filter(_.nonEmpty).map {
+      case NestedRe(p, nestedBody) =>
+        JCol(nestedPath = stripQuote(p), nested = parseCols(nestedBody))
+      case OrdRe(n) => JCol(name = strip(n), forOrdinality = true)
+      case ExistsRe(n, _, p) =>
+        JCol(name = strip(n), path = stripQuote(p), exists = true)
+      case PathRe(n, tpe, p, tail) =>
+        val (cast, raw) = sparkType(tpe.trim)
+        JCol(name = strip(n), path = stripQuote(p), castType = cast,
+          rawJson = raw,
+          defaultOnEmpty =
+            DefaultRe.findFirstMatchIn(tail).map(_.group(1)))
+      case other =>
+        throw new IllegalArgumentException(s"bad JSON_TABLE column: $other")
+    }
 
   /** MySQL column type -> (Spark CAST target, keep-raw-json). */
   private def sparkType(t: String): (String, Boolean) = {

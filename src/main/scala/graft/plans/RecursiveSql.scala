@@ -26,48 +26,23 @@ object RecursiveSql {
     * cycles, then ErrCteRecursionLimitExceeded. */
   private val MaxDepth = 10001
 
-  /** index just past a quoted literal starting at `i` (s(i) is the quote). */
-  private def skipQuoted(s: String, i0: Int): Int = {
-    val q = s.charAt(i0)
-    var i = i0 + 1
-    while (i < s.length) {
-      if (s.charAt(i) == q) {
-        if (i + 1 < s.length && s.charAt(i + 1) == q) i += 2 // doubled quote
-        else return i + 1
-      } else i += 1
-    }
-    s.length
-  }
-
   /** Split `body` on top-level UNION [ALL|DISTINCT]; returns the terms and
     * whether every separator was UNION ALL. */
   private def splitUnions(body: String): (Seq[String], Boolean) = {
     val terms = Seq.newBuilder[String]
     var allBag = true
-    var depth = 0
     var start = 0
-    var i = 0
-    val U = "union"
-    while (i < body.length) {
-      body.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case '\'' | '"' | '`' => i = skipQuoted(body, i)
-        case c if depth == 0 && (c == 'u' || c == 'U') &&
-            i + U.length <= body.length &&
-            body.regionMatches(true, i, "UNION", 0, 5) &&
-            (i == 0 || !Character.isLetterOrDigit(body.charAt(i - 1))) &&
-            (i + 5 == body.length || !Character.isLetterOrDigit(body.charAt(i + 5))) =>
-          terms += body.substring(start, i)
-          i += 5
-          val rest = body.substring(i)
-          val mAll = """(?is)^\s+ALL\b""".r.findFirstMatchIn(rest)
-          val mDis = """(?is)^\s+DISTINCT\b""".r.findFirstMatchIn(rest)
-          if (mAll.isDefined) i += mAll.get.end
-          else { allBag = false; if (mDis.isDefined) i += mDis.get.end }
-          start = i
-        case _ => i += 1
-      }
+    var i = graft.SqlRewrite.indexOfTopLevelWord(body, "UNION")
+    while (i >= 0) {
+      terms += body.substring(start, i)
+      i += 5
+      val rest = body.substring(i)
+      val mAll = """(?is)^\s+ALL\b""".r.findFirstMatchIn(rest)
+      val mDis = """(?is)^\s+DISTINCT\b""".r.findFirstMatchIn(rest)
+      if (mAll.isDefined) i += mAll.get.end
+      else { allBag = false; if (mDis.isDefined) i += mDis.get.end }
+      start = i
+      i = graft.SqlRewrite.indexOfTopLevelWord(body, "UNION", i)
     }
     terms += body.substring(start)
     (terms.result().map(_.trim).filter(_.nonEmpty), allBag)
@@ -103,22 +78,13 @@ object RecursiveSql {
       val bm = BindHead.findFirstMatchIn(sql.substring(pos))
         .getOrElse(return None)
       val bodyStart = pos + bm.end
-      var depth = 1
-      var i = bodyStart
-      while (i < sql.length && depth > 0) {
-        sql.charAt(i) match {
-          case '(' => depth += 1; i += 1
-          case ')' => depth -= 1; i += 1
-          case '\'' | '"' | '`' => i = skipQuoted(sql, i)
-          case _ => i += 1
-        }
-      }
-      if (depth != 0) return None
+      val close = graft.SqlRewrite.closingParen(sql, bodyStart)
+      if (close < 0) return None
       bindings += Binding(bm.group(1),
         Option(bm.group(2)).map(_.split(",").map(_.trim).toSeq),
-        sql.substring(bodyStart, i - 1))
+        sql.substring(bodyStart, close))
       // a comma continues the binding list
-      var j = i
+      var j = close + 1
       while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
       if (j < sql.length && sql.charAt(j) == ',') { pos = j + 1; more = true }
       else { pos = j; more = false }

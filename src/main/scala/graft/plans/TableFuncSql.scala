@@ -31,6 +31,8 @@ package graft.plans
   * non-portable.
   */
 object TableFuncSql {
+  import graft.SqlRewrite.{closingParen, inCode, scanTop, splitTopLevel,
+    wordAt}
 
   /** Table-position names that are NOT table-function calls. */
   private val passThrough = Set(
@@ -85,7 +87,7 @@ object TableFuncSql {
         // EXTRACT are too ambiguous with scalar calls)
         (knownFuncs(nm) && tablePosition(out, m)) ||
           (!passThrough(nm) && !m.group(1).startsWith(",") &&
-            clauseLevel(out, m.start) && notAQuote(out, m.start))
+            clauseLevel(out, m.start) && inCode(out, m.start))
       }
       m0 match {
         case None =>
@@ -98,7 +100,8 @@ object TableFuncSql {
           val open = out.indexOf('(', m.start + m.group(1).length)
           val close = closingParen(out, open + 1)
           if (close < 0) return out
-          val args = splitArgs(out.substring(open + 1, close))
+          val args = splitTopLevel(out.substring(open + 1, close))
+            .map(_.trim).filter(_.nonEmpty)
           val after = out.substring(close + 1)
           val (aliasOpt, rest) = parseAlias(after)
           val alias = aliasOpt.getOrElse(nm)
@@ -136,7 +139,7 @@ object TableFuncSql {
     Call.findAllMatchIn(sql).exists { m =>
       val nm = m.group(2).toLowerCase
       !passThrough(nm) && !m.group(1).startsWith(",") &&
-        clauseLevel(sql, m.start) && notAQuote(sql, m.start)
+        clauseLevel(sql, m.start) && inCode(sql, m.start)
     }
 
   /** A matched call is in TABLE position when it's outside string
@@ -147,38 +150,31 @@ object TableFuncSql {
     * call and must not rewrite. */
   private def tablePosition(sql: String, m: scala.util.matching.Regex.Match)
       : Boolean =
-    notAQuote(sql, m.start) &&
+    inCode(sql, m.start) &&
       (!m.group(1).startsWith(",") || inFromList(sql, m.start))
 
   /** Which clause keyword governs position `at` (same paren depth,
-    * quotes skipped): true when it's FROM, or ON/USING after a join in
-    * the FROM list. */
+    * literals and comments skipped): true when it's FROM, or ON/USING
+    * after a join in the FROM list. */
   private def inFromList(sql: String, at: Int): Boolean = {
     val kws = Seq("select", "from", "where", "group", "order", "having",
       "limit", "union", "intersect", "except", "on", "using", "set",
       "values")
     val stack = scala.collection.mutable.ArrayDeque.empty[String]
-    var cur = ""; var quote: Char = 0; var i = 0
-    while (i < at) {
-      val c = sql.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => stack.append(cur); cur = ""
-        case ')' => cur = if (stack.nonEmpty) stack.removeLast() else ""
-        case _ if Character.isLetter(c) &&
-            (i == 0 || (!Character.isLetterOrDigit(sql.charAt(i - 1)) &&
-              sql.charAt(i - 1) != '_' && sql.charAt(i - 1) != '.')) =>
-          kws.find(k => sql.regionMatches(true, i, k, 0, k.length) &&
-              (i + k.length >= sql.length ||
-                (!Character.isLetterOrDigit(sql.charAt(i + k.length)) &&
-                  sql.charAt(i + k.length) != '_')))
-            .foreach(cur = _)
-        case _ =>
+    var cur = ""
+    scanTop(sql) { (i, c, _) =>
+      if (i >= at) i
+      else {
+        c match {
+          case '(' => stack.append(cur); cur = ""
+          case ')' => cur = if (stack.nonEmpty) stack.removeLast() else ""
+          case _ if Character.isLetter(c) &&
+              (i == 0 || sql.charAt(i - 1) != '.') =>
+            kws.find(wordAt(sql, i, _)).foreach(cur = _)
+          case _ =>
+        }
+        -1
       }
-      i += 1
     }
     cur == "from" || cur == "on" || cur == "using"
   }
@@ -189,19 +185,13 @@ object TableFuncSql {
     * SELECT). */
   private def clauseLevel(sql: String, at: Int): Boolean = {
     val stack = scala.collection.mutable.ArrayDeque.empty[Int]
-    var quote: Char = 0; var i = 0
-    while (i < at) {
-      val c = sql.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => stack.append(i)
-        case ')' => if (stack.nonEmpty) stack.removeLast()
-        case _ =>
+    scanTop(sql) { (i, c, _) =>
+      if (i >= at) i
+      else {
+        if (c == '(') stack.append(i)
+        else if (c == ')' && stack.nonEmpty) stack.removeLast()
+        -1
       }
-      i += 1
     }
     stack.lastOption match {
       case None => true
@@ -211,43 +201,19 @@ object TableFuncSql {
   }
 
   /** SELECT-scope fingerprint of a position: (paren depth, number of
-    * SELECT keywords before it, both outside string literals). Two
+    * SELECT keywords before it, both outside literals and comments). Two
     * FROM-list members of one SELECT share it; a subquery differs. */
   private def scopeKey(sql: String, at: Int): (Int, Int) = {
-    var depth = 0; var selects = 0; var quote: Char = 0; var i = 0
-    while (i < at) {
-      val c = sql.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'S' | 's' if sql.regionMatches(true, i, "SELECT", 0, 6) &&
-            (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1))) &&
-            (i + 6 >= sql.length ||
-              !Character.isLetterOrDigit(sql.charAt(i + 6))) =>
-          selects += 1
-        case _ =>
+    var depth = 0; var selects = 0
+    scanTop(sql) { (i, c, d) =>
+      depth = d
+      if (i >= at) i
+      else {
+        if (wordAt(sql, i, "SELECT")) selects += 1
+        -1
       }
-      i += 1
     }
     (depth, selects)
-  }
-
-  /** guard against FROM/JOIN text inside string literals */
-  private def notAQuote(sql: String, at: Int): Boolean = {
-    var quote: Char = 0; var i = 0
-    while (i < at) {
-      val c = sql.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"' || c == '`') quote = c
-      i += 1
-    }
-    quote == 0
   }
 
   private def parseAlias(after: String): (Option[String], String) = {
@@ -265,49 +231,7 @@ object TableFuncSql {
     }
   }
 
-  private def splitArgs(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var quote: Char = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == '\\' && quote != '`' && i + 1 < s.length) {
-          cur.append(s.charAt(i + 1)); i += 1
-        } else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case ')' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.result().trim; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.result().trim
-    out.toSeq
-  }
-
   private def stripQuotes(s: String): String =
     s.trim.stripPrefix("'").stripSuffix("'")
       .stripPrefix("`").stripSuffix("`")
-
-  private def closingParen(s: String, from: Int): Int = {
-    var depth = 1; var i = from; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
 }

@@ -406,6 +406,10 @@ class EngineSpec extends AnyFunSuite {
     assert(results.length == 3)
     assert(results(1).collect()(0).getString(0) == "x; not a split")
     assert(results(2).collect()(0).getLong(0) == 5)
+    // a quote inside a -- comment opens no literal: the ';' after it splits
+    val commented = engine.runScript("SELECT 1 AS a -- don't\n; SELECT 2 AS b")
+    assert(commented.map(_.collect().map(_.get(0).toString).toSeq) ==
+      Seq(Seq("1"), Seq("2")))
   }
 
   test("multi-database namespaces: attach, qualify, USE, cross-db joins") {
@@ -659,6 +663,12 @@ class EngineSpec extends AnyFunSuite {
            SELECT n + 1 FROM t WHERE n < 4
          ) SELECT n FROM t ORDER BY n""").collect().map(_.getInt(0))
     assert(dis.toSeq == Seq(1, 2, 3, 4))
+    // a binding body whose literal holds a backslash-escaped quote and a ')'
+    val esc = engine.query(
+      "WITH RECURSIVE r (s, n) AS (SELECT 'it\\'s)', 1 UNION ALL " +
+        "SELECT s, n + 1 FROM r WHERE n < 3) SELECT s, n FROM r ORDER BY n")
+      .collect().map(r => (r.getString(0), r.get(1).toString))
+    assert(esc.toSeq == Seq(("it's)", "1"), ("it's)", "2"), ("it's)", "3")))
     // non-recursive statements flow through unchanged
     assert(engine.query("SELECT 1 AS one").collect()(0).getInt(0) == 1)
   }
@@ -899,5 +909,11 @@ class EngineSpec extends AnyFunSuite {
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.OneRowRelation]))
     val v = rand.collect()(0).getDouble(0)
     assert(v >= 0.0 && v < 1.0)
+  }
+
+  test("a quote inside a -- comment does not hide a table function call") {
+    val rows = engine.query(
+      "-- don't\nSELECT * FROM sequence_table('x', 3)").collect()
+    assert(rows.map(_.get(0).toString).toSeq == Seq("0", "1", "2"))
   }
 }

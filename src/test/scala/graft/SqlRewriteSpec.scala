@@ -129,4 +129,46 @@ class SqlRewriteSpec extends AnyFunSuite {
     val ordered = "select rank() over (order by x) from t"
     assert(SqlRewrite.orderlessRankWindow(ordered) == ordered)
   }
+
+  test("lexer primitive: one lexical rule per row") {
+    import SqlRewrite._
+    // (text, literal start, index just past the literal)
+    val literals = Seq(
+      ("'it''s' x", 0, 7),       // doubled quote in '…'
+      ("\"a\"\"b\" x", 0, 6),    // doubled quote in "…"
+      ("`a``b` x", 0, 6),        // doubled quote in `…`
+      ("'it\\'s' x", 0, 7),      // backslash escape in '…'
+      ("\"a\\\"b\" x", 0, 6),     // backslash escape in "…"
+      ("`a\\` x", 0, 4),         // no backslash escape in `…`
+      ("x 'open", 2, 7))         // unterminated: runs to the end
+    literals.foreach { case (s, at, end) =>
+      assert(literalEnd(s, at) == end, s)
+    }
+    // comments end at the newline; a quote inside one is not a literal
+    assert(commentEnd("a -- x'y\nb", 2) == 8)
+    assert(commentEnd("a # x'y\nb", 2) == 7)
+    assert(commentEnd("-- to the end", 0) == 13)
+    assert(commentEnd("a - b", 2) == 2)
+    assert(tokenize("a -- don't\n'x' # it's").map(_.text) == Vector("a", "'x'"))
+    // nested parens: closingParen of a paren open before `from`
+    assert(closingParen("f(a, (b), ')') + c", 2) == 13)
+    assert(closingParen("(a -- )\n)", 1) == 8)
+    assert(closingParen("(a", 1) == -1)
+    // top-level comma split keeps pieces as written
+    assert(splitTopLevel("a, f(b, c), 'x,y', -- p,q\n d") ==
+      Seq("a", " f(b, c)", " 'x,y'", " -- p,q\n d"))
+    assert(splitTopLevel("a;b", ';') == Seq("a", "b"))
+    // indexOfTopLevelWord: whole word, depth 0, outside literals/comments
+    val w = "select (a where) 'where' -- where\n where_x WHERE b"
+    assert(indexOfTopLevelWord(w, "where") == w.indexOf("WHERE"))
+    assert(indexOfTopLevelWord("a (where)", "where") == -1)
+    assert(inCode("a 'b' c", 6) && !inCode("a 'b' c", 3) &&
+      !inCode("a -- b\nc", 5))
+    // a WITH RECURSIVE binding body holding 'it\'s' then a ')': the
+    // body ends at the last ')', not at the one inside the literal
+    val rec = "WITH RECURSIVE r (s) AS (SELECT 'it\\'s)' UNION ALL " +
+      "SELECT s FROM r WHERE false) SELECT s FROM r"
+    val open = rec.indexOf("(SELECT")
+    assert(closingParen(rec, open + 1) == rec.indexOf(") SELECT s FROM r"))
+  }
 }
