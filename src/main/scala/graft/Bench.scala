@@ -30,9 +30,17 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a failed sample times as -1; its exception goes to stderr and into
+    // the full-copy file's "errors" map (the last failure per query)
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try { fn(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
+          System.err.println(s"[bench] $name failed: ${errors(name)}")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -55,7 +63,7 @@ object Bench {
     val cold = sys.env.get("GRAFT_BENCH_COLD").contains("1")
     val sampled = SparkEntry.all.filter(q => only.forall(_.contains(q.name))).map { q =>
       val ss = Vector.fill(nSamples) {
-        val t = timeOnce(q.fn)
+        val t = timeOnce(q.name, q.fn)
         if (cold) CacheScope.drain()
         t
       }
@@ -91,10 +99,21 @@ object Bench {
     val samplesJson = sampled.map { case (k, ss) =>
       "\"" + k + "\":[" + ss.map(r3).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val fileLine = line.stripSuffix("}") + s""","samples":$samplesJson}"""
+    def jsonStr(v: String): String = v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+    val errorsJson = errors.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
+      .mkString("{", ",", "}")
+    val fileLine = line.stripSuffix("}") +
+      s""","samples":$samplesJson,"errors":$errorsJson}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outName), fileLine + "\n")
-    catch { case _: Throwable => }
+    catch {
+      case e: Throwable => System.err.println(s"[bench] could not write $outName: $e")
+    }
     println(line)
     // The harness keeps only a ~2000-char tail of stdout, and at 173
     // queries the full line above is ~4.5 KB — it has never parsed on the

@@ -861,7 +861,7 @@ object Dml {
         case None =>
           val gate = whereOpt.map(cond =>
             coalesce(expr(cond).cast("boolean"), lit(false)))
-          val affected = Engine.localCount(gate.map(t.filter).getOrElse(t))
+          val affected = gate.map(g => t.filter(g).count()).getOrElse(t.count())
           val t0 = t.withColumn("__rid__", monotonically_increasing_id())
           if (!ignore && e.strictWriteMode) {
             // strict out-of-range assignment into an integral column is
@@ -1026,9 +1026,9 @@ object Dml {
         case None => whereOpt match {
           case Some(cond) =>
             val pred = coalesce(expr(cond).cast("boolean"), lit(false))
-            applyDelete(t.filter(!pred), Engine.localCount(t.filter(pred)))
+            applyDelete(t.filter(!pred), t.filter(pred).count())
           case None =>
-            applyDelete(t.limit(0), Engine.localCount(t))
+            applyDelete(t.limit(0), t.count())
         }
       }
 

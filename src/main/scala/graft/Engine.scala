@@ -291,27 +291,6 @@ object Dialect {
   * the reference's in-memory integrator semantics.
   */
 object Engine {
-  /** The rows of an optimized plan that is already local: a LocalRelation
-    * (ConvertToLocalRelation folds Filter/Project/Limit over a stored
-    * generation), or a Union of them (INSERT appends a VALUES batch to a
-    * stored generation). None when producing the rows needs a job. */
-  private[graft] def localRows(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
-    plan match {
-      case l: LocalRelation => Some(l.data)
-      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
-        Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
-      case _ => None
-    }
-  }
-
-  /** Row count of `df`, read from its folded plan when the rows are
-    * already local, so DML affected-row counts over stored generations
-    * run no job. */
-  private[graft] def localCount(df: DataFrame): Long =
-    localRows(df.queryExecution.optimizedPlan).map(_.size.toLong).getOrElse(df.count())
-
   /** The rows of a stored table generation. Spark walks every
     * constructor argument of every plan node in its expression
     * traversals (QueryPlan.mapExpressions maps `LocalRelation.data`
@@ -457,6 +436,12 @@ class Engine(val spark: SparkSession) {
   // (reference sql/expression/function/aggregation/json_agg.go); Spark's
   // default duplicate-map-key policy is EXCEPTION.
   spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+  // Sort, Aggregate and Union over driver-held rows fold to one
+  // LocalRelation on the driver (plans.FoldLocalRows); Spark runs this
+  // batch last, and ConvertToLocalRelation in it folds what sits above
+  spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    .extraOptimizations = Seq(graft.plans.FoldLocalRows(spark),
+      org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation)
   // Spark's implicit lateral column aliases stay ON: MySQL would reject
   // a sibling projection alias reference (ErrMisusedAlias), but the
   // engine's FROM-less-subquery HAVING rewrite flattens legal MySQL
@@ -2261,7 +2246,7 @@ class Engine(val spark: SparkSession) {
           }
         }
     }
-    val n = Engine.localCount(coerced)
+    val n = coerced.count()
     val unioned = target.unionByName(coerced, allowMissingColumns = fillMissing)
     replaceTable(table, unioned, bumpDepth = true)
     // advance the auto-increment counter past the batch (one scalar agg
@@ -2349,13 +2334,15 @@ class Engine(val spark: SparkSession) {
         val dup =
           if (dupIn.nonEmpty) dupIn.headOption
           else {
-            val t0 = if (nullExempt) target.filter(nonNull) else target
-            val existing = t0.select(kcols.toIndexedSeq: _*).distinct()
-              .toDF(keys.map(k => s"__pk_$k"): _*)
-            val cond = keys.map(k => col(s"`$k`") === col(s"`__pk_$k`"))
-              .reduce(_ && _)
-            b.join(existing, cond, "left_semi")
-              .select(kcols.toIndexedSeq: _*).limit(1).collect().headOption
+            // the batch's keys are distinct now, so a key counted twice
+            // over batch ∪ existing is already stored: one group-by
+            // (which folds on the driver over stored rows) instead of a
+            // semi-join; NULL keys never match, as under the join's `=`
+            def keysOf(df: DataFrame) =
+              df.filter(nonNull).select(kcols.toIndexedSeq: _*)
+            keysOf(b).union(keysOf(target).distinct())
+              .groupBy(kcols.toIndexedSeq: _*).count()
+              .filter(col("count") > 1).limit(1).collect().headOption
           }
         dup.foreach { r =>
           val entry = keys.indices.map(i => String.valueOf(r.get(i)))
@@ -2997,19 +2984,20 @@ class Engine(val spark: SparkSession) {
     *    the gate `Tables.dim` uses). The rows are kept on the driver as
     *    ONE LocalRelation of UnsafeRows, like the reference's in-memory
     *    table (memory/table.go). A plan the optimizer already folded to
-    *    local rows (ConvertToLocalRelation over a stored generation, a
-    *    Union of them) is stored without a job; anything else runs one
-    *    `executeCollect`. The measured bytes of the rows are checked
-    *    against the same threshold, so an estimate that undershoots (a
-    *    generator such as `explode`) falls through to the file path below
-    *    instead of keeping the rows; that one collect is bounded by the
-    *    estimate alone. Later point reads and Filter/Project/Limit
-    *    reads fold in the optimizer (ConvertToLocalRelation) and run with
-    *    no job and no file scan, plans stay flat across any number of
-    *    statements, and union-over-values trees never reach the optimizer
-    *    (Spark's PushProjectionThroughUnion mishandles correlated outer
-    *    references over such unions — "key not found" at optimization
-    *    time).
+    *    one LocalRelation (ConvertToLocalRelation and plans.FoldLocalRows
+    *    over stored generations and VALUES batches) is stored without a
+    *    job; anything else runs one `executeCollect`. The measured bytes
+    *    of the rows are checked against the same threshold, so an
+    *    estimate that undershoots (a generator such as `explode`) falls
+    *    through to the file path below instead of keeping the rows; that
+    *    one collect is bounded by the estimate alone. Later reads fold
+    *    in the optimizer, Filter/Project/Limit by ConvertToLocalRelation
+    *    and global Sort and non-DISTINCT declarative Aggregate by
+    *    plans.FoldLocalRows, and run with no job and no file scan, plans
+    *    stay flat across any number of statements, and union-over-values
+    *    trees never reach the optimizer (Spark's
+    *    PushProjectionThroughUnion mishandles correlated outer references
+    *    over such unions — "key not found" at optimization time).
     *  - Otherwise (or with broadcasting disabled): the view unions the new
     *    plan over the old one until the accumulated depth crosses
     *    MaxUnionDepth, and then materializes a warehouse parquet
@@ -3070,9 +3058,9 @@ class Engine(val spark: SparkSession) {
     }
     val qe = df.queryExecution
     if (Tables.fitsBroadcast(spark, qe.optimizedPlan.stats.sizeInBytes)) {
-      val (output, rows0) = Engine.localRows(qe.optimizedPlan) match {
-        case Some(rows) => (qe.optimizedPlan.output, rows)
-        case None => (qe.executedPlan.output, qe.executedPlan.executeCollect().toSeq)
+      val (output, rows0) = qe.optimizedPlan match {
+        case l: LocalRelation => (l.output, l.data)
+        case _ => (qe.executedPlan.output, qe.executedPlan.executeCollect().toSeq)
       }
       val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(org.apache.spark.sql.catalyst.types.DataTypeUtils.fromAttributes(output))

@@ -36,6 +36,11 @@ object GraftBridge {
   def awaitListenerBus(spark: SparkSession, timeoutMs: Long = 10000L): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
+  /** `e` with -0.0 and NaN normalized, as the physical planner rewrites
+    * aggregate grouping keys (NormalizeFloatingNumbers.normalize). */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** The session's autoBroadcastJoinThreshold in bytes (-1 = disabled). */
   def autoBroadcastThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

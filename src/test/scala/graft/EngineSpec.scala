@@ -898,6 +898,89 @@ class EngineSpec extends AnyFunSuite {
       .exists(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]))
   }
 
+  /** A CTAS copy of orders that one no-op UPDATE moved onto the driver,
+    * in a session of its own, and a key range of 150 orders in it. */
+  private def storedOrders(table: String) = {
+    val s2 = spark.newSession()
+    val e = new Engine(s2)
+    e.attachDir(sfDir)
+    e.query(s"CREATE TABLE $table AS SELECT o_orderkey, o_custkey, " +
+      "o_totalprice, o_orderpriority FROM orders").collect()
+    val keys = s2.table("orders").select("o_orderkey").collect().map(_.getLong(0)).sorted
+    e.query(s"UPDATE $table SET o_custkey = o_custkey WHERE o_orderkey = ${keys(0)}").collect()
+    assert(s2.table(table).queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    (e, keys(10), keys(160))
+  }
+
+  private def rowsOf(e: Engine, sql: String): Seq[Seq[Any]] =
+    e.query(sql).collect().map(_.toSeq).toSeq
+
+  test("Sort and Aggregate over a stored generation fold: no job, same rows as the job path") {
+    val (e, a, b) = storedOrders("fold_orders")
+    val nullKey = "CASE WHEN o_custkey % 3 = 0 THEN NULL ELSE o_orderpriority END"
+    // (SQL with T for the table, whether the row order is part of the result)
+    val cases = Seq(
+      "SELECT SUM(o_custkey), COUNT(*), COUNT(o_custkey), AVG(o_custkey), " +
+        s"MIN(o_orderpriority), MAX(o_totalprice) FROM T WHERE o_orderkey BETWEEN $a AND $b" -> true,
+      "SELECT SUM(o_custkey), COUNT(*), COUNT(o_custkey), AVG(o_custkey), " +
+        "MIN(o_orderpriority), MAX(o_totalprice) FROM T WHERE o_orderkey BETWEEN -10 AND -1" -> true,
+      s"SELECT $nullKey AS p, COUNT(*), SUM(o_custkey) FROM T GROUP BY p" -> false,
+      s"SELECT $nullKey AS p, COUNT(*) FROM T GROUP BY p HAVING COUNT(*) > 300" -> false,
+      s"SELECT $nullKey AS p, COUNT(*) FROM T WHERE o_orderkey < 0 GROUP BY p" -> false,
+      s"SELECT o_orderkey, $nullKey AS p FROM T WHERE o_orderkey BETWEEN $a AND $b " +
+        "ORDER BY p DESC NULLS FIRST, o_orderkey LIMIT 7" -> true,
+      s"SELECT DISTINCT o_orderpriority FROM T WHERE o_custkey % 2 = 0 ORDER BY o_orderpriority" -> true,
+      // the three oltp_mix range shapes
+      s"SELECT SUM(o_custkey) FROM T WHERE o_orderkey BETWEEN $a AND $b" -> true,
+      s"SELECT o_orderpriority FROM T WHERE o_orderkey BETWEEN $a AND $b " +
+        "ORDER BY o_orderpriority" -> true,
+      s"SELECT DISTINCT o_orderpriority FROM T WHERE o_orderkey BETWEEN $a AND $b " +
+        "ORDER BY o_orderpriority" -> true)
+    cases.foreach { case (sql, ordered) =>
+      val want = rowsOf(e, sql.replace(" T ", " orders "))
+      val (got, jobs) = Jobs.count(e.spark)(rowsOf(e, sql.replace(" T ", " fold_orders ")))
+      def norm(r: Seq[Seq[Any]]) = if (ordered) r else r.sortBy(_.mkString("|"))
+      assert(norm(got) == norm(want), sql)
+      assert(want.nonEmpty || sql.contains("< 0"), s"premise: $sql returns rows")
+      assert(jobs == 0, s"$sql ran $jobs jobs over the stored generation")
+    }
+    // DISTINCT and imperative aggregates keep the job path, with the same rows
+    Seq(s"SELECT COUNT(DISTINCT o_orderpriority) FROM T WHERE o_orderkey BETWEEN $a AND $b",
+      s"SELECT GROUP_CONCAT(o_orderpriority ORDER BY o_orderkey SEPARATOR ',') FROM T " +
+        s"WHERE o_orderkey BETWEEN $a AND $b").foreach { sql =>
+      val want = rowsOf(e, sql.replace(" T ", " orders "))
+      val (got, jobs) = Jobs.count(e.spark)(rowsOf(e, sql.replace(" T ", " fold_orders ")))
+      assert(got == want, sql)
+      assert(jobs > 0, s"$sql was folded")
+    }
+    // past the driver budget the same read runs a job
+    val sql = s"SELECT o_orderpriority, COUNT(*) FROM fold_orders " +
+      s"WHERE o_orderkey BETWEEN $a AND $b GROUP BY o_orderpriority ORDER BY o_orderpriority"
+    val folded = rowsOf(e, sql)
+    e.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    val (got, jobs) = Jobs.count(e.spark)(rowsOf(e, sql))
+    assert(got == folded)
+    assert(jobs > 0, "a relation past the budget was folded on the driver")
+  }
+
+  test("a keyed INSERT checks its key without a job; a duplicate is still 1062") {
+    val s2 = spark.newSession()
+    val e = new Engine(s2)
+    e.runScript("CREATE TABLE keyed AS SELECT 1 AS id, 'a' AS name UNION ALL SELECT 2, 'b'")
+    e.declareKey("keyed", Seq("id"))
+    e.query("INSERT INTO keyed VALUES (3, 'c')").collect()
+    val (n, jobs) = Jobs.count(s2)(e.query("INSERT INTO keyed VALUES (4, 'd')").collect()(0).getLong(0))
+    assert(n == 1L)
+    assert(jobs == 0, s"INSERT of a new key ran $jobs jobs")
+    val ex = intercept[IllegalArgumentException](e.query("INSERT INTO keyed VALUES (2, 'x')"))
+    assert(ex.getMessage.contains("Duplicate entry '2'") && ex.getMessage.contains("1062"))
+    val ex2 = intercept[IllegalArgumentException](e.query("INSERT INTO keyed VALUES (5, 'e'), (5, 'f')"))
+    assert(ex2.getMessage.contains("Duplicate entry '5'") && ex2.getMessage.contains("1062"))
+    assert(rowsOf(e, "SELECT id, name FROM keyed ORDER BY id") ==
+      Seq(Seq(1, "a"), Seq(2, "b"), Seq(3, "c"), Seq(4, "d")))
+  }
+
   test("a FROM-less SELECT runs no job; RAND() is left unfolded") {
     val e = new Engine(spark.newSession())
     val df = e.query("SELECT 1 + 1, CONCAT('du', 'al'), UPPER('x') AS u")
