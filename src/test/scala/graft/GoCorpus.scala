@@ -8,8 +8,31 @@ package graft
   * double-quoted + backtick strings, line comments, nil, ints, floats,
   * int64/uint64/float64/int32 wrappers, []byte("..."), and OkResult
   * markers (write statements execute without row comparison).
+  *
+  * The reference tree is not on every machine. Suites that read it
+  * check [[present]] before parsing and, where a file is absent,
+  * register tests that cancel through [[assumePresent]] naming it.
   */
 object GoCorpus {
+
+  /** True when every one of `paths` is a readable file. */
+  def present(paths: String*): Boolean = paths.forall { p =>
+    val f = java.nio.file.Paths.get(p)
+    java.nio.file.Files.isRegularFile(f) && java.nio.file.Files.isReadable(f)
+  }
+
+  /** Cancels the running test, naming the first of `paths` that is not
+    * [[present]]; a no-op when all are. The report points at the
+    * calling test. */
+  def assumePresent(paths: String*)(
+      implicit pos: org.scalactic.source.Position): Unit =
+    for (p <- paths)
+      org.scalatest.Assertions.assume(present(p),
+        s"reference corpus file absent: $p")
+
+  /** Name of the one test a suite registers per var or file in place
+    * of its corpus when the corpus file is absent. */
+  def absentLabel(name: String): String = s"$name [reference tree absent]"
 
   /** A single Query/Expected assertion. `expected` is None for write
     * results (OkResult/UpdateResult) — execute-only. */

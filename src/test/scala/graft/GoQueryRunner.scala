@@ -133,7 +133,10 @@ abstract class GoQueryCorpusSpec extends AnyFunSuite {
   }
 
   protected def registerAll(): Unit = {
-    for (varName <- varNames) {
+    if (!GoCorpus.present(path)) varNames.foreach { v =>
+      test(GoCorpus.absentLabel(v))(GoCorpus.assumePresent(path))
+    }
+    else for (varName <- varNames) {
       val entries = GoCorpus.queryTests(path, varName)
       val batches = entries.zipWithIndex.grouped(batchSize).toSeq
       for ((batch, bi) <- batches.zipWithIndex) {

@@ -296,7 +296,10 @@ abstract class GoScriptCorpusSpec extends AnyFunSuite {
   }
 
   protected def registerAll(): Unit = {
-    for (varName <- varNames) {
+    if (!GoCorpus.present(path)) varNames.foreach { v =>
+      test(GoCorpus.absentLabel(v))(GoCorpus.assumePresent(path))
+    }
+    else for (varName <- varNames) {
       val blocks = GoCorpus.scripts(path, varName)
       val seen = scala.collection.mutable.Map.empty[String, Int]
       var first = true

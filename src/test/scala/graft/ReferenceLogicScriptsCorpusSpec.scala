@@ -130,7 +130,12 @@ class ReferenceLogicScriptsCorpusSpec extends AnyFunSuite {
     }
   }
 
-  for (varName <- Seq("SQLLogicJoinTests", "SQLLogicSubqueryTests")) {
+  private val varNames = Seq("SQLLogicJoinTests", "SQLLogicSubqueryTests")
+
+  if (!GoCorpus.present(path)) varNames.foreach { v =>
+    test(GoCorpus.absentLabel(v))(GoCorpus.assumePresent(path))
+  }
+  else for (varName <- varNames) {
     lazy val blocks = GoCorpus.scripts(path, varName)
     // one scalatest test per script block, named after the Go Name field
     for (idx <- GoCorpus.scripts(path, varName).indices) {
@@ -147,6 +152,7 @@ class ReferenceLogicScriptsCorpusSpec extends AnyFunSuite {
   }
 
   test("parser sanity: both vars parsed with the expected block counts") {
+    GoCorpus.assumePresent(path)
     assert(GoCorpus.scripts(path, "SQLLogicJoinTests").size == 4)
     assert(GoCorpus.scripts(path, "SQLLogicSubqueryTests").size >= 4)
     // the pinned divergence list references real corpus queries only

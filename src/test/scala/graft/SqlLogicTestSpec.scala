@@ -163,7 +163,9 @@ abstract class SqlLogicTestSpec extends AnyFunSuite {
   }
 
   protected def registerAll(): Unit =
-    recs.foreach { r =>
+    if (!GoCorpus.present(path))
+      test(GoCorpus.absentLabel(name))(GoCorpus.assumePresent(path))
+    else recs.foreach { r =>
       val lbl = label(r)
       pinned.collectFirst {
         case (k, reason) if lbl.startsWith(k) => reason
