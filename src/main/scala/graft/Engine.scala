@@ -628,8 +628,7 @@ class Engine(val spark: SparkSession) {
   /** MySQL substring-TRIM semantics (TRIM('bar' FROM s) removes the
     * string, not Spark's character-set reading). Applied to the ANALYZED
     * plan, before the optimizer's constant folding can evaluate a literal
-    * trim with the wrong semantics. GraftExtensions installs the same
-    * rule as a resolution rule for extension-built sessions.
+    * trim with the wrong semantics.
     *
     * A FROM-less SELECT (a Project over OneRowRelation) reads the dual
     * table instead: a one-row, zero-column LocalRelation, which the
@@ -1276,7 +1275,8 @@ class Engine(val spark: SparkSession) {
           case Some((inner, lim, off)) =>
             runStmt(inner).coalesce(1).offset(off).limit(lim)
           case None =>
-            plans.RecursiveSql.run(spark, s).getOrElse(runWithTruthyRetry(s))
+            plans.RecursiveSql.run(spark, s, sqlMySqlArith)
+              .getOrElse(sqlMySqlArith(s))
         }
       // each MySQL-semantics rewrite may expose the NEXT gap in the
       // same statement (e.g. a second deep-correlated subquery), so
@@ -1287,8 +1287,8 @@ class Engine(val spark: SparkSession) {
           // MySQL HAVING-without-GROUP-BY is a row filter over projection
           // aliases (reference sql/planbuilder/select.go); Spark turns it
           // into a global aggregate. Retry-only: rewrite HAVING -> WHERE
-          // with alias substitution (the result re-enters the truthiness
-          // retry so `HAVING <numeric>` also resolves).
+          // with alias substitution (the WHERE it writes takes MySQL
+          // truthiness on the plan, so `HAVING <numeric>` also resolves).
           case e: org.apache.spark.sql.AnalysisException
               if budget > 0 && e.getMessage.contains("MISSING_GROUP_BY") =>
             val viaWhere = SqlRewrite.havingNoGroup(cur)
@@ -1440,15 +1440,6 @@ class Engine(val spark: SparkSession) {
               case Some(fixed) => attempt(fixed, budget - 1)
               case None => throw e
             }
-          // DATE-vs-numeric comparison (TestConvert STR_TO_DATE block):
-          // MySQL compares the DATE as yyyymmdd; Spark's analyzer rejects
-          // the type pair. Retry with the date side rendered numeric.
-          case e: org.apache.spark.sql.AnalysisException
-              if budget > 0 && e.getMessage.contains("BINARY_OP_DIFF_TYPES") &&
-                 e.getMessage.contains("\"DATE\"") =>
-            val expanded = SqlRewrite.dateNumericCompare(cur)
-            if (expanded == cur) throw e
-            attempt(expanded, budget - 1)
           // inline VALUES derived table with mixed literal types: MySQL
           // unifies numerically; rewrite to UNION ALL selects and retry
           case e: org.apache.spark.sql.AnalysisException
@@ -1502,14 +1493,6 @@ class Engine(val spark: SparkSession) {
             val folded = SqlRewrite.foldWideDecimal(cur)
             if (folded == cur) throw e
             attempt(folded, budget - 1)
-          // BETWEEN over a collated column: Spark's With-node desugaring
-          // drops the collation (INDETERMINATE_COLLATION). Retry with the
-          // explicit >= AND <= form, which is MySQL's definition anyway.
-          case e: org.apache.spark.sql.AnalysisException
-              if budget > 0 && e.getMessage.contains("INDETERMINATE_COLLATION") =>
-            val expanded = SqlRewrite.betweenExpand(cur)
-            if (expanded == cur) throw e
-            attempt(expanded, budget - 1)
           // MySQL row-value comparisons — `(a,b) = (c,d)`, `(a,b) IN
           // ((1,2),(3,4))` — have no Spark parse; expand to pairwise
           // scalar comparisons (exact 3VL) and retry.
@@ -1595,18 +1578,12 @@ class Engine(val spark: SparkSession) {
     }.toSet
   }
 
-  private def isBooleanMismatch(e: org.apache.spark.sql.AnalysisException) =
-    e.getMessage.contains("DATATYPE_MISMATCH") &&
-      e.getMessage.toUpperCase.contains("BOOLEAN")
-
-  /** spark.sql with the MySQL numeric-truthiness retry (reference
-    * sql/expression/boolean.go): WHERE 1, HAVING cnt, CASE WHEN i THEN …
-    * — Spark rejects non-boolean predicates, so retry with truth-wrapped
-    * atoms. Retry-only: well-typed queries never pay the rewrite. */
-  /** spark.sql with the MySQL arithmetic rewrite on the parsed plan
-    * (division scale chains, uint64 bit ops, temporal/bool/string
-    * operand coercion — functions/MySqlArith.scala). Falls back to the
-    * plain path if parsing the text directly is impossible. */
+  /** spark.sql with the MySQL coercion layer on the parsed plan
+    * (functions/MySqlArith.scala): truthiness of numeric and string
+    * conditions, type-adaptive comparison (DATE against a number,
+    * BETWEEN as a comparison pair), division scale chains, uint64 bit
+    * ops, temporal/bool/string operand coercion. Falls back to the plain
+    * path if parsing the text directly is impossible. */
   private def sqlMySqlArith(sqlText: String): DataFrame = {
     val parsed =
       try org.apache.spark.sql.GraftBridge.parsePlan(spark, sqlText)
@@ -1614,31 +1591,6 @@ class Engine(val spark: SparkSession) {
     org.apache.spark.sql.GraftBridge.ofRows(spark,
       functions.MySqlArithRewrite(parsed))
   }
-
-  private def runWithTruthyRetry(sqlText: String): DataFrame =
-    try sqlMySqlArith(sqlText)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException if isBooleanMismatch(e) =>
-        // iterate: nested boolean contexts (WHERE IF(n,…)) surface one
-        // layer per pass; the text reaches a fixpoint in ≤3 rounds
-        var cur = sqlText
-        var result: DataFrame = null
-        var lastErr: Throwable = e
-        var rounds = 0
-        while (result == null && rounds < 3) {
-          val wrapped = SqlRewrite.truthy(cur)
-          if (wrapped == cur) throw lastErr
-          cur = wrapped
-          try result = sqlMySqlArith(cur)
-          catch {
-            case e2: org.apache.spark.sql.AnalysisException
-                if isBooleanMismatch(e2) => lastErr = e2
-          }
-          rounds += 1
-        }
-        if (result == null) throw lastErr
-        result
-    }
 
   /** Run a multi-statement script (reference ScriptTest shape:
     * `;`-separated statements, literal-aware split). Returns each
@@ -2165,12 +2117,7 @@ class Engine(val spark: SparkSession) {
       }
       // duplicate keys (PRIMARY + UNIQUE): first row in the batch wins,
       // existing rows win; NULL-keyed rows are exempt under UNIQUE
-      val declaredKeys =
-        tableKeys.get(table).map(k => ("PRIMARY", k, false)).toSeq ++
-          uniqueKeys.toSeq.collect { case (t, n, cols) if t == table =>
-            (n, cols, true)
-          }
-      declaredKeys.foreach { case (keyName, keys, nullExempt) =>
+      declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
         if (keys.forall(k => coerced.columns.exists(_.equalsIgnoreCase(k)))) {
           import org.apache.spark.sql.expressions.Window
           val before = countNow()
@@ -2313,17 +2260,21 @@ class Engine(val spark: SparkSession) {
     }
   }
 
+  /** `table`'s PRIMARY key and every declared UNIQUE key, as
+    * (key name, columns, NULL-keyed rows exempt): only UNIQUE keys exempt
+    * a row with a NULL key column. */
+  private def declaredKeys(table: String): Seq[(String, Seq[String], Boolean)] =
+    tableKeys.get(table).map(k => ("PRIMARY", k, false)).toSeq ++
+      uniqueKeys.toSeq.collect { case (t, n, cols) if t == table =>
+        (n, cols, true)
+      }
+
   /** Plain INSERT against declared keys: a duplicate inside the batch or
     * against existing rows is MySQL error 1062 — the PRIMARY key plus
     * every declared UNIQUE key (whose NULL-keyed rows are exempt). */
   private def enforcePkUnique(table: String, batch: DataFrame,
                               target: DataFrame): Unit = {
-    val declared =
-      tableKeys.get(table).map(k => ("PRIMARY", k, false)).toSeq ++
-        uniqueKeys.toSeq.collect { case (t, n, cols) if t == table =>
-          (n, cols, true)
-        }
-    declared.foreach { case (keyName, keys, nullExempt) =>
+    declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
       if (keys.forall(k => batch.columns.exists(_.equalsIgnoreCase(k)))) {
         import org.apache.spark.sql.functions._
         val kcols = keys.map(k => col(s"`$k`"))
@@ -2362,12 +2313,7 @@ class Engine(val spark: SparkSession) {
     * frame. */
   private[graft] def enforcePkUniquePost(table: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
-    val declared =
-      tableKeys.get(table).map(k => ("PRIMARY", k, false)).toSeq ++
-        uniqueKeys.toSeq.collect { case (t, n, cols) if t == table =>
-          (n, cols, true)
-        }
-    declared.foreach { case (keyName, keys, nullExempt) =>
+    declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
       val kcols = keys.map(k => col(s"`$k`"))
       val nonNull = kcols.map(_.isNotNull).reduce(_ && _)
       val base = if (nullExempt) df.filter(nonNull) else df
@@ -2397,11 +2343,6 @@ class Engine(val spark: SparkSession) {
     import org.apache.spark.sql.functions._
     val pk = tableKeys.getOrElse(table, Seq.empty)
     if (pk.isEmpty) return
-    val declared =
-      (("PRIMARY", pk, false)) +:
-        uniqueKeys.toSeq.collect { case (t, n, cols) if t == table =>
-          (n, cols, true)
-        }
     val cols = spark.table(table).columns.toSeq
     val o = oldDf.select((col("`__rid__`").as("__orid__") +:
       cols.map(c => col(s"`$c`").as(s"__o_$c"))).toIndexedSeq: _*)
@@ -2414,7 +2355,7 @@ class Engine(val spark: SparkSession) {
       .withColumn("__pkord__",
         struct(pk.map(k => col(s"`__o_$k`")).toIndexedSeq: _*))
       .localCheckpoint() // tiny (changed rows' keys); reused per key
-    declared.foreach { case (keyName, keys, nullExempt) =>
+    declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
       val newSide = ch.select(col("__pkord__").as("__pi__"),
         struct(keys.map(k => col(s"`__n_$k`")).toIndexedSeq: _*).as("__nt__"))
       val newF = if (nullExempt)
@@ -2449,11 +2390,7 @@ class Engine(val spark: SparkSession) {
   private[graft] def applyUpdateIgnore(table: String, oldDf: DataFrame,
                                        newDf: DataFrame): (DataFrame, Long) = {
     import org.apache.spark.sql.functions.col
-    val declared =
-      tableKeys.get(table).map(k => ("PRIMARY", k, false)).toSeq ++
-        uniqueKeys.toSeq.collect { case (t, n, cols) if t == table =>
-          (n, cols, true)
-        }
+    val declared = declaredKeys(table)
     if (declared.isEmpty) return (newDf, 0L)
     val total = oldDf.count()
     require(total <= 100000,

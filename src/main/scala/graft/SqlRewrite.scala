@@ -5,9 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 /** Token-level MySQL-dialect rewrites that regexes cannot express safely
   * (reference: the vitess grammar handles these natively —
   * sql/planbuilder/aggregates.go GROUP_CONCAT clause,
-  * sql/expression/logic.go XOR truthiness, sql/expression/boolean.go
-  * numeric-as-boolean coercion). Spark-first answer: rewrite the SQL text
-  * into forms Catalyst parses, leaving everything else byte-identical.
+  * sql/expression/logic.go XOR truthiness). Spark-first answer: rewrite
+  * the SQL text into forms Catalyst parses, leaving everything else
+  * byte-identical.
   *
   * MySQL's lexical rules — where a '…'/"…"/`…` literal ends, which
   * escapes count, what a -- or # comment hides — live in one place:
@@ -1186,101 +1186,6 @@ object SqlRewrite {
           }
         }
         k += 1
-      }
-    }
-    text
-  }
-
-  /** `x [NOT] BETWEEN lo AND hi` -> explicit range comparisons.
-    * Retry-only (Engine catches INDETERMINATE_COLLATION): Spark 4
-    * desugars BETWEEN through a shared common-expression (`With`) node
-    * whose reference drops the column's collation, so BETWEEN over a
-    * collated column fails analysis. The explicit `>= AND <=` form keeps
-    * collation (MySQL defines BETWEEN as exactly that — reference
-    * sql/expression/comparison.go). */
-  def betweenExpand(sql: String): String = {
-    var text = sql
-    var remaining = true
-    while (remaining) {
-      val toks = tokenize(text)
-      val at = toks.indexWhere(_.isWord("between"))
-      if (at < 0) remaining = false
-      else {
-        val notAt = if (at > 0 && toks(at - 1).isWord("not")) at - 1 else -1
-        val subjEnd = if (notAt >= 0) notAt - 1 else at - 1
-        // subject: walk back; stop at comparison symbols, logical words,
-        // clause keywords, unbalanced parens, commas
-        var i = subjEnd
-        var depth = 0
-        var leftStart = -1
-        var stop = false
-        while (i >= 0 && !stop) {
-          val t = toks(i)
-          t.text match {
-            case ")" => depth += 1
-            case "(" if depth == 0 => stop = true
-            case "(" => depth -= 1
-            case "," | ";" if depth == 0 => stop = true
-            case w if depth == 0 && t.kind == Word &&
-                (clauseStops(w.toLowerCase) || w.equalsIgnoreCase("and") ||
-                 w.equalsIgnoreCase("not")) => stop = true
-            case s if depth == 0 && t.kind == Sym && cmpSyms(s) => stop = true
-            case _ =>
-          }
-          if (!stop) { leftStart = i; i -= 1 }
-        }
-        // lo: up to the FIRST depth-0 AND (lo can't contain bare AND)
-        var j = at + 1
-        depth = 0
-        var andAt = -1
-        while (j < toks.length && andAt < 0) {
-          val t = toks(j)
-          t.text match {
-            case "(" => depth += 1
-            case ")" => depth -= 1
-            case _ if depth == 0 && t.isWord("and") => andAt = j
-            case _ =>
-          }
-          j += 1
-        }
-        require(leftStart >= 0 && andAt > at + 1,
-          s"BETWEEN operand scan failed: $text")
-        // hi: forward value scan (same stops as XOR's right operand,
-        // plus AND — `a BETWEEN 1 AND 2 AND b = 3` ends hi at the 2)
-        j = andAt + 1
-        depth = 0
-        var rightEnd = -1
-        stop = false
-        while (j < toks.length && !stop) {
-          val t = toks(j)
-          val prev = if (rightEnd >= 0) Some(toks(rightEnd)) else None
-          val prevIsValue = prev.exists(p =>
-            p.kind == Lit || p.text == ")" ||
-            (p.kind == Word && !valueConnectors(p.text.toLowerCase)))
-          t.text match {
-            case "(" => depth += 1
-            case ")" if depth == 0 => stop = true
-            case ")" => depth -= 1
-            case "," | ";" if depth == 0 => stop = true
-            case w if depth == 0 && t.kind == Word &&
-                (clauseStops(w.toLowerCase) || w.equalsIgnoreCase("and")) =>
-              stop = true
-            case w if depth == 0 && t.kind == Word && prevIsValue &&
-                !valueConnectors(w.toLowerCase) =>
-              stop = true
-            case _ =>
-          }
-          if (!stop) { rightEnd = j; j += 1 }
-        }
-        require(rightEnd >= andAt + 1, s"BETWEEN operand scan failed: $text")
-        val subj = text.substring(toks(leftStart).start, toks(subjEnd).end)
-        val lo = text.substring(toks(at + 1).start, toks(andAt - 1).end)
-        val hi = text.substring(toks(andAt + 1).start, toks(rightEnd).end)
-        val repl =
-          if (notAt >= 0) s"(($subj) < ($lo) OR ($subj) > ($hi))"
-          else s"(($subj) >= ($lo) AND ($subj) <= ($hi))"
-        text = text.substring(0, toks(leftStart).start) + repl +
-          text.substring(toks(rightEnd).end)
       }
     }
     text
@@ -3120,224 +3025,6 @@ object SqlRewrite {
     if (patches.isEmpty) sql else splice(sql, patches.toSeq)
   }
 
-
-  // ---- truthiness pass (retry-only): wrap non-comparison atoms of
-  //      WHERE / HAVING / searched-CASE WHEN bodies in ((atom) <> 0).
-  //      MySQL treats any numeric as a truth value (reference
-  //      sql/expression/boolean.go); Spark requires BOOLEAN predicates.
-  //      Engine.query retries through this pass when analysis fails with
-  //      DATATYPE_MISMATCH on a boolean context, so green queries never
-  //      pay the extra wrapping.
-
-  private val comparisonWords = Set("is", "like", "rlike", "regexp", "in",
-    "between", "exists", "not")
-  private val boolEnd = Set("then", "group", "order", "having", "limit",
-    "offset", "union", "intersect", "except", "window", "else", "end",
-    "when", "qualify")
-
-  def truthy(sql: String): String = {
-    val toks = tokenize(sql)
-    val patches = ArrayBuffer.empty[(Int, Int, String)]
-    // CASE kind stack: decide whether a WHEN belongs to a searched CASE
-    val caseStack = scala.collection.mutable.Stack.empty[Boolean] // true = searched
-    var idx = 0
-    while (idx < toks.length) {
-      val t = toks(idx)
-      if (t.isWord("case"))
-        caseStack.push(idx + 1 < toks.length && toks(idx + 1).isWord("when"))
-      else if (t.isWord("end") && caseStack.nonEmpty) caseStack.pop()
-
-      // IF(cond, a, b): cond is a boolean context (MySQL if() truthiness,
-      // reference sql/expression/function/if.go). Wrap the first top-level
-      // argument only; the value arms keep their types.
-      if (t.isWord("if") && idx + 1 < toks.length && toks(idx + 1).text == "(") {
-        var j = idx + 2
-        var depth = 0
-        var last = idx + 1
-        var stop = false
-        while (j < toks.length && !stop) {
-          toks(j).text match {
-            case "(" => depth += 1
-            case ")" if depth == 0 => stop = true
-            case ")" => depth -= 1
-            case "," if depth == 0 => stop = true
-            case _ =>
-          }
-          if (!stop) { last = j; j += 1 }
-        }
-        if (last >= idx + 2) wrapAtoms(sql, toks.slice(idx + 2, last + 1), patches)
-      }
-
-      // select-list items that ARE boolean expressions (top-level AND/OR):
-      // `select '3bxu' and true` — MySQL evaluates operand truthiness,
-      // Spark rejects the non-boolean operand (reference logic.go)
-      if (t.isWord("select")) {
-        var j = idx + 1
-        var depth = 0
-        var last = idx
-        var stop = false
-        val commas = ArrayBuffer.empty[Int]
-        while (j < toks.length && !stop) {
-          val u = toks(j)
-          u.text match {
-            case "(" => depth += 1
-            case ")" if depth == 0 => stop = true
-            case ")" => depth -= 1
-            case ";" if depth == 0 => stop = true
-            case "," if depth == 0 => commas += j
-            case w if depth == 0 && u.kind == Word && Set("from", "where",
-                "group", "order", "having", "limit", "union", "intersect",
-                "except", "window")(w.toLowerCase) => stop = true
-            case _ =>
-          }
-          if (!stop) { last = j; j += 1 }
-        }
-        val cuts: Seq[Int] = Seq(idx) ++ commas.toSeq ++ Seq(last + 1)
-        cuts.sliding(2).foreach { case Seq(from, until) =>
-          var item = toks.slice(from + 1, until)
-          if (item.nonEmpty && (item.head.isWord("distinct") ||
-              item.head.isWord("all")))
-            item = item.drop(1)
-          // drop a trailing alias (`AS x`, or implicit `expr x`)
-          if (item.length >= 2 && item(item.length - 2).isWord("as") &&
-              item.last.kind == Word)
-            item = item.dropRight(2)
-          else if (item.length >= 2 && item.last.kind == Word &&
-              !valueConnectors(item.last.text.toLowerCase) && {
-                val p = item(item.length - 2)
-                p.kind == Lit || p.text == ")" ||
-                (p.kind == Word && !valueConnectors(p.text.toLowerCase) &&
-                 !comparisonWords(p.text.toLowerCase))
-              })
-            item = item.dropRight(1)
-          var d2 = 0
-          val isBoolExpr = item.exists { u =>
-            u.text match {
-              case "(" => d2 += 1; false
-              case ")" => d2 -= 1; false
-              case w if d2 == 0 && u.kind == Word =>
-                w.toLowerCase == "and" || w.toLowerCase == "or"
-              case _ => false
-            }
-          }
-          if (isBoolExpr) wrapAtoms(sql, item, patches)
-        }
-      }
-
-      val isBoolCtx =
-        t.isWord("where") || t.isWord("having") ||
-        (t.isWord("when") && caseStack.nonEmpty && caseStack.top)
-      if (isBoolCtx) {
-        // span until next top-level clause keyword / unbalanced ')' / ';'
-        var j = idx + 1
-        var depth = 0
-        var last = idx
-        var stop = false
-        while (j < toks.length && !stop) {
-          val u = toks(j)
-          u.text match {
-            case "(" => depth += 1
-            case ")" if depth == 0 => stop = true
-            case ")" => depth -= 1
-            case ";" if depth == 0 => stop = true
-            case w if depth == 0 && u.kind == Word && boolEnd(w.toLowerCase) =>
-              stop = true
-            case _ =>
-          }
-          if (!stop) { last = j; j += 1 }
-        }
-        if (last > idx) wrapAtoms(sql, toks.slice(idx + 1, last + 1), patches)
-        idx = last
-      }
-      idx += 1
-    }
-    // a WHERE/WHEN-span atom patch can fully contain an IF-condition patch
-    // (`WHERE IF(n,1,0)`): splice cannot nest, so keep the outer wrap only —
-    // Engine.query retries truthy until the text reaches a fixpoint, and the
-    // inner condition is caught on the next pass (its enclosing atom then
-    // carries a top-level `<>`).
-    val kept = ArrayBuffer.empty[(Int, Int, String)]
-    patches.sortBy(p => (p._1, -p._2)).foreach { p =>
-      if (!kept.exists(k => p._1 >= k._1 && p._2 <= k._2)) kept += p
-    }
-    if (kept.isEmpty) sql else splice(sql, kept.toSeq)
-  }
-
-  /** Split a boolean-context token span on top-level AND/OR/NOT and wrap
-    * each atom that has no top-level comparison in ((atom) <> 0). */
-  private def wrapAtoms(sql: String, span: Vector[Tok],
-                        patches: ArrayBuffer[(Int, Int, String)]): Unit = {
-    if (span.isEmpty) return
-    // fully parenthesized? strip and recurse
-    if (span.head.text == "(" && span.last.text == ")") {
-      var d = 0
-      val closesEarly = span.init.zipWithIndex.exists { case (t, k) =>
-        t.text match {
-          case "(" => d += 1; false
-          case ")" => d -= 1; d == 0 && k < span.length - 1
-          case _ => false
-        }
-      }
-      if (!closesEarly) return wrapAtoms(sql, span.slice(1, span.length - 1), patches)
-    }
-    var depth = 0
-    var atomStart = 0
-    var betweenDepth = 0 // BETWEEN … AND pairing: that AND is not a split
-    val splits = ArrayBuffer.empty[(Int, Int)] // atom [from, until)
-    span.zipWithIndex.foreach { case (t, k) =>
-      t.text match {
-        case "(" => depth += 1
-        case ")" => depth -= 1
-        case _ if depth == 0 && t.kind == Word =>
-          t.text.toLowerCase match {
-            case "between" => betweenDepth += 1
-            case "and" if betweenDepth > 0 => betweenDepth -= 1
-            case "and" | "or" =>
-              splits += ((atomStart, k)); atomStart = k + 1
-            case "not" if k == atomStart => atomStart = k + 1 // NOT prefix
-            case _ =>
-          }
-        case _ =>
-      }
-    }
-    splits += ((atomStart, span.length))
-    splits.foreach { case (from, until) =>
-      if (from < until) {
-        val atom = span.slice(from, until)
-        val hasComparison = {
-          var d = 0
-          atom.exists { t =>
-            t.text match {
-              case "(" => d += 1; false
-              case ")" => d -= 1; false
-              case _ if d == 0 =>
-                (t.kind == Sym && Set("=", "<", ">", "<>", "!=", "<=", ">=",
-                  "<=>")(t.text)) ||
-                (t.kind == Word && comparisonWords(t.text.toLowerCase))
-              case _ => false
-            }
-          }
-        }
-        // single parenthesized group (e.g. `(a OR b)`): recurse inside
-        val isParenGroup = atom.head.text == "(" && atom.last.text == ")" && {
-          var d = 0
-          !atom.init.zipWithIndex.exists { case (t, k) =>
-            t.text match {
-              case "(" => d += 1; false
-              case ")" => d -= 1; d == 0 && k < atom.length - 1
-              case _ => false
-            }
-          }
-        }
-        if (isParenGroup) wrapAtoms(sql, atom.slice(1, atom.length - 1), patches)
-        else if (!hasComparison) {
-          val s = atom.head.start; val e = atom.last.end
-          patches += ((s, e, truthWrap(sql.substring(s, e))))
-        }
-      }
-    }
-  }
-
   // ---- MATCH(col, …) AGAINST ('query' [mode]) ---------------------------
   // (reference sql/expression/matchagainst.go). The query string is a
   // plan-time literal, so the full-text grammar compiles HERE into a
@@ -3346,7 +3033,7 @@ object SqlRewrite {
   // query-expansion queries strip operators first: the MATCHING set
   // (relevance > 0) agrees with MySQL's natural mode, absolute relevance
   // differs from InnoDB's IDF ranking (documented divergence).
-  // WHERE-context truthiness flows through the numeric-truthiness retry.
+  // WHERE-context truthiness comes from MySqlBool on the parsed plan.
   /** MySQL JSON column-path operators (json_scripts.go:724 "JSON -> and
     * ->> operator support"): `a->'$.p'` is JSON_EXTRACT(a, '$.p') and
     * `a->>'$.p'` is JSON_UNQUOTE(JSON_EXTRACT(a, '$.p')). Quote-aware
@@ -4169,50 +3856,6 @@ object SqlRewrite {
       if (toks(i).kind == Sym && cmpSyms.contains(toks(i).text)) {
         tryPatch(i - 1, i + 1)
         tryPatch(i + 1, i - 1)
-      }
-      i += 1
-    }
-    if (patches.isEmpty) sql else splice(sql, patches.toSeq)
-  }
-
-  // ---- DATE-producing call vs numeric operand (TestConvert
-  //      STR_TO_DATE block): MySQL compares a DATE against a number as
-  //      yyyymmdd. Retry-only — applied when Spark's analyzer rejects
-  //      the comparison with BINARY_OP_DIFF_TYPES on a DATE operand.
-
-  private val dateFns = Set("to_date", "str_to_date", "date", "makedate",
-    "from_days", "last_day", "curdate", "current_date")
-
-  def dateNumericCompare(sql: String): String = {
-    val toks = tokenize(sql)
-    val patches = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    def callSpan(startIdx: Int): Option[Int] =
-      if (startIdx + 1 < toks.length &&
-          dateFns.contains(toks(startIdx).text.toLowerCase) &&
-          toks(startIdx + 1).kind == Sym && toks(startIdx + 1).text == "(")
-        Some(closeParenFor(toks, startIdx + 1)).filter(_ > 0)
-      else None
-    var i = 1
-    while (i < toks.length - 1) {
-      if (toks(i).kind == Sym && cmpSyms.contains(toks(i).text)) {
-        // date call on the right of the comparison
-        callSpan(i + 1).foreach { close =>
-          val span = sql.substring(toks(i + 1).start, toks(close).end)
-          patches += ((toks(i + 1).start, toks(close).end,
-            s"cast(date_format($span, 'yyyyMMdd') as bigint)"))
-          i = close
-        }
-        // date call ending right before the comparison
-        if (i - 1 >= 1 && toks(i - 1).kind == Sym &&
-            toks(i - 1).text == ")") {
-          val open = openParenFor(toks, i - 1)
-          if (open > 0 &&
-              dateFns.contains(toks(open - 1).text.toLowerCase)) {
-            val span = sql.substring(toks(open - 1).start, toks(i - 1).end)
-            patches += ((toks(open - 1).start, toks(i - 1).end,
-              s"cast(date_format($span, 'yyyyMMdd') as bigint)"))
-          }
-        }
       }
       i += 1
     }

@@ -107,9 +107,6 @@ object FullText {
       else if (weighted) scoring.map(t =>
         s"(CAST(${pres(t)} AS DOUBLE) * ${t.weight})").mkString(" + ")
       else scoring.map(pres).mkString(" + ")
-    // the WHEN condition stays ONE parenthesized group so the engine's
-    // numeric-truthiness retry treats the whole CASE as a single atom
-    // (it splits a WHERE at top-level AND/OR)
     s"(CASE WHEN (($reqOk) AND ($excOk) AND ($optOk)) " +
       s"THEN $score ELSE $zero END)"
   }

@@ -208,9 +208,9 @@ object MiscFns {
   private val ipv4Rx =
     "^((25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])\\.){3}(25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])$"
 
-  /** Every (name, builder) pair; shared by Engine registration and
-    * GraftExtensions injection. Each entry mirrors the reference function
-    * of the same name in registry.go. */
+  /** Every (name, builder) pair, registered by the Engine constructor.
+    * Each entry mirrors the reference function of the same name in
+    * registry.go. */
   def builders: Seq[(String, B)] = Seq(
     // date/time tail (reference time.go, dateadd.go)
     // day counts beyond MySQL's representable range read NULL (the CASE

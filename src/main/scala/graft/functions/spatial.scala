@@ -1382,8 +1382,7 @@ object spatial {
         wktLit(",") +: es),
       wktLit(")"))))
 
-  /** Every (name, builder) pair — shared by Engine registration and
-    * GraftExtensions injection (single source of truth, no drift). */
+  /** Every (name, builder) pair, registered by the Engine constructor. */
   def builders: Seq[(String, Seq[Expression] => Expression)] =
     Seq[(String, Seq[Expression] => Expression)](
       "point" -> (es => pointCtor(es)),

@@ -60,8 +60,11 @@ object RecursiveSql {
     * binding may reference earlier ones and itself) and a WITH RECURSIVE
     * nested inside a larger statement: the bindings materialize as temp
     * views in order, the with-clause text is spliced out, and the
-    * remaining statement runs against the views. */
-  def run(spark: SparkSession, sql: String): Option[DataFrame] = {
+    * remaining statement runs against the views. Every term and the
+    * outer statement run through `sqlRun`, the caller's SQL-text path
+    * (the Engine passes its parse plus MySQL coercion layer). */
+  def run(spark: SparkSession, sql: String,
+          sqlRun: String => DataFrame): Option[DataFrame] = {
     // literal-aware locate of the WITH RECURSIVE keywords (a regex over
     // raw text would also match inside string literals)
     val toksAll = graft.SqlRewrite.tokenize(sql)
@@ -97,11 +100,11 @@ object RecursiveSql {
     val made = scala.collection.mutable.ListBuffer.empty[String]
     try {
       binds.foreach { b =>
-        val df = evalBinding(spark, b)
+        val df = evalBinding(b, sqlRun)
         df.createOrReplaceTempView(b.name)
         made += b.name
       }
-      val result = spark.sql(outer) // analysis is eager; safe to drop after
+      val result = sqlRun(outer) // analysis is eager; safe to drop after
       Some(result)
     } finally made.foreach { n =>
       try spark.catalog.dropTempView(n) catch { case _: Throwable => () }
@@ -110,7 +113,8 @@ object RecursiveSql {
 
   /** Materialize one binding: non-recursive bodies run directly;
     * self-referencing bodies drive the working-table loop. */
-  private def evalBinding(spark: SparkSession, b: Binding): DataFrame = {
+  private def evalBinding(b: Binding,
+                          sqlRun: String => DataFrame): DataFrame = {
     val (terms0, allBag) = splitUnions(b.body)
     val selfRef = ("(?i)\\b" + java.util.regex.Pattern.quote(b.name) + "\\b").r
     // a trailing top-level [ORDER BY ...] LIMIT n on the LAST term caps
@@ -167,7 +171,7 @@ object RecursiveSql {
     }
 
     val seedSql = anchorTerms.map(t => s"($t)").mkString(" UNION ALL ")
-    var seed = spark.sql(seedSql)
+    var seed = sqlRun(seedSql)
     b.cols.foreach(cs => seed = seed.toDF(cs: _*))
 
     // recursive-term outputs keep the working table's column names
@@ -175,7 +179,7 @@ object RecursiveSql {
     val colNames = seed.columns.toSeq
     val step = (delta: DataFrame) => {
       delta.createOrReplaceTempView(b.name)
-      recTerms.map(t => spark.sql(t).toDF(colNames: _*)).reduce(_ unionAll _)
+      recTerms.map(t => sqlRun(t).toDF(colNames: _*)).reduce(_ unionAll _)
     }
     val acc =
       if (recTerms.isEmpty) {

@@ -673,12 +673,17 @@ class EngineSpec extends AnyFunSuite {
     assert(engine.query("SELECT 1 AS one").collect()(0).getInt(0) == 1)
   }
 
-  test("GraftExtensions injects the function library") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(ext) // builds all injection entries without error
-    // behavior equivalence: the same builders back the Engine-registered fns
-    assert(engine.query("SELECT json_type('[1]') AS t").collect()(0)
-      .getString(0) == "ARRAY")
+  test("WITH RECURSIVE terms take MySQL truthiness") {
+    // the recursive term's WHERE is numeric: 5 - n is false at n = 5
+    val rec = engine.query("WITH RECURSIVE r(n) AS (SELECT 1 UNION ALL " +
+      "SELECT n + 1 FROM r WHERE 5 - n) SELECT * FROM r")
+      .collect().map(_.get(0).toString.toInt)
+    assert(rec.sorted.toSeq == Seq(1, 2, 3, 4, 5))
+    // numeric conditions in the anchor term and the outer statement
+    val all = engine.query("WITH RECURSIVE r(n) AS (SELECT 1 WHERE 2 - 1 " +
+      "UNION ALL SELECT n + 1 FROM r WHERE 5 - n) SELECT n FROM r " +
+      "WHERE n - 3 ORDER BY n").collect().map(_.get(0).toString.toInt)
+    assert(all.toSeq == Seq(1, 2, 4, 5))
   }
 
   test("custom native functions are registered on the session") {

@@ -41,6 +41,9 @@ class ReferenceCorpusSpec extends AnyFunSuite {
     Seq((1L, java.sql.Timestamp.valueOf("2019-12-31 12:00:00"),
         java.sql.Date.valueOf("2019-12-31")))
       .toDF("id", "ti", "da").createOrReplaceTempView("typestable")
+    // string truthiness: '3bxu' reads 3, the other three read 0
+    Seq((1, "3bxu"), (2, "0"), (3, "asdf"), (4, ""))
+      .toDF("k", "v").createOrReplaceTempView("strtable")
     new Engine(spark)
   }
 
@@ -408,6 +411,45 @@ class ReferenceCorpusSpec extends AnyFunSuite {
       Seq(Seq(1)))
     check("SELECT id FROM typestable WHERE ti > '2019-12-31'",
       Seq(Seq(1)))
+  }
+
+  test("MySQL truthiness, DATE-vs-number comparison and BETWEEN over a " +
+      "collated column (reference expression/logic.go ConvertToBool, " +
+      "sql/types compare-by-promotion)") {
+    // numeric and string operands as truth values: WHERE, NOT, HAVING,
+    // JOIN ON, IF and CASE WHEN conditions
+    check("SELECT i FROM mytable WHERE i", Seq(Seq(1), Seq(2), Seq(3)))
+    check("SELECT i FROM mytable WHERE i - 2", Seq(Seq(1), Seq(3)))
+    check("SELECT k FROM strtable WHERE v", Seq(Seq(1)))
+    check("SELECT k FROM strtable WHERE NOT v",
+      Seq(Seq(2), Seq(3), Seq(4)))
+    check("SELECT i FROM mytable GROUP BY i HAVING COUNT(*) - 1", Seq.empty)
+    check("SELECT i FROM mytable GROUP BY i HAVING COUNT(*)",
+      Seq(Seq(1), Seq(2), Seq(3)))
+    check("SELECT i FROM mytable WHERE IF(i - 1, 1, 0)", Seq(Seq(2), Seq(3)))
+    check("SELECT a.i, b.i FROM mytable a JOIN mytable b ON a.i - 1 " +
+      "AND a.i = b.i", Seq(Seq(2, 2), Seq(3, 3)))
+    check("SELECT i, CASE WHEN i - 2 THEN 'y' ELSE 'n' END AS c " +
+      "FROM mytable ORDER BY i",
+      Seq(Seq(1, "y"), Seq(2, "n"), Seq(3, "y")))
+    // a DATE against a number compares as yyyymmdd
+    check("SELECT STR_TO_DATE('2009-02-09','%Y-%m-%d') = 20090209 AS b",
+      Seq(Seq(true)))
+    check("SELECT id FROM typestable WHERE da = 20191231", Seq(Seq(1)))
+    check("SELECT id FROM typestable WHERE da > 20190101", Seq(Seq(1)))
+    check("SELECT DATE('2019-12-31') = 20191231 AS b", Seq(Seq(true)))
+    // [NOT] BETWEEN over an accent/case-insensitive column
+    engine.query("DROP TABLE IF EXISTS ct")
+    engine.query("CREATE TABLE ct (k INT PRIMARY KEY, " +
+      "s VARCHAR(10) COLLATE utf8mb4_0900_ai_ci)")
+    engine.query("INSERT INTO ct VALUES (1,'a'),(2,'B'),(3,'c'),(4,'D')")
+    check("SELECT k FROM ct WHERE s BETWEEN 'a' AND 'b'",
+      Seq(Seq(1), Seq(2)))
+    check("SELECT k FROM ct WHERE s NOT BETWEEN 'a' AND 'b'",
+      Seq(Seq(3), Seq(4)))
+    check("SELECT k FROM ct WHERE s BETWEEN 'A' AND 'C' AND k > 1",
+      Seq(Seq(2), Seq(3)))
+    engine.query("DROP TABLE ct")
   }
 
   test("UNION associativity, mixed-type unions, nested-CTE unions, " +

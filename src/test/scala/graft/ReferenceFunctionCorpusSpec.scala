@@ -190,7 +190,7 @@ class ReferenceFunctionCorpusSpec extends AnyFunSuite {
     check("SELECT * FROM mytable WHERE i in (1+2)",
       Seq(Seq(3, "third row")))
     one("select 0 in (1/100000)", false)
-    // numeric truthiness in CASE WHEN COUNT(*) (truthy retry path)
+    // numeric truthiness in CASE WHEN COUNT(*)
     one("SELECT CASE WHEN COUNT( * ) THEN 10 * CAST(-19 AS SIGNED ) + CAST(82 AS DECIMAL) END",
       BigDecimal(-108))
     one("select cast(X'9876543210' as binary)",

@@ -85,32 +85,6 @@ class SqlRewriteSpec extends AnyFunSuite {
     assert(SqlRewrite.fromlessHavingSubquery(multi) == multi)
   }
 
-  test("betweenExpand rewrites [NOT] BETWEEN into explicit comparisons") {
-    assert(squash(SqlRewrite.betweenExpand(
-      "select * from t where v between 'a' and 'b'")) ==
-      "select * from t where ((v) >= ('a') AND (v) <= ('b'))")
-    assert(squash(SqlRewrite.betweenExpand(
-      "select * from t where v not between 1 and 2")) ==
-      "select * from t where ((v) < (1) OR (v) > (2))")
-    // following conjunct stays outside the hi operand
-    assert(squash(SqlRewrite.betweenExpand(
-      "select * from t where a between 1 and 2 and b = 3")) ==
-      "select * from t where ((a) >= (1) AND (a) <= (2)) and b = 3")
-    // arithmetic subject and function operands survive
-    assert(squash(SqlRewrite.betweenExpand(
-      "select * from t where a + 1 between f(x, 2) and g(y)")) ==
-      "select * from t where ((a + 1) >= (f(x, 2)) AND (a + 1) <= (g(y)))")
-    // multiple BETWEENs, including inside a CASE branch
-    assert(squash(SqlRewrite.betweenExpand(
-      "select case when a between 1 and 2 then 1 else 0 end, " +
-      "b between 3 and 4 from t")) ==
-      "select case when ((a) >= (1) AND (a) <= (2)) then 1 else 0 end, " +
-      "((b) >= (3) AND (b) <= (4)) from t")
-    // no BETWEEN: untouched
-    val plain = "select * from t where x = 'between'"
-    assert(SqlRewrite.betweenExpand(plain) == plain)
-  }
-
   test("orderlessRankWindow: multiple windows, offsets past first insertion") {
     // three orderless ranking windows — the 2nd/3rd matches sit at
     // offsets that only exist in the MUTATED text; quote scanning must
