@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Per-thread registry of persisted intermediates.
   *
@@ -41,7 +42,7 @@ object CacheScope {
   /** Non-blocking unpersist of everything tracked on this thread. */
   def drain(): Unit = {
     val buf = tracked.get()
-    buf.foreach(f => try f() catch { case _: Throwable => () })
+    buf.foreach(f => try f() catch { case NonFatal(_) => () })
     buf.clear()
   }
 }

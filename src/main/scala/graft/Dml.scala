@@ -14,9 +14,12 @@ import graft.SqlRewrite.{closingParen, indexOfTopLevelWord, scanTop,
   *  - INSERT appends via Engine.insertDf (vocabulary-validated, plan
   *    depth bounded by warehouse materialization); a column list
   *    null-fills the unmentioned columns like MySQL defaults.
-  *  - UPDATE/DELETE rewrite the view: UPDATE projects CASE WHEN pred
-  *    THEN expr ELSE col END per assigned column, DELETE keeps the
-  *    rows where the predicate is not TRUE (MySQL 3VL: NULL keeps).
+  *  - UPDATE/DELETE on a driver-held table (Engine.storedMatch) evaluate
+  *    the predicate once per stored row; UPDATE projects the assignments
+  *    over the matched rows only and replaces them in place, DELETE keeps
+  *    the rows where the predicate is not TRUE (MySQL 3VL: NULL keeps).
+  *    Any other table is rewritten as a frame: UPDATE projects CASE WHEN
+  *    pred THEN expr ELSE col END per assigned column.
   *  - Each returns MySQL's ok-packet shape as a 1-row `affected_rows`.
   *
   * All statement recognition is anchored, case-insensitive, and falls
@@ -735,16 +738,40 @@ object Dml {
             s"'$table' is not allowed. (MySQL error 3105)")
         else Some(c -> ex)
       }
+      // strict out-of-range assignment into an integral column is MySQL
+      // error 1264 BEFORE the write cast can wrap it (rowexec/update.go
+      // convert, non-IGNORE). Assignments apply LEFT TO RIGHT, each RHS
+      // seeing the values the earlier assignments produced
+      // (update_queries.go:59-63), so each bound check evaluates against
+      // the row AFTER the preceding assignments: with `flagOutOfRange`,
+      // assignSequential plants one flag column per integral assignment,
+      // (column, flag) below, true on a matched row whose value is out of
+      // range.
+      val oobFlags = assignsResolved.zipWithIndex.collect {
+        case ((c, _), i) if e.integralBounds(colTypes(c)).isDefined =>
+          (c, s"__oob${i}__")
+      }
       // sequential fold: gate (if any) is materialized from the ORIGINAL
       // row first so later layers can't perturb the match predicate
       def assignSequential(df: DataFrame,
-                           gate: Option[org.apache.spark.sql.Column]) = {
+                           gate: Option[org.apache.spark.sql.Column],
+                           flagOutOfRange: Boolean = false) = {
         val g0 = gate.map(g => df.withColumn("__upd__", g)).getOrElse(df)
-        val updated = assignsResolved.foldLeft(g0) { case (d, (c, ex)) =>
-          val v = castTo(c, expr(ex))
-          d.withColumn(c,
-            if (gate.isDefined) when(col("__upd__"), v).otherwise(col(s"`$c`"))
-            else v)
+        val updated = assignsResolved.zipWithIndex.foldLeft(g0) {
+          case (d, ((c, ex), i)) =>
+            val v = castTo(c, expr(ex))
+            val assigned =
+              if (gate.isDefined) when(col("__upd__"), v).otherwise(col(s"`$c`"))
+              else v
+            e.integralBounds(colTypes(c)).filter(_ => flagOutOfRange) match {
+              case Some((lo, hi)) =>
+                val asDec = expr(ex).cast(
+                  org.apache.spark.sql.types.DecimalType(38, 0))
+                val oob = asDec.isNotNull && (asDec < lit(lo) || asDec > lit(hi))
+                d.withColumns(Map(s"__oob${i}__" -> gate.fold(oob)(_ => col("__upd__") && oob),
+                  c -> assigned))
+              case None => d.withColumn(c, assigned)
+            }
         }
         if (gate.isDefined) updated.drop("__upd__") else updated
       }
@@ -861,87 +888,100 @@ object Dml {
         case None =>
           val gate = whereOpt.map(cond =>
             coalesce(expr(cond).cast("boolean"), lit(false)))
-          val affected = gate.map(g => t.filter(g).count()).getOrElse(t.count())
-          val t0 = t.withColumn("__rid__", monotonically_increasing_id())
-          if (!ignore && e.strictWriteMode) {
-            // strict out-of-range assignment into an integral column is
-            // MySQL error 1264 BEFORE the write cast can wrap it
-            // (rowexec/update.go convert, non-IGNORE). Assignments apply
-            // LEFT TO RIGHT, each RHS seeing the values the earlier
-            // assignments produced (update_queries.go:59-63), so each
-            // bound check evaluates against the row AFTER the preceding
-            // assignments — the probe folds them into its projection the
-            // same way assignSequential does, then runs ONE combined
-            // filter + limit(1) over the affected rows (the projection
-            // chain collapses to a single scan).
-            var probe = gate.map(t0.filter).getOrElse(t0)
-            val oobFlags =
-              scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-            assignsResolved.foreach { case (cn, ex) =>
-              e.integralBounds(colTypes(cn)).foreach { case (lo, hi) =>
-                val asDec = expr(ex).cast(
-                  org.apache.spark.sql.types.DecimalType(38, 0))
-                val f = s"__oob${oobFlags.size}__"
-                probe = probe.withColumn(f,
-                  asDec.isNotNull && (asDec < lit(lo) || asDec > lit(hi)))
-                oobFlags += ((cn, f))
-              }
-              probe = probe.withColumn(cn, castTo(cn, expr(ex)))
+          val strict = !ignore && e.strictWriteMode
+          // MySQL error 1264 when a row of a strict image carries an
+          // out-of-range flag (assignSequential); the image without them
+          def raiseOutOfRange(image: DataFrame): DataFrame =
+            if (oobFlags.isEmpty) image
+            else {
+              val any = e.localRows(image.agg(
+                max(col(s"`${oobFlags.head._2}`")),
+                oobFlags.tail.map(f => max(col(s"`${f._2}`"))): _*)).head
+              oobFlags.indices.find(i => !any.isNullAt(i) && any.getBoolean(i))
+                .foreach { i =>
+                  throw new IllegalArgumentException(
+                    s"Out of range value for column '${oobFlags(i)._1}' " +
+                    s"(MySQL error 1264)")
+                }
+              image.drop(oobFlags.map(_._2): _*)
             }
-            if (oobFlags.nonEmpty) {
-              val bad = probe
-                .filter(oobFlags.map(t => col(s"`${t._2}`")).reduce(_ || _))
-                .select(oobFlags.map { case (n, f) => col(s"`$f`").as(n) }
-                  .toIndexedSeq: _*)
-                .limit(1).collect()
-              bad.headOption.foreach { r =>
-                val i = oobFlags.indices
-                  .find(i => !r.isNullAt(i) && r.getBoolean(i)).getOrElse(0)
-                throw new IllegalArgumentException(
-                  s"Out of range value for column '${oobFlags(i)._1}' " +
-                  s"(MySQL error 1264)")
-              }
-            }
-            val newDfRaw = e.coerceVocab(table,
+          // the assignments, then the table's BEFORE UPDATE triggers on
+          // `g`'s rows (the trigger gate taken from the original row)
+          def assignThenTrigger(base: DataFrame,
+              g: Option[org.apache.spark.sql.Column])(
+              assign: DataFrame => DataFrame): DataFrame =
+            if (!e.triggers.values.exists(t => t.table == table &&
+                t.timing == "BEFORE" && t.event == "UPDATE")) assign(base)
+            else applyBeforeUpdateTriggers(e, table,
+              assign(base.withColumn("__trg_gate__", g.getOrElse(lit(true)))),
+              col("__trg_gate__")).drop("__trg_gate__")
+          // the post-update image of `base`; rows outside `g` keep their
+          // values. Strict mode: a bad value errors. Non-strict mode (SET
+          // sql_mode=''): values coerce with warnings like IGNORE.
+          def strictImage(base: DataFrame,
+                          g: Option[org.apache.spark.sql.Column]): DataFrame =
+            e.coerceVocab(table,
               e.computeGenerated(table,
-                applyOnUpdate(applyBeforeUpdateTriggers(e, table,
-                  assignSequential(snapOrig(t0)
-                      .withColumn("__trg_gate__", gate.getOrElse(lit(true))),
-                    gate),
-                  col("__trg_gate__")).drop("__trg_gate__"))))
-            val newDf = newDfRaw.drop("__rid__")
-            e.validateVocab(table, newDf)
-            e.validateChecks(table, newDf)
-            e.validateForeignKeysChildChanged(table, t0, newDfRaw)
-            e.enforcePkUniquePost(table, newDf)
-            e.enforcePkUniqueTransient(table, t0, newDfRaw)
-            e.enforceUniqueExprsPost(table, newDf)
-            e.enforceParentUpdate(table, t0, newDfRaw)
-            e.replaceTable(table, newDf, bumpDepth = true)
-            Some({ e.foundRowsSet(affected); ok(e, affected) })
-          } else if (!ignore) {
-            // non-strict plain UPDATE (SET sql_mode=''): values coerce
-            // with warnings like IGNORE, constraints still error
-            val assigned = applyOnUpdate(applyBeforeUpdateTriggers(e,
-              table,
-              assignSequentialIgnore(snapOrig(t0)
-                  .withColumn("__trg_gate__", gate.getOrElse(lit(true))),
-                gate),
-              col("__trg_gate__")).drop("__trg_gate__"))
+                applyOnUpdate(assignThenTrigger(snapOrig(base), g)(
+                  assignSequential(_, g, flagOutOfRange = strict)))))
+          def lenientImage(base: DataFrame,
+                           g: Option[org.apache.spark.sql.Column]): DataFrame = {
+            val assigned = applyOnUpdate(assignThenTrigger(snapOrig(base), g)(
+              assignSequentialIgnore(_, g)))
             val afterGen = e.coerceVocab(table,
               e.computeGenerated(table, assigned))
             val (coerced, flagWarns) =
               e.ignoreWriteCoercions(table, afterGen, gateCol = Some("__upd__"))
-            val cur = e.emitFlagWarnings(coerced, flagWarns).drop("__upd__")
-            val newDf = cur.drop("__rid__")
+            e.emitFlagWarnings(coerced, flagWarns).drop("__upd__")
+          }
+          if (!ignore) {
+            // A driver-held table is written row by row: WHERE is
+            // evaluated once over the stored rows, the image is computed
+            // for the matched rows only, and each image replaces its row
+            // in place. Otherwise (parquet/union-backed tables, a
+            // nondeterministic or subquery WHERE or image) the whole
+            // table is rewritten as a frame.
+            val rowLevel = e.storedMatch(table, gate).flatMap { m =>
+              val before = e.matchedFrame(table, m)
+              val image = strictImage(before, None)
+              if (!image.queryExecution.analyzed.exists(_.expressions.exists(
+                  x => !graft.plans.FoldLocalRows.evaluable(x))))
+                Some((m, before, image))
+              else None
+            }
+            // (affected rows, pre-update rows and their images, both with
+            // `__rid__`, the whole post-update table, its write)
+            val (affected, before, after, newDf, write) = rowLevel match {
+              case Some((m, before, image)) =>
+                val after =
+                  if (strict) raiseOutOfRange(image) else lenientImage(before, None)
+                val (output, rows) = e.updatedGeneration(table, m, after)
+                (m.matched.size.toLong, before, after,
+                  e.storedFrame(table, output.map(_.newInstance()), rows),
+                  () => e.storeGeneration(table, output, rows))
+              case None =>
+                val affected =
+                  gate.map(g => t.filter(g).count()).getOrElse(t.count())
+                val t0 = t.withColumn("__rid__", monotonically_increasing_id())
+                val after =
+                  if (strict) raiseOutOfRange(strictImage(t0, gate))
+                  else lenientImage(t0, gate)
+                val newDf = after.drop("__rid__")
+                (affected, t0, after, newDf,
+                  () => e.replaceTable(table, newDf, bumpDepth = true))
+            }
+            if (strict) e.validateVocab(table, newDf)
             e.validateChecks(table, newDf)
-            e.validateForeignKeysChildChanged(table, t0, cur)
+            e.validateForeignKeysChildChanged(table, before, after)
             e.enforcePkUniquePost(table, newDf)
+            if (strict) e.enforcePkUniqueTransient(table, before, after)
             e.enforceUniqueExprsPost(table, newDf)
-            e.enforceParentUpdate(table, t0, cur)
-            e.replaceTable(table, newDf, bumpDepth = true)
+            e.enforceParentUpdate(table, before, after, newTable = Some(newDf))
+            write()
             Some({ e.foundRowsSet(affected); ok(e, affected) })
           } else {
+            val affected = gate.map(g => t.filter(g).count()).getOrElse(t.count())
+            val t0 = t.withColumn("__rid__", monotonically_increasing_id())
             // UPDATE IGNORE (reference sql/rowexec/update.go:98,150
             // convertDataAndWarn + ignore paths): instead of erroring,
             //   - a failed value conversion stores the type zero (1366)
@@ -1009,13 +1049,19 @@ object Dml {
             s"malformed DELETE clause: $h")
           Some(h.substring(5))
         }
-      def applyDelete(kept: DataFrame, affected: Long): Option[DataFrame] = {
+      // `storeKept` writes the kept rows when FK enforcement leaves
+      // them as they are
+      def applyDelete(kept: DataFrame, affected: Long,
+                      storeKept: Option[() => Unit] = None): Option[DataFrame] = {
         // FK enforcement against the surviving rows: RESTRICT errors,
         // CASCADE/SET NULL walk the child graph (foreign_key_queries.go).
         // A self-referential FK can shrink the survivor set further, so
         // the table is replaced with the RETURNED frame.
         val finalKept = e.enforceParentDelete(table, kept)
-        e.replaceTable(table, finalKept, bumpDepth = true)
+        storeKept.filter(_ => finalKept eq kept) match {
+          case Some(store) => store()
+          case None => e.replaceTable(table, finalKept, bumpDepth = true)
+        }
         Some(ok(e, affected))
       }
       tail match {
@@ -1023,13 +1069,20 @@ object Dml {
           val whereClause = whereOpt.map(w => s" WHERE $w").getOrElse("")
           val subset = e.query(s"SELECT * FROM ${tick(table)}$whereClause $orderLimit")
           applyDelete(t.exceptAll(subset), subset.count())
-        case None => whereOpt match {
-          case Some(cond) =>
-            val pred = coalesce(expr(cond).cast("boolean"), lit(false))
-            applyDelete(t.filter(!pred), t.filter(pred).count())
-          case None =>
-            applyDelete(t.limit(0), t.count())
-        }
+        case None =>
+          val pred = whereOpt.map(cond =>
+            coalesce(expr(cond).cast("boolean"), lit(false)))
+          // a driver-held table keeps its unmatched rows, in order
+          e.storedMatch(table, pred) match {
+            case Some(m) =>
+              val kept = m.unmatched
+              applyDelete(e.storedFrame(table, m.output.map(_.newInstance()), kept),
+                m.matched.size.toLong, Some(() => e.storeGeneration(table, m.output, kept)))
+            case None => pred match {
+              case Some(p) => applyDelete(t.filter(!p), t.filter(p).count())
+              case None => applyDelete(t.limit(0), t.count())
+            }
+          }
       }
 
     case CreateView(orReplace, ifNotExists, name, colList, body) =>

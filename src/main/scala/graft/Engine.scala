@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute,
+  AttributeReference, BindReferences, BoundReference, InterpretedOrdering,
+  InterpretedPredicate, InterpretedUnsafeProjection, JoinedRow, SortOrder, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project, SubqueryAlias}
+import org.apache.spark.sql.types.LongType
+import graft.plans.FoldLocalRows
+import scala.util.control.NonFatal
 
 /** MySQL dialect shim — SURVEY.md §7.2 step 5.
   *
@@ -286,9 +294,14 @@ object Dialect {
   * session catalog.
   *
   * Tables live as temp views over parquet (reads) or in-memory DataFrames
-  * (DDL/DML results). The OLTP row-DML machinery is descoped per
-  * SURVEY.md §2.12; `INSERT INTO ... SELECT` appends via union, matching
-  * the reference's in-memory integrator semantics.
+  * (DDL/DML results). A table small enough for `Tables.fitsBroadcast` is
+  * held on the driver as one LocalRelation of UnsafeRows, the reference's
+  * in-memory table (memory/table_data.go): INSERT appends to the stored
+  * rows, and UPDATE and DELETE evaluate WHERE once per stored row and
+  * re-project only the rows they change (`storedGeneration`,
+  * `storeGeneration`). A larger table takes the frame path: the write
+  * builds the new contents as a DataFrame (an INSERT unions its batch
+  * onto the old contents) and `replaceTable` re-points the view.
   */
 object Engine {
   /** The rows of a stored table generation. Spark walks every
@@ -310,11 +323,28 @@ object Engine {
     def apply(i: Int): A = rows(i)
     override def iterator: Iterator[A] = rows.iterator
     override def map[B](f: A => B): IndexedSeq[B] = new StoredRows(length, () => rows.map(f))
+    override def toVector: Vector[A] = rows match {
+      case v: Vector[A @unchecked] => v
+      case r => r.toVector
+    }
     override lazy val hashCode: Int = rows.hashCode
   }
 
   private[graft] object StoredRows {
     def apply[A](rows: Vector[A]): StoredRows[A] = new StoredRows(rows.length, () => rows)
+  }
+
+  /** A driver-held generation (`Engine.storedGeneration`) and the
+    * positions of the rows a write's WHERE selects, in storage order. */
+  private[graft] final case class StoredMatch(
+      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      rows: Vector[org.apache.spark.sql.catalyst.expressions.UnsafeRow],
+      matched: IndexedSeq[Int]) {
+    /** The rows the WHERE leaves alone, in storage order. */
+    def unmatched: Vector[org.apache.spark.sql.catalyst.expressions.UnsafeRow] = {
+      val hit = matched.toSet
+      rows.iterator.zipWithIndex.collect { case (r, i) if !hit(i) => r }.toVector
+    }
   }
 
   /** Exact JVM-global registry of information_schema scaffolding view
@@ -1878,7 +1908,7 @@ class Engine(val spark: SparkSession) {
                 brokenViews += n
                 if (!n.contains("."))
                   try spark.catalog.dropTempView(n)
-                  catch { case _: Throwable => () }
+                  catch { case NonFatal(_) => () }
             }
             val nl = n.toLowerCase
             stale += nl
@@ -2193,9 +2223,12 @@ class Engine(val spark: SparkSession) {
           }
         }
     }
-    val n = coerced.count()
-    val unioned = target.unionByName(coerced, allowMissingColumns = fillMissing)
-    replaceTable(table, unioned, bumpDepth = true)
+    val n = appendStored(table, coerced, fillMissing).getOrElse {
+      val n = coerced.count()
+      replaceTable(table, target.unionByName(coerced, allowMissingColumns = fillMissing),
+        bumpDepth = true)
+      n
+    }
     // advance the auto-increment counter past the batch (one scalar agg
     // on the insert batch, not the table)
     autoIncCols.get(table)
@@ -2912,8 +2945,10 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** Re-point the table view at a new generation (shared by INSERT
-    * appends and UPDATE/DELETE rewrites). One size rule picks where the
+  /** Re-point the table view at a new generation built as a frame (DDL,
+    * CTAS, REPLACE, and the writes that cannot go row by row; a write to
+    * a driver-held generation goes through `storeGeneration` instead and
+    * re-plans none of the stored rows). One size rule picks where the
     * generation lives:
     *
     *  - Small: the optimizer's size estimate of the new contents fits
@@ -3005,14 +3040,9 @@ class Engine(val spark: SparkSession) {
         case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => u
         case r => toUnsafe(r).copy()
       }.toVector
-      if (Tables.fitsBroadcast(spark, rows.iterator.map(_.getSizeInBytes.toLong).sum)) {
-        org.apache.spark.sql.GraftBridge.ofRows(spark, LocalRelation(
-          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema),
-          Engine.StoredRows(rows)))
-          .createOrReplaceTempView(table)
-        insertDepth(table) = 0
+      if (keepOnDriver(table,
+          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema), rows))
         return
-      }
     }
     val d = insertDepth(table) + (if (bumpDepth) 1 else 0)
     if (d < MaxUnionDepth) {
@@ -3029,6 +3059,166 @@ class Engine(val spark: SparkSession) {
       insertDepth(table) = 0
     }
   }
+
+  /** Point `table`'s view at `rows` held on the driver when their
+    * measured bytes pass `Tables.fitsBroadcast`. */
+  private def keepOnDriver(table: String, attrs: Seq[Attribute],
+                           rows: Vector[UnsafeRow]): Boolean = {
+    val fits = Tables.fitsBroadcast(spark, rows.iterator.map(_.getSizeInBytes.toLong).sum)
+    if (fits) {
+      GraftBridge.ofRows(spark, LocalRelation(attrs, Engine.StoredRows(rows)))
+        .createOrReplaceTempView(table)
+      insertDepth(table) = 0
+    }
+    fits
+  }
+
+  // ---- row-level writes on driver-held generations ----------------------
+  // A generation kept on the driver is an immutable Vector of UnsafeRows,
+  // the reference's in-memory table (memory/table_data.go). UPDATE and
+  // DELETE evaluate WHERE once per stored row and re-project only the
+  // rows they change; INSERT appends its batch. Each write publishes a
+  // new Vector (`Vector.updated` shares the untouched rows), so a
+  // DataFrame taken before the write still reads its own rows.
+
+  /** The driver-held generation of `table`: the output and rows of the
+    * LocalRelation its view was created from (by replaceTableInner or
+    * storeGeneration). None for a parquet- or union-backed table and for
+    * a db-qualified name. */
+  private[graft] def storedGeneration(table: String)
+      : Option[(Seq[Attribute], Vector[UnsafeRow])] =
+    if (table.contains(".")) None
+    else GraftBridge.tempViewPlan(spark, table).collect {
+      case l: LocalRelation if !l.isStreaming && l.data.isInstanceOf[Engine.StoredRows[_]] =>
+        (l.output, l.data.toVector.asInstanceOf[Vector[UnsafeRow]])
+    }
+
+  /** Publish `rows` as the new generation of `table`: one LocalRelation
+    * with fresh attributes of `output`'s schema and metadata, without an
+    * optimizer pass over the rows. Rows past `Tables.fitsBroadcast` (the
+    * optimizer's estimate or the measured bytes) take replaceTable's
+    * union/parquet path instead. */
+  private[graft] def storeGeneration(table: String, output: Seq[Attribute],
+                                     rows: Vector[UnsafeRow]): Unit = {
+    val attrs = output.map(_.newInstance())
+    val kept = Tables.fitsBroadcast(spark, LocalRelation(attrs, rows).stats.sizeInBytes) &&
+      keepOnDriver(table, attrs, rows)
+    if (!kept)
+      replaceTableInner(table, GraftBridge.ofRows(spark, LocalRelation(attrs, rows)),
+        bumpDepth = true)
+    refreshViews(table)
+  }
+
+  /** `rows` of `table` as a frame, qualified by the table name like a
+    * read of its view. */
+  private[graft] def storedFrame(table: String, output: Seq[Attribute],
+                                 rows: Seq[UnsafeRow]): DataFrame =
+    GraftBridge.ofRows(spark, SubqueryAlias(table,
+      LocalRelation(output, Engine.StoredRows(rows.toVector))))
+
+  /** The driver-held generation of `table` and the rows `gate` selects.
+    * The gate is evaluated once per stored row by an interpreted
+    * predicate: a generated class would embed the WHERE's literals, and
+    * compile once per key. None when the table is not driver-held or the
+    * gate is not evaluable there (FoldLocalRows.evaluable: a
+    * nondeterministic gate or a subquery keeps the frame path). */
+  private[graft] def storedMatch(table: String,
+      gate: Option[org.apache.spark.sql.Column]): Option[Engine.StoredMatch] =
+    storedGeneration(table).flatMap { case (output, rows) =>
+      gate match {
+        case None => Some(Engine.StoredMatch(output, rows, rows.indices))
+        case Some(g) =>
+          val probe = storedFrame(table, output, Vector.empty).select(g)
+          org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
+              probe.queryExecution.analyzed) match {
+            case Project(Seq(Alias(cond, _)), _) if FoldLocalRows.evaluable(cond) =>
+              val p = InterpretedPredicate(BindReferences.bindReference(cond, output))
+              p.initialize(0)
+              Some(Engine.StoredMatch(output, rows, rows.indices.filter(i => p.eval(rows(i)))))
+            case _ => None
+          }
+      }
+    }
+
+  /** The matched rows as a frame with fresh attributes and a `__rid__`
+    * column holding each row's position in the stored Vector, the row
+    * id the UPDATE hooks align pre- and post-update images on. */
+  private[graft] def matchedFrame(table: String, m: Engine.StoredMatch): DataFrame = {
+    val attrs = m.output.map(_.newInstance()) :+
+      AttributeReference("__rid__", LongType, nullable = false)()
+    val toUnsafe = InterpretedUnsafeProjection.createProjection(
+      attrs.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
+    storedFrame(table, attrs, m.matched.map(i =>
+      toUnsafe(new JoinedRow(m.rows(i), InternalRow(i.toLong))).copy()))
+  }
+
+  /** The generation an UPDATE leaves: each matched row replaced in place
+    * by its image from `image` (a frame with `__rid__` and the table's
+    * columns, cast to the stored types), nullability widened to the
+    * images'. A keyed table is re-sorted when a key value changed. */
+  private[graft] def updatedGeneration(table: String, m: Engine.StoredMatch,
+      image: DataFrame): (Seq[Attribute], Vector[UnsafeRow]) = {
+    import org.apache.spark.sql.functions.col
+    val sel = image.select((col("__rid__") +:
+      m.output.map(a => col(s"`${a.name}`").cast(a.dataType))): _*)
+    val images = localRows(sel)
+    val toUnsafe = InterpretedUnsafeProjection.createProjection(
+      m.output.zipWithIndex.map { case (a, i) => BoundReference(i + 1, a.dataType, nullable = true) })
+    val pos = images.map(_.getLong(0).toInt)
+    val rows = images.iterator.zip(pos).foldLeft(m.rows) { case (v, (r, i)) =>
+      v.updated(i, toUnsafe(r).copy())
+    }
+    val output = m.output.zip(sel.schema.fields.tail).map { case (a, f) =>
+      a.withNullability(a.nullable || f.nullable)
+    }
+    val keyMoved = pkOrdering(table, m.output)
+      .filter(ord => pos.exists(i => ord.compare(m.rows(i), rows(i)) != 0))
+    (output, keyMoved.fold(rows)(rows.sorted(_)))
+  }
+
+  /** INSERT onto a driver-held generation: the batch, aligned to the
+    * table's columns the way unionByName aligns it, is appended to the
+    * stored rows, and a keyed table re-sorts by its key. Returns the
+    * number of rows written, or None (nothing written) when the table is
+    * not driver-held, the aligned batch does not fold to local rows, or
+    * alignment would change a column's type. */
+  private def appendStored(table: String, batch: DataFrame,
+                           fillMissing: Boolean): Option[Long] =
+    storedGeneration(table).flatMap { case (output, rows) =>
+      val aligned = GraftBridge.ofRows(spark, LocalRelation(output.map(_.newInstance())))
+        .unionByName(batch, allowMissingColumns = fillMissing)
+      aligned.queryExecution.optimizedPlan match {
+        case l: LocalRelation if l.output.map(_.dataType) == output.map(_.dataType) =>
+          val toUnsafe = InterpretedUnsafeProjection.createProjection(
+            l.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
+          val added = l.data.map(r => toUnsafe(r).copy())
+          val all = rows ++ added
+          storeGeneration(table,
+            output.zip(l.output).map { case (a, b) => a.withNullability(a.nullable || b.nullable) },
+            pkOrdering(table, output).fold(all)(all.sorted(_)))
+          Some(added.size.toLong)
+        case _ => None
+      }
+    }
+
+  /** The rows of a frame that folds on the driver; anything else runs
+    * its plan. Either way without a Dataset action, whose SQL-execution
+    * bookkeeping costs more than a small local plan. */
+  private[graft] def localRows(df: DataFrame): Seq[InternalRow] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data
+      case _ => df.queryExecution.executedPlan.executeCollect().toSeq
+    }
+
+  /** The primary-key order a stored generation of `table` is kept in
+    * (replaceTableInner sorts a keyed table by its key, as the
+    * reference's tables are clustered by it); None without a key. */
+  private def pkOrdering(table: String, output: Seq[Attribute]): Option[Ordering[InternalRow]] =
+    tableKeys.get(canonicalTable(table)).filter(_.nonEmpty).flatMap { pk =>
+      val keys = pk.flatMap(k => output.find(_.name.equalsIgnoreCase(k)))
+      if (keys.size != pk.size) None
+      else Some(new InterpretedOrdering(keys.map(SortOrder(_, Ascending)), output))
+    }
 
   // ---- declared keys (REPLACE INTO / ON DUPLICATE KEY UPDATE) -----------
   // Parquet views carry no PK metadata, so upsert targets declare their
@@ -3213,7 +3403,7 @@ class Engine(val spark: SparkSession) {
   /** Recompute the table's generated columns over a write batch (insert
     * coercion output or a post-UPDATE view), in declaration order. */
   private[graft] def computeGenerated(table: String, df: DataFrame): DataFrame = {
-    val types = scala.util.Try(spark.table(table)).toOption
+    lazy val types = scala.util.Try(spark.table(table)).toOption
       .map(_.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap)
       .getOrElse(Map.empty)
     generatedCols.toSeq.collect { case (t, c, ex) if t == table => (c, ex) }
@@ -3820,12 +4010,15 @@ class Engine(val spark: SparkSession) {
     *    new key, recursively (the rewritten child columns may themselves
     *    be keys grandchildren reference).
     *  - A SELF-referential FK acts like RESTRICT (InnoDB stops an
-    *    ON UPDATE cascade that loops back onto the updated table).
+    *    ON UPDATE cascade that loops back onto the updated table). Its
+    *    children are the whole post-update table: `newTable` when the
+    *    two frames hold only the updated rows, else `newParent`.
     */
   private[graft] def enforceParentUpdate(parent: String,
                                          oldParent: DataFrame,
                                          newParent: DataFrame,
-                                         depth: Int = 1): Unit = {
+                                         depth: Int = 1,
+                                         newTable: Option[DataFrame] = None): Unit = {
     import org.apache.spark.sql.functions._
     if (!fkChecksEnabled) return
     // cyclic ON UPDATE cascades terminate either on an empty changed set
@@ -3868,7 +4061,8 @@ class Engine(val spark: SparkSession) {
           // "Self-referential child column follows parent CASCADE").
           // The children checked are the table's own POST-update rows.
           val checkee =
-            if (fk.child == parent) newParent.drop("__rid__") else child
+            if (fk.child == parent) newTable.getOrElse(newParent.drop("__rid__"))
+            else child
           val bad = checkee.filter(nonNull)
             .join(changed, cond, "left_semi").limit(1).count()
           if (bad > 0) throw new IllegalArgumentException(
@@ -4928,7 +5122,7 @@ class Engine(val spark: SparkSession) {
     val canOpen = try {
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    } catch { case _: Throwable => false }
+    } catch { case _: java.io.IOException | _: IllegalArgumentException => false }
     if (!canOpen)
       throw new IllegalArgumentException(
         s"LOAD DATA is unable to open file: '$path' " +

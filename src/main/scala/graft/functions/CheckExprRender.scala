@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.util.control.NonFatal
+
 /** MySQL catalog rendering of CHECK-constraint expressions.
   *
   * The reference prints stored check expressions fully parenthesized
@@ -24,7 +26,7 @@ object CheckExprRender {
       val out = p.orExpr()
       p.skipWs()
       if (p.eof) out else s"($src)"
-    } catch { case _: Throwable => s"($src)" }
+    } catch { case NonFatal(_) => s"($src)" }
 
   /** SHOW CREATE TABLE form: CHECK (<render>) — the extra wrap is the
     * CHECK clause's own parentheses. */

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 
 /** MySQL-signature regexp functions (reference
   * sql/expression/function/regexp.go and enginetest/queries/
@@ -41,7 +42,7 @@ object RegexpFns {
       val name =
         try org.apache.spark.sql.catalyst.util.CollationFactory
           .fetchCollation(st.collationId).collationName.toUpperCase
-        catch { case _: Throwable => "UTF8_BINARY" }
+        catch { case NonFatal(_) => "UTF8_BINARY" }
       name.contains("_CI") || name.contains("LCASE")
     case _ => false
   }

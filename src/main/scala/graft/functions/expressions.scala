@@ -36,7 +36,7 @@ object expressions {
         case b: Boolean => if (b) 1.0 else 0.0
         case n: Number => n.doubleValue()
         case u: UTF8String =>
-          try u.toString.trim.toDouble catch { case _: Throwable => return null }
+          try u.toString.trim.toDouble catch { case _: NumberFormatException => return null }
       }
       if (x <= 0) null
       else java.lang.StrictMath.log(x) * 0.4342944819032518

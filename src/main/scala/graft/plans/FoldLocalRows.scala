@@ -30,6 +30,7 @@ import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
   * a subquery) keeps its plan, and so does an Aggregate whose evaluation
   * throws. */
 final case class FoldLocalRows(spark: SparkSession) extends Rule[LogicalPlan] {
+  import FoldLocalRows.evaluable
 
   def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case s: Sort if s.global && foldable(s.child) && s.order.forall(o => evaluable(o.child)) =>
@@ -49,14 +50,6 @@ final case class FoldLocalRows(spark: SparkSession) extends Rule[LogicalPlan] {
     graft.Tables.fitsBroadcast(spark, p.stats.sizeInBytes)
 
   private def foldable(p: LogicalPlan): Boolean = local(p) && fits(p)
-
-  /** Deterministic, no subquery, and nothing but attributes left
-    * unevaluable (ConvertToLocalRelation's test, plus determinism). */
-  private def evaluable(e: Expression): Boolean = e.deterministic && !e.exists {
-    case _: AttributeReference => false
-    case _: Unevaluable | _: SubqueryExpression => true
-    case _ => false
-  }
 
   /** The aggregated rows, or None when `a` is outside the folded set. */
   private def aggregate(a: Aggregate): Option[LocalRelation] = {
@@ -112,5 +105,18 @@ final case class FoldLocalRows(spark: SparkSession) extends Rule[LogicalPlan] {
         project(joined(k, evaluate(buf))).copy()
       }.toVector))
     } catch { case NonFatal(_) => None }
+  }
+}
+
+object FoldLocalRows {
+  /** Deterministic, no subquery, and nothing but attributes left
+    * unevaluable (ConvertToLocalRelation's test, plus determinism): an
+    * expression the driver can evaluate row by row with the result a job
+    * would give. The Engine's row-level UPDATE and DELETE apply the same
+    * test to their WHERE and row image. */
+  def evaluable(e: Expression): Boolean = e.deterministic && !e.exists {
+    case _: AttributeReference => false
+    case _: Unevaluable | _: SubqueryExpression => true
+    case _ => false
   }
 }

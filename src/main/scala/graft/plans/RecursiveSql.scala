@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** SQL-text `WITH RECURSIVE` support — SURVEY.md §2.9 (reference parses
   * recursive CTEs in sql/planbuilder/cte.go:87 and executes them as a
@@ -107,7 +108,7 @@ object RecursiveSql {
       val result = sqlRun(outer) // analysis is eager; safe to drop after
       Some(result)
     } finally made.foreach { n =>
-      try spark.catalog.dropTempView(n) catch { case _: Throwable => () }
+      try spark.catalog.dropTempView(n) catch { case NonFatal(_) => () }
     }
   }
 

@@ -23,6 +23,13 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The analyzed plan a DataFrame temp view was created from, as the
+    * catalog holds it (None for a missing view or one kept as SQL text). */
+  def tempViewPlan(spark: SparkSession, name: String)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog.getRawTempView(name).flatMap(_.plan)
+
   /** Parse SQL text to an unresolved logical plan (the sql() front half,
     * exposed so a pre-analysis rewrite can run before resolution). */
   def parsePlan(spark: SparkSession, text: String)

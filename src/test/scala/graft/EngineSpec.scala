@@ -986,6 +986,120 @@ class EngineSpec extends AnyFunSuite {
       Seq(Seq(1, "a"), Seq(2, "b"), Seq(3, "c"), Seq(4, "d")))
   }
 
+  /** A keyed table of `n` rows (id 1..n, v = id * 10), created and filled
+    * through SQL, so it is held on the driver from the start. */
+  private def keyedTable(table: String, n: Int) = {
+    val e = new Engine(spark.newSession())
+    e.query(s"CREATE TABLE $table (id INT PRIMARY KEY, v INT, tag VARCHAR(10))")
+    e.query(s"INSERT INTO $table VALUES " +
+      (1 to n).map(i => s"($i, ${i * 10}, 't$i')").mkString(", ")).collect()
+    assert(e.storedGeneration(table).isDefined, s"premise: $table is held on the driver")
+    e
+  }
+
+  test("a SELECT without ORDER BY lists rows in the same order before and after an UPDATE by key") {
+    val (e, a, _) = storedOrders("order_kept")
+    val before = rowsOf(e, "SELECT o_orderkey, o_orderpriority FROM order_kept")
+    assert(e.query(s"UPDATE order_kept SET o_orderpriority = 'Z' WHERE o_orderkey = $a")
+      .collect()(0).getLong(0) == 1L)
+    val after = rowsOf(e, "SELECT o_orderkey, o_orderpriority FROM order_kept")
+    assert(after.map(_.head) == before.map(_.head))
+    assert(after.zip(before).collect { case (x, y) if x != y => x } == Seq(Seq(a, "Z")))
+  }
+
+  test("a DataFrame taken before a write still returns its own rows") {
+    val e = keyedTable("snap_rows", 5)
+    val taken = e.query("SELECT id, v FROM snap_rows")
+    val want = rowsOf(e, "SELECT id, v FROM snap_rows")
+    e.query("UPDATE snap_rows SET v = v + 1 WHERE id = 2").collect()
+    e.query("DELETE FROM snap_rows WHERE id = 3").collect()
+    e.query("INSERT INTO snap_rows VALUES (9, 90, 't9')").collect()
+    assert(taken.collect().map(_.toSeq).toSeq == want)
+    assert(rowsOf(e, "SELECT id, v FROM snap_rows") ==
+      Seq(Seq(1, 10), Seq(2, 21), Seq(4, 40), Seq(5, 50), Seq(9, 90)))
+  }
+
+  test("row-level UPDATE and DELETE report 0, 1 and many matches, and none for WHERE NULL") {
+    val e = keyedTable("counted", 6)
+    def n(sql: String) = e.query(sql).collect()(0).getLong(0)
+    assert(n("UPDATE counted SET tag = 'x' WHERE id = 99") == 0L)
+    assert(n("UPDATE counted SET tag = 'x' WHERE id = 1") == 1L)
+    assert(n("UPDATE counted SET tag = 'y' WHERE v >= 30") == 4L)
+    assert(n("UPDATE counted SET tag = 'z' WHERE NULL") == 0L)
+    assert(n("UPDATE counted SET v = v + 1") == 6L)
+    assert(n("DELETE FROM counted WHERE NULL") == 0L)
+    assert(n("DELETE FROM counted WHERE id = 99") == 0L)
+    assert(n("DELETE FROM counted WHERE id = 2") == 1L)
+    assert(n("DELETE FROM counted WHERE v > 40") == 3L)
+    assert(rowsOf(e, "SELECT id, v, tag FROM counted") ==
+      Seq(Seq(1, 11, "x"), Seq(3, 31, "y")))
+    assert(n("DELETE FROM counted") == 2L)
+    assert(rowsOf(e, "SELECT id FROM counted").isEmpty)
+  }
+
+  test("a strict out-of-range UPDATE (1264) and a 1062 key collision leave the stored rows unchanged") {
+    val e = keyedTable("guarded", 4)
+    e.query("CREATE TABLE guarded_small (id INT PRIMARY KEY, b TINYINT)")
+    e.query("INSERT INTO guarded_small VALUES (1, 1), (2, 2)").collect()
+    val small = rowsOf(e, "SELECT id, b FROM guarded_small")
+    val ex = intercept[IllegalArgumentException](
+      e.query("UPDATE guarded_small SET b = b + 300 WHERE id = 2"))
+    assert(ex.getMessage.contains("1264"), ex.getMessage)
+    assert(rowsOf(e, "SELECT id, b FROM guarded_small") == small)
+    val rows = rowsOf(e, "SELECT id, v, tag FROM guarded")
+    val ex2 = intercept[IllegalArgumentException](
+      e.query("UPDATE guarded SET id = 3 WHERE id = 1"))
+    assert(ex2.getMessage.contains("Duplicate entry '3'") && ex2.getMessage.contains("1062"),
+      ex2.getMessage)
+    assert(rowsOf(e, "SELECT id, v, tag FROM guarded") == rows)
+    assert(e.storedGeneration("guarded").isDefined)
+  }
+
+  test("a keyed table is still PK-ordered after an UPDATE of the key and after an INSERT") {
+    val e = keyedTable("pk_sorted", 5)
+    e.query("UPDATE pk_sorted SET id = 10 WHERE id = 2").collect()
+    assert(rowsOf(e, "SELECT id FROM pk_sorted").map(_.head) == Seq(1, 3, 4, 5, 10))
+    e.query("INSERT INTO pk_sorted VALUES (7, 70, 't7'), (0, 0, 't0')").collect()
+    assert(rowsOf(e, "SELECT id FROM pk_sorted").map(_.head) == Seq(0, 1, 3, 4, 5, 7, 10))
+    e.query("UPDATE pk_sorted SET id = id + 100 WHERE id >= 5").collect()
+    e.query("UPDATE pk_sorted SET id = 2 WHERE id = 110").collect()
+    assert(rowsOf(e, "SELECT id FROM pk_sorted").map(_.head) == Seq(0, 1, 2, 3, 4, 105, 107))
+    assert(rowsOf(e, "SELECT id, v FROM pk_sorted LIMIT 3") ==
+      Seq(Seq(0, 0), Seq(1, 10), Seq(2, 20)))
+  }
+
+  test("a row-level UPDATE stamps ON UPDATE CURRENT_TIMESTAMP only where a value changes") {
+    val e = new Engine(spark.newSession())
+    e.query("CREATE TABLE stamped (id INT PRIMARY KEY, v INT, " +
+      "ts TIMESTAMP DEFAULT '2000-01-01 00:00:00' ON UPDATE CURRENT_TIMESTAMP)")
+    e.query("INSERT INTO stamped (id, v) VALUES (1, 10), (2, 20), (3, 30)").collect()
+    assert(e.storedGeneration("stamped").isDefined, "premise: stamped is held on the driver")
+    e.queryNow = Some(java.sql.Timestamp.valueOf("2023-12-15 01:30:00"))
+    assert(e.query("UPDATE stamped SET v = v + 1 WHERE id = 1").collect()(0).getLong(0) == 1L)
+    assert(e.query("UPDATE stamped SET v = 20 WHERE id = 2").collect()(0).getLong(0) == 1L)
+    val rows = rowsOf(e, "SELECT id, v, ts FROM stamped")
+    assert(rows.map(_.take(2)) == Seq(Seq(1, 11), Seq(2, 20), Seq(3, 30)))
+    val ts = rows.map(_(2))
+    assert(ts(0) != null && ts(0) != ts(2), s"the changed row was not stamped: $ts")
+    assert(ts(1) == ts(2), s"a same-value assignment stamped its row: $ts")
+  }
+
+  test("UPDATE and DELETE by a fresh key literal on a stored generation compile no class") {
+    val (e, _, _) = storedOrders("compile_free")
+    val k = rowsOf(e, "SELECT o_orderkey FROM compile_free ORDER BY o_orderkey").map(_.head)
+    // the first statement of each shape may compile what all keys share
+    e.query(s"UPDATE compile_free SET o_custkey = o_custkey + 1 WHERE o_orderkey = ${k(20)}").collect()
+    e.query(s"UPDATE compile_free SET o_orderpriority = 'P' WHERE o_orderkey = ${k(21)}").collect()
+    e.query(s"DELETE FROM compile_free WHERE o_orderkey = ${k(22)}").collect()
+    val (counts, compiles) = Compiles.count(Seq(
+      e.query(s"UPDATE compile_free SET o_custkey = o_custkey + 1 WHERE o_orderkey = ${k(30)}"),
+      e.query(s"UPDATE compile_free SET o_orderpriority = 'Q' WHERE o_orderkey = ${k(31)}"),
+      e.query(s"DELETE FROM compile_free WHERE o_orderkey = ${k(32)}")
+    ).map(_.collect()(0).getLong(0)))
+    assert(counts == Seq(1L, 1L, 1L), "premise: the keys are present")
+    assert(compiles == 0L, s"writes by fresh key literals compiled $compiles classes")
+  }
+
   test("a FROM-less SELECT runs no job; RAND() is left unfolded") {
     val e = new Engine(spark.newSession())
     val df = e.query("SELECT 1 + 1, CONCAT('du', 'al'), UPPER('x') AS u")

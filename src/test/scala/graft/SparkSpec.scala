@@ -44,3 +44,17 @@ object Jobs {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
+
+/** Counts the classes Spark's code generator compiles while a block runs:
+  * the delta of CodegenMetrics' compile-time histogram, which takes one
+  * sample per compile (a class served from the codegen cache takes none).
+  * The metric is JVM-global, so the count holds while no other thread
+  * compiles. */
+object Compiles {
+  def count[A](body: => A): (A, Long) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = h.getCount
+    val r = body
+    (r, h.getCount - before)
+  }
+}
