@@ -955,10 +955,9 @@ object Dml {
               case Some((m, before, image)) =>
                 val after =
                   if (strict) raiseOutOfRange(image) else lenientImage(before, None)
-                val (output, rows) = e.updatedGeneration(table, m, after)
+                val updated = e.updatedGeneration(table, m, after)
                 (m.matched.size.toLong, before, after,
-                  e.storedFrame(table, output.map(_.newInstance()), rows),
-                  () => e.storeGeneration(table, output, rows))
+                  e.storedFrame(table, updated), () => e.storeGeneration(table, updated))
               case None =>
                 val affected =
                   gate.map(g => t.filter(g).count()).getOrElse(t.count())
@@ -1076,8 +1075,8 @@ object Dml {
           e.storedMatch(table, pred) match {
             case Some(m) =>
               val kept = m.unmatched
-              applyDelete(e.storedFrame(table, m.output.map(_.newInstance()), kept),
-                m.matched.size.toLong, Some(() => e.storeGeneration(table, m.output, kept)))
+              applyDelete(e.storedFrame(table, kept), m.matched.size.toLong,
+                Some(() => e.storeGeneration(table, kept)))
             case None => pred match {
               case Some(p) => applyDelete(t.filter(!p), t.filter(p).count())
               case None => applyDelete(t.limit(0), t.count())

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute,
-  AttributeReference, BindReferences, BoundReference, InterpretedOrdering,
-  InterpretedPredicate, InterpretedUnsafeProjection, JoinedRow, SortOrder, UnsafeRow}
+  AttributeReference, BoundReference, InterpretedOrdering,
+  InterpretedUnsafeProjection, JoinedRow, SortOrder, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project, SubqueryAlias}
 import org.apache.spark.sql.types.LongType
-import graft.plans.FoldLocalRows
+import graft.plans.{FoldLocalRows, Generation, StoredRelation}
 import scala.util.control.NonFatal
 
 /** MySQL dialect shim — SURVEY.md §7.2 step 5.
@@ -295,55 +295,30 @@ object Dialect {
   *
   * Tables live as temp views over parquet (reads) or in-memory DataFrames
   * (DDL/DML results). A table small enough for `Tables.fitsBroadcast` is
-  * held on the driver as one LocalRelation of UnsafeRows, the reference's
-  * in-memory table (memory/table_data.go): INSERT appends to the stored
-  * rows, and UPDATE and DELETE evaluate WHERE once per stored row and
-  * re-project only the rows they change (`storedGeneration`,
-  * `storeGeneration`). A larger table takes the frame path: the write
-  * builds the new contents as a DataFrame (an INSERT unions its batch
-  * onto the old contents) and `replaceTable` re-points the view.
+  * held on the driver as one `plans.StoredRelation` over an immutable
+  * Vector of UnsafeRows, the reference's in-memory table
+  * (memory/table_data.go): INSERT appends to the stored rows, UPDATE and
+  * DELETE evaluate WHERE once per stored row and re-project only the rows
+  * they change (`storedGeneration`, `storeGeneration`), and a read's
+  * WHERE and projection fold on the driver (`plans.FoldLocalRows`). A
+  * larger table takes the frame path: the write builds the new contents
+  * as a DataFrame (an INSERT unions its batch onto the old contents) and
+  * `replaceTable` re-points the view.
   */
 object Engine {
-  /** The rows of a stored table generation. Spark walks every
-    * constructor argument of every plan node in its expression
-    * traversals (QueryPlan.mapExpressions maps `LocalRelation.data`
-    * element by element) and hashes it in the case-class hashCode, many
-    * times per statement, and throws the mapped copy away when no
-    * expression changed. So `map` here is deferred until an element is
-    * read and then computed once (dropping the reference to the source
-    * rows), and the hash is computed once. */
-  private[graft] final class StoredRows[A] private (val length: Int,
-      private[this] var compute: () => IndexedSeq[A])
-      extends scala.collection.immutable.AbstractSeq[A] with IndexedSeq[A] {
-    private[this] var forced: IndexedSeq[A] = _
-    private def rows: IndexedSeq[A] = synchronized {
-      if (compute != null) { forced = compute(); compute = null }
-      forced
-    }
-    def apply(i: Int): A = rows(i)
-    override def iterator: Iterator[A] = rows.iterator
-    override def map[B](f: A => B): IndexedSeq[B] = new StoredRows(length, () => rows.map(f))
-    override def toVector: Vector[A] = rows match {
-      case v: Vector[A @unchecked] => v
-      case r => r.toVector
-    }
-    override lazy val hashCode: Int = rows.hashCode
-  }
-
-  private[graft] object StoredRows {
-    def apply[A](rows: Vector[A]): StoredRows[A] = new StoredRows(rows.length, () => rows)
-  }
-
   /** A driver-held generation (`Engine.storedGeneration`) and the
-    * positions of the rows a write's WHERE selects, in storage order. */
-  private[graft] final case class StoredMatch(
-      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-      rows: Vector[org.apache.spark.sql.catalyst.expressions.UnsafeRow],
-      matched: IndexedSeq[Int]) {
-    /** The rows the WHERE leaves alone, in storage order. */
-    def unmatched: Vector[org.apache.spark.sql.catalyst.expressions.UnsafeRow] = {
-      val hit = matched.toSet
-      rows.iterator.zipWithIndex.collect { case (r, i) if !hit(i) => r }.toVector
+    * positions of the rows a write's WHERE selects, ascending. */
+  private[graft] final case class StoredMatch(stored: StoredRelation, matched: IndexedSeq[Int]) {
+    def output: Seq[Attribute] = stored.output
+    def rows: Vector[UnsafeRow] = stored.gen.rows
+
+    /** The generation of the rows the WHERE leaves alone, in storage
+      * order: the runs between matched positions, one step per match. */
+    def unmatched: StoredRelation = {
+      var kept = Vector.empty[UnsafeRow]
+      var from = 0
+      matched.foreach { i => kept = kept ++ rows.slice(from, i); from = i + 1 }
+      StoredRelation(output, Generation(kept ++ rows.drop(from)))
     }
   }
 
@@ -466,9 +441,10 @@ class Engine(val spark: SparkSession) {
   // (reference sql/expression/function/aggregation/json_agg.go); Spark's
   // default duplicate-map-key policy is EXCEPTION.
   spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-  // Sort, Aggregate and Union over driver-held rows fold to one
-  // LocalRelation on the driver (plans.FoldLocalRows); Spark runs this
-  // batch last, and ConvertToLocalRelation in it folds what sits above
+  // reads of driver-held rows (a StoredRelation's Filter/Project chain,
+  // Sort, Aggregate, Union) fold to one LocalRelation on the driver
+  // (plans.FoldLocalRows); Spark runs this batch last, and
+  // ConvertToLocalRelation in it folds what sits above
   spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     .extraOptimizations = Seq(graft.plans.FoldLocalRows(spark),
       org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation)
@@ -2954,22 +2930,24 @@ class Engine(val spark: SparkSession) {
     *  - Small: the optimizer's size estimate of the new contents fits
     *    `Tables.fitsBroadcast` (the session's autoBroadcastJoinThreshold,
     *    the gate `Tables.dim` uses). The rows are kept on the driver as
-    *    ONE LocalRelation of UnsafeRows, like the reference's in-memory
-    *    table (memory/table.go). A plan the optimizer already folded to
-    *    one LocalRelation (ConvertToLocalRelation and plans.FoldLocalRows
-    *    over stored generations and VALUES batches) is stored without a
-    *    job; anything else runs one `executeCollect`. The measured bytes
-    *    of the rows are checked against the same threshold, so an
-    *    estimate that undershoots (a generator such as `explode`) falls
-    *    through to the file path below instead of keeping the rows; that
-    *    one collect is bounded by the estimate alone. Later reads fold
-    *    in the optimizer, Filter/Project/Limit by ConvertToLocalRelation
-    *    and global Sort and non-DISTINCT declarative Aggregate by
-    *    plans.FoldLocalRows, and run with no job and no file scan, plans
-    *    stay flat across any number of statements, and union-over-values
-    *    trees never reach the optimizer (Spark's
-    *    PushProjectionThroughUnion mishandles correlated outer references
-    *    over such unions — "key not found" at optimization time).
+    *    ONE `plans.StoredRelation` over a Vector of UnsafeRows, like the
+    *    reference's in-memory table (memory/table.go). A plan the
+    *    optimizer already folded to one LocalRelation (plans.FoldLocalRows
+    *    and ConvertToLocalRelation over stored generations and VALUES
+    *    batches) is stored without a job; anything else runs one
+    *    `executeCollect`. The measured bytes of the rows are checked
+    *    against the same threshold, so an estimate that undershoots (a
+    *    generator such as `explode`) falls through to the file path below
+    *    instead of keeping the rows; that one collect is bounded by the
+    *    estimate alone. Later reads fold in the optimizer (the stored
+    *    rows' Filter/Project chain, global Sort and non-DISTINCT
+    *    declarative Aggregate by plans.FoldLocalRows, a Limit above them
+    *    by ConvertToLocalRelation) and run with no job, no file scan and
+    *    no generated predicate class, plans stay flat across any number
+    *    of statements, and union-over-values trees never reach the
+    *    optimizer (Spark's PushProjectionThroughUnion mishandles
+    *    correlated outer references over such unions — "key not found"
+    *    at optimization time).
     *  - Otherwise (or with broadcasting disabled): the view unions the new
     *    plan over the old one until the accumulated depth crosses
     *    MaxUnionDepth, and then materializes a warehouse parquet
@@ -3040,8 +3018,8 @@ class Engine(val spark: SparkSession) {
         case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => u
         case r => toUnsafe(r).copy()
       }.toVector
-      if (keepOnDriver(table,
-          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema), rows))
+      if (keepOnDriver(table, StoredRelation(
+          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema), Generation(rows))))
         return
     }
     val d = insertDepth(table) + (if (bumpDepth) 1 else 0)
@@ -3062,12 +3040,10 @@ class Engine(val spark: SparkSession) {
 
   /** Point `table`'s view at `rows` held on the driver when their
     * measured bytes pass `Tables.fitsBroadcast`. */
-  private def keepOnDriver(table: String, attrs: Seq[Attribute],
-                           rows: Vector[UnsafeRow]): Boolean = {
-    val fits = Tables.fitsBroadcast(spark, rows.iterator.map(_.getSizeInBytes.toLong).sum)
+  private def keepOnDriver(table: String, stored: StoredRelation): Boolean = {
+    val fits = Tables.fitsBroadcast(spark, stored.gen.bytes)
     if (fits) {
-      GraftBridge.ofRows(spark, LocalRelation(attrs, Engine.StoredRows(rows)))
-        .createOrReplaceTempView(table)
+      GraftBridge.ofRows(spark, stored).createOrReplaceTempView(table)
       insertDepth(table) = 0
     }
     fits
@@ -3081,60 +3057,52 @@ class Engine(val spark: SparkSession) {
   // new Vector (`Vector.updated` shares the untouched rows), so a
   // DataFrame taken before the write still reads its own rows.
 
-  /** The driver-held generation of `table`: the output and rows of the
-    * LocalRelation its view was created from (by replaceTableInner or
-    * storeGeneration). None for a parquet- or union-backed table and for
-    * a db-qualified name. */
-  private[graft] def storedGeneration(table: String)
-      : Option[(Seq[Attribute], Vector[UnsafeRow])] =
+  /** The driver-held generation of `table`: the StoredRelation its view
+    * was created from (by replaceTableInner or storeGeneration). None for
+    * a parquet- or union-backed table and for a db-qualified name. */
+  private[graft] def storedGeneration(table: String): Option[StoredRelation] =
     if (table.contains(".")) None
-    else GraftBridge.tempViewPlan(spark, table).collect {
-      case l: LocalRelation if !l.isStreaming && l.data.isInstanceOf[Engine.StoredRows[_]] =>
-        (l.output, l.data.toVector.asInstanceOf[Vector[UnsafeRow]])
-    }
+    else GraftBridge.tempViewPlan(spark, table).collect { case s: StoredRelation => s }
 
-  /** Publish `rows` as the new generation of `table`: one LocalRelation
-    * with fresh attributes of `output`'s schema and metadata, without an
-    * optimizer pass over the rows. Rows past `Tables.fitsBroadcast` (the
-    * optimizer's estimate or the measured bytes) take replaceTable's
+  /** Publish `stored` as the new generation of `table`, with fresh
+    * attributes and without an optimizer pass over the rows. Rows past
+    * `Tables.fitsBroadcast` (the optimizer's estimate for a
+    * LocalRelation of them, or their measured bytes) take replaceTable's
     * union/parquet path instead. */
-  private[graft] def storeGeneration(table: String, output: Seq[Attribute],
-                                     rows: Vector[UnsafeRow]): Unit = {
-    val attrs = output.map(_.newInstance())
-    val kept = Tables.fitsBroadcast(spark, LocalRelation(attrs, rows).stats.sizeInBytes) &&
-      keepOnDriver(table, attrs, rows)
-    if (!kept)
-      replaceTableInner(table, GraftBridge.ofRows(spark, LocalRelation(attrs, rows)),
-        bumpDepth = true)
+  private[graft] def storeGeneration(table: String, stored: StoredRelation): Unit = {
+    val fresh = stored.newInstance()
+    val estimate = org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(fresh.output) * fresh.gen.rows.length
+    if (!(Tables.fitsBroadcast(spark, estimate) && keepOnDriver(table, fresh)))
+      replaceTableInner(table,
+        GraftBridge.ofRows(spark, LocalRelation(fresh.output, fresh.gen.rows)), bumpDepth = true)
     refreshViews(table)
   }
 
-  /** `rows` of `table` as a frame, qualified by the table name like a
-    * read of its view. */
-  private[graft] def storedFrame(table: String, output: Seq[Attribute],
-                                 rows: Seq[UnsafeRow]): DataFrame =
-    GraftBridge.ofRows(spark, SubqueryAlias(table,
-      LocalRelation(output, Engine.StoredRows(rows.toVector))))
+  /** `stored` as a frame of `table` with fresh attributes, qualified by
+    * the table name like a read of its view. */
+  private[graft] def storedFrame(table: String, stored: StoredRelation): DataFrame =
+    GraftBridge.ofRows(spark, SubqueryAlias(table, stored.newInstance()))
 
   /** The driver-held generation of `table` and the rows `gate` selects.
-    * The gate is evaluated once per stored row by an interpreted
-    * predicate: a generated class would embed the WHERE's literals, and
-    * compile once per key. None when the table is not driver-held or the
+    * The gate is evaluated once per stored row, interpreted
+    * (FoldLocalRows.rowTest): a generated class would embed the WHERE's
+    * literals, and compile once per key. None when the table is not driver-held or the
     * gate is not evaluable there (FoldLocalRows.evaluable: a
     * nondeterministic gate or a subquery keeps the frame path). */
   private[graft] def storedMatch(table: String,
       gate: Option[org.apache.spark.sql.Column]): Option[Engine.StoredMatch] =
-    storedGeneration(table).flatMap { case (output, rows) =>
+    storedGeneration(table).flatMap { stored =>
+      val rows = stored.gen.rows
       gate match {
-        case None => Some(Engine.StoredMatch(output, rows, rows.indices))
+        case None => Some(Engine.StoredMatch(stored, rows.indices))
         case Some(g) =>
-          val probe = storedFrame(table, output, Vector.empty).select(g)
+          val probe = GraftBridge.ofRows(spark, SubqueryAlias(table, stored)).select(g)
           org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
               probe.queryExecution.analyzed) match {
             case Project(Seq(Alias(cond, _)), _) if FoldLocalRows.evaluable(cond) =>
-              val p = InterpretedPredicate(BindReferences.bindReference(cond, output))
-              p.initialize(0)
-              Some(Engine.StoredMatch(output, rows, rows.indices.filter(i => p.eval(rows(i)))))
+              val test = FoldLocalRows.rowTest(cond, stored.output)
+              Some(Engine.StoredMatch(stored, rows.indices.filter(i => test(rows(i)))))
             case _ => None
           }
       }
@@ -3144,12 +3112,11 @@ class Engine(val spark: SparkSession) {
     * column holding each row's position in the stored Vector, the row
     * id the UPDATE hooks align pre- and post-update images on. */
   private[graft] def matchedFrame(table: String, m: Engine.StoredMatch): DataFrame = {
-    val attrs = m.output.map(_.newInstance()) :+
-      AttributeReference("__rid__", LongType, nullable = false)()
+    val attrs = m.output :+ AttributeReference("__rid__", LongType, nullable = false)()
     val toUnsafe = InterpretedUnsafeProjection.createProjection(
       attrs.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
-    storedFrame(table, attrs, m.matched.map(i =>
-      toUnsafe(new JoinedRow(m.rows(i), InternalRow(i.toLong))).copy()))
+    storedFrame(table, StoredRelation(attrs, Generation(m.matched.iterator.map(i =>
+      toUnsafe(new JoinedRow(m.rows(i), InternalRow(i.toLong))).copy()).toVector)))
   }
 
   /** The generation an UPDATE leaves: each matched row replaced in place
@@ -3157,7 +3124,7 @@ class Engine(val spark: SparkSession) {
     * columns, cast to the stored types), nullability widened to the
     * images'. A keyed table is re-sorted when a key value changed. */
   private[graft] def updatedGeneration(table: String, m: Engine.StoredMatch,
-      image: DataFrame): (Seq[Attribute], Vector[UnsafeRow]) = {
+      image: DataFrame): StoredRelation = {
     import org.apache.spark.sql.functions.col
     val sel = image.select((col("__rid__") +:
       m.output.map(a => col(s"`${a.name}`").cast(a.dataType))): _*)
@@ -3173,7 +3140,7 @@ class Engine(val spark: SparkSession) {
     }
     val keyMoved = pkOrdering(table, m.output)
       .filter(ord => pos.exists(i => ord.compare(m.rows(i), rows(i)) != 0))
-    (output, keyMoved.fold(rows)(rows.sorted(_)))
+    StoredRelation(output, Generation(keyMoved.fold(rows)(rows.sorted(_))))
   }
 
   /** INSERT onto a driver-held generation: the batch, aligned to the
@@ -3184,7 +3151,8 @@ class Engine(val spark: SparkSession) {
     * alignment would change a column's type. */
   private def appendStored(table: String, batch: DataFrame,
                            fillMissing: Boolean): Option[Long] =
-    storedGeneration(table).flatMap { case (output, rows) =>
+    storedGeneration(table).flatMap { stored =>
+      val output = stored.output
       val aligned = GraftBridge.ofRows(spark, LocalRelation(output.map(_.newInstance())))
         .unionByName(batch, allowMissingColumns = fillMissing)
       aligned.queryExecution.optimizedPlan match {
@@ -3192,10 +3160,10 @@ class Engine(val spark: SparkSession) {
           val toUnsafe = InterpretedUnsafeProjection.createProjection(
             l.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
           val added = l.data.map(r => toUnsafe(r).copy())
-          val all = rows ++ added
-          storeGeneration(table,
+          val all = stored.gen.rows ++ added
+          storeGeneration(table, StoredRelation(
             output.zip(l.output).map { case (a, b) => a.withNullability(a.nullable || b.nullable) },
-            pkOrdering(table, output).fold(all)(all.sorted(_)))
+            Generation(pkOrdering(table, output).fold(all)(all.sorted(_)))))
           Some(added.size.toLong)
         case _ => None
       }

@@ -1100,6 +1100,89 @@ class EngineSpec extends AnyFunSuite {
     assert(compiles == 0L, s"writes by fresh key literals compiled $compiles classes")
   }
 
+  test("point, BETWEEN, IN-list and LIKE reads by fresh literals compile no class and run no job") {
+    val (e, _, _) = storedOrders("read_compile_free")
+    val k = rowsOf(e, "SELECT o_orderkey FROM read_compile_free ORDER BY o_orderkey").map(_.head)
+    def reads(i: Int) = Seq(
+      s"SELECT o_orderpriority FROM read_compile_free WHERE o_orderkey = ${k(i)}",
+      s"SELECT o_orderpriority FROM read_compile_free WHERE o_orderkey BETWEEN ${k(i)} AND ${k(i + 9)}",
+      s"SELECT o_custkey FROM read_compile_free WHERE o_orderkey IN (${k(i)}, ${k(i + 2)}, ${k(i + 4)})",
+      s"SELECT o_orderkey FROM read_compile_free " +
+        s"WHERE o_orderpriority LIKE '${i % 5 + 1}-%' AND o_orderkey < ${k(i + 40)}")
+    // the first read of each shape may compile what all literals share
+    reads(10).foreach(rowsOf(e, _))
+    val ((rows, jobs), compiles) = Compiles.count(Jobs.count(e.spark)(reads(31).map(rowsOf(e, _))))
+    assert(rows.forall(_.nonEmpty), s"premise: every read returns rows: $rows")
+    assert(compiles == 0L, s"reads by fresh literals compiled $compiles classes")
+    assert(jobs == 0, s"reads by fresh literals ran $jobs jobs")
+  }
+
+  test("a self-join and a correlated subquery over a stored table return the parquet source's rows") {
+    val (e, a, b) = storedOrders("joined_orders")
+    Seq(s"SELECT x.o_orderkey, y.o_orderkey FROM T x JOIN T y " +
+        s"ON x.o_custkey = y.o_custkey AND x.o_orderkey < y.o_orderkey " +
+        s"WHERE x.o_orderkey BETWEEN $a AND $b ORDER BY 1, 2",
+      s"SELECT o_orderkey, o_custkey FROM T x WHERE o_totalprice > " +
+        "(SELECT AVG(o_totalprice) FROM T y WHERE y.o_custkey = x.o_custkey) " +
+        s"AND o_orderkey BETWEEN $a AND $b ORDER BY 1").foreach { sql =>
+      val want = rowsOf(e, sql.replace(" T ", " orders "))
+      assert(want.nonEmpty, s"premise: $sql returns rows")
+      assert(rowsOf(e, sql.replace(" T ", " joined_orders ")) == want, sql)
+    }
+  }
+
+  test("the stored-row Filter fold returns the rows of the job path") {
+    val (e, a, b) = storedOrders("filtered_orders")
+    // every read keeps its source's row order: LIMIT/OFFSET without ORDER
+    // BY sees storage order, which the stored copy shares with orders
+    Seq(s"SELECT o_orderkey FROM T WHERE NULL",
+      s"SELECT o_orderkey FROM T WHERE o_orderpriority = NULL",
+      s"SELECT o_orderkey, o_custkey FROM T WHERE o_custkey % 7 = 1 LIMIT 5 OFFSET 3",
+      s"SELECT o_orderkey * 2 + 1, UPPER(o_orderpriority), o_totalprice / 3 FROM T " +
+        s"WHERE o_orderkey BETWEEN $a AND $b",
+      s"SELECT o_orderkey FROM T WHERE RAND() < 2 AND o_orderkey BETWEEN $a AND $b").foreach { sql =>
+      val want = rowsOf(e, sql.replace(" T ", " orders "))
+      assert(want.nonEmpty || sql.contains("NULL"), s"premise: $sql returns rows")
+      assert(rowsOf(e, sql.replace(" T ", " filtered_orders ")) == want, sql)
+    }
+    // a column collation compares case- and accent-insensitively on the
+    // driver as in a job (a coalesced frame of the same stored rows)
+    e.runScript(
+      """CREATE TABLE nm_stored (id INT, nm VARCHAR(20) COLLATE utf8mb4_0900_ai_ci);
+        |INSERT INTO nm_stored VALUES (1, 'b'), (2, 'A'), (3, 'á'), (4, 'B'), (5, 'a');
+        |""".stripMargin)
+    assert(e.storedGeneration("nm_stored").isDefined, "premise: nm_stored is held on the driver")
+    val job = e.spark.table("nm_stored").coalesce(1)
+      .where(org.apache.spark.sql.functions.col("nm") === "a").select("id")
+    val (viaJob, jobs) = Jobs.count(e.spark)(job.collect().map(_.toSeq).toSeq)
+    assert(jobs > 0, "premise: the coalesced frame runs a job")
+    assert(viaJob == Seq(Seq(2), Seq(3), Seq(5)))
+    assert(rowsOf(e, "SELECT id FROM nm_stored WHERE nm = 'a'") == viaJob)
+  }
+
+  test("after a DELETE of every row: COUNT is 0, SUM is NULL, a LEFT JOIN keeps its other side") {
+    val e = keyedTable("emptied", 4)
+    assert(e.query("DELETE FROM emptied").collect()(0).getLong(0) == 4L)
+    assert(e.storedGeneration("emptied").isDefined, "premise: the empty generation is held on the driver")
+    assert(rowsOf(e, "SELECT COUNT(*), SUM(v) FROM emptied") == Seq(Seq(0L, null)))
+    e.query("CREATE TABLE other_side (id INT, w INT)")
+    e.query("INSERT INTO other_side VALUES (1, 5), (2, 6)").collect()
+    assert(rowsOf(e, "SELECT o.id, o.w, x.v FROM other_side o LEFT JOIN emptied x " +
+      "ON o.id = x.id ORDER BY o.id") == Seq(Seq(1, 5, null), Seq(2, 6, null)))
+  }
+
+  test("a DataFrame cached over a stored read keeps its rows across a write; a new read sees the write") {
+    val e = keyedTable("cached_rows", 5)
+    val cached = e.query("SELECT id, v FROM cached_rows WHERE id <= 3").cache()
+    val want = cached.collect().map(_.toSeq).toSeq
+    assert(want == Seq(Seq(1, 10), Seq(2, 20), Seq(3, 30)))
+    e.query("UPDATE cached_rows SET v = 0 WHERE id = 2").collect()
+    assert(cached.collect().map(_.toSeq).toSeq == want)
+    assert(rowsOf(e, "SELECT id, v FROM cached_rows WHERE id <= 3") ==
+      Seq(Seq(1, 10), Seq(2, 0), Seq(3, 30)))
+    cached.unpersist()
+  }
+
   test("a FROM-less SELECT runs no job; RAND() is left unfolded") {
     val e = new Engine(spark.newSession())
     val df = e.query("SELECT 1 + 1, CONCAT('du', 'al'), UPPER('x') AS u")
