@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DecimalType, FloatType}
 import graft.SqlRewrite.{closingParen, indexOfTopLevelWord, scanTop,
   splitTopLevel}
 
@@ -14,12 +15,19 @@ import graft.SqlRewrite.{closingParen, indexOfTopLevelWord, scanTop,
   *  - INSERT appends via Engine.insertDf (vocabulary-validated, plan
   *    depth bounded by warehouse materialization); a column list
   *    null-fills the unmentioned columns like MySQL defaults.
-  *  - UPDATE/DELETE on a driver-held table (Engine.storedMatch) evaluate
-  *    the predicate once per stored row; UPDATE projects the assignments
-  *    over the matched rows only and replaces them in place, DELETE keeps
-  *    the rows where the predicate is not TRUE (MySQL 3VL: NULL keeps).
-  *    Any other table is rewritten as a frame: UPDATE projects CASE WHEN
-  *    pred THEN expr ELSE col END per assigned column.
+  *  - Every UPDATE form builds one row image (RowImage: typed
+  *    assignments, BEFORE UPDATE triggers, ON UPDATE stamps, generated
+  *    columns) and runs one check-then-write sequence (checkUpdate), IGNORE
+  *    as a mode of it (reference sql/rowexec/update.go, which
+  *    plan/update_join.go only feeds joined rows). The forms differ in the
+  *    rows they feed in (UpdateRows): on a driver-held table
+  *    (Engine.storedMatch) WHERE is evaluated once per stored row and
+  *    only the matched rows are imaged and replaced in place; any other
+  *    table is imaged whole as a frame, rows outside WHERE kept; ORDER BY
+  *    … LIMIT feeds the ids of its ordered subset; UPDATE JOIN each
+  *    target merged with its new values.
+  *  - DELETE keeps the rows where the predicate is not TRUE (MySQL 3VL:
+  *    NULL keeps), on a driver-held table row by row.
   *  - Each returns MySQL's ok-packet shape as a 1-row `affected_rows`.
   *
   * All statement recognition is anchored, case-insensitive, and falls
@@ -685,356 +693,49 @@ object Dml {
       val (assignText, whereOpt) = splitWhere(head)
       val t = e.spark.table(table)
       val actual = t.columns.map(c => c.toLowerCase -> c).toMap
-      val colTypes = t.schema.fields.map(f => f.name -> f.dataType).toMap
-      // declared VECTOR columns coerce binary/text payloads through the
-      // packed-float32 decoder instead of a (disallowed) direct cast
-      def castTo(c: String, raw: org.apache.spark.sql.Column)
-          : org.apache.spark.sql.Column = colTypes(c) match {
-        case at @ org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, _)
-            if e.vecDims.contains((table, c.toLowerCase)) =>
-          org.apache.spark.sql.GraftBridge.column(
-            graft.functions.vector.VecCoerce(
-              org.apache.spark.sql.GraftBridge.expression(raw))).cast(at)
-        // wide DECIMAL assignment canonicalizes like the INSERT path
-        case _ if e.wideDecCols.contains((table, c.toLowerCase)) =>
-          val (p, s) = e.wideDecCols((table, c.toLowerCase))
-          org.apache.spark.sql.GraftBridge.column(
-            graft.functions.WideDecCoerce(
-              org.apache.spark.sql.GraftBridge.expression(raw),
-              p, s, e.strictWriteMode && !ignore))
-        case dt => raw.cast(dt)
-      }
-      // MySQL applies assignments LEFT TO RIGHT, each one seeing the
-      // values produced by the assignments before it (reference
-      // update_queries.go:59-63: `SET f32 = f32 + f32, f64 = f32 * f64`
-      // doubles f32 first, then f64 multiplies by the NEW f32). Kept in
-      // statement order; each layer coerces to the column's type the way
-      // MySQL coerces on write.
       val assigns = splitTop(assignText).map { a =>
         val eq = topLevelIndexOf(a, '=')
         require(eq > 0, s"malformed SET clause: $a")
         val name = a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
-        val ex = a.substring(eq + 1).trim
         val resolved = actual.getOrElse(name.toLowerCase,
           throw new IllegalArgumentException(
             s"Unknown column '$name' in 'field list'"))
-        resolved -> ex
+        resolved -> a.substring(eq + 1).trim
       }
-      // direct assignment to a generated column is MySQL error 3105 —
-      // except `SET g = DEFAULT`, which just recomputes (issue #9438
-      // shape in generated_columns.go); DEFAULT on a plain column takes
-      // its declared default (or NULL)
-      val assignsResolved = assigns.flatMap { case (c, ex) =>
-        val isGenerated =
-          e.generatedCols.exists(g => g._1 == table && g._2.equalsIgnoreCase(c))
-        if (ex.trim.equalsIgnoreCase("DEFAULT")) {
-          if (isGenerated) None // computeGenerated below recomputes it
-          else Some(c -> e.columnDefaults
-            .get((table, c.toLowerCase)).getOrElse("NULL"))
-        } else if (isGenerated)
-          throw new IllegalArgumentException(
-            s"The value specified for generated column '$c' in table " +
-            s"'$table' is not allowed. (MySQL error 3105)")
-        else Some(c -> ex)
-      }
-      // strict out-of-range assignment into an integral column is MySQL
-      // error 1264 BEFORE the write cast can wrap it (rowexec/update.go
-      // convert, non-IGNORE). Assignments apply LEFT TO RIGHT, each RHS
-      // seeing the values the earlier assignments produced
-      // (update_queries.go:59-63), so each bound check evaluates against
-      // the row AFTER the preceding assignments: with `flagOutOfRange`,
-      // assignSequential plants one flag column per integral assignment,
-      // (column, flag) below, true on a matched row whose value is out of
-      // range.
-      val oobFlags = assignsResolved.zipWithIndex.collect {
-        case ((c, _), i) if e.integralBounds(colTypes(c)).isDefined =>
-          (c, s"__oob${i}__")
-      }
-      // sequential fold: gate (if any) is materialized from the ORIGINAL
-      // row first so later layers can't perturb the match predicate
-      def assignSequential(df: DataFrame,
-                           gate: Option[org.apache.spark.sql.Column],
-                           flagOutOfRange: Boolean = false) = {
-        val g0 = gate.map(g => df.withColumn("__upd__", g)).getOrElse(df)
-        val updated = assignsResolved.zipWithIndex.foldLeft(g0) {
-          case (d, ((c, ex), i)) =>
-            val v = castTo(c, expr(ex))
-            val assigned =
-              if (gate.isDefined) when(col("__upd__"), v).otherwise(col(s"`$c`"))
-              else v
-            e.integralBounds(colTypes(c)).filter(_ => flagOutOfRange) match {
-              case Some((lo, hi)) =>
-                val asDec = expr(ex).cast(
-                  org.apache.spark.sql.types.DecimalType(38, 0))
-                val oob = asDec.isNotNull && (asDec < lit(lo) || asDec > lit(hi))
-                d.withColumns(Map(s"__oob${i}__" -> gate.fold(oob)(_ => col("__upd__") && oob),
-                  c -> assigned))
-              case None => d.withColumn(c, assigned)
-            }
-        }
-        if (gate.isDefined) updated.drop("__upd__") else updated
-      }
-      // IGNORE-mode assignment: a failed cast (non-NULL in, NULL out)
-      // stores the type zero value and plants a gated `__cvt_*__` flag
-      // that ignoreWriteCoercions turns into a 1366 warning (reference
-      // sql/rowexec/update.go:98 convertDataAndWarn). Keeps `__upd__`
-      // so downstream coercions stay gated to matched rows.
-      def assignSequentialIgnore(df: DataFrame,
-          gate: Option[org.apache.spark.sql.Column]): DataFrame = {
-        val g0 = df.withColumn("__upd__", gate.getOrElse(lit(true)))
-        assignsResolved.foldLeft(g0) { case (d, (c, ex)) =>
-          val raw = expr(ex)
-          val casted = castTo(c, raw)
-          e.zeroValueLit(colTypes(c)) match {
-            case Some(z) =>
-              val flag = s"__cvt_${c}__"
-              // integral targets additionally clamp out-of-range values
-              // to the type bound with a 1264 (update.go convert +
-              // ErrValueOutOfRange on non-strict writes)
-              e.integralBounds(colTypes(c)) match {
-                case Some((lo, hi)) =>
-                  val asDec = raw.cast(
-                    org.apache.spark.sql.types.DecimalType(38, 0))
-                  val oorF = s"__oor_${c}__"
-                  d.withColumn(oorF, col("__upd__") && raw.isNotNull &&
-                      asDec.isNotNull && (asDec < lit(lo) || asDec > lit(hi)))
-                    .withColumn(flag, col("__upd__") && raw.isNotNull &&
-                      asDec.isNull && casted.isNull)
-                    .withColumn(c,
-                      when(!col("__upd__"), col(s"`$c`"))
-                        .when(col(s"`$oorF`"),
-                          when(asDec > lit(hi), lit(hi)).otherwise(lit(lo))
-                            .cast(colTypes(c)))
-                        .when(col(s"`$flag`"), z)
-                        .otherwise(casted))
-                case None =>
-                  d.withColumn(flag,
-                      col("__upd__") && raw.isNotNull && casted.isNull)
-                    .withColumn(c,
-                      when(!col("__upd__"), col(s"`$c`"))
-                        .when(col(s"`$flag`"), z)
-                        .otherwise(casted))
-              }
-            case None =>
-              d.withColumn(c,
-                when(col("__upd__"), casted).otherwise(col(s"`$c`")))
-          }
-        }
-      }
-      // ON UPDATE CURRENT_TIMESTAMP: unassigned on-update columns take
-      // the statement clock on rows whose assigned values actually
-      // CHANGE (update_queries.go OnUpdateExprScripts; a same-value
-      // assignment updates nothing, dolt issue 10657). The original
-      // assigned values ride along as __orig_* so change detection is a
-      // row-local comparison, no extra join.
-      val assignedNames = assignsResolved.map(_._1)
-      val onUpdCols = e.onUpdateCols.toSeq.collect {
-        case ((t2, cl), p) if t2 == table &&
-            !assignedNames.exists(_.toLowerCase == cl) &&
-            actual.contains(cl) =>
-          (actual(cl), p)
-      }
-      def snapOrig(df: DataFrame): DataFrame =
-        if (onUpdCols.isEmpty) df
-        else assignedNames.foldLeft(df)((d, c) =>
-          d.withColumn(s"__orig_$c", col(s"`$c`")))
-      def applyOnUpdate(updated: DataFrame): DataFrame =
-        if (onUpdCols.isEmpty) updated
-        else {
-          val changed = assignedNames.map(c =>
-            !(col(s"`$c`") <=> col(s"`__orig_$c`"))).reduce(_ || _)
-          onUpdCols.foldLeft(updated) { case (d, (c, p)) =>
-            d.withColumn(c, when(changed,
-              e.nowColumn(p).cast(d.schema(c).dataType))
-              .otherwise(col(s"`$c`")))
-          }.drop(assignedNames.map(c => s"__orig_$c"): _*)
-        }
-      // `__rid__` aligns each pre-update row with its post-update image
-      // so ON UPDATE CASCADE can map old keys to new keys
-      tail match {
-        case Some(orderLimit) =>
-          // ORDER BY … LIMIT … — update exactly the limited subset:
-          // multiset-subtract it, transform it, add it back
-          val whereClause = whereOpt.map(w => s" WHERE $w").getOrElse("")
-          val subset = e.query(s"SELECT * FROM ${tick(table)}$whereClause $orderLimit")
-          val affected = subset.count()
-          // checkpoint pins the row ids: monotonically_increasing_id is
-          // re-evaluated per action, and the IGNORE resolution collects
-          // old and new images in separate jobs that must agree on rids
-          val subset0 = subset.withColumn("__rid__",
-            monotonically_increasing_id()).localCheckpoint()
-          var transformed0 = e.coerceVocab(table,
-            e.computeGenerated(table,
-              applyOnUpdate(applyBeforeUpdateTriggers(e, table,
-                assignSequential(snapOrig(subset0), None), lit(true)))))
-          if (ignore)
-            // row-ordered key-conflict resolution, exactly like the
-            // no-ORDER-BY IGNORE path (insert_queries.go "UPDATE IGNORE
-            // keyless tables": UPDATE IGNORE ... ORDER BY pk)
-            transformed0 = e.applyUpdateIgnore(table, subset0, transformed0)._1
-          val newDf =
-            t.exceptAll(subset).unionByName(transformed0.drop("__rid__"))
-          e.validateVocab(table, newDf)
-          e.validateChecks(table, newDf)
-          if (!ignore) {
-            e.enforcePkUniquePost(table, newDf)
-            e.enforcePkUniqueTransient(table, subset0, transformed0)
-          }
-          e.validateForeignKeysChildChanged(table, subset0, transformed0)
-          e.enforceParentUpdate(table, subset0, transformed0)
-          e.replaceTable(table, newDf, bumpDepth = true)
-          Some({ e.foundRowsSet(affected); ok(e, affected) })
+      val image = new RowImage(e, table, assigns, ignore)
+      val gate = whereOpt.map(cond =>
+        coalesce(expr(cond).cast("boolean"), lit(false)))
+      // the rows fed in: a driver-held table's matched rows when the
+      // image folds over them, otherwise the whole table as a frame with
+      // `gate` (WHERE) or the ids ORDER BY … LIMIT picks selecting rows
+      val (stored, frame) = tail match {
         case None =>
-          val gate = whereOpt.map(cond =>
-            coalesce(expr(cond).cast("boolean"), lit(false)))
-          val strict = !ignore && e.strictWriteMode
-          // MySQL error 1264 when a row of a strict image carries an
-          // out-of-range flag (assignSequential); the image without them
-          def raiseOutOfRange(image: DataFrame): DataFrame =
-            if (oobFlags.isEmpty) image
-            else {
-              val any = e.localRows(image.agg(
-                max(col(s"`${oobFlags.head._2}`")),
-                oobFlags.tail.map(f => max(col(s"`${f._2}`"))): _*)).head
-              oobFlags.indices.find(i => !any.isNullAt(i) && any.getBoolean(i))
-                .foreach { i =>
-                  throw new IllegalArgumentException(
-                    s"Out of range value for column '${oobFlags(i)._1}' " +
-                    s"(MySQL error 1264)")
-                }
-              image.drop(oobFlags.map(_._2): _*)
-            }
-          // the assignments, then the table's BEFORE UPDATE triggers on
-          // `g`'s rows (the trigger gate taken from the original row)
-          def assignThenTrigger(base: DataFrame,
-              g: Option[org.apache.spark.sql.Column])(
-              assign: DataFrame => DataFrame): DataFrame =
-            if (!e.triggers.values.exists(t => t.table == table &&
-                t.timing == "BEFORE" && t.event == "UPDATE")) assign(base)
-            else applyBeforeUpdateTriggers(e, table,
-              assign(base.withColumn("__trg_gate__", g.getOrElse(lit(true)))),
-              col("__trg_gate__")).drop("__trg_gate__")
-          // the post-update image of `base`; rows outside `g` keep their
-          // values. Strict mode: a bad value errors. Non-strict mode (SET
-          // sql_mode=''): values coerce with warnings like IGNORE.
-          def strictImage(base: DataFrame,
-                          g: Option[org.apache.spark.sql.Column]): DataFrame =
-            e.coerceVocab(table,
-              e.computeGenerated(table,
-                applyOnUpdate(assignThenTrigger(snapOrig(base), g)(
-                  assignSequential(_, g, flagOutOfRange = strict)))))
-          def lenientImage(base: DataFrame,
-                           g: Option[org.apache.spark.sql.Column]): DataFrame = {
-            val assigned = applyOnUpdate(assignThenTrigger(snapOrig(base), g)(
-              assignSequentialIgnore(_, g)))
-            val afterGen = e.coerceVocab(table,
-              e.computeGenerated(table, assigned))
-            val (coerced, flagWarns) =
-              e.ignoreWriteCoercions(table, afterGen, gateCol = Some("__upd__"))
-            e.emitFlagWarnings(coerced, flagWarns).drop("__upd__")
-          }
-          if (!ignore) {
-            // A driver-held table is written row by row: WHERE is
-            // evaluated once over the stored rows, the image is computed
-            // for the matched rows only, and each image replaces its row
-            // in place. Otherwise (parquet/union-backed tables, a
-            // nondeterministic or subquery WHERE or image) the whole
-            // table is rewritten as a frame.
-            val rowLevel = e.storedMatch(table, gate).flatMap { m =>
-              val before = e.matchedFrame(table, m)
-              val image = strictImage(before, None)
-              if (!image.queryExecution.analyzed.exists(_.expressions.exists(
-                  x => !graft.plans.FoldLocalRows.evaluable(x))))
-                Some((m, before, image))
-              else None
-            }
-            // (affected rows, pre-update rows and their images, both with
-            // `__rid__`, the whole post-update table, its write)
-            val (affected, before, after, newDf, write) = rowLevel match {
-              case Some((m, before, image)) =>
-                val after =
-                  if (strict) raiseOutOfRange(image) else lenientImage(before, None)
-                val updated = e.updatedGeneration(table, m, after)
-                (m.matched.size.toLong, before, after,
-                  e.storedFrame(table, updated), () => e.storeGeneration(table, updated))
-              case None =>
-                val affected =
-                  gate.map(g => t.filter(g).count()).getOrElse(t.count())
-                val t0 = t.withColumn("__rid__", monotonically_increasing_id())
-                val after =
-                  if (strict) raiseOutOfRange(strictImage(t0, gate))
-                  else lenientImage(t0, gate)
-                val newDf = after.drop("__rid__")
-                (affected, t0, after, newDf,
-                  () => e.replaceTable(table, newDf, bumpDepth = true))
-            }
-            if (strict) e.validateVocab(table, newDf)
-            e.validateChecks(table, newDf)
-            e.validateForeignKeysChildChanged(table, before, after)
-            e.enforcePkUniquePost(table, newDf)
-            if (strict) e.enforcePkUniqueTransient(table, before, after)
-            e.enforceUniqueExprsPost(table, newDf)
-            e.enforceParentUpdate(table, before, after, newTable = Some(newDf))
-            write()
-            Some({ e.foundRowsSet(affected); ok(e, affected) })
-          } else {
-            val affected = gate.map(g => t.filter(g).count()).getOrElse(t.count())
-            val t0 = t.withColumn("__rid__", monotonically_increasing_id())
-            // UPDATE IGNORE (reference sql/rowexec/update.go:98,150
-            // convertDataAndWarn + ignore paths): instead of erroring,
-            //   - a failed value conversion stores the type zero (1366)
-            //   - NULL into NOT NULL stores the type zero (1048)
-            //   - a CHECK- or FK-violating row keeps its OLD values
-            //     (1105 / 1452)
-            //   - a key-colliding row keeps its OLD values (1062)
-            // all surfaced through SHOW WARNINGS.
-            val assigned = assignSequentialIgnore(t0, gate)
-            val afterGen = e.coerceVocab(table,
-              e.computeGenerated(table, assigned))
-            val (coerced, flagWarns) =
-              e.ignoreWriteCoercions(table, afterGen, gateCol = Some("__upd__"))
-            var cur = e.emitFlagWarnings(coerced, flagWarns)
-            val updGate = col("__upd__")
-            def revert(viol: DataFrame, code: Int, msg: String): Unit = {
-              val rids = viol.select("__rid__")
-              val n = rids.count()
-              if (n > 0) {
-                e.warnN(n, code, msg)
-                cur = cur.join(rids, Seq("__rid__"), "left_anti").unionByName(
-                  t0.withColumn("__upd__", lit(false))
-                    .join(rids, Seq("__rid__"), "left_semi"))
-              }
-            }
-            e.checkConstraints.toSeq
-              .collect { case (t2, _, ex, true) if t2 == table => ex }
-              .foreach { ex =>
-                revert(cur.filter(updGate &&
-                    !coalesce(expr(ex).cast("boolean"), lit(true))),
-                  1105, "check constraint violated (row kept old values)")
-              }
-            e.foreignKeys.toSeq.filter(_.child == table).foreach { fk =>
-              val keys = e.spark.table(fk.parent)
-                .select(fk.parentCols.map(c => col(s"`$c`")): _*).distinct()
-                .toDF(fk.parentCols.map(c => s"__fk_$c"): _*)
-              val cond = fk.childCols.zip(fk.parentCols).map { case (cc, pc) =>
-                col(s"`$cc`") === col(s"`__fk_$pc`")
-              }.reduce(_ && _)
-              val nonNull = fk.childCols.map(c => col(s"`$c`").isNotNull)
-                .reduce(_ && _)
-              revert(cur.filter(updGate && nonNull)
-                  .join(keys, cond, "left_anti"),
-                1452, "Cannot add or update a child row: a foreign key " +
-                  s"constraint fails (`$table`, CONSTRAINT `${fk.name}`)")
-            }
-            val (newDf0, _) = e.applyUpdateIgnore(table,
-              t0.withColumn("__upd__", lit(false)), cur)
-            val newDf = newDf0.drop("__rid__", "__upd__")
-            e.enforceParentUpdate(table, t0, newDf0.drop("__upd__"))
-            e.replaceTable(table, newDf, bumpDepth = true)
-            Some({ e.foundRowsSet(affected); ok(e, affected) })
-          }
+          (e.storedMatch(table, gate), () => {
+            val rows = t.withColumn("__rid__", monotonically_increasing_id())
+            frameRows(e, table, rows, gate,
+              gate.fold(t.count())(g => t.filter(g).count()))
+          })
+        case Some(orderLimit) =>
+          // a driver-held table's rows carry their positions; any other
+          // table's row ids are pinned, as each action re-evaluates
+          // monotonically_increasing_id
+          val all = e.storedMatch(table, None)
+          val rows = all.fold(t.withColumn("__rid__",
+            monotonically_increasing_id()).localCheckpoint())(e.matchedFrame(table, _))
+          val ids = orderedIds(e, table, rows, gate, orderLimit)
+          (all.map(m => m.copy(matched = ids.sorted.map(_.toInt).toIndexedSeq)),
+            () => frameRows(e, table, rows,
+              Some(col("__rid__").isin(ids.toIndexedSeq: _*)), ids.length.toLong))
       }
+      val (rows, img) = stored.map(storedRows(e, table, _))
+        .map(r => (r, image(r.before, None)))
+        .filter { case (_, img) => !img.queryExecution.analyzed.exists(
+          _.expressions.exists(x => !graft.plans.FoldLocalRows.evaluable(x))) }
+        .getOrElse { val r = frame(); (r, image(r.before, r.gate)) }
+      checkUpdate(e, table, image, rows, img)._2()
+      // UPDATE, IGNORE too, reports the rows it matched (dml_iters.go:761)
+      e.foundRowsSet(rows.matched)
+      Some(ok(e, rows.matched))
 
     case Delete(tableRaw, rest0) =>
       val table = normName(tableRaw)
@@ -4483,9 +4184,9 @@ object Dml {
       }
     }
 
-    // phase 1: plan every target's merge against the PRE-update state
-    // (the analyzed plans bind the current view subtrees, so later view
-    // swaps don't leak into them)
+    // every target's rows and image are planned against the PRE-update
+    // state (the analyzed plans bind the current view subtrees, so later
+    // view swaps don't leak into them)
     val work = assigns.groupBy(_._1).toSeq.map { case (alias, as) =>
       val table = aliasMap(alias)
       val t = e.spark.table(table)
@@ -4495,91 +4196,292 @@ object Dml {
           s"Unknown column '$c' in 'field list'")) -> ex
       }
       val key = e.tableKeys.getOrElse(table, t.columns.toSeq)
-      val keySel = key.map(k => s"`$alias`.`$k` AS `$k`")
+      val keySel = key.map(k => s"`$alias`.`$k` AS `__key_$k`")
+      val newCols = asResolved.map { case (c, _) => s"__new_$c" }.distinct
       val newSel = asResolved.map { case (c, ex) => s"($ex) AS `__new_$c`" }
       // OUTER-join rows where this target side is absent carry NULL
       // keys: they match no real row and must not count as matched
-      val allNullKey = key.map(k => col(s"`$k`").isNull).reduce(_ && _)
+      val allNullKey = key.map(k => col(s"`__key_$k`").isNull).reduce(_ && _)
       // a target row with several join matches is updated ONCE, from the
       // "first" match (MySQL leaves which one unspecified; the reference
       // iterates source order — update_queries.go pins an ORDER BY'd
       // derived source). Deterministic pick: smallest new-value tuple.
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(key.map(k => col(s"`$k`")).toIndexedSeq: _*)
-        .orderBy(asResolved.map { case (c, _) =>
-          col(s"`__new_$c`").asc_nulls_first }.toIndexedSeq: _*)
-      val updates0 = e.query(
+        .partitionBy(key.map(k => col(s"`__key_$k`")).toIndexedSeq: _*)
+        .orderBy(newCols.map(c => col(s"`$c`").asc_nulls_first).toIndexedSeq: _*)
+      val updates = e.query(
         s"SELECT DISTINCT ${(keySel ++ newSel).mkString(", ")} " +
           s"FROM $refsText$whereSql")
         .filter(!allNullKey)
         .withColumn("__rn__", row_number().over(w))
         .filter(col("__rn__") === 1).drop("__rn__")
-      // UPDATE IGNORE assigning a declared-key column: a row whose new
-      // key would collide is skipped, first (by old key order) winner
-      // kept — matched 4 / updated 1 on the self-join SET pk case
-      // (update_queries.go:441 UpdateInfo{Matched:4, Updated:1}).
-      // Two collision classes: against another updated row's new key
-      // (window first-wins) and against an untouched existing row's key
-      // (anti-join); chained collisions through skipped rows are
-      // row-order-unspecified in MySQL and left unmodeled.
-      val keyAssigned = ignore && e.tableKeys.contains(table) &&
-        key.exists(k => asResolved.exists(_._1.equalsIgnoreCase(k)))
-      val updates = if (!keyAssigned) updates0 else {
-        val assignedK = asResolved.map(_._1.toLowerCase).toSet
-        val nkCols = key.map { k =>
-          (if (assignedK.contains(k.toLowerCase)) col(s"`__new_$k`")
-           else col(s"`$k`")).as(s"__nk_$k")
+        .withColumn("__hit__", lit(true))
+      // the table's rows, each with its join match's new values as the
+      // assignments' source; NULL-safe on the key, as a keyless table's
+      // key is every column, NULLs included
+      val rows = t.withColumn("__rid__", monotonically_increasing_id())
+        .join(updates,
+          key.map(k => col(s"`$k`") <=> col(s"`__key_$k`")).reduce(_ && _), "left")
+        .select((t.columns.toSeq ++ Seq("__rid__") ++ newCols :+ "__hit__")
+          .map(c => col(s"`$c`")): _*)
+      val gate = Some(coalesce(col("__hit__"), lit(false)))
+      val image = new RowImage(e, table,
+        asResolved.map { case (c, _) => c -> s"`__new_$c`" }, ignore)
+      (table, image, frameRows(e, table, rows, gate, updates.count()),
+        image(rows, gate).drop(newCols :+ "__hit__": _*))
+    }
+    // every target is checked before any is written, so a failing target
+    // leaves every table untouched (update_queries.go "UPDATE join with
+    // FK constraint" scripts)
+    val checked = work.map { case (table, image, rows, img) =>
+      checkUpdate(e, table, image, rows, img)
+    }
+    checked.foreach(_._2())
+    // rows matched; UPDATE IGNORE … JOIN reports the rows it updated
+    // (update_queries.go:441 UpdateInfo{Matched:4, Updated:1})
+    val n = work.map(_._3.matched).sum - checked.map(_._1).sum
+    e.foundRowsSet(n)
+    ok(e, n)
+  }
+
+  /** The post-update row image of one table's UPDATE, the one image
+    * every UPDATE form builds: `assigns` are (column, SQL expression) in
+    * statement order. In order, the image applies
+    *  - the assignments LEFT TO RIGHT, each seeing the values the ones
+    *    before it produced (update_queries.go:59-63: `SET f32 = f32 +
+    *    f32, f64 = f32 * f64` multiplies by the NEW f32), each cast to
+    *    its column's type. Strict, an out-of-range integral value plants
+    *    a flag that `settle` raises as 1264 before the cast can wrap it
+    *    (rowexec/update.go convert). Under IGNORE or non-strict mode (SET
+    *    sql_mode='') it clamps to the type bound with a 1264, and a failed
+    *    conversion stores the type zero with a 1366 (update.go:98
+    *    convertDataAndWarn);
+    *  - the table's BEFORE UPDATE triggers;
+    *  - ON UPDATE CURRENT_TIMESTAMP stamps;
+    *  - generated columns, then ENUM index coercion.
+    */
+  private final class RowImage(e: Engine, table: String,
+      assigns0: Seq[(String, String)], val ignore: Boolean) {
+    val strict: Boolean = !ignore && e.strictWriteMode
+    private val schema = e.spark.table(table).schema
+    private val colTypes = schema.fields.map(f => f.name -> f.dataType).toMap
+    // direct assignment to a generated column is MySQL error 3105 —
+    // except `SET g = DEFAULT`, which just recomputes (issue #9438
+    // shape in generated_columns.go); DEFAULT on a plain column takes
+    // its declared default (or NULL)
+    private val assigns = assigns0.flatMap { case (c, ex) =>
+      val isGenerated =
+        e.generatedCols.exists(g => g._1 == table && g._2.equalsIgnoreCase(c))
+      if (ex.trim.equalsIgnoreCase("DEFAULT")) {
+        if (isGenerated) None // computeGenerated recomputes it
+        else Some(c -> e.columnDefaults
+          .get((table, c.toLowerCase)).getOrElse("NULL"))
+      } else if (isGenerated)
+        throw new IllegalArgumentException(
+          s"The value specified for generated column '$c' in table " +
+          s"'$table' is not allowed. (MySQL error 3105)")
+      else Some(c -> ex)
+    }
+    // (column, flag) per strict integral assignment, true on an updated
+    // row whose value is out of range
+    private val oobFlags = assigns.zipWithIndex.collect {
+      case ((c, _), i) if strict && e.integralBounds(colTypes(c)).isDefined =>
+        (c, s"__oob${i}__")
+    }
+    // ON UPDATE CURRENT_TIMESTAMP: unassigned on-update columns take the
+    // statement clock on rows whose assigned values actually CHANGE
+    // (update_queries.go OnUpdateExprScripts; a same-value assignment
+    // updates nothing, dolt issue 10657). The original assigned values
+    // ride along as __orig_* so change detection is row-local.
+    private val assigned = assigns.map(_._1).distinct
+    private val onUpdCols = e.onUpdateCols.toSeq.collect {
+      case ((t2, cl), p) if t2 == table &&
+          !assigned.exists(_.equalsIgnoreCase(cl)) &&
+          schema.fieldNames.exists(_.equalsIgnoreCase(cl)) =>
+        (schema.fieldNames.find(_.equalsIgnoreCase(cl)).get, p)
+    }
+
+    // declared VECTOR columns coerce binary/text payloads through the
+    // packed-float32 decoder instead of a (disallowed) direct cast; wide
+    // DECIMAL canonicalizes like the INSERT path
+    private def castTo(c: String, raw: Column): Column = colTypes(c) match {
+      case at @ ArrayType(FloatType, _) if e.vecDims.contains((table, c.toLowerCase)) =>
+        GraftBridge.column(graft.functions.vector.VecCoerce(
+          GraftBridge.expression(raw))).cast(at)
+      case _ if e.wideDecCols.contains((table, c.toLowerCase)) =>
+        val (p, s) = e.wideDecCols((table, c.toLowerCase))
+        GraftBridge.column(graft.functions.WideDecCoerce(
+          GraftBridge.expression(raw), p, s, strict))
+      case dt => raw.cast(dt)
+    }
+
+    /** The image of `base` (the table's columns and `__rid__`): rows
+      * outside `gate` keep their values. A gate is taken from the
+      * original row and kept as `__upd__`. */
+    def apply(base: DataFrame, gate: Option[Column]): DataFrame = {
+      val upd = gate.map(_ => col("__upd__"))
+      val updated = upd.getOrElse(lit(true))
+      def keep(c: String, v: Column) = upd.fold(v)(when(_, v).otherwise(col(s"`$c`")))
+      val snap = gate.map("__upd__" -> _).toMap ++ (if (onUpdCols.isEmpty) Map.empty
+        else assigned.map(c => s"__orig_$c" -> col(s"`$c`")).toMap)
+      val start = if (snap.isEmpty) base else base.withColumns(snap)
+      val image = assigns.zipWithIndex.foldLeft(start) { case (d, ((c, ex), i)) =>
+        val raw = expr(ex)
+        val cast = castTo(c, raw)
+        val asDec = raw.cast(DecimalType(38, 0))
+        val bounds = e.integralBounds(colTypes(c))
+        def outOfRange(lo: Long, hi: Long) =
+          asDec.isNotNull && (asDec < lit(lo) || asDec > lit(hi))
+        (bounds, if (strict) None else e.zeroValueLit(colTypes(c))) match {
+          case (Some((lo, hi)), _) if strict =>
+            d.withColumns(Map(s"__oob${i}__" -> (updated && outOfRange(lo, hi)),
+              c -> keep(c, cast)))
+          case (Some((lo, hi)), Some(z)) =>
+            val (oor, cvt) = (s"__oor_${c}__", s"__cvt_${c}__")
+            d.withColumn(oor, updated && outOfRange(lo, hi))
+              .withColumn(cvt, updated && raw.isNotNull && asDec.isNull && cast.isNull)
+              .withColumn(c, keep(c,
+                when(col(s"`$oor`"),
+                  when(asDec > lit(hi), lit(hi)).otherwise(lit(lo)).cast(colTypes(c)))
+                  .when(col(s"`$cvt`"), z).otherwise(cast)))
+          case (None, Some(z)) =>
+            val cvt = s"__cvt_${c}__"
+            d.withColumn(cvt, updated && raw.isNotNull && cast.isNull)
+              .withColumn(c, keep(c, when(col(s"`$cvt`"), z).otherwise(cast)))
+          case _ => d.withColumn(c, keep(c, cast))
         }
-        val u2 = updates0.select(col("*") +: nkCols: _*)
-        val wDup = org.apache.spark.sql.expressions.Window
-          .partitionBy(key.map(k => col(s"`__nk_$k`")).toIndexedSeq: _*)
-          .orderBy(key.map(k => col(s"`$k`").asc).toIndexedSeq: _*)
-        val firstPer = u2.withColumn("__dr__", row_number().over(wDup))
-          .filter(col("__dr__") === 1).drop("__dr__")
-        val untouched = t
-          .join(updates0.select(key.map(k => col(s"`$k`")).toIndexedSeq: _*),
-            key.toSeq, "left_anti")
-          .select(key.map(k => col(s"`$k`").as(s"__nk_$k")).toIndexedSeq: _*)
-        firstPer.join(untouched, key.map(k => s"__nk_$k").toSeq, "left_anti")
-          .drop(key.map(k => s"__nk_$k"): _*)
       }
-      val matched = updates.count()
-      // `__rid__` aligns pre/post rows for ON UPDATE CASCADE key mapping
-      val t0 = t.withColumn("__rid__", monotonically_increasing_id())
-      val assignedLower = asResolved.map(_._1.toLowerCase).toSet
-      val mergedGated = t0.join(updates.withColumn("__upd", lit(true)),
-          key.toSeq, "left")
-        .select((t.columns.map { c =>
-          if (assignedLower.contains(c.toLowerCase))
-            when(coalesce(col("__upd"), lit(false)), col(s"`__new_$c`"))
-              .otherwise(col(s"`$c`")).as(c)
-          else col(s"`$c`")
-        } :+ col("__rid__") :+
-          coalesce(col("__upd"), lit(false)).as("__upd")).toIndexedSeq: _*)
-      // BEFORE UPDATE triggers fire on the matched rows, over the
-      // post-assignment image (script_queries.go "update join with
-      // update trigger" family)
-      val merged0 = applyBeforeUpdateTriggers(e, table, mergedGated,
-        col("__upd")).drop("__upd")
-      (table, t0, merged0, matched)
+      val triggered = applyBeforeUpdateTriggers(e, table, image, updated)
+      val stamped =
+        if (onUpdCols.isEmpty) triggered
+        else {
+          val changed = assigned.map(c =>
+            !(col(s"`$c`") <=> col(s"`__orig_$c`"))).reduce(_ || _)
+          onUpdCols.foldLeft(triggered) { case (d, (c, p)) =>
+            d.withColumn(c, when(changed, e.nowColumn(p).cast(colTypes(c)))
+              .otherwise(col(s"`$c`")))
+          }.drop(assigned.map(c => s"__orig_$c"): _*)
+        }
+      e.coerceVocab(table, e.computeGenerated(table, stamped))
     }
-    // phase 2a: all read-only validations BEFORE any table swaps, so a
-    // failing target leaves every table untouched (update_queries.go
-    // "UPDATE join with FK constraint" scripts)
-    work.foreach { case (table, _, merged0, _) =>
-      val merged = merged0.drop("__rid__")
-      e.validateVocab(table, merged)
-      e.validateChecks(table, merged)
-      e.validateForeignKeysChild(table, merged)
+
+    /** `image` with its flags settled and dropped. Strict, a row with an
+      * out-of-range flag raises MySQL error 1264. Otherwise the IGNORE
+      * coercions (NULL into NOT NULL, ENUM/SET vocabulary, CHAR length)
+      * apply to the updated rows and every flag becomes its warning. */
+    def settle(image: DataFrame): DataFrame =
+      if (!strict) {
+        val (coerced, warns) = e.ignoreWriteCoercions(table, image,
+          gateCol = Some("__upd__").filter(image.columns.contains))
+        e.emitFlagWarnings(coerced, warns)
+      } else if (oobFlags.isEmpty) image
+      else {
+        val any = e.localRows(image.agg(max(col(s"`${oobFlags.head._2}`")),
+          oobFlags.tail.map(f => max(col(s"`${f._2}`"))): _*)).head
+        oobFlags.indices.find(i => !any.isNullAt(i) && any.getBoolean(i)).foreach { i =>
+          throw new IllegalArgumentException(
+            s"Out of range value for column '${oobFlags(i)._1}' (MySQL error 1264)")
+        }
+        image.drop(oobFlags.map(_._2): _*)
+      }
+  }
+
+  /** The rows an UPDATE form feeds to its image: `before` holds the
+    * table's columns and a `__rid__` that aligns each row with its image
+    * (ON UPDATE CASCADE maps old keys to new keys through it), `gate`
+    * selects the `matched` rows to update (None: all of them), and
+    * `whole` turns the checked post-update rows into the whole
+    * post-update table and the write that stores it. */
+  private final case class UpdateRows(before: DataFrame, gate: Option[Column],
+      matched: Long, whole: DataFrame => (DataFrame, () => Unit))
+
+  /** A driver-held table's matched rows, their positions as `__rid__`;
+    * each image replaces its row in place (Engine.updatedGeneration). */
+  private def storedRows(e: Engine, table: String, m: Engine.StoredMatch): UpdateRows =
+    UpdateRows(e.matchedFrame(table, m), None, m.matched.size.toLong, { after =>
+      val updated = e.updatedGeneration(table, m, after)
+      (e.storedFrame(table, updated), () => e.storeGeneration(table, updated))
+    })
+
+  /** Every row of `rows`, `gate` selecting the `matched` ones to update;
+    * the post-update rows become the table's contents. */
+  private def frameRows(e: Engine, table: String, rows: DataFrame,
+      gate: Option[Column], matched: Long): UpdateRows =
+    UpdateRows(rows, gate, matched, { after =>
+      val newDf = after.drop("__rid__")
+      (newDf, () => e.replaceTable(table, newDf, bumpDepth = true))
+    })
+
+  /** The `__rid__`s of the rows of `rows` that `[WHERE …] ORDER BY …
+    * LIMIT …` picks. The pick runs through the front door, with `rows`
+    * under the table's name as alias, so ORDER BY and LIMIT … OFFSET
+    * read as in a SELECT. */
+  private def orderedIds(e: Engine, table: String, rows: DataFrame,
+      gate: Option[Column], orderLimit: String): Array[Long] = {
+    val view = "__update_rows__"
+    gate.fold(rows)(rows.filter).createOrReplaceTempView(view)
+    try e.query(s"SELECT `__rid__` FROM `$view` AS ${tick(table.split('.').last)} $orderLimit")
+      .collect().map(_.getLong(0))
+    finally e.spark.catalog.dropTempView(view)
+  }
+
+  /** The one check-then-write sequence of every UPDATE form, over one
+    * table's rows and their image (RowImage, flags not yet settled):
+    *  - the flags settle (RowImage.settle);
+    *  - UPDATE IGNORE keeps the old values of each updated row that fails
+    *    a CHECK (1105) or a foreign key (1452), then of each row whose
+    *    new key collides, in key order (1062, Engine.updateIgnoreSkips),
+    *    each with a warning (reference sql/rowexec/update.go:150);
+    *  - the post-update table must pass: ENUM/SET vocabulary (strict),
+    *    CHECK constraints (3819), foreign keys of the changed rows
+    *    (1452), PRIMARY and UNIQUE keys (1062), the row-ordered transient
+    *    key collisions (strict), unique expression indexes.
+    * Returns the number of rows kept at their old values and the write:
+    * ON UPDATE actions on child tables, then the store. Nothing is
+    * written before the write runs. */
+  private def checkUpdate(e: Engine, table: String, image: RowImage,
+      rows: UpdateRows, img: DataFrame): (Long, () => Unit) = {
+    var after = image.settle(img)
+    var kept = Set.empty[Long]
+    if (image.ignore) {
+      val updated = Some(col("__upd__")).filter(_ => after.columns.contains("__upd__"))
+        .getOrElse(lit(true))
+      def keepOld(rids: Set[Long]): Unit = if (rids.nonEmpty) {
+        val hit = col("__rid__").isin(rids.toSeq: _*)
+        after = after.filter(!hit).unionByName(rows.before.filter(hit).select(
+          after.columns.map(c =>
+            if (c == "__upd__") lit(false).as(c) else col(s"`$c`")).toIndexedSeq: _*))
+          .orderBy("__rid__")
+        kept ++= rids
+      }
+      def failing(bad: DataFrame, code: Int, msg: String): Unit = {
+        val rids = bad.select("__rid__").collect().map(_.getLong(0)).toSet -- kept
+        if (rids.nonEmpty) e.warnN(rids.size, code, msg)
+        keepOld(rids)
+      }
+      e.checkConstraints.toSeq.collect { case (t2, _, ex, true) if t2 == table => ex }
+        .foreach { ex =>
+          failing(after.filter(updated && !coalesce(expr(ex).cast("boolean"), lit(true))),
+            1105, "check constraint violated (row kept old values)")
+        }
+      e.fkChildViolations(table, rows.before, after).foreach { case (fk, bad) =>
+        failing(bad, 1452, "Cannot add or update a child row: a foreign key " +
+          s"constraint fails (`$table`, CONSTRAINT `${fk.name}`)")
+      }
+      keepOld(e.updateIgnoreSkips(table, rows.before, after))
     }
-    // phase 2b: parent-side enforcement + swap
-    work.foreach { case (table, t0, merged0, _) =>
-      e.enforceParentUpdate(table, t0, merged0)
-      e.replaceTable(table, merged0.drop("__rid__"), bumpDepth = true)
-    }
-    val matchedTotal = work.map(_._4).sum
-    e.foundRowsSet(matchedTotal) // UPDATE stores matched (dml_iters.go:761)
-    ok(e, matchedTotal)
+    if (after.columns.contains("__upd__")) after = after.drop("__upd__")
+    val (newDf, write) = rows.whole(after)
+    if (image.strict) e.validateVocab(table, newDf)
+    e.validateChecks(table, newDf)
+    e.validateForeignKeysChildChanged(table, rows.before, after)
+    e.enforcePkUniquePost(table, newDf)
+    if (image.strict) e.enforcePkUniqueTransient(table, rows.before, after)
+    e.enforceUniqueExprsPost(table, newDf)
+    (kept.size.toLong, () => {
+      e.enforceParentUpdate(table, rows.before, after, newTable = Some(newDf))
+      write()
+    })
   }
 
   /** DELETE t1[, t2] FROM <sources> [WHERE …]: rows of each target that

@@ -2278,6 +2278,23 @@ class Engine(val spark: SparkSession) {
         (n, cols, true)
       }
 
+  /** The first key of `keys` that more than one row of `df` holds, if
+    * any: one group-by-count probe, which folds on the driver over
+    * stored rows. */
+  private def firstDuplicate(df: DataFrame,
+      keys: Seq[org.apache.spark.sql.Column]): Option[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.functions.col
+    df.groupBy(keys.toIndexedSeq: _*).count().filter(col("count") > 1)
+      .limit(1).collect().headOption
+  }
+
+  private def duplicateEntry(table: String, keyName: String,
+      r: org.apache.spark.sql.Row, width: Int): Nothing = {
+    val entry = (0 until width).map(i => String.valueOf(r.get(i))).mkString("-")
+    throw new IllegalArgumentException(
+      s"Duplicate entry '$entry' for key '$table.$keyName' (MySQL error 1062)")
+  }
+
   /** Plain INSERT against declared keys: a duplicate inside the batch or
     * against existing rows is MySQL error 1062 — the PRIMARY key plus
     * every declared UNIQUE key (whose NULL-keyed rows are exempt). */
@@ -2289,28 +2306,14 @@ class Engine(val spark: SparkSession) {
         val kcols = keys.map(k => col(s"`$k`"))
         val nonNull = kcols.map(_.isNotNull).reduce(_ && _)
         val b = if (nullExempt) batch.filter(nonNull) else batch
-        val dupIn = b.groupBy(kcols.toIndexedSeq: _*).count()
-          .filter(col("count") > 1).limit(1).collect()
-        val dup =
-          if (dupIn.nonEmpty) dupIn.headOption
-          else {
-            // the batch's keys are distinct now, so a key counted twice
-            // over batch ∪ existing is already stored: one group-by
-            // (which folds on the driver over stored rows) instead of a
-            // semi-join; NULL keys never match, as under the join's `=`
-            def keysOf(df: DataFrame) =
-              df.filter(nonNull).select(kcols.toIndexedSeq: _*)
-            keysOf(b).union(keysOf(target).distinct())
-              .groupBy(kcols.toIndexedSeq: _*).count()
-              .filter(col("count") > 1).limit(1).collect().headOption
-          }
-        dup.foreach { r =>
-          val entry = keys.indices.map(i => String.valueOf(r.get(i)))
-            .mkString("-")
-          throw new IllegalArgumentException(
-            s"Duplicate entry '$entry' for key '$table.$keyName' " +
-            s"(MySQL error 1062)")
-        }
+        // once the batch's keys are distinct, a key counted twice over
+        // batch ∪ existing is already stored: a group-by instead of a
+        // semi-join; NULL keys never match, as under the join's `=`
+        def keysOf(df: DataFrame) =
+          df.filter(nonNull).select(kcols.toIndexedSeq: _*)
+        firstDuplicate(b, kcols)
+          .orElse(firstDuplicate(keysOf(b).union(keysOf(target).distinct()), kcols))
+          .foreach(duplicateEntry(table, keyName, _, keys.size))
       }
     }
   }
@@ -2318,23 +2321,14 @@ class Engine(val spark: SparkSession) {
   /** Post-UPDATE key enforcement: the updated table must stay unique
     * under the PRIMARY key and every declared UNIQUE key (NULL-keyed
     * rows exempt under uniques) — a key-colliding UPDATE is MySQL error
-    * 1062. One group-by-count probe per declared key over the rewritten
-    * frame. */
+    * 1062. */
   private[graft] def enforcePkUniquePost(table: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
       val kcols = keys.map(k => col(s"`$k`"))
       val nonNull = kcols.map(_.isNotNull).reduce(_ && _)
-      val base = if (nullExempt) df.filter(nonNull) else df
-      val dup = base.groupBy(kcols.toIndexedSeq: _*).count()
-        .filter(col("count") > 1).limit(1).collect().headOption
-      dup.foreach { r =>
-        val entry = keys.indices.map(i => String.valueOf(r.get(i)))
-          .mkString("-")
-        throw new IllegalArgumentException(
-          s"Duplicate entry '$entry' for key '$table.$keyName' " +
-          s"(MySQL error 1062)")
-      }
+      firstDuplicate(if (nullExempt) df.filter(nonNull) else df, kcols)
+        .foreach(duplicateEntry(table, keyName, _, keys.size))
     }
   }
 
@@ -2387,60 +2381,46 @@ class Engine(val spark: SparkSession) {
   }
 
   /** UPDATE IGNORE key-conflict resolution (reference update_queries.go
-    * UpdateIgnoreScripts): rows are visited in PRIMARY-key order and a
-    * row whose NEW key collides with any OTHER row's key AT THAT MOMENT
-    * — later rows still hold their old keys, earlier surviving rows
-    * their new ones — keeps its old values instead of erroring. The
-    * scan is inherently sequential (each decision feeds the next), so
-    * it runs on the driver behind a fixed 100,000-row gate; UPDATE
-    * IGNORE is an OLTP shape, not a 100 TB one. Both frames carry
-    * `__rid__`. Returns the adjusted post-update frame and the number of
-    * skipped rows. */
-  private[graft] def applyUpdateIgnore(table: String, oldDf: DataFrame,
-                                       newDf: DataFrame): (DataFrame, Long) = {
+    * UpdateIgnoreScripts): the rows of `oldDf` are visited in storage
+    * order (the key order Spark sorts by, which replaceTable keeps a keyed
+    * table in), and a row whose NEW key in `newDf` collides with any
+    * OTHER row's key of the table AT THAT MOMENT — later rows still hold
+    * their old keys, earlier surviving rows their new ones — keeps its
+    * old values, with a 1062 warning. The scan is inherently sequential
+    * (each decision feeds the next), so it runs on the driver behind a
+    * fixed 100,000-row gate; UPDATE IGNORE is an OLTP shape, not a
+    * 100 TB one. Both frames carry `__rid__`; rows of the table outside
+    * them keep their keys. Returns the `__rid__`s of the skipped rows. */
+  private[graft] def updateIgnoreSkips(table: String, oldDf: DataFrame,
+                                       newDf: DataFrame): Set[Long] = {
     import org.apache.spark.sql.functions.col
     val declared = declaredKeys(table)
-    if (declared.isEmpty) return (newDf, 0L)
-    val total = oldDf.count()
+    if (declared.isEmpty) return Set.empty
+    val all = spark.table(table)
+    val total = all.count()
     require(total <= 100000,
       s"UPDATE IGNORE sequential window exceeds the driver gate " +
       s"($total rows): not a supported batch-analytics shape")
     val keyCols = declared.flatMap(_._2).distinct
-    def rows(df: DataFrame): Map[Long, Seq[Any]] =
-      df.select((col("__rid__") +: keyCols.map(c => col(s"`$c`"))).toIndexedSeq: _*)
-        .collect()
-        .map(r => r.getLong(0) -> (1 until r.length).map(r.get).toSeq)
-        .toMap
-    val olds = rows(oldDf)
-    val news = rows(newDf)
+    val keySel = keyCols.map(c => col(s"`$c`"))
+    def keyed(df: DataFrame): Seq[(Long, Seq[Any])] =
+      df.collect().toSeq.map(r => r.getLong(0) -> (1 until r.length).map(r.get))
+    val olds = keyed(oldDf.select(col("__rid__") +: keySel: _*)
+      .orderBy(declared.head._2.map(k => col(s"`$k`")) :+ col("__rid__"): _*))
+    val news = keyed(newDf.select(col("__rid__") +: keySel: _*)).toMap
     val colIdx = keyCols.zipWithIndex.toMap
     def tuple(vals: Seq[Any], keys: Seq[String]): Seq[Any] =
       keys.map(k => vals(colIdx(k)))
-    def cmpAny(a: Any, b: Any): Int = (a, b) match {
-      case (null, null) => 0
-      case (null, _) => -1
-      case (_, null) => 1
-      case (x: Number, y: Number) =>
-        BigDecimal(x.toString).compare(BigDecimal(y.toString))
-      case (x, y) => x.toString.compareTo(y.toString)
-    }
-    // MySQL visits rows in storage (primary-key) order
-    val order = declared.head._2
-    val visit = olds.keys.toSeq.sortWith { (r1, r2) =>
-      val t1 = tuple(olds(r1), order); val t2 = tuple(olds(r2), order)
-      val c = t1.zip(t2).iterator.map { case (a, b) => cmpAny(a, b) }
-        .find(_ != 0).getOrElse(0)
-      if (c != 0) c < 0 else r1 < r2
-    }
+    val stored = all.select(keySel: _*).collect().map(_.toSeq)
     val current = declared.map { case (_, keys, _) =>
       val m = scala.collection.mutable.Map.empty[Seq[Any], Int]
         .withDefaultValue(0)
-      olds.values.foreach(v => m(tuple(v, keys)) += 1)
+      stored.foreach(v => m(tuple(v, keys)) += 1)
       m
     }
-    val skipped = scala.collection.mutable.Set.empty[Long]
-    visit.foreach { rid =>
-      val o = olds(rid); val n = news(rid)
+    val skipped = Set.newBuilder[Long]
+    olds.foreach { case (rid, o) =>
+      val n = news(rid)
       val conflictKey = declared.zip(current).collectFirst {
         case ((kname, keys, nullExempt), m)
             if {
@@ -2463,15 +2443,7 @@ class Engine(val spark: SparkSession) {
           }
       }
     }
-    if (skipped.isEmpty) (newDf, 0L)
-    else {
-      val s = spark
-      import s.implicits._
-      val skipDf = skipped.toSeq.toDF("__rid__")
-      val adjusted = newDf.join(skipDf, Seq("__rid__"), "left_anti")
-        .unionByName(oldDf.join(skipDf, Seq("__rid__"), "left_semi"))
-      (adjusted, skipped.size.toLong)
-    }
+    skipped.result()
   }
 
   /** ADD UNIQUE / CREATE UNIQUE INDEX validation: existing rows must
@@ -2481,17 +2453,8 @@ class Engine(val spark: SparkSession) {
                                           cols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions._
     val kcols = cols.map(c => col(s"`$c`"))
-    val nonNull = kcols.map(_.isNotNull).reduce(_ && _)
-    val dup = spark.table(table).filter(nonNull)
-      .groupBy(kcols.toIndexedSeq: _*).count().filter(col("count") > 1)
-      .limit(1).collect().headOption
-    dup.foreach { r =>
-      val entry = cols.indices.map(i => String.valueOf(r.get(i)))
-        .mkString("-")
-      throw new IllegalArgumentException(
-        s"Duplicate entry '$entry' for key '$table.$keyName' " +
-        s"(MySQL error 1062)")
-    }
+    firstDuplicate(spark.table(table).filter(kcols.map(_.isNotNull).reduce(_ && _)), kcols)
+      .foreach(duplicateEntry(table, keyName, _, cols.size))
   }
 
   /** The shared write-time preparation every insert-shaped statement
@@ -3792,13 +3755,23 @@ class Engine(val spark: SparkSession) {
     * (foreign_key_queries.go "Delayed foreign key resolution: update").
     * Both frames carry an aligned `__rid__`. */
   private[graft] def validateForeignKeysChildChanged(table: String,
-      oldDf: DataFrame, newDf: DataFrame): Unit = {
+      oldDf: DataFrame, newDf: DataFrame): Unit =
+    fkChildViolations(table, oldDf, newDf).foreach { case (fk, bad) =>
+      if (bad.limit(1).count() > 0) throw new IllegalArgumentException(
+        s"Cannot add or update a child row: a foreign key constraint " +
+        s"fails (`${fk.child}`, CONSTRAINT `${fk.name}`) (MySQL error 1452)")
+    }
+
+  /** Per declared FK of `table`, the rows of `newDf` whose columns of
+    * that FK changed from `oldDf` and match no parent row — an unrelated
+    * column's update must not resurface a pre-existing violation on
+    * another FK ("partial foreign key update"). None while
+    * FOREIGN_KEY_CHECKS=0. */
+  private[graft] def fkChildViolations(table: String, oldDf: DataFrame,
+      newDf: DataFrame): Seq[(ForeignKey, DataFrame)] = {
     import org.apache.spark.sql.functions.col
-    if (!fkChecksEnabled) return
-    // per-FK: only rows whose columns OF THAT FK changed re-validate
-    // against it — an unrelated column's update must not resurface a
-    // pre-existing violation on another FK ("partial foreign key update")
-    foreignKeys.toSeq.filter(_.child == table).foreach { fk =>
+    if (!fkChecksEnabled) return Seq.empty
+    foreignKeys.toSeq.filter(_.child == table).map { fk =>
       val fkCols = fk.childCols.map(_.toLowerCase).distinct
       val oldKeyed = oldDf.select(
         (col("__rid__").as("__rid2__") +:
@@ -3821,11 +3794,7 @@ class Engine(val spark: SparkSession) {
       }.reduce(_ && _)
       val nonNull = fk.childCols.map(c => col(s"`$c`").isNotNull)
         .reduce(_ && _)
-      val bad = changed.filter(nonNull).join(parent, cond, "left_anti")
-        .limit(1).count()
-      if (bad > 0) throw new IllegalArgumentException(
-        s"Cannot add or update a child row: a foreign key constraint " +
-        s"fails (`${fk.child}`, CONSTRAINT `${fk.name}`) (MySQL error 1452)")
+      fk -> changed.filter(nonNull).join(parent, cond, "left_anti")
     }
   }
 
@@ -6021,11 +5990,9 @@ class Engine(val spark: SparkSession) {
                                             df: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     uniqueExprIdx.toSeq.collect { case (t, _, ex) if t == table =>
-      val dup = df.filter(expr(ex).isNotNull)
-        .groupBy(expr(ex).as("__ux")).count()
-        .filter(col("count") > 1).select(col("__ux")).limit(1).collect()
-      dup.headOption.foreach(r => throw new IllegalArgumentException(
-        s"duplicate unique key given: [${r.get(0)}]"))
+      firstDuplicate(df.filter(expr(ex).isNotNull), Seq(expr(ex).as("__ux")))
+        .foreach(r => throw new IllegalArgumentException(
+          s"duplicate unique key given: [${r.get(0)}]"))
     }
   }
 

@@ -1201,4 +1201,156 @@ class EngineSpec extends AnyFunSuite {
       "-- don't\nSELECT * FROM sequence_table('x', 3)").collect()
     assert(rows.map(_.get(0).toString).toSeq == Seq("0", "1", "2"))
   }
+
+  // ---- every UPDATE form gives the WHERE form's row image and checks ----
+
+  /** `body` on a fresh engine whose small tables are held on the driver,
+    * then on one with the broadcast budget off, where every table takes
+    * the frame path. */
+  private def onBothPaths(body: Engine => Unit): Unit =
+    Seq(None, Some("-1")).foreach { budget =>
+      val s2 = spark.newSession()
+      budget.foreach(s2.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+      body(new Engine(s2))
+    }
+
+  private def warnCodes(e: Engine): Seq[Int] =
+    e.query("SHOW WARNINGS").collect().map(_.getInt(1)).toSeq
+
+  private def affected(e: Engine, sql: String): Long =
+    e.query(sql).collect()(0).getLong(0)
+
+  test("strict UPDATE … ORDER BY … LIMIT raises 1264 like the WHERE form and keeps the row") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE oob_ol (id INT PRIMARY KEY, t TINYINT)")
+      e.query("INSERT INTO oob_ol VALUES (1, 1), (2, 2)").collect()
+      Seq("UPDATE oob_ol SET t = 1000 WHERE id = 1",
+          "UPDATE oob_ol SET t = 1000 ORDER BY id LIMIT 1").foreach { sql =>
+        val ex = intercept[IllegalArgumentException](e.query(sql))
+        assert(ex.getMessage.contains("1264"), s"$sql: ${ex.getMessage}")
+        assert(rowsOf(e, "SELECT id, t FROM oob_ol") == Seq(Seq(1, 1), Seq(2, 2)), sql)
+      }
+    }
+  }
+
+  test("non-strict and IGNORE UPDATE … ORDER BY … LIMIT store the zero value and warn 1366 like the WHERE form") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE cvt_ol (id INT PRIMARY KEY, v INT)")
+      e.query("INSERT INTO cvt_ol VALUES (1, 5), (2, 6)").collect()
+      def check(sql: String): Unit = {
+        assert(affected(e, sql) == 1L, sql)
+        assert(warnCodes(e) == Seq(1366), sql)
+        assert(rowsOf(e, "SELECT id, v FROM cvt_ol") == Seq(Seq(1, 0), Seq(2, 6)), sql)
+        e.query("UPDATE cvt_ol SET v = 5 WHERE id = 1").collect()
+      }
+      check("UPDATE IGNORE cvt_ol SET v = 'abc' WHERE id = 1")
+      check("UPDATE IGNORE cvt_ol SET v = 'abc' ORDER BY id LIMIT 1")
+      e.query("SET sql_mode = ''")
+      check("UPDATE cvt_ol SET v = 'abc' WHERE id = 1")
+      check("UPDATE cvt_ol SET v = 'abc' ORDER BY id LIMIT 1")
+    }
+  }
+
+  test("UPDATE IGNORE … ORDER BY … LIMIT keeps a key-colliding row and warns 1062 like the WHERE form") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE ig_ol (id INT PRIMARY KEY, v INT)")
+      e.query("INSERT INTO ig_ol VALUES (1, 10), (2, 20), (3, 30)").collect()
+      Seq("UPDATE IGNORE ig_ol SET id = 2 WHERE id = 1",
+          "UPDATE IGNORE ig_ol SET id = 2 ORDER BY id LIMIT 1").foreach { sql =>
+        assert(affected(e, sql) == 1L, sql)
+        assert(warnCodes(e) == Seq(1062), sql)
+        assert(rowsOf(e, "SELECT id, v FROM ig_ol") ==
+          Seq(Seq(1, 10), Seq(2, 20), Seq(3, 30)), sql)
+      }
+    }
+  }
+
+  test("UPDATE IGNORE fires BEFORE UPDATE triggers and stamps ON UPDATE CURRENT_TIMESTAMP") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE ig_stamp (id INT PRIMARY KEY, v INT, w INT, " +
+        "ts TIMESTAMP DEFAULT '2000-01-01 00:00:00' ON UPDATE CURRENT_TIMESTAMP)")
+      e.query("INSERT INTO ig_stamp (id, v, w) VALUES (1, 1, 0), (2, 2, 0), (3, 3, 0)").collect()
+      e.query("CREATE TRIGGER ig_trg BEFORE UPDATE ON ig_stamp FOR EACH ROW SET NEW.w = NEW.v * 10")
+      e.queryNow = Some(java.sql.Timestamp.valueOf("2023-12-15 01:30:00"))
+      assert(affected(e, "UPDATE IGNORE ig_stamp SET v = 5 WHERE id = 1") == 1L)
+      assert(affected(e, "UPDATE IGNORE ig_stamp SET v = 7 ORDER BY id DESC LIMIT 1") == 1L)
+      val rows = rowsOf(e, "SELECT id, v, w, ts FROM ig_stamp")
+      assert(rows.map(_.take(3)) == Seq(Seq(1, 5, 50), Seq(2, 2, 0), Seq(3, 7, 70)))
+      val ts = rows.map(_(3).toString)
+      assert(ts(1).startsWith("2000-01-01"), ts)
+      assert(ts(0) == ts(2) && !ts(0).startsWith("2000-01-01"), s"updated rows not stamped: $ts")
+    }
+  }
+
+  test("UPDATE … ORDER BY … LIMIT on a keyless table leaves the row in place like the WHERE form") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE kl_ol (v INT, s VARCHAR(5))")
+      e.query("INSERT INTO kl_ol VALUES (3, 'a'), (1, 'b'), (2, 'c')").collect()
+      assert(affected(e, "UPDATE kl_ol SET s = 'x' ORDER BY v LIMIT 1") == 1L)
+      assert(affected(e, "UPDATE kl_ol SET s = 'y' WHERE v = 3") == 1L)
+      assert(rowsOf(e, "SELECT v, s FROM kl_ol") ==
+        Seq(Seq(3, "y"), Seq(1, "x"), Seq(2, "c")))
+    }
+  }
+
+  test("UPDATE … JOIN casts each assigned value to its column's type") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE uj_a (id INT PRIMARY KEY, v INT)")
+      e.query("CREATE TABLE uj_b (id INT PRIMARY KEY, s VARCHAR(10))")
+      e.query("INSERT INTO uj_a VALUES (1, 1), (2, 2), (3, 3)").collect()
+      e.query("INSERT INTO uj_b VALUES (1, '7'), (2, '8')").collect()
+      assert(affected(e, "UPDATE uj_a a JOIN uj_b b ON a.id = b.id SET a.v = b.s") == 2L)
+      assert(e.spark.table("uj_a").schema("v").dataType == org.apache.spark.sql.types.IntegerType)
+      assert(rowsOf(e, "SELECT id, v FROM uj_a") == Seq(Seq(1, 7), Seq(2, 8), Seq(3, 3)))
+    }
+  }
+
+  test("UPDATE … JOIN updates a keyless target's rows that hold a NULL") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE uj_n (a INT, b INT)")
+      e.query("CREATE TABLE uj_m (a INT)")
+      e.query("INSERT INTO uj_n VALUES (1, NULL), (2, 2), (3, 3)").collect()
+      e.query("INSERT INTO uj_m VALUES (1), (2)").collect()
+      assert(affected(e, "UPDATE uj_n JOIN uj_m ON uj_n.a = uj_m.a SET uj_n.b = 9") == 2L)
+      assert(rowsOf(e, "SELECT a, b FROM uj_n ORDER BY a") ==
+        Seq(Seq(1, 9), Seq(2, 9), Seq(3, 3)))
+    }
+  }
+
+  test("UPDATE … JOIN raises 1062 on a duplicate PRIMARY or UNIQUE key and writes no table") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE uj_c (id INT PRIMARY KEY, v INT)")
+      e.query("CREATE TABLE uj_q (id INT PRIMARY KEY, u INT UNIQUE)")
+      e.query("CREATE TABLE uj_d (id INT PRIMARY KEY)")
+      e.query("INSERT INTO uj_c VALUES (1, 10), (2, 20)").collect()
+      e.query("INSERT INTO uj_q VALUES (1, 1), (2, 2)").collect()
+      e.query("INSERT INTO uj_d VALUES (1)").collect()
+      Seq("UPDATE uj_c c JOIN uj_d d ON c.id = d.id SET c.id = 2" -> "uj_c.PRIMARY",
+          "UPDATE uj_q q JOIN uj_d d ON q.id = d.id SET q.u = 2" -> "uj_q.").foreach {
+        case (sql, key) =>
+          val ex = intercept[IllegalArgumentException](e.query(sql))
+          assert(ex.getMessage.contains("Duplicate entry '2'") && ex.getMessage.contains(key) &&
+            ex.getMessage.contains("1062"), s"$sql: ${ex.getMessage}")
+      }
+      assert(rowsOf(e, "SELECT id, v FROM uj_c") == Seq(Seq(1, 10), Seq(2, 20)))
+      assert(rowsOf(e, "SELECT id, u FROM uj_q") == Seq(Seq(1, 1), Seq(2, 2)))
+    }
+  }
+
+  test("UPDATE … JOIN recomputes STORED generated columns and stamps ON UPDATE CURRENT_TIMESTAMP") {
+    onBothPaths { e =>
+      e.query("CREATE TABLE uj_g (id INT PRIMARY KEY, a INT, b INT AS (a * 2) STORED, " +
+        "ts TIMESTAMP DEFAULT '2000-01-01 00:00:00' ON UPDATE CURRENT_TIMESTAMP)")
+      e.query("CREATE TABLE uj_k (id INT PRIMARY KEY)")
+      e.query("INSERT INTO uj_g (id, a) VALUES (1, 1), (2, 2)").collect()
+      e.query("INSERT INTO uj_k VALUES (1)").collect()
+      e.queryNow = Some(java.sql.Timestamp.valueOf("2023-12-15 01:30:00"))
+      assert(affected(e, "UPDATE uj_g g JOIN uj_k k ON g.id = k.id SET g.a = 5") == 1L)
+      val rows = rowsOf(e, "SELECT id, a, b, ts FROM uj_g")
+      assert(rows.map(_.take(3)) == Seq(Seq(1, 5, 10), Seq(2, 2, 4)))
+      val ts = rows.map(_(3).toString)
+      assert(ts(1).startsWith("2000-01-01") && !ts(0).startsWith("2000-01-01"),
+        s"the joined row was not stamped: $ts")
+    }
+  }
 }
