@@ -12,20 +12,32 @@ import graft.SqlRewrite.{closingParen, indexOfTopLevelWord, scanTop,
   * ddl.go routes CREATE/DROP/TRUNCATE, set.go routes SET @var).
   *
   * Semantics over the analytic backend:
-  *  - INSERT appends via Engine.insertDf (vocabulary-validated, plan
-  *    depth bounded by warehouse materialization); a column list
-  *    null-fills the unmentioned columns like MySQL defaults.
-  *  - Every UPDATE form builds one row image (RowImage: typed
-  *    assignments, BEFORE UPDATE triggers, ON UPDATE stamps, generated
-  *    columns) and runs one check-then-write sequence (checkUpdate), IGNORE
-  *    as a mode of it (reference sql/rowexec/update.go, which
-  *    plan/update_join.go only feeds joined rows). The forms differ in the
+  *  - Every write form is rows in → one image → one check-then-write
+  *    sequence; the forms differ only in the rows they feed in.
+  *  - INSERT, REPLACE, LOAD DATA and ON DUPLICATE KEY UPDATE's new rows
+  *    take one insert image (Engine.imageInsert: DEFAULT and
+  *    AUTO_INCREMENT fill, each column's write conversion, generated
+  *    columns, flags settled by Engine.settleWrite — strict mode's error
+  *    or IGNORE / non-strict mode's coercion with a warning) and one
+  *    check-then-write (Engine.checkInsert, IGNORE a mode of it); a
+  *    column list null-fills the unmentioned columns like MySQL
+  *    defaults. REPLACE INTO and LOAD DATA … REPLACE are one function
+  *    (Engine.replaceRows): delete what the batch collides with on any
+  *    key, then insert.
+  *  - Every UPDATE form, and ON DUPLICATE KEY UPDATE's matched rows,
+  *    build one row image (RowImage: assignments through the same
+  *    write conversion, BEFORE UPDATE triggers, ON UPDATE stamps,
+  *    generated columns) and run one check-then-write sequence
+  *    (checkUpdate), IGNORE as a mode of it (reference
+  *    sql/rowexec/update.go, which plan/update_join.go and
+  *    rowexec/insert.go only feed rows). The UPDATE forms differ in the
   *    rows they feed in (UpdateRows): on a driver-held table
   *    (Engine.storedMatch) WHERE is evaluated once per stored row and
   *    only the matched rows are imaged and replaced in place; any other
   *    table is imaged whole as a frame, rows outside WHERE kept; ORDER BY
   *    … LIMIT feeds the ids of its ordered subset; UPDATE JOIN each
-  *    target merged with its new values.
+  *    target merged with its new values; ON DUPLICATE KEY UPDATE each
+  *    existing row merged with the incoming row it duplicates.
   *  - DELETE keeps the rows where the predicate is not TRUE (MySQL 3VL:
   *    NULL keeps), on a driver-held table row by row.
   *  - Each returns MySQL's ok-packet shape as a 1-row `affected_rows`.
@@ -598,55 +610,17 @@ object Dml {
       }
 
     case Replace(tableRaw, colList, body) =>
-      // REPLACE INTO = delete rows sharing the declared key, then insert
-      // (reference plan/insert.go ReplaceInto); affected counts both.
-      // The incoming batch takes the same write-time coercion / DEFAULT
-      // fill / auto-inc path as plain INSERT (Engine.coerceAndFill) so a
-      // mistyped literal can't widen the table schema via unionByName,
-      // and later duplicate-key rows inside one statement win (MySQL
-      // processes REPLACE rows in order).
+      // REPLACE INTO: delete the rows each incoming row collides with,
+      // then insert it (Engine.replaceRows, shared with LOAD DATA …
+      // REPLACE); affected counts both
       val table = normName(tableRaw)
       val hasList = colList != null && colList.trim
         .stripPrefix("(").stripSuffix(")").trim.nonEmpty
-      val keys = e.tableKeys.getOrElse(table,
+      if (!e.tableKeys.contains(table) && !e.uniqueKeys.exists(_._1 == table))
         throw new IllegalArgumentException(
-          s"REPLACE INTO needs a declared key on '$table' (Engine.declareKey)"))
-      val src = insertSource(e, table, colList, hasList, body)
-      val provided = src.columns.map(_.toLowerCase).toSet
-      val incoming0 = e.coerceVocab(table,
-        e.coerceAndFill(table, src, fillMissing = hasList,
-          ignoreMode = !e.strictWriteMode))
-      var incoming = lastPerKey(incoming0, keys)
-      // generated columns recompute for the incoming batch like INSERT
-      // (generated_columns.go "REPLACE INTO with an index over a
-      // virtual generated column")
-      incoming = e.computeGenerated(table, incoming)
-      // strict: explicit NULL into NOT NULL errors 1048; non-strict
-      // (SET sql_mode='') coerces to the implicit default with a
-      // warning, mirroring insertIntoSelect's strict/non-strict split
-      if (e.strictWriteMode) e.validateNotNull(table, incoming, provided)
-      else {
-        val (coerced, flagWarns) = e.ignoreWriteCoercions(table, incoming)
-        incoming = e.emitFlagWarnings(coerced, flagWarns)
-      }
-      val t = e.spark.table(table)
-      val keyRows = incoming.select(keys.map(k => col(s"`$k`")).toIndexedSeq: _*).distinct()
-      val deleted = t.join(keyRows, keys.toIndexedSeq, "left_semi").count()
-      val inserted = incoming.count()
-      val kept = t.join(keyRows, keys.toIndexedSeq, "left_anti")
-      e.validateVocab(table, incoming)
-      // REPLACE = delete-by-key + insert, and the DELETE phase fires FK
-      // actions row-triggered like any delete (foreign_key_queries.go
-      // self-referential scripts: a replaced row whose key a survivor
-      // references RESTRICTs with 1451 even though the key is about to
-      // be re-inserted; CASCADE walks children — InnoDB's documented
-      // REPLACE behavior). The incoming batch child-validates too.
-      e.validateForeignKeysChild(table, incoming)
-      val finalKept = e.enforceParentDelete(table, kept)
-      e.replaceTable(table,
-        finalKept.unionByName(incoming, allowMissingColumns = hasList),
-        bumpDepth = true)
-      Some(ok(e, deleted + inserted))
+          s"REPLACE INTO needs a declared key on '$table' (Engine.declareKey)")
+      Some(ok(e, e.replaceRows(table, insertSource(e, table, colList, hasList, body),
+        fillMissing = hasList)))
 
     case InsertSet(ignoreKw, tableRaw, assignText) =>
       val table = normName(tableRaw)
@@ -732,7 +706,7 @@ object Dml {
         .filter { case (_, img) => !img.queryExecution.analyzed.exists(
           _.expressions.exists(x => !graft.plans.FoldLocalRows.evaluable(x))) }
         .getOrElse { val r = frame(); (r, image(r.before, r.gate)) }
-      checkUpdate(e, table, image, rows, img)._2()
+      checkUpdate(e, table, image, rows, img)._3()
       // UPDATE, IGNORE too, reports the rows it matched (dml_iters.go:761)
       e.foundRowsSet(rows.matched)
       Some(ok(e, rows.matched))
@@ -1106,34 +1080,10 @@ object Dml {
                 catch { case _: NumberFormatException => tok }
             }
         }
-      // bind-arity check (prepared_statement_queries.go): every `?`
-      // needs a USING value, and extra values are an error
-      val marks = scala.collection.mutable.ArrayBuffer.empty[Int]
-      scanTop(body) { (i, c, _) => if (c == '?') marks += i; -1 }
-      val markers = marks.length
-      if (params.length < markers)
-        throw new IllegalArgumentException(
-          s"bind variable not provided: 'v${params.length + 1}'")
-      if (params.length > markers)
-        throw new IllegalArgumentException(
-          s"invalid arguments. expected: $markers, found: ${params.length}")
-      if (params.isEmpty) Some(e.query(body))
-      else {
-        // literal substitution (quote-aware) instead of Spark's
-        // parameterized sql: EXECUTE must route INSERT/UPDATE/DELETE
-        // bodies through the full DML dispatcher, which Spark's
-        // parameter binding can't reach
-        def lit(v: Any): String = v match {
-          case null => "NULL"
-          case s: String => "'" + s.replace("\\", "\\\\")
-            .replace("'", "''") + "'"
-          case d: java.sql.Date => s"'$d'"
-          case t: java.sql.Timestamp => s"'$t'"
-          case other => String.valueOf(other)
-        }
-        Some(e.query(SqlRewrite.splice(body,
-          marks.zip(params).map { case (at, v) => (at, at + 1, lit(v)) }.toSeq)))
-      }
+      // the values bind into the text as literals (arity checked there),
+      // so INSERT/UPDATE/DELETE bodies reach the DML dispatch like any
+      // statement
+      Some(e.query(e.bindParams(body, Left(params))))
 
     case DeallocStmt(name) =>
       // MySQL 1243 for an unknown handler (prepared_statement_queries.go
@@ -3014,7 +2964,7 @@ object Dml {
             // new column (CreateForeignKeyTests "Add a column then
             // immediately add a foreign key")
             e.declareForeignKey(fk, Some(df.schema.fields.toSeq))
-            try e.validateForeignKeysChild(table, df)
+            try e.validateForeignKeysChild(table, None, df)
             catch {
               case ex: Throwable =>
                 e.dropForeignKey(table, fk.name); throw ex
@@ -3656,24 +3606,12 @@ object Dml {
     if (!any) values else "VALUES " + rebuilt.mkString(", ")
   }
 
-  /** Keep the LAST row per key inside one incoming batch (statement
-    * order = monotonically_increasing_id order over the small batch) —
-    * MySQL processes multi-row REPLACE/upsert rows sequentially, so a
-    * later duplicate wins. */
-  private def lastPerKey(df: DataFrame, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keys.map(k => col(s"`$k`")).toIndexedSeq: _*)
-      .orderBy(col("__seq__").desc)
-    df.withColumn("__seq__", monotonically_increasing_id())
-      .withColumn("__rn__", row_number().over(w))
-      .filter(col("__rn__") === 1).drop("__seq__", "__rn__")
-  }
-
-  /** lastPerKey over a frame that ALREADY carries a pinned `__iseq__`
-    * statement-order column (the ODKU path mints it before its dedup
+  /** Keep the LAST row per key of a batch that carries a pinned
+    * `__iseq__` statement-order column (ODKU mints it before its dedup
     * fold — a fresh id after the fold's shuffle would not be batch
-    * order). Keeps `__iseq__` for downstream tie-breaks. */
-  private def lastPerKeyOrdered(df: DataFrame, keys: Seq[String]): DataFrame = {
+    * order). MySQL processes multi-row writes sequentially, so a later
+    * duplicate wins. Keeps `__iseq__` for downstream tie-breaks. */
+  private def lastPerKey(df: DataFrame, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(k => col(s"`$k`")).toIndexedSeq: _*)
       .orderBy(col("__iseq__").desc)
@@ -3681,11 +3619,18 @@ object Dml {
       .filter(col("__rn__") === 1).drop("__rn__")
   }
 
-  /** INSERT ... ON DUPLICATE KEY UPDATE — per-row merge against the
-    * declared key. MySQL affected-rows: 1 per inserted, 2 per updated.
-    * `VALUES(col)` in an assignment refers to the incoming row. The
-    * batch takes the same write-time coercion as plain INSERT and is
-    * deduped on the key (last wins) before the merge. */
+  /** INSERT ... ON DUPLICATE KEY UPDATE: an INSERT plus an UPDATE
+    * (reference rowexec/insert.go:509 hands a duplicate row to the
+    * updater UPDATE uses). The batch takes INSERT's image
+    * (Engine.imageInsert) and is deduped on each key, the last row
+    * winning. Each row then matches the existing row it duplicates: the
+    * PRIMARY key first, then each UNIQUE key in declaration order, each
+    * existing row matched at most once, the last row in the batch
+    * winning. The matched rows take UPDATE's RowImage and checkUpdate,
+    * the incoming row's columns as `__i_<c>` (what `VALUES(c)` and the
+    * row alias name); the rest take INSERT's checks against the
+    * post-update table. Both phases are checked before either writes.
+    * MySQL affected-rows: 1 per inserted row, 2 per updated one. */
   private def upsert(e: Engine, table: String, incoming0: DataFrame,
                      assignText0: String,
                      rowAlias: Option[(String, Option[Seq[String]])] = None,
@@ -3701,31 +3646,23 @@ object Dml {
       (e.tableKeys.get(table).toSeq ++
         e.uniqueKeys.toSeq.collect { case (t2, _, cols) if t2 == table =>
           cols }).distinct
-    if (keysList.isEmpty)
-      return ok(e, e.insertDf(table,
-        e.coerceAndFill(table, incoming0, fillMissing = true),
-        fillMissing = true, ignoreDups = ignore))
+    val batch = e.imageInsert(table, incoming0, fillMissing = true, ignore)
+    if (keysList.isEmpty) return ok(e, e.checkInsert(batch)())
     // last-in-batch wins per EVERY declared key (not just the PK — two
     // batch rows sharing only a secondary unique key would otherwise
     // both insert), but only among rows whose key tuple is fully
     // non-null (a NULL unique tuple never collides in MySQL, so such
-    // rows pass through row-for-row)
-    // generated columns materialize on the incoming batch too — a
-    // UNIQUE key over a virtual generated column participates in the
-    // duplicate-key match (generated_columns.go ODKU uk_v block)
-    val coerced = e.computeGenerated(table,
-      e.coerceAndFill(table, incoming0, fillMissing = true))
-    // __iseq__ (statement order) is minted ONCE here, before the per-key
-    // dedup fold: lastPerKey's window shuffles by key, so an id assigned
-    // after it would no longer reflect batch order — and the "last in
-    // batch wins" tie-breaks below must all see the ORIGINAL order. The
-    // checkpoint pins the generated ids across re-evaluations.
-    val coercedSeq = coerced
+    // rows pass through row-for-row). __iseq__ (statement order) is
+    // minted ONCE, before the per-key dedup fold: lastPerKey's window
+    // shuffles by key, so an id assigned after it would no longer
+    // reflect batch order. The checkpoint pins the generated ids across
+    // re-evaluations.
+    val coercedSeq = batch.rows
       .withColumn("__iseq__", monotonically_increasing_id())
       .localCheckpoint()
     val incomingSeq = keysList.foldLeft(coercedSeq) { (df, ks) =>
       val nonNull = ks.map(k => col(s"`$k`").isNotNull).reduce(_ && _)
-      lastPerKeyOrdered(df.filter(nonNull), ks)
+      lastPerKey(df.filter(nonNull), ks)
         .unionByName(df.filter(!nonNull))
     }
     val incoming = incomingSeq.drop("__iseq__")
@@ -3826,14 +3763,9 @@ object Dml {
                 "(MySQL ErrAmbiguousColumnName)")
           }
       }
-      // `col = DEFAULT` takes the column's declared default (NULL when
-      // none) — insert_queries.go "ODKU works with DEFAULT update value"
-      val ex =
-        if (rhs1.trim.equalsIgnoreCase("DEFAULT"))
-          e.columnDefaults.getOrElse((table, name.toLowerCase), "NULL")
-        else rhs1
-      name -> ex
-    }.toMap
+      t.columns.find(_.equalsIgnoreCase(name)).getOrElse(throw new IllegalArgumentException(
+        s"Unknown column '$name' in 'field list' (MySQL error 1054)")) -> rhs1
+    }
     // incoming columns renamed so assignment text can address both rows:
     // bare `c` = existing row, VALUES(c) = incoming row (as __i_c).
     // __iseq__ pins batch order; the localCheckpoints pin the generated
@@ -3843,7 +3775,7 @@ object Dml {
       col(s"`$c`").as(s"__i_$c")) :+
       col("__iseq__")).toIndexedSeq: _*)
       .localCheckpoint()
-    val tR = t.withColumn("__tid__", monotonically_increasing_id())
+    val tR = t.withColumn("__rid__", monotonically_increasing_id())
       .localCheckpoint()
     // MySQL finds the duplicate via the FIRST matching index — PK, then
     // unique keys in declaration order — so keys match with precedence:
@@ -3856,145 +3788,38 @@ object Dml {
     keysList.foreach { ks =>
       def cond = ks.map(k => tR(s"`$k`") === pool(s"`__i_$k`")).reduce(_ && _)
       parts += tR.join(pool, cond, "inner")
+        .select(tR("__rid__") +: pool.columns.map(c => pool(s"`$c`")): _*)
       pool = pool.join(tR, cond, "left_anti")
     }
     // one update per existing row: if several incoming rows (via
     // different keys) hit the same row, the LAST in batch order wins —
     // the same policy as the per-key batch dedup above
-    val wTid = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("`__tid__`")).orderBy(col("`__iseq__`").desc)
+    val wRid = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("`__rid__`")).orderBy(col("`__iseq__`").desc)
     val matched = parts.reduce(_ unionByName _)
-      .withColumn("__mrn__", row_number().over(wTid))
+      .withColumn("__mrn__", row_number().over(wRid))
       .filter(col("`__mrn__`") === 1)
       .drop("__mrn__", "__iseq__")
-    // ODKU assignments coerce to the target column type like every other
-    // write (reference sql/types Convert): a failed conversion errors in
-    // strict mode (1366), zero-fills with a 1366 warning under IGNORE or
-    // non-strict sql_mode (insert_queries.go "Insert Ignore works
-    // correctly with ON DUPLICATE UPDATE"). Without the cast a mistyped
-    // literal would silently widen the stored schema via union coercion.
-    val colTypes = t.schema.fields.map(f => f.name -> f.dataType).toMap
-    val relaxed = ignore || !e.strictWriteMode
-    val cvtAggs = assigns.toSeq.flatMap { case (c, ex) =>
-      colTypes.get(c).flatMap { dt =>
-        if (e.zeroValueLit(dt).isEmpty) None
-        else Some(org.apache.spark.sql.functions.sum(
-          (expr(ex).isNotNull && expr(ex).cast(dt).isNull).cast("long"))
-          .as(c))
-      }
-    }
-    if (cvtAggs.nonEmpty) {
-      val row = matched.agg(cvtAggs.head, cvtAggs.tail: _*).collect()(0)
-      cvtAggs.indices.foreach { i =>
-        val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-        if (n > 0) {
-          val cname = row.schema(i).name
-          if (relaxed)
-            e.warnN(n, 1366, s"Incorrect value for column '$cname': " +
-              "stored the type zero value")
-          else throw new IllegalArgumentException(
-            s"Incorrect value for column '$cname' (MySQL error 1366)")
-        }
-      }
-    }
-    // new images under the original names, old images under __old_* so a
-    // CHECK-violating update can keep its old row under IGNORE
-    val updatedBoth = matched.select((t.columns.map { c =>
-      assigns.get(c).map { ex =>
-        val raw = expr(ex)
-        colTypes.get(c) match {
-          case Some(dt) =>
-            val casted = raw.cast(dt)
-            e.zeroValueLit(dt) match {
-              case Some(z) if relaxed =>
-                when(raw.isNotNull && casted.isNull, z)
-                  .otherwise(casted).as(c)
-              case _ => casted.as(c)
-            }
-          case None => raw.as(c)
-        }
-      }.getOrElse(t(c).as(c))
-    } ++ t.columns.map(c => t(c).as(s"__old_$c"))).toIndexedSeq: _*)
-    // ON UPDATE CURRENT_TIMESTAMP on the update phase: unassigned
-    // on-update columns take the statement clock when the row changes
-    val odkuOnUpd = e.onUpdateCols.toSeq.collect {
-      case ((t2, cl), p) if t2 == table &&
-          !assigns.keys.exists(_.toLowerCase == cl) &&
-          t.columns.exists(_.toLowerCase == cl) =>
-        (t.columns.find(_.toLowerCase == cl).get, p)
-    }
-    val updatedBothTs =
-      if (odkuOnUpd.isEmpty) updatedBoth
-      else {
-        val changed = assigns.keys.toSeq.flatMap(c =>
-          t.columns.find(_.equalsIgnoreCase(c))).map(c =>
-            !(col(s"`$c`") <=> col(s"`__old_$c`"))).reduce(_ || _)
-        odkuOnUpd.foldLeft(updatedBoth) { case (d, (c, p)) =>
-          d.withColumn(c, when(changed,
-            e.nowColumn(p).cast(d.schema(c).dataType))
-            .otherwise(col(s"`$c`")))
-        }
-      }
-    val checks = e.checkConstraints.toSeq
-      .collect { case (t2, _, ex, true) if t2 == table => ex }
-    var updatedRows = updatedBothTs
-    var nReverted = 0L
-    if (checks.nonEmpty) {
-      val violFlag = checks
-        .map(ex => !coalesce(expr(ex).cast("boolean"), lit(true)))
-        .reduce(_ || _)
-      if (ignore) {
-        // violating updates keep their OLD row (insert_queries.go
-        // "Insert Ignore works correctly with ON DUPLICATE UPDATE":
-        // ODKU pk=1000 against CHECK pk<100 -> RowsAffected 0)
-        nReverted = updatedBothTs.filter(violFlag).count()
-        if (nReverted > 0) {
-          e.warnN(nReverted, 1105,
-            "check constraint violated (row kept old values)")
-          updatedRows = updatedBothTs.filter(!violFlag).unionByName(
-            updatedBothTs.filter(violFlag).select((
-              t.columns.map(c => col(s"`__old_$c`").as(c)) ++
-              t.columns.map(c => col(s"`__old_$c`"))).toIndexedSeq: _*))
-        }
-      } else {
-        val bad = updatedBothTs.filter(violFlag).limit(1).count()
-        if (bad > 0) throw new IllegalArgumentException(
-          s"Check constraint violated on '$table' " +
-          "(MySQL error 3819)")
-      }
-    }
-    // FK enforcement on the update phase, exactly like UPDATE: changed
-    // child columns re-validate; changed referenced keys fire the
-    // declared actions ("INSERT on DUPLICATE correctly works with FKs")
-    val ridBoth = updatedBothTs.withColumn("__rid__",
-      monotonically_increasing_id()).localCheckpoint()
-    val oldFrame = ridBoth.select((t.columns.map(c =>
-      col(s"`__old_$c`").as(c)) :+ col("__rid__")).toIndexedSeq: _*)
-    val newFrame = ridBoth.select((t.columns.map(c =>
-      col(s"`$c`")) :+ col("__rid__")).toIndexedSeq: _*)
-    e.validateForeignKeysChildChanged(table, oldFrame, newFrame)
-    e.enforceParentUpdate(table, oldFrame, newFrame)
-    updatedRows = updatedRows
-      .select(t.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-    // assignments may change a generated column's inputs — recompute
-    // (generated_columns.go "INSERT ON DUPLICATE KEY UPDATE with an
-    // index over a virtual generated column")
-    updatedRows = e.computeGenerated(table, updatedRows)
-    // untouched = existing rows the precedence match did not update;
-    // new rows = the incoming pool left after every key pass
-    val matchedTids = matched.select(col("`__tid__`"))
-    val untouched = tR.join(matchedTids, Seq("__tid__"), "left_anti")
-      .drop("__tid__")
-    val newRows = pool.select(incoming.columns.map(c =>
+      .withColumn("__hit__", lit(true))
+      .localCheckpoint()
+    // the update phase: every existing row, the matched ones with their
+    // incoming row beside them
+    val rows = tR.join(matched, Seq("__rid__"), "left")
+    val gate = Some(coalesce(col("__hit__"), lit(false)))
+    val image = new RowImage(e, table, assigns, ignore)
+    val nMatched = matched.count()
+    val (kept, updated, writeUpdate) =
+      if (nMatched == 0) (0L, t, () => ())
+      else checkUpdate(e, table, image, frameRows(e, table, rows, gate, nMatched),
+        image(rows, gate).drop(matched.columns.filter(_.startsWith("__i_")) :+ "__hit__": _*))
+    // the insert phase: the incoming rows left after every key pass
+    val inserted = pool.select(incoming.columns.map(c =>
       col(s"`__i_$c`").as(c)).toIndexedSeq: _*)
-    val nUpdated = matched.count() - nReverted
-    val nInserted = newRows.count()
-    val result = untouched
-      .unionByName(updatedRows)
-      .unionByName(newRows, allowMissingColumns = true)
-    e.validateVocab(table, result)
-    e.replaceTable(table, result, bumpDepth = true)
-    ok(e, nInserted + 2 * nUpdated)
+    val writeInsert = if (inserted.isEmpty) () => 0L
+      else e.checkInsert(batch.copy(rows = inserted), Some(updated))
+    writeUpdate()
+    val nInserted = writeInsert()
+    ok(e, nInserted + 2 * (nMatched - kept))
   }
 
   /** `CONSTRAINT name UNIQUE|PRIMARY KEY …` → the canonical key-item
@@ -4236,7 +4061,7 @@ object Dml {
     val checked = work.map { case (table, image, rows, img) =>
       checkUpdate(e, table, image, rows, img)
     }
-    checked.foreach(_._2())
+    checked.foreach(_._3())
     // rows matched; UPDATE IGNORE … JOIN reports the rows it updated
     // (update_queries.go:441 UpdateInfo{Matched:4, Updated:1})
     val n = work.map(_._3.matched).sum - checked.map(_._1).sum
@@ -4244,18 +4069,15 @@ object Dml {
     ok(e, n)
   }
 
-  /** The post-update row image of one table's UPDATE, the one image
-    * every UPDATE form builds: `assigns` are (column, SQL expression) in
-    * statement order. In order, the image applies
+  /** The post-update row image of one table's write, the one image
+    * every UPDATE form and ON DUPLICATE KEY UPDATE's update phase build:
+    * `assigns` are (column, SQL expression) in statement order. In
+    * order, the image applies
     *  - the assignments LEFT TO RIGHT, each seeing the values the ones
     *    before it produced (update_queries.go:59-63: `SET f32 = f32 +
-    *    f32, f64 = f32 * f64` multiplies by the NEW f32), each cast to
-    *    its column's type. Strict, an out-of-range integral value plants
-    *    a flag that `settle` raises as 1264 before the cast can wrap it
-    *    (rowexec/update.go convert). Under IGNORE or non-strict mode (SET
-    *    sql_mode='') it clamps to the type bound with a 1264, and a failed
-    *    conversion stores the type zero with a 1366 (update.go:98
-    *    convertDataAndWarn);
+    *    f32, f64 = f32 * f64` multiplies by the NEW f32), each through
+    *    its column's write conversion (Engine.writeConversion, the one
+    *    INSERT takes), whose failure flags `settle` raises or warns;
     *  - the table's BEFORE UPDATE triggers;
     *  - ON UPDATE CURRENT_TIMESTAMP stamps;
     *  - generated columns, then ENUM index coercion.
@@ -4282,12 +4104,6 @@ object Dml {
           s"'$table' is not allowed. (MySQL error 3105)")
       else Some(c -> ex)
     }
-    // (column, flag) per strict integral assignment, true on an updated
-    // row whose value is out of range
-    private val oobFlags = assigns.zipWithIndex.collect {
-      case ((c, _), i) if strict && e.integralBounds(colTypes(c)).isDefined =>
-        (c, s"__oob${i}__")
-    }
     // ON UPDATE CURRENT_TIMESTAMP: unassigned on-update columns take the
     // statement clock on rows whose assigned values actually CHANGE
     // (update_queries.go OnUpdateExprScripts; a same-value assignment
@@ -4300,20 +4116,10 @@ object Dml {
           schema.fieldNames.exists(_.equalsIgnoreCase(cl)) =>
         (schema.fieldNames.find(_.equalsIgnoreCase(cl)).get, p)
     }
-
-    // declared VECTOR columns coerce binary/text payloads through the
-    // packed-float32 decoder instead of a (disallowed) direct cast; wide
-    // DECIMAL canonicalizes like the INSERT path
-    private def castTo(c: String, raw: Column): Column = colTypes(c) match {
-      case at @ ArrayType(FloatType, _) if e.vecDims.contains((table, c.toLowerCase)) =>
-        GraftBridge.column(graft.functions.vector.VecCoerce(
-          GraftBridge.expression(raw))).cast(at)
-      case _ if e.wideDecCols.contains((table, c.toLowerCase)) =>
-        val (p, s) = e.wideDecCols((table, c.toLowerCase))
-        GraftBridge.column(graft.functions.WideDecCoerce(
-          GraftBridge.expression(raw), p, s, strict))
-      case dt => raw.cast(dt)
-    }
+    // the columns the statement writes, whose NULLs settle checks
+    private val written = (assigned ++ e.triggers.values.toSeq
+      .filter(t => t.table == table && t.timing == "BEFORE" && t.event == "UPDATE")
+      .flatMap(_.actions.map(_._2))).map(_.toLowerCase).toSet
 
     /** The image of `base` (the table's columns and `__rid__`): rows
       * outside `gate` keep their values. A gate is taken from the
@@ -4325,31 +4131,16 @@ object Dml {
       val snap = gate.map("__upd__" -> _).toMap ++ (if (onUpdCols.isEmpty) Map.empty
         else assigned.map(c => s"__orig_$c" -> col(s"`$c`")).toMap)
       val start = if (snap.isEmpty) base else base.withColumns(snap)
-      val image = assigns.zipWithIndex.foldLeft(start) { case (d, ((c, ex), i)) =>
-        val raw = expr(ex)
-        val cast = castTo(c, raw)
-        val asDec = raw.cast(DecimalType(38, 0))
-        val bounds = e.integralBounds(colTypes(c))
-        def outOfRange(lo: Long, hi: Long) =
-          asDec.isNotNull && (asDec < lit(lo) || asDec > lit(hi))
-        (bounds, if (strict) None else e.zeroValueLit(colTypes(c))) match {
-          case (Some((lo, hi)), _) if strict =>
-            d.withColumns(Map(s"__oob${i}__" -> (updated && outOfRange(lo, hi)),
-              c -> keep(c, cast)))
-          case (Some((lo, hi)), Some(z)) =>
-            val (oor, cvt) = (s"__oor_${c}__", s"__cvt_${c}__")
-            d.withColumn(oor, updated && outOfRange(lo, hi))
-              .withColumn(cvt, updated && raw.isNotNull && asDec.isNull && cast.isNull)
-              .withColumn(c, keep(c,
-                when(col(s"`$oor`"),
-                  when(asDec > lit(hi), lit(hi)).otherwise(lit(lo)).cast(colTypes(c)))
-                  .when(col(s"`$cvt`"), z).otherwise(cast)))
-          case (None, Some(z)) =>
-            val cvt = s"__cvt_${c}__"
-            d.withColumn(cvt, updated && raw.isNotNull && cast.isNull)
-              .withColumn(c, keep(c, when(col(s"`$cvt`"), z).otherwise(cast)))
-          case _ => d.withColumn(c, keep(c, cast))
-        }
+      // each assignment's source type; an earlier assignment keeps its
+      // column's type, so one analysis over the original row serves all
+      val srcTypes = if (assigns.isEmpty) Seq.empty
+        else start.select(assigns.map(a => expr(a._2)): _*).schema.map(_.dataType)
+      val image = assigns.zip(srcTypes).foldLeft(start) { case (d, ((c, ex), src)) =>
+        val (v, flags) = e.writeConversion(table, c, expr(ex), src, colTypes(c),
+          lenient = !strict, gate = updated)
+        d.withColumns((flags.map { case (f, cond) =>
+          f -> (if (d.columns.contains(f)) coalesce(col(s"`$f`"), cond) else cond)
+        } :+ (c -> keep(c, v))).toMap)
       }
       val triggered = applyBeforeUpdateTriggers(e, table, image, updated)
       val stamped =
@@ -4365,25 +4156,12 @@ object Dml {
       e.coerceVocab(table, e.computeGenerated(table, stamped))
     }
 
-    /** `image` with its flags settled and dropped. Strict, a row with an
-      * out-of-range flag raises MySQL error 1264. Otherwise the IGNORE
-      * coercions (NULL into NOT NULL, ENUM/SET vocabulary, CHAR length)
-      * apply to the updated rows and every flag becomes its warning. */
+    /** `image` with its flags settled (Engine.settleWrite) over the
+      * updated rows: strict, the first failure is MySQL's error;
+      * otherwise each value coerces with its warning. */
     def settle(image: DataFrame): DataFrame =
-      if (!strict) {
-        val (coerced, warns) = e.ignoreWriteCoercions(table, image,
-          gateCol = Some("__upd__").filter(image.columns.contains))
-        e.emitFlagWarnings(coerced, warns)
-      } else if (oobFlags.isEmpty) image
-      else {
-        val any = e.localRows(image.agg(max(col(s"`${oobFlags.head._2}`")),
-          oobFlags.tail.map(f => max(col(s"`${f._2}`"))): _*)).head
-        oobFlags.indices.find(i => !any.isNullAt(i) && any.getBoolean(i)).foreach { i =>
-          throw new IllegalArgumentException(
-            s"Out of range value for column '${oobFlags(i)._1}' (MySQL error 1264)")
-        }
-        image.drop(oobFlags.map(_._2): _*)
-      }
+      e.settleWrite(table, image, strict,
+        gateCol = Some("__upd__").filter(image.columns.contains), written = written)
   }
 
   /** The rows an UPDATE form feeds to its image: `before` holds the
@@ -4430,17 +4208,17 @@ object Dml {
     *  - the flags settle (RowImage.settle);
     *  - UPDATE IGNORE keeps the old values of each updated row that fails
     *    a CHECK (1105) or a foreign key (1452), then of each row whose
-    *    new key collides, in key order (1062, Engine.updateIgnoreSkips),
+    *    new key collides, in key order (1062, Engine.ignoreKeySkips),
     *    each with a warning (reference sql/rowexec/update.go:150);
     *  - the post-update table must pass: ENUM/SET vocabulary (strict),
     *    CHECK constraints (3819), foreign keys of the changed rows
     *    (1452), PRIMARY and UNIQUE keys (1062), the row-ordered transient
     *    key collisions (strict), unique expression indexes.
-    * Returns the number of rows kept at their old values and the write:
-    * ON UPDATE actions on child tables, then the store. Nothing is
-    * written before the write runs. */
+    * Returns the number of rows kept at their old values, the whole
+    * post-update table and the write: ON UPDATE actions on child tables,
+    * then the store. Nothing is written before the write runs. */
   private def checkUpdate(e: Engine, table: String, image: RowImage,
-      rows: UpdateRows, img: DataFrame): (Long, () => Unit) = {
+      rows: UpdateRows, img: DataFrame): (Long, DataFrame, () => Unit) = {
     var after = image.settle(img)
     var kept = Set.empty[Long]
     if (image.ignore) {
@@ -4464,21 +4242,21 @@ object Dml {
           failing(after.filter(updated && !coalesce(expr(ex).cast("boolean"), lit(true))),
             1105, "check constraint violated (row kept old values)")
         }
-      e.fkChildViolations(table, rows.before, after).foreach { case (fk, bad) =>
+      e.fkChildViolations(table, Some(rows.before), after).foreach { case (fk, bad) =>
         failing(bad, 1452, "Cannot add or update a child row: a foreign key " +
           s"constraint fails (`$table`, CONSTRAINT `${fk.name}`)")
       }
-      keepOld(e.updateIgnoreSkips(table, rows.before, after))
+      keepOld(e.ignoreKeySkips(table, e.spark.table(table), Some(rows.before), after))
     }
     if (after.columns.contains("__upd__")) after = after.drop("__upd__")
     val (newDf, write) = rows.whole(after)
     if (image.strict) e.validateVocab(table, newDf)
     e.validateChecks(table, newDf)
-    e.validateForeignKeysChildChanged(table, rows.before, after)
+    e.validateForeignKeysChild(table, Some(rows.before), after)
     e.enforcePkUniquePost(table, newDf)
     if (image.strict) e.enforcePkUniqueTransient(table, rows.before, after)
     e.enforceUniqueExprsPost(table, newDf)
-    (kept.size.toLong, () => {
+    (kept.size.toLong, newDf, () => {
       e.enforceParentUpdate(table, rows.before, after, newTable = Some(newDf))
       write()
     })

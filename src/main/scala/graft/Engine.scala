@@ -322,6 +322,12 @@ object Engine {
     }
   }
 
+  /** One INSERT batch after its image (`Engine.imageInsert`): `rows`
+    * hold the table's column values, `provided` the (lower-case) columns
+    * the statement named. */
+  private[graft] final case class InsertBatch(table: String, rows: DataFrame,
+      provided: Set[String], fillMissing: Boolean, ignore: Boolean)
+
   /** Exact JVM-global registry of information_schema scaffolding view
     * names (the views live in the shared SparkSession): catalog listings
     * hide these by MEMBERSHIP, never by name prefix, so a user table
@@ -717,10 +723,13 @@ class Engine(val spark: SparkSession) {
     * ANSI_QUOTES (double-quoted tokens are identifiers), PIPES_AS_CONCAT
     * (`||` is string concat — Spark's native `||` — instead of MySQL's
     * logical OR), and the composite ANSI (which includes both,
-    * sql_mode.go:36). STRICT_* / NO_ZERO_* modes are accepted as session
-    * chatter: this engine's write path is already strict (bad writes
-    * error rather than truncate), so strict toggles change nothing it
-    * can express. The full string reads back through @@sql_mode. */
+    * sql_mode.go:36). STRICT_TRANS_TABLES, STRICT_ALL_TABLES and
+    * TRADITIONAL select strict writes (`strictWrites`): a value that
+    * fails its column's conversion, range, NOT NULL or length check is
+    * an error, where without them it coerces with a warning, as under
+    * IGNORE (settleWrite). NO_AUTO_VALUE_ON_ZERO keeps an explicit 0 in
+    * an AUTO_INCREMENT column; NO_ZERO_* and the other recognized modes
+    * are accepted and read back through @@sql_mode. */
   private var ansiQuotes = false
   private var pipesAsConcat = false
   private var sqlModeStr = // the reference's default set, same order
@@ -739,10 +748,9 @@ class Engine(val spark: SparkSession) {
     "TRADITIONAL", "HIGH_NOT_PRECEDENCE", "NO_ENGINE_SUBSTITUTION",
     "PAD_CHAR_TO_FULL_LENGTH", "TIME_TRUNCATE_FRACTIONAL")
 
-  // STRICT_* / TRADITIONAL gate the write path: strict errors on bad
-  // values, non-strict coerces them with a warning (script_queries.go
-  // "charset validation strict vs non-strict mode" shape). Default set
-  // includes STRICT_TRANS_TABLES, matching the reference.
+  // strict writes (see above; script_queries.go "charset validation
+  // strict vs non-strict mode"). The default set includes
+  // STRICT_TRANS_TABLES, matching the reference.
   private var strictWrites = true
   private[graft] def strictWriteMode: Boolean = strictWrites
 
@@ -1615,15 +1623,59 @@ class Engine(val spark: SparkSession) {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Prepared statement with named parameters (:name) — reference
-    * Engine.PrepareQuery engine.go:160; Spark-first via parameterized SQL
-    * (plan re-analysis is Catalyst's job; no client-side AST cache needed). */
+  /** Prepared statement with named `:name` markers (reference
+    * Engine.PrepareQuery engine.go:160): the values bind into the text
+    * (bindParams) and the statement takes the one front door, `query`. */
   def queryPrepared(sql: String, params: Map[String, Any]): DataFrame =
-    spark.sql(Dialect.rewrite(sql), params)
+    query(bindParams(sql, Right(params)))
 
   /** Prepared statement with positional `?` markers (MySQL style). */
   def queryPrepared(sql: String, params: Seq[Any]): DataFrame =
-    spark.sql(Dialect.rewrite(sql), params.toArray)
+    query(bindParams(sql, Left(params)))
+
+  /** `sql` with each parameter marker outside quotes and comments
+    * replaced by its value as a MySQL literal: `?` markers take the
+    * positional values in order, `:name` markers the named ones (`::`
+    * and `:=` are not markers). Shared by queryPrepared and SQL-text
+    * EXECUTE … USING, so a prepared statement is the text statement
+    * with its literals filled in: the same rewrites, the same DML
+    * dispatch. Every `?` needs a value and no value may be left over
+    * (prepared_statement_queries.go). */
+  private[graft] def bindParams(sql: String, params: Either[Seq[Any], Map[String, Any]]): String = {
+    def literal(v: Any): String = v match {
+      case null => "NULL"
+      case s: String => "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString("X'", "", "'")
+      case d @ (_: java.util.Date | _: java.time.temporal.TemporalAccessor) => s"'$d'"
+      case other => String.valueOf(other)
+    }
+    val marks = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val named = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
+    val Name = """:([A-Za-z_][A-Za-z0-9_]*)""".r
+    SqlRewrite.scanTop(sql) { (i, c, _) =>
+      params match {
+        case Left(_) if c == '?' => marks += i
+        case Right(values) if c == ':' && (i == 0 || sql.charAt(i - 1) != ':') =>
+          Name.findPrefixMatchOf(sql.substring(i)).foreach { m =>
+            named += ((i, i + m.end, literal(values.getOrElse(m.group(1),
+              throw new IllegalArgumentException(s"bind variable not provided: '${m.group(1)}'")))))
+          }
+        case _ =>
+      }
+      -1
+    }
+    params match {
+      case Left(values) =>
+        if (values.length < marks.length)
+          throw new IllegalArgumentException(
+            s"bind variable not provided: 'v${values.length + 1}'")
+        if (values.length > marks.length)
+          throw new IllegalArgumentException(
+            s"invalid arguments. expected: ${marks.length}, found: ${values.length}")
+        SqlRewrite.splice(sql, marks.toSeq.zip(values).map { case (at, v) => (at, at + 1, literal(v)) })
+      case Right(_) => SqlRewrite.splice(sql, named.toSeq)
+    }
+  }
 
   /** SELECT ... INTO @var (reference sql/plan/into.go @vars path): runs a
     * single-row single-column query and stores the scalar as a session
@@ -1979,254 +2031,192 @@ class Engine(val spark: SparkSession) {
   def insertIntoSelect(table: String, sql: String): Long =
     insertDf(table, query(sql), fillMissing = false)
 
-  /** Write one insert batch: coercion + generated columns, then either
-    * full validation (plain INSERT — duplicate declared keys are MySQL
-    * error 1062) or MySQL IGNORE semantics (bad ENUM values truncate to
-    * '', invalid SET elements drop, CHECK/FK-violating and
-    * duplicate-key rows are skipped with first-in-batch winning).
-    * Returns the number of rows actually written. */
+  /** Write one insert batch: its image (`imageInsert`), then its checks
+    * and write (`checkInsert`). Returns the number of rows written. */
   private[graft] def insertDf(table: String, incoming0: DataFrame,
                               fillMissing: Boolean,
-                              ignoreDups: Boolean = false): Long = {
-    import org.apache.spark.sql.functions._
+                              ignoreDups: Boolean = false): Long =
+    checkInsert(imageInsert(table, incoming0, fillMissing, ignoreDups))()
+
+  /** The image of an insert batch, the one every insert-shaped write
+    * (INSERT, REPLACE, LOAD DATA, ON DUPLICATE KEY UPDATE's new rows)
+    * takes: DEFAULT and AUTO_INCREMENT fill and each column's write
+    * conversion (coerceAndFill), time precision, generated columns, ENUM
+    * index coercion, canonical JSON (a malformed document is 3140 even
+    * under IGNORE, script_queries.go), VECTOR dimensions, and then the
+    * conversion flags settle (settleWrite): strict, the first failure
+    * is MySQL's error; under IGNORE or non-strict mode each value
+    * coerces with a warning. */
+  private[graft] def imageInsert(table: String, incoming0: DataFrame,
+      fillMissing: Boolean, ignore: Boolean): Engine.InsertBatch = {
     rejectExplicitGenerated(table, incoming0)
-    // strict-mode temporal conversion: a string that does not parse as
-    // the target DATE/DATETIME/TIMESTAMP type is an error, not a silent
-    // NULL (insert_queries.go "INSERT INTO ... SELECT with TEXT types":
-    // "Incorrect datetime value: 'badtime'"). Checked pre-cast so the
-    // offending source value is still visible for the message.
-    if (strictWrites && !ignoreDups) {
-      import org.apache.spark.sql.types._
-      val tgt = spark.table(table).schema.fields
-        .map(f => f.name.toLowerCase -> f.dataType).toMap
-      incoming0.schema.fields.foreach { f =>
-        tgt.get(f.name.toLowerCase) match {
-          case Some(dt @ (DateType | TimestampType | TimestampNTZType))
-              if f.dataType.isInstanceOf[StringType] =>
-            val c = col(s"`${f.name}`")
-            // MySQL-legal shapes Spark's cast rejects ('2009.02.09',
-            // '20090209', 2-digit years) canonicalize first — only a
-            // string NO MySQL parse accepts is a 1292 error
-            val cn = org.apache.spark.sql.GraftBridge.column(
-              graft.functions.expressions.MySqlDateStrNorm(
-                org.apache.spark.sql.GraftBridge.expression(c)))
-            // zero dates ('0000-00-00'…) are valid MySQL writes (stored
-            // as NULL here — documented divergence), not 1292 errors
-            val zeroDate = c.rlike("^[0\\-:./ ]+$")
-            val bad = incoming0
-              .filter(c.isNotNull && cn.cast(dt).isNull && !zeroDate)
-              .select(c).limit(1).collect()
-            bad.headOption.foreach { r =>
-              val kind = if (dt == DateType) "date" else "datetime"
-              throw new IllegalArgumentException(
-                s"Incorrect $kind value: '${r.get(0)}' (MySQL 1292)")
-            }
-          // strict-mode DECIMAL overflow: a numeric value whose integer
-          // digits exceed p−s errors (reference types/decimal.go:303
-          // ErrConvertToDecimalLimit — "scale is not rounded" small_test:
-          // 12.1 into DECIMAL(3,2)); Spark's non-ANSI cast nulls silently
-          case Some(dt: DecimalType)
-              if isNumericSource(f.dataType) &&
-                !f.dataType.isInstanceOf[StringType] =>
-            val c = col(s"`${f.name}`")
-            val bad = incoming0
-              .filter(c.isNotNull && c.cast(dt).isNull)
-              .select(c).limit(1).collect()
-            bad.headOption.foreach { r =>
-              throw new IllegalArgumentException(
-                "Out of range value for column of Decimal type " +
-                s"('${f.name}' DECIMAL(${dt.precision},${dt.scale}) " +
-                s"cannot hold ${r.get(0)} — MySQL error 1264)")
-            }
-          case _ => ()
-        }
-      }
-    }
-    var coerced = coerceVocab(table, computeGenerated(table,
+    val strict = strictWrites && !ignore
+    var rows = coerceVocab(table, computeGenerated(table,
       truncateTimePrecision(table,
-        coerceAndFill(table, incoming0, fillMissing,
-          ignoreMode = ignoreDups || !strictWrites))))
-    // declared JSON columns store MySQL's sorted-key canonical form;
-    // malformed documents are MySQL 3140 even under IGNORE — invalid
-    // JSON is never an ignorable coercion (script_queries.go "INSERT
-    // IGNORE throws an error when json is badly formatted")
+        coerceAndFill(table, incoming0, fillMissing, ignoreMode = !strict))))
     jsonCols.toSeq.collect { case (t2, cl) if t2 == table => cl }
       .foreach { cl =>
-        coerced.columns.find(_.toLowerCase == cl).foreach { c =>
-          val asStr = coerced(c).cast("string")
-          val bad = coerced.filter(asStr.isNotNull &&
-              !graft.functions.json.jsonValid(asStr))
-            .select(asStr).limit(1).collect()
-          bad.headOption.foreach { r =>
-            throw new IllegalArgumentException(
-              s"Invalid JSON text: '${r.get(0)}' for column '$c' " +
-              "(MySQL error 3140)")
+        rows.columns.find(_.toLowerCase == cl).foreach { c =>
+          val asStr = rows(c).cast("string")
+          rows.filter(asStr.isNotNull && !graft.functions.json.jsonValid(asStr))
+            .select(asStr).limit(1).collect().headOption.foreach { r =>
+              throw new IllegalArgumentException(
+                s"Invalid JSON text: '${r.get(0)}' for column '$c' " +
+                "(MySQL error 3140)")
+            }
+          rows = rows.withColumn(c, GraftBridge.column(graft.functions.json.JsonCanon(
+            GraftBridge.expression(asStr))))
+        }
+      }
+    validateVecDims(table, rows)
+    val provided = incoming0.columns.map(_.toLowerCase).toSet
+    rows = settleWrite(table, rows, strict, written = provided)
+    if (strict) validateVocab(table, rows)
+    Engine.InsertBatch(table, rows, provided, fillMissing, ignore)
+  }
+
+  /** The checks of an imaged insert batch against `target` (the table's
+    * rows the batch lands beside), and the write. Plain INSERT: CHECK
+    * constraints (3819), foreign keys (1452), PRIMARY and UNIQUE keys
+    * within the batch and against `target` (1062), unique expression
+    * indexes. INSERT IGNORE skips each row that fails a CHECK (1105) or a
+    * foreign key (1452), then, in batch order, each row whose key
+    * collides with a row of `target` or an earlier kept row (1062,
+    * ignoreKeySkips), each with a warning. Nothing is written before the
+    * returned write runs; it appends the rows to the table as it is then
+    * and returns their number. */
+  private[graft] def checkInsert(batch: Engine.InsertBatch,
+      target: Option[DataFrame] = None): () => Long = {
+    import org.apache.spark.sql.functions._
+    val table = batch.table
+    val against = target.getOrElse(spark.table(table))
+    val rows =
+      if (!batch.ignore) {
+        validateChecks(table, batch.rows)
+        validateForeignKeysChild(table, None, batch.rows)
+        enforcePkUnique(table, batch.rows, against)
+        enforceUniqueExprs(table, batch.rows, against)
+        batch.rows
+      } else {
+        var rows = batch.rows.withColumn("__rid__", monotonically_increasing_id())
+          .localCheckpoint()
+        def skip(rids: Set[Long]): Unit =
+          if (rids.nonEmpty) rows = rows.filter(!col("__rid__").isin(rids.toSeq: _*))
+        def failing(bad: DataFrame, code: Int, msg: String): Unit = {
+          val rids = bad.select("__rid__").collect().map(_.getLong(0)).toSet
+          if (rids.nonEmpty) warnN(rids.size, code, msg)
+          skip(rids)
+        }
+        checkConstraints.toSeq.collect { case (t, _, ex, true) if t == table => ex }
+          .foreach { ex =>
+            failing(rows.filter(!coalesce(expr(ex).cast("boolean"), lit(true))),
+              1105, "check constraint violated (row skipped)")
           }
-          coerced = coerced.withColumn(c,
-            org.apache.spark.sql.GraftBridge.column(
-              graft.functions.json.JsonCanon(
-                org.apache.spark.sql.GraftBridge.expression(
-                  coerced(c).cast("string")))))
+        fkChildViolations(table, None, rows).foreach { case (_, bad) =>
+          failing(bad, 1452, "Cannot add or update a child row: a foreign key constraint fails")
         }
+        skip(ignoreKeySkips(table, against, None, rows))
+        rows.drop("__rid__")
       }
-    validateVecDims(table, coerced)
-    val target = spark.table(table)
-    if (ignoreDups) {
-      // first-in-batch-wins sequence is pinned BEFORE the CHECK/FK skip
-      // filters: their unionByName branches reorder rows, and a sequence
-      // assigned afterwards would make the surviving duplicate depend on
-      // that reorder instead of MySQL's statement order
-      coerced = coerced.withColumn("__seq__", monotonically_increasing_id())
-      // value coercions (ENUM->''/SET drop/NOT NULL zero/char truncate/
-      // conversion-failure zero) — flags counted in one aggregate and
-      // fed to the diagnostics area
-      val (coerced1, flagWarns) = ignoreWriteCoercions(table, coerced)
-      coerced = emitFlagWarnings(coerced1, flagWarns)
-      var prevCount = -1L // lazily counted only when a skip stage exists
-      def countNow(): Long = { if (prevCount < 0) prevCount = coerced.count(); prevCount }
-      // skip CHECK-violating rows (NULL result passes, 3VL)
-      val checks =
-        checkConstraints.toSeq.collect {
-          case (t, _, ex, true) if t == table => ex }
-      if (checks.nonEmpty) {
-        val before = countNow()
-        checks.foreach { ex =>
-          coerced = coerced.filter(
-            coalesce(expr(ex).cast("boolean"), lit(true)))
-        }
-        val after = coerced.count()
-        if (before > after)
-          warnN(before - after, 1105, "check constraint violated (row skipped)")
-        prevCount = after
+    () => {
+      // LAST_INSERT_UUID(): a pk column absent from the batch and FILLED
+      // from a uuid-bearing declared default generated a fresh UUID per
+      // row — record the first (explicit UUID() calls in VALUES were
+      // pre-generated at the text layer, Dml.preGenUuids)
+      tableKeys.getOrElse(table, Seq.empty).find { pk =>
+        !batch.provided(pk.toLowerCase) &&
+          columnDefaults.get((table, pk.toLowerCase)).exists(d =>
+            """(?i)\buuid\s*\(\s*\)""".r.findFirstIn(d).isDefined)
+      }.foreach { pk =>
+        val d = columnDefaults((table, pk.toLowerCase))
+        val swap = """(?i)uuid_to_bin\s*\(.*,\s*(1|true)\s*\)""".r
+          .findFirstIn(d).isDefined
+        rows.select(col(s"`$pk`")).limit(1).collect().headOption
+          .foreach { r =>
+            r.get(0) match {
+              case s: String if s.nonEmpty => lastInsertUuidVal = s
+              case b: Array[Byte] if b.length == 16 =>
+                lastInsertUuidVal = bytesToUuid(b, swap)
+              case _ =>
+            }
+          }
       }
-      // skip FK-violating rows
-      val fks = foreignKeys.toSeq.filter(_.child == table)
-      if (fks.nonEmpty) {
-        val before = countNow()
-        fks.foreach { fk =>
-          val keys = spark.table(fk.parent)
-            .select(fk.parentCols.map(c => col(s"`$c`")): _*).distinct()
-            .toDF(fk.parentCols.map(c => s"__fk_$c"): _*)
-          val cond = fk.childCols.zip(fk.parentCols).map { case (cc, pc) =>
-            fkPairEq(fk, cc, pc, s"__fk_$pc")
-          }.reduce(_ && _)
-          val nonNull = fk.childCols.map(c => col(s"`$c`").isNotNull)
-            .reduce(_ && _)
-          coerced = coerced.filter(!nonNull).unionByName(
-            coerced.filter(nonNull).join(keys, cond, "left_semi"))
-        }
-        val after = coerced.count()
-        if (before > after)
-          warnN(before - after, 1452,
-            "Cannot add or update a child row: a foreign key constraint fails")
-        prevCount = after
+      val n = appendStored(table, rows, batch.fillMissing).getOrElse {
+        val n = rows.count()
+        replaceTable(table, spark.table(table)
+          .unionByName(rows, allowMissingColumns = batch.fillMissing), bumpDepth = true)
+        n
       }
-      // duplicate keys (PRIMARY + UNIQUE): first row in the batch wins,
-      // existing rows win; NULL-keyed rows are exempt under UNIQUE
-      declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
-        if (keys.forall(k => coerced.columns.exists(_.equalsIgnoreCase(k)))) {
-          import org.apache.spark.sql.expressions.Window
-          val before = countNow()
-          val kcols = keys.map(k => col(s"`$k`"))
-          val nonNull = kcols.map(_.isNotNull).reduce(_ && _)
-          val gate = if (nullExempt) nonNull else lit(true)
-          val w = Window
-            .partitionBy((kcols :+ (col("__nn__"): org.apache.spark.sql.Column))
-              .toIndexedSeq: _*)
-            .orderBy(col("__seq__").asc)
-          coerced = coerced
-            .withColumn("__nn__", gate)
-            .withColumn("__rn__", row_number().over(w))
-            .filter(!col("__nn__") || col("__rn__") === 1)
-            .drop("__nn__", "__rn__")
-          val t0 = if (nullExempt) target.filter(nonNull) else target
-          val existing = t0
-            .select(kcols.toIndexedSeq: _*).distinct()
-            .toDF(keys.map(k => s"__pk_$k"): _*)
-          val cond = keys.map(k => col(s"`$k`") === col(s"`__pk_$k`"))
-            .reduce(_ && _)
-          coerced = coerced.filter(!gate).unionByName(
-            coerced.filter(gate).join(existing, cond, "left_anti"))
-          val after = coerced.count()
-          if (before > after)
-            warnN(before - after, 1062,
-              s"Duplicate entry for key '$table.$keyName'")
-          prevCount = after
-        }
-      }
-      coerced = coerced.drop("__seq__")
-    } else if (!strictWrites) {
-      // non-strict mode (SET sql_mode=''): value problems coerce with a
-      // warning exactly like IGNORE (sql_mode.go strict gating;
-      // script_queries.go strict-vs-non-strict block), while constraint
-      // violations — keys, CHECK, FK — still error
-      val (coerced1, flagWarns) = ignoreWriteCoercions(table, coerced)
-      coerced = emitFlagWarnings(coerced1, flagWarns)
-      validateChecks(table, coerced)
-      validateForeignKeysChild(table, coerced)
-      enforcePkUnique(table, coerced, target)
-      enforceUniqueExprs(table, coerced, target)
-    } else {
-      validateNotNull(table, coerced,
-        incoming0.columns.map(_.toLowerCase).toSet)
-      validateIntRange(table, incoming0)
-      validateVocab(table, coerced)
-      validateCharLimits(table, coerced)
-      validateChecks(table, coerced)
-      validateForeignKeysChild(table, coerced)
-      enforcePkUnique(table, coerced, target)
-      enforceUniqueExprs(table, coerced, target)
-    }
-    // LAST_INSERT_UUID(): a pk column absent from the batch and FILLED
-    // from a uuid-bearing declared default generated a fresh UUID per
-    // row — record the first (explicit UUID() calls in VALUES were
-    // pre-generated at the text layer, Dml.preGenUuids)
-    tableKeys.getOrElse(table, Seq.empty).find { pk =>
-      !incoming0.columns.exists(_.equalsIgnoreCase(pk)) &&
-        columnDefaults.get((table, pk.toLowerCase)).exists(d =>
-          """(?i)\buuid\s*\(\s*\)""".r.findFirstIn(d).isDefined)
-    }.foreach { pk =>
-      val d = columnDefaults((table, pk.toLowerCase))
-      val swap = """(?i)uuid_to_bin\s*\(.*,\s*(1|true)\s*\)""".r
-        .findFirstIn(d).isDefined
-      coerced.select(col(s"`$pk`")).limit(1).collect().headOption
-        .foreach { r =>
-          r.get(0) match {
-            case s: String if s.nonEmpty => lastInsertUuidVal = s
-            case b: Array[Byte] if b.length == 16 =>
-              lastInsertUuidVal = bytesToUuid(b, swap)
-            case _ =>
+      // advance the auto-increment counter past the batch (one scalar agg
+      // on the insert batch, not the table)
+      autoIncCols.get(table)
+        .filter(c => rows.columns.exists(_.equalsIgnoreCase(c)))
+        .foreach { c =>
+          // decimal agg: an UNSIGNED BIGINT value past Long.MaxValue
+          // (18446744073709551615) must still advance the counter —
+          // the Long counter saturates and the exact value is kept for
+          // the SHOW CREATE render
+          val r = rows.agg(max(col(s"`$c`")
+              .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
+            .collect()(0)
+          if (!r.isNullAt(0)) {
+            val m = BigDecimal(r.getDecimal(0))
+            if (m > BigDecimal(Long.MaxValue)) {
+              autoIncCounter(table) = Long.MaxValue
+              autoIncShown(table) = m
+            } else autoIncObserve(table, m.toLong)
           }
         }
-    }
-    val n = appendStored(table, coerced, fillMissing).getOrElse {
-      val n = coerced.count()
-      replaceTable(table, target.unionByName(coerced, allowMissingColumns = fillMissing),
-        bumpDepth = true)
       n
     }
-    // advance the auto-increment counter past the batch (one scalar agg
-    // on the insert batch, not the table)
-    autoIncCols.get(table)
-      .filter(c => coerced.columns.exists(_.equalsIgnoreCase(c)))
-      .foreach { c =>
-        // decimal agg: an UNSIGNED BIGINT value past Long.MaxValue
-        // (18446744073709551615) must still advance the counter —
-        // the Long counter saturates and the exact value is kept for
-        // the SHOW CREATE render
-        val r = coerced.agg(org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.col(s"`$c`")
-            .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-          .collect()(0)
-        if (!r.isNullAt(0)) {
-          val m = BigDecimal(r.getDecimal(0))
-          if (m > BigDecimal(Long.MaxValue)) {
-            autoIncCounter(table) = Long.MaxValue
-            autoIncShown(table) = m
-          } else autoIncObserve(table, m.toLong)
+  }
+
+  /** REPLACE INTO and LOAD DATA … REPLACE, one implementation (reference
+    * plan/insert.go ReplaceInto). MySQL takes the rows in statement
+    * order, each deleting every row it collides with on the PRIMARY key
+    * or any UNIQUE key (an earlier row of the batch too) before it is
+    * inserted. So the batch keeps the rows no later row collides with,
+    * the stored rows any batch row collides with are deleted, firing
+    * their foreign-key actions (enforceParentDelete: a referenced row is
+    * deleted even though its key comes back), and the kept rows take the
+    * INSERT sequence against what is left. Nothing is written unless
+    * every check passes. Returns MySQL's affected rows: deleted plus
+    * inserted. */
+  private[graft] def replaceRows(table: String, incoming: DataFrame,
+                                 fillMissing: Boolean): Long = {
+    import org.apache.spark.sql.functions._
+    val batch = imageInsert(table, incoming, fillMissing, ignore = false)
+    val keys = declaredKeys(table)
+      .filter(_._2.forall(k => batch.rows.columns.exists(_.equalsIgnoreCase(k))))
+    if (keys.isEmpty) return checkInsert(batch)()
+    val rows = batch.rows.withColumn("__rid__", monotonically_increasing_id())
+      .localCheckpoint()
+    val keyCols = keys.flatMap(_._2).distinct
+    val seen = keys.map(_ => scala.collection.mutable.Set.empty[Seq[Any]])
+    // from the last row back: a row is replaced by any later row sharing
+    // one of its keys (a NULL UNIQUE key shares nothing)
+    val replaced = rows.select(col("__rid__") +: keyCols.map(k => col(s"`$k`")): _*)
+      .orderBy("__rid__").collect().reverseIterator.filter { r =>
+        val tuples = keys.map { case (_, ks, nullExempt) =>
+          Some(ks.map(k => r.get(1 + keyCols.indexOf(k))))
+            .filterNot(t => nullExempt && t.contains(null))
         }
-      }
-    n
+        val hit = tuples.zip(seen).exists { case (t, s) => t.exists(s) }
+        tuples.zip(seen).foreach { case (t, s) => s ++= t }
+        hit
+      }.map(_.getLong(0)).toSeq
+    val current = spark.table(table)
+    val kept = keys.foldLeft(current) { case (d, (_, ks, _)) =>
+      val hit = rows.select(ks.map(k => col(s"`$k`").as(s"__k_$k")): _*)
+      d.join(hit, ks.map(k => d(s"`$k`") === hit(s"`__k_$k`")).reduce(_ && _), "left_anti")
+    }
+    val deleted = current.count() - kept.count()
+    val survivors = if (replaced.isEmpty) rows
+      else rows.filter(!col("__rid__").isin(replaced: _*))
+    val write = checkInsert(batch.copy(rows = survivors.drop("__rid__")), Some(kept))
+    val finalKept = enforceParentDelete(table, kept)
+    if (deleted > 0) replaceTable(table, finalKept, bumpDepth = true)
+    deleted + write()
   }
 
   /** Columns DECLARED `NOT NULL` through DDL — Spark's inferred
@@ -2238,36 +2228,6 @@ class Engine(val spark: SparkSession) {
 
   def declareNotNull(table: String, column: String): Unit =
     notNullCols += ((table, column.toLowerCase))
-
-  /** Strict-mode explicit NULL into a declared NOT NULL / PK column is
-    * MySQL error 1048 (replace_queries.go "null given to non-nullable").
-    * Only columns the STATEMENT provided are checked — omitted columns
-    * take their declared defaults — and auto-increment columns are
-    * exempt (NULL there means "generate", insert_queries.go). All
-    * provided NOT NULL columns check in ONE filter + limit(1) job. */
-  private[graft] def validateNotNull(table: String, batch: DataFrame,
-                                     providedLower: Set[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    val target = spark.table(table)
-    val pk = tableKeys.getOrElse(table, Seq.empty).map(_.toLowerCase).toSet
-    val ai = autoIncCols.get(table).map(_.toLowerCase).toSet
-    val present = batch.columns.map(c => c.toLowerCase -> c).toMap
-    val checkCols = target.schema.fields.filter { f =>
-      val lo = f.name.toLowerCase
-      (notNullCols.contains((table, lo)) || pk.contains(lo)) &&
-        providedLower.contains(lo) && !ai.contains(lo)
-    }.flatMap(f => present.get(f.name.toLowerCase)).toSeq
-    if (checkCols.isEmpty) return
-    val cond = checkCols.map(c => col(s"`$c`").isNull).reduce(_ || _)
-    val bad = batch.filter(cond)
-      .select(checkCols.map(c => col(s"`$c`")).toIndexedSeq: _*)
-      .limit(1).collect()
-    bad.headOption.foreach { r =>
-      val name = checkCols(checkCols.indices.find(r.isNullAt).getOrElse(0))
-      throw new IllegalArgumentException(
-        s"Column '$name' cannot be null (MySQL error 1048)")
-    }
-  }
 
   /** `table`'s PRIMARY key and every declared UNIQUE key, as
     * (key name, columns, NULL-keyed rows exempt): only UNIQUE keys exempt
@@ -2380,52 +2340,56 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** UPDATE IGNORE key-conflict resolution (reference update_queries.go
-    * UpdateIgnoreScripts): the rows of `oldDf` are visited in storage
-    * order (the key order Spark sorts by, which replaceTable keeps a keyed
-    * table in), and a row whose NEW key in `newDf` collides with any
-    * OTHER row's key of the table AT THAT MOMENT — later rows still hold
-    * their old keys, earlier surviving rows their new ones — keeps its
-    * old values, with a 1062 warning. The scan is inherently sequential
-    * (each decision feeds the next), so it runs on the driver behind a
-    * fixed 100,000-row gate; UPDATE IGNORE is an OLTP shape, not a
-    * 100 TB one. Both frames carry `__rid__`; rows of the table outside
-    * them keep their keys. Returns the `__rid__`s of the skipped rows. */
-  private[graft] def updateIgnoreSkips(table: String, oldDf: DataFrame,
-                                       newDf: DataFrame): Set[Long] = {
+  /** IGNORE key-conflict resolution, the one key-order visit of every
+    * IGNORE write (reference update_queries.go UpdateIgnoreScripts,
+    * insert_queries.go INSERT IGNORE): each row of `newDf` (`__rid__` and
+    * its new key) is visited in turn, and a row whose new key collides
+    * with a key of `stored` or of a row already visited AT THAT MOMENT is
+    * skipped with a 1062 warning. For an UPDATE, `oldDf` holds each row's
+    * old key, `stored` is the table (those rows included, under their old
+    * keys), a row whose key does not change never collides, and the rows
+    * are visited in storage order (the key order Spark sorts by, which
+    * replaceTable keeps a keyed table in). Without `oldDf` the rows are
+    * new rows visited in `__rid__` (batch) order. The visit is
+    * sequential (each decision feeds the next), so it runs on the driver
+    * over the statement's rows and the stored rows that share a key with
+    * one of them. Returns the `__rid__`s of the skipped rows. */
+  private[graft] def ignoreKeySkips(table: String, stored: DataFrame,
+      oldDf: Option[DataFrame], newDf: DataFrame): Set[Long] = {
     import org.apache.spark.sql.functions.col
     val declared = declaredKeys(table)
+      .filter(_._2.forall(k => newDf.columns.exists(_.equalsIgnoreCase(k))))
     if (declared.isEmpty) return Set.empty
-    val all = spark.table(table)
-    val total = all.count()
-    require(total <= 100000,
-      s"UPDATE IGNORE sequential window exceeds the driver gate " +
-      s"($total rows): not a supported batch-analytics shape")
     val keyCols = declared.flatMap(_._2).distinct
     val keySel = keyCols.map(c => col(s"`$c`"))
     def keyed(df: DataFrame): Seq[(Long, Seq[Any])] =
       df.collect().toSeq.map(r => r.getLong(0) -> (1 until r.length).map(r.get))
-    val olds = keyed(oldDf.select(col("__rid__") +: keySel: _*)
-      .orderBy(declared.head._2.map(k => col(s"`$k`")) :+ col("__rid__"): _*))
-    val news = keyed(newDf.select(col("__rid__") +: keySel: _*)).toMap
+    val news = keyed(newDf.select(col("__rid__") +: keySel: _*))
+    val olds = oldDf.map(o => keyed(o.select(col("__rid__") +: keySel: _*)
+      .orderBy(declared.head._2.map(k => col(s"`$k`")) :+ col("__rid__"): _*)))
+    val order = olds.fold(news.map(_._1).sorted)(_.map(_._1))
+    val oldOf = olds.map(_.toMap)
+    val newOf = news.toMap
     val colIdx = keyCols.zipWithIndex.toMap
     def tuple(vals: Seq[Any], keys: Seq[String]): Seq[Any] =
       keys.map(k => vals(colIdx(k)))
-    val stored = all.select(keySel: _*).collect().map(_.toSeq)
     val current = declared.map { case (_, keys, _) =>
-      val m = scala.collection.mutable.Map.empty[Seq[Any], Int]
-        .withDefaultValue(0)
-      stored.foreach(v => m(tuple(v, keys)) += 1)
+      val m = scala.collection.mutable.Map.empty[Seq[Any], Int].withDefaultValue(0)
+      stored.join(newDf.select(keys.map(k => col(s"`$k`")): _*).distinct(), keys, "left_semi")
+        .select(keys.map(k => col(s"`$k`")): _*).collect()
+        .foreach(r => m(r.toSeq) += 1)
       m
     }
     val skipped = Set.newBuilder[Long]
-    olds.foreach { case (rid, o) =>
-      val n = news(rid)
+    order.foreach { rid =>
+      val n = newOf(rid)
+      val o = oldOf.map(_(rid))
       val conflictKey = declared.zip(current).collectFirst {
         case ((kname, keys, nullExempt), m)
             if {
-              val nt = tuple(n, keys); val ot = tuple(o, keys)
-              nt != ot && !(nullExempt && nt.contains(null)) && m(nt) > 0
+              val nt = tuple(n, keys)
+              !o.map(tuple(_, keys)).contains(nt) &&
+                !(nullExempt && nt.contains(null)) && m(nt) > 0
             } => (kname, tuple(n, keys))
       }
       conflictKey match {
@@ -2438,8 +2402,8 @@ class Engine(val spark: SparkSession) {
             s"'$table.$kname'")
         case None =>
           declared.zip(current).foreach { case ((_, keys, _), m) =>
-            val nt = tuple(n, keys); val ot = tuple(o, keys)
-            if (nt != ot) { m(ot) -= 1; m(nt) += 1 }
+            val (nt, ot) = (tuple(n, keys), o.map(tuple(_, keys)))
+            if (!ot.contains(nt)) { ot.foreach(m(_) -= 1); m(nt) += 1 }
           }
       }
     }
@@ -2643,167 +2607,124 @@ class Engine(val spark: SparkSession) {
         }
       case _ => incoming
     }
-    // MySQL coerces incoming values to the column type on write
-    // (reference sql/types Convert on insert); cast matching columns to
-    // the target schema so VALUES ('400') lands in an INT column.
-    // ignoreMode: a failed conversion (non-NULL in, NULL out) stores the
-    // type's zero value instead and plants a `__cvt_*__` flag that
-    // ignoreWriteCoercions turns into a 1366 warning
-    // (insert_queries.go "INSERT IGNORE properly addresses data
-    // conversion": VALUES (1, 'dasd') into INT -> (1, 0) + warning).
-    val targetTypes = target.schema.fields
-      .map(f => f.name.toLowerCase -> (f.name, f.dataType)).toMap
-    // YEAR columns window BEFORE the generic casts: the string/number
-    // distinction matters ('0' -> 2000, numeric 0 -> 0000 — year.go)
-    val incomingYr = incomingAi.columns.foldLeft(incomingAi) { (df, c) =>
-      if (!yearCols((table, c.toLowerCase))) df
-      else df.withColumn(c, org.apache.spark.sql.GraftBridge.column(
-        graft.functions.expressions.MySqlYearCast(
-          org.apache.spark.sql.GraftBridge.expression(df(c))))
-        .cast(org.apache.spark.sql.types.IntegerType))
-    }
-    incomingYr.columns.foldLeft(incomingYr) { (df, c) =>
-      // wide DECIMAL (p > 38): every write canonicalizes through
-      // WideDecCoerce regardless of incoming type — rounds HALF_UP to
-      // the declared scale, range-checks, renders fixed-scale text
-      wideDecCols.get((table, c.toLowerCase)).map { case (p, s) =>
-        df.withColumn(c, org.apache.spark.sql.GraftBridge.column(
-          graft.functions.WideDecCoerce(
-            org.apache.spark.sql.GraftBridge.expression(df(c)),
-            p, s, strictWriteMode && !ignoreMode)))
-      }.getOrElse(targetTypes.get(c.toLowerCase) match {
-        // declared VECTOR column: binary payloads (STRING_TO_VECTOR,
-        // 0x… hex literals) decode as packed little-endian float32; a
-        // bare string is a MySQL type error — dolt requires the
-        // explicit conversion (vector_ddl_queries.go error rows)
-        case Some((_, dt @ org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, _)))
-            if vecDims.contains((table, c.toLowerCase)) &&
-              df.schema(c).dataType != dt =>
-          df.schema(c).dataType match {
-            case org.apache.spark.sql.types.BinaryType =>
-              df.withColumn(c, org.apache.spark.sql.GraftBridge.column(
-                graft.functions.vector.VecCoerce(
-                  org.apache.spark.sql.GraftBridge.expression(df(c))))
-                .cast(dt))
-            case _: org.apache.spark.sql.types.StringType =>
-              throw new IllegalArgumentException(
-                "value of type string cannot be converted to 'vector' " +
-                "type (use STRING_TO_VECTOR)")
-            case _ => df.withColumn(c, df(c).cast(dt))
-          }
-        case Some((_, dt)) if df.schema(c).dataType != dt =>
-          // MySQL ROUNDS fractional values into integral columns
-          // (types/number.go Convert; type_wire_queries.go inserts 107.5
-          // into TINYINT and reads back 108) — Spark's cast truncates
-          val fracSrc = df.schema(c).dataType match {
-            case org.apache.spark.sql.types.DoubleType |
-                 org.apache.spark.sql.types.FloatType |
-                 _: org.apache.spark.sql.types.DecimalType => true
-            case _ => false
-          }
-          // string → temporal routes through the MySQL-lenient
-          // canonicalizer so '2009.02.09' / '20090209' / 2-digit years
-          // store the date MySQL stores, not NULL
-          val temporalSrc = dt match {
-            case org.apache.spark.sql.types.DateType |
-                 org.apache.spark.sql.types.TimestampType |
-                 org.apache.spark.sql.types.TimestampNTZType =>
-              df.schema(c).dataType
-                .isInstanceOf[org.apache.spark.sql.types.StringType]
-            case _ => false
-          }
-          // booleans write their MySQL tinyint form into string columns
-          // ('1'/'0', not Spark's 'true'/'false' — script_queries.go
-          // "bool and string/int": INSERT true into VARCHAR reads '1')
-          val boolToStr = dt.isInstanceOf[org.apache.spark.sql.types.StringType] &&
-            df.schema(c).dataType == org.apache.spark.sql.types.BooleanType
-          // binary payloads into CHARACTER columns must be valid
-          // utf8mb4: strict writes raise 1366, non-strict/IGNORE
-          // truncates at the first invalid byte (types/strings.go)
-          val binToStr =
-            dt.isInstanceOf[org.apache.spark.sql.types.StringType] &&
-              df.schema(c).dataType == org.apache.spark.sql.types.BinaryType
-          // a hex literal (0x…, binary after the dialect pass) written
-          // into a NUMERIC column is the number its bytes spell in
-          // big-endian, like MySQL (script_queries.go "Handle hex
-          // number to binary conversion": 0x7ED0599B into INT)
-          val binToNum =
-            dt.isInstanceOf[org.apache.spark.sql.types.NumericType] &&
-              df.schema(c).dataType == org.apache.spark.sql.types.BinaryType
-          val casted =
-            if (binToNum)
-              org.apache.spark.sql.functions.conv(
-                org.apache.spark.sql.functions.hex(df(c)), 16, 10).cast(dt)
-            else if (binToStr) {
-              org.apache.spark.sql.GraftBridge.column(
-                graft.functions.expressions.Utf8BinToStr(
-                  org.apache.spark.sql.GraftBridge.expression(df(c)),
-                  c, strictWriteMode && !ignoreMode)).cast(dt)
-            }
-            else if (boolToStr) {
-              import org.apache.spark.sql.functions.when
-              when(df(c) === true, "1").when(df(c) === false, "0")
-                .otherwise(null).cast(dt)
-            }
-            else if (fracSrc && integralBounds(dt).isDefined)
-              org.apache.spark.sql.functions.round(df(c)).cast(dt)
-            else if (temporalSrc)
-              org.apache.spark.sql.GraftBridge.column(
-                graft.functions.expressions.MySqlDateStrNorm(
-                  org.apache.spark.sql.GraftBridge.expression(df(c))))
-                .cast(dt)
-            else df(c).cast(dt)
-          zeroValueLit(dt) match {
-            case Some(z) if ignoreMode =>
-              import org.apache.spark.sql.functions.{col, lit, when}
-              // non-strict out-of-range numeric: MySQL clamps to the
-              // type bound and warns 1264 (reference rowexec/insert.go
-              // ConvertRound + ErrValueOutOfRange -> Session.Warn);
-              // Spark's non-ANSI cast would silently wrap instead
-              integralBounds(dt) match {
-                case Some((lo, hi)) if isNumericSource(df.schema(c).dataType) =>
-                  val asDec = df(c).cast(
-                    org.apache.spark.sql.types.DecimalType(38, 0))
-                  val oorF = s"__oor_${c}__"
-                  val cvtF = s"__cvt_${c}__"
-                  df.withColumn(oorF, df(c).isNotNull && asDec.isNotNull &&
-                      (asDec < lit(lo) || asDec > lit(hi)))
-                    .withColumn(cvtF,
-                      df(c).isNotNull && asDec.isNull && casted.isNull)
-                    .withColumn(c,
-                      when(col(s"`$oorF`"),
-                        when(asDec > lit(hi), lit(hi)).otherwise(lit(lo))
-                          .cast(dt))
-                        .when(col(s"`$cvtF`"), z)
-                        .otherwise(casted))
-                case _ =>
-                  df.withColumn(s"__cvt_${c}__",
-                      df(c).isNotNull && casted.isNull)
-                    .withColumn(c,
-                      when(col(s"`__cvt_${c}__`"), z).otherwise(casted))
-              }
-            case _ => df.withColumn(c, casted)
-          }
-        case _ => df
-      })
-    }.transform { coerced =>
-      // fixed BINARY(n) zero-pads stored values to the declared width
-      // (types/strings.go binary padding; niltexttable's binary(2)
-      // column reads '4\u0000') — applied after the type casts so both
-      // string-typed and binary-typed incomings pad
-      coerced.columns.foldLeft(coerced) { (df, c) =>
-        binPadLens.get((table, c.toLowerCase)) match {
-          case Some(n) if targetTypes.get(c.toLowerCase)
-              .exists(_._2 == org.apache.spark.sql.types.BinaryType) =>
-            import org.apache.spark.sql.functions.rpad
-            df.withColumn(c, rpad(
-              df(c).cast(org.apache.spark.sql.types.BinaryType),
-              n, Array[Byte](0)))
-          case _ => df
-        }
+    // MySQL coerces incoming values to the column type on write: each
+    // column takes its write conversion, flags included (writeConversion)
+    val targetTypes = target.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
+    incomingAi.columns.foldLeft(incomingAi) { (df, c) =>
+      targetTypes.get(c.toLowerCase).fold(df) { dt =>
+        val in = df(c)
+        val (v, flags) = writeConversion(table, c, in, df.schema(c).dataType, dt,
+          lenient = ignoreMode)
+        if (flags.isEmpty && (v eq in)) df else df.withColumns((flags :+ (c -> v)).toMap)
       }
     }
+  }
+
+  /** One value's write conversion into `table`.`c` (stored type `dt`),
+    * the one INSERT's batch and UPDATE's row image both take (reference
+    * sql/types Convert on insert, rowexec/update.go:98
+    * convertDataAndWarn). Returns `raw` (of type `src`) converted — the
+    * `raw` object itself when it already has the stored type and nothing
+    * pads it — and the flags of its failures for settleWrite, each a
+    * flag column and the offending value's text on a failing row in
+    * `gate`:
+    *  - 1366: a conversion that fails (non-NULL in, NULL out; under
+    *    IGNORE or non-strict mode the type zero is stored —
+    *    insert_queries.go "INSERT IGNORE properly addresses data
+    *    conversion");
+    *  - 1264: a number outside the column's range, UNSIGNED and
+    *    MEDIUMINT bounds included, or too wide for a DECIMAL (strict);
+    *    under IGNORE or non-strict mode an integer clamps to the bound
+    *    (rowexec/insert.go ConvertRound + ErrValueOutOfRange);
+    *  - 1292 (strict): a string no MySQL date/time parse accepts (zero
+    *    dates are valid writes, stored as NULL).
+    * MySQL rounds fractional values into integral columns (Spark's cast
+    * truncates); strings take the MySQL-lenient date canonicalizer;
+    * booleans write '1'/'0' into strings; hex literals into numbers are
+    * the big-endian number their bytes spell; binary into a CHARACTER
+    * column must be valid utf8mb4 (Utf8BinToStr); YEAR windows two-digit
+    * years first; wide DECIMAL (p > 38) canonicalizes through
+    * WideDecCoerce; VECTOR decodes binary payloads as packed float32 and
+    * rejects bare strings; fixed BINARY(n) zero-pads to its width. */
+  private[graft] def writeConversion(table: String, c: String,
+      raw0: org.apache.spark.sql.Column, src0: org.apache.spark.sql.types.DataType,
+      dt: org.apache.spark.sql.types.DataType, lenient: Boolean,
+      gate: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true))
+      : (org.apache.spark.sql.Column, Seq[(String, org.apache.spark.sql.Column)]) = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import GraftBridge.{column, expression}
+    val key = (table, c.toLowerCase)
+    val (raw, src) =
+      if (yearCols(key)) (column(graft.functions.expressions.MySqlYearCast(
+        expression(raw0))).cast(IntegerType), IntegerType)
+      else (raw0, src0)
+    // a widening conversion (Cast.canUpCast) or a number into FLOAT or
+    // DOUBLE cannot fail, so it plants no flag; declared UNSIGNED and
+    // MEDIUMINT bounds are narrower than the stored type's
+    val canFail = !org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(src, dt) &&
+      !(src.isInstanceOf[NumericType] && (dt == FloatType || dt == DoubleType))
+    val bounds = unsignedBounds.get(key)
+      .orElse(if (textKindCols.get(key).contains("mediumint"))
+        Some((BigDecimal(-8388608), BigDecimal(8388607))) else None)
+      .orElse(integralBounds(dt).filter(_ => canFail)
+        .map { case (lo, hi) => (BigDecimal(lo), BigDecimal(hi)) })
+      .filter(_ => isNumericSource(src))
+    val temporal = src.isInstanceOf[StringType] &&
+      (dt == DateType || dt == TimestampType || dt == TimestampNTZType)
+    val casted = wideDecCols.get(key) match {
+      case Some((p, s)) =>
+        column(graft.functions.WideDecCoerce(expression(raw), p, s, !lenient))
+      case _ if src == dt => raw
+      case _ => (src, dt) match {
+        case (_, ArrayType(FloatType, _)) if vecDims.contains(key) => src match {
+          case BinaryType =>
+            column(graft.functions.vector.VecCoerce(expression(raw))).cast(dt)
+          case _: StringType => throw new IllegalArgumentException(
+            "value of type string cannot be converted to 'vector' type (use STRING_TO_VECTOR)")
+          case _ => raw.cast(dt)
+        }
+        case (BinaryType, _: NumericType) => conv(hex(raw), 16, 10).cast(dt)
+        case (BinaryType, _: StringType) => column(
+          graft.functions.expressions.Utf8BinToStr(expression(raw), c, !lenient)).cast(dt)
+        case (BooleanType, _: StringType) =>
+          when(raw === true, "1").when(raw === false, "0").cast(dt)
+        case (DoubleType | FloatType | _: DecimalType, _) if integralBounds(dt).isDefined =>
+          round(raw).cast(dt)
+        case _ if temporal => column(graft.functions.expressions.MySqlDateStrNorm(
+          expression(raw))).cast(dt)
+        case _ => raw.cast(dt)
+      }
+    }
+    val asDec = raw.cast(DecimalType(38, 0))
+    val outOfRange = bounds.map { case (lo, hi) =>
+      raw.isNotNull && asDec.isNotNull && (asDec < lit(lo.bigDecimal) || asDec > lit(hi.bigDecimal))
+    }
+    val failed = raw.isNotNull && casted.isNull
+    val zero = zeroValueLit(dt).filter(_ => canFail && !wideDecCols.contains(key) &&
+      !(src == BinaryType && dt.isInstanceOf[StringType]))
+    val decimalOverflow = dt.isInstanceOf[DecimalType] && !lenient &&
+      isNumericSource(src) && !src.isInstanceOf[StringType]
+    def flag(code: Int, cond: org.apache.spark.sql.Column) =
+      s"__w${code}_${c}__" -> when(gate && cond, raw.cast(StringType))
+    val flags =
+      outOfRange.map(flag(1264, _)).toSeq ++
+        zero.map(_ => flag(if (decimalOverflow) 1264 else 1366,
+          if (outOfRange.isDefined) failed && asDec.isNull else failed)) ++
+        Some(flag(1292, failed && !raw.rlike("^[0\\-:./ ]+$"))).filter(_ => temporal && !lenient)
+    val value = (outOfRange, zero) match {
+      case _ if !lenient => casted
+      case (Some(oor), z) =>
+        val (lo, hi) = bounds.get
+        val clamped = when(oor, when(asDec > lit(hi.bigDecimal), lit(hi.bigDecimal))
+          .otherwise(lit(lo.bigDecimal)).cast(dt))
+        z.fold(clamped.otherwise(casted))(z =>
+          clamped.when(failed && asDec.isNull, z).otherwise(casted))
+      case (None, Some(z)) => when(failed, z).otherwise(casted)
+      case _ => casted
+    }
+    binPadLens.get(key).filter(_ => dt == BinaryType)
+      .fold(value)(n => rpad(value.cast(BinaryType), n, Array[Byte](0))) -> flags
   }
 
   /** Declared fixed BINARY(n) widths — writes zero-pad to n bytes. */
@@ -3718,68 +3639,41 @@ class Engine(val spark: SparkSession) {
   /** Child-side enforcement: every incoming row whose FK columns are all
     * non-NULL must match a parent row (MySQL error 1452). One anti-join
     * per declared FK over the batch. */
+  /** Child-side FK validation of a write (MySQL error 1452): the rows of
+    * `newDf` that fkChildViolations finds — every row of an insert batch,
+    * or, for an UPDATE, the rows whose FK columns changed. */
   private[graft] def validateForeignKeysChild(table: String,
-                                              df: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.col
-    if (!fkChecksEnabled) return
-    foreignKeys.toSeq.filter(_.child == table).foreach { fk =>
-      val parentBase = spark.table(fk.parent)
-        .select(fk.parentCols.map(c => col(s"`$c`")): _*)
-      // a SELF-referential FK also sees the incoming batch as parent
-      // rows (MySQL validates row-by-row, so a batch can reference keys
-      // it inserts itself — foreign_key_queries.go self-referential
-      // setup scripts)
-      val parentAll =
-        if (fk.parent == table)
-          parentBase.unionByName(
-            df.select(fk.parentCols.map(c => col(s"`$c`")): _*))
-        else parentBase
-      val parent = parentAll.distinct()
-        .toDF(fk.parentCols.map(c => s"__fk_$c"): _*)
-      val cond = fk.childCols.zip(fk.parentCols).map { case (cc, pc) =>
-        fkPairEq(fk, cc, pc, s"__fk_$pc")
-      }.reduce(_ && _)
-      val nonNull = fk.childCols.map(c => col(s"`$c`").isNotNull)
-        .reduce(_ && _)
-      val bad = df.filter(nonNull).join(parent, cond, "left_anti")
-        .limit(1).count()
-      if (bad > 0) throw new IllegalArgumentException(
-        s"Cannot add or update a child row: a foreign key constraint " +
-        s"fails (`${fk.child}`, CONSTRAINT `${fk.name}`) (MySQL error 1452)")
-    }
-  }
-
-  /** Row-triggered child-side FK validation for UPDATE: only rows whose
-    * FK columns actually CHANGED re-validate — rows that violated while
-    * FOREIGN_KEY_CHECKS=0 stay untouched by no-op updates
-    * (foreign_key_queries.go "Delayed foreign key resolution: update").
-    * Both frames carry an aligned `__rid__`. */
-  private[graft] def validateForeignKeysChildChanged(table: String,
-      oldDf: DataFrame, newDf: DataFrame): Unit =
+      oldDf: Option[DataFrame], newDf: DataFrame): Unit =
     fkChildViolations(table, oldDf, newDf).foreach { case (fk, bad) =>
       if (bad.limit(1).count() > 0) throw new IllegalArgumentException(
         s"Cannot add or update a child row: a foreign key constraint " +
         s"fails (`${fk.child}`, CONSTRAINT `${fk.name}`) (MySQL error 1452)")
     }
 
-  /** Per declared FK of `table`, the rows of `newDf` whose columns of
-    * that FK changed from `oldDf` and match no parent row — an unrelated
-    * column's update must not resurface a pre-existing violation on
-    * another FK ("partial foreign key update"). None while
+  /** Per declared FK of `table`, the rows of `newDf` that match no parent
+    * row. For an UPDATE (`oldDf`, aligned on `__rid__`), only rows whose
+    * columns of that FK changed: an unrelated column's update must not
+    * resurface a pre-existing violation on another FK ("partial foreign
+    * key update"), nor a row that violated while FOREIGN_KEY_CHECKS=0
+    * ("Delayed foreign key resolution: update"). A SELF-referential FK
+    * also sees `newDf` as parent rows (MySQL validates row by row, so a
+    * batch can reference keys it writes itself). None while
     * FOREIGN_KEY_CHECKS=0. */
-  private[graft] def fkChildViolations(table: String, oldDf: DataFrame,
+  private[graft] def fkChildViolations(table: String, oldDf: Option[DataFrame],
       newDf: DataFrame): Seq[(ForeignKey, DataFrame)] = {
     import org.apache.spark.sql.functions.col
     if (!fkChecksEnabled) return Seq.empty
     foreignKeys.toSeq.filter(_.child == table).map { fk =>
       val fkCols = fk.childCols.map(_.toLowerCase).distinct
-      val oldKeyed = oldDf.select(
-        (col("__rid__").as("__rid2__") +:
-          fkCols.map(c => col(s"`$c`").as(s"__old_$c"))): _*)
-      val changed = newDf.join(oldKeyed, col("__rid__") === col("__rid2__"))
-        .filter(fkCols.map(c =>
-          !(col(s"`$c`") <=> col(s"`__old_$c`"))).reduce(_ || _))
-        .select(newDf.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+      val changed = oldDf.fold(newDf) { o =>
+        val oldKeyed = o.select(
+          (col("__rid__").as("__rid2__") +:
+            fkCols.map(c => col(s"`$c`").as(s"__old_$c"))): _*)
+        newDf.join(oldKeyed, col("__rid__") === col("__rid2__"))
+          .filter(fkCols.map(c =>
+            !(col(s"`$c`") <=> col(s"`__old_$c`"))).reduce(_ || _))
+          .select(newDf.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+      }
       val parentBase = spark.table(fk.parent)
         .select(fk.parentCols.map(c => col(s"`$c`")): _*)
       val parentAll =
@@ -4595,78 +4489,6 @@ class Engine(val spark: SparkSession) {
         s"(MySQL error 1118: Row size too large)")
   }
 
-  /** Strict-mode range enforcement on the PRE-cast batch: a numeric
-    * value outside an integral column's range is MySQL error 1264
-    * (reference rowexec/insert.go ErrValueOutOfRange on the non-IGNORE
-    * path) — checked before coerceAndFill's cast can silently wrap it.
-    * All integral columns check in ONE filter + limit(1) job. */
-  private[graft] def validateIntRange(table: String, batch: DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DecimalType
-    val target = spark.table(table)
-    val present = batch.columns.map(c => c.toLowerCase -> c).toMap
-    val checks = target.schema.fields.toSeq.flatMap { f =>
-      // a declared UNSIGNED column overrides the storage type's signed
-      // bounds (tinyint unsigned stores as ShortType but caps at 255);
-      // declared MEDIUMINT (24-bit, stored as IntegerType — Spark has
-      // no mediumint) narrows likewise (script_queries.go "int with
-      // auto_increment": 99999999 into mediumint is 1264)
-      val isMediumint = textKindCols.get((table, f.name.toLowerCase))
-        .contains("mediumint")
-      val bounds = unsignedBounds.get((table, f.name.toLowerCase))
-        .map { case (lo, hi) => (lo, hi) }
-        .orElse(if (isMediumint)
-          Some((BigDecimal(-8388608), BigDecimal(8388607))) else None)
-        .orElse(integralBounds(f.dataType).map { case (lo, hi) =>
-          (BigDecimal(lo), BigDecimal(hi)) })
-      bounds.flatMap { case (lo, hi) =>
-        present.get(f.name.toLowerCase).flatMap { name =>
-          val src = batch.schema(name).dataType
-          val declared =
-            unsignedBounds.contains((table, f.name.toLowerCase)) ||
-              isMediumint
-          if ((src == f.dataType && !declared) || !isNumericSource(src)) None
-          else {
-            val asDec = col(s"`$name`").cast(DecimalType(38, 0))
-            Some(name ->
-              (asDec.isNotNull &&
-                (asDec < lit(lo.underlying) || asDec > lit(hi.underlying))))
-          }
-        }
-      }
-    }
-    if (checks.isEmpty) return
-    val bad = batch.filter(checks.map(_._2).reduce(_ || _))
-      .select(checks.map { case (n, c) => c.as(n) }.toIndexedSeq: _*)
-      .limit(1).collect()
-    bad.headOption.foreach { r =>
-      val i = checks.indices.find(i => !r.isNullAt(i) && r.getBoolean(i))
-        .getOrElse(0)
-      throw new IllegalArgumentException(
-        s"Out of range value for column '${checks(i)._1}' " +
-        s"(MySQL error 1264)")
-    }
-  }
-
-  /** Plain-INSERT length enforcement: any value longer than the declared
-    * CHAR/VARCHAR limit is the reference's ErrLengthBeyondLimit
-    * (strings.go:465; MySQL strict 1406 Data too long). */
-  private[graft] def validateCharLimits(table: String, df: DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
-    val present = df.columns.map(c => c.toLowerCase -> c).toMap
-    charLimits.foreach {
-      case ((t, cLower), n) if t == table && present.contains(cLower) =>
-        val c = col(s"`${present(cLower)}`")
-        val bad = df.filter(c.isNotNull && length(c.cast("string")) > n)
-          .select(c.cast("string")).limit(1).collect()
-        if (bad.nonEmpty)
-          throw new IllegalArgumentException(
-            s"string '${bad(0).getString(0)}' is too large for column " +
-            s"'${present(cLower)}' (MySQL error 1406)")
-      case _ =>
-    }
-  }
-
   /** The MySQL zero value a column falls back to under IGNORE when a
     * conversion fails or NULL lands in a NOT NULL column
     * (sql/rowexec/update.go:98 convertDataAndWarn -> Type.Zero()).
@@ -4688,117 +4510,98 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** IGNORE-mode write coercions (reference sql/rowexec/insert.go /
-    * update.go ignore paths): instead of erroring, the row stores a
-    * coerced value and the statement accumulates a warning —
-    *   - ENUM value outside the vocabulary -> '' (1265 Data truncated)
-    *   - SET elements outside the vocabulary -> dropped (1265)
-    *   - NULL into a NOT NULL / primary-key column -> type zero (1048)
-    *   - CHAR/VARCHAR over the declared limit -> truncated (1105, the
-    *     reference surfaces ErrLengthBeyondLimit as ERUnknownError)
-    * plus pickup of `__cvt_*__` conversion-failure flags planted by the
-    * cast step (1366 ERTruncatedWrongValueForField). Each coercion adds
-    * a boolean flag column; `emitFlagWarnings` turns the flags into
-    * counted warnings in ONE aggregate pass. `gateCol`: restrict
-    * coercion and counting to rows the statement actually touches
-    * (UPDATE ... WHERE). */
-  private[graft] def ignoreWriteCoercions(table: String, df0: DataFrame,
-      gateCol: Option[String] = None)
-      : (DataFrame, Seq[(String, Int, String)]) = {
+  /** Settle the flags a write image carries: writeConversion's, and
+    * those planted here on the rows `gateCol` selects — NULL into a NOT
+    * NULL or key column the statement writes (`written`, lower-case),
+    * 1048; a CHAR/VARCHAR value over its declared length, 1406; and under
+    * IGNORE or non-strict mode an ENUM/SET value outside its vocabulary,
+    * 1265. Strict, the first failure (conversions, then ranges, NULLs
+    * and lengths) is MySQL's error. Otherwise each value coerces — ENUM
+    * to '', SET elements dropped, NULL to the type zero, long strings
+    * truncated — and each flag becomes its warning, the length one as
+    * 1105 like the reference's ErrLengthBeyondLimit (reference
+    * rowexec/insert.go and update.go ignore paths). One aggregate either
+    * way; the flags are dropped. */
+  private[graft] def settleWrite(table: String, image: DataFrame, strict: Boolean,
+      gateCol: Option[String] = None, written: Set[String] = Set.empty): DataFrame = {
     import org.apache.spark.sql.functions._
     val gate = gateCol.map(g => col(s"`$g`")).getOrElse(lit(true))
-    var df = df0
-    val warns = Seq.newBuilder[(String, Int, String)]
-    // conversion-failure flags already planted by the cast step
-    df0.columns.filter(c => c.startsWith("__cvt_") && c.endsWith("__"))
-      .foreach { f =>
-        val c = f.stripPrefix("__cvt_").stripSuffix("__")
-        warns += ((f, 1366,
-          s"Incorrect value for column '$c': stored the type zero value"))
-      }
-    // out-of-range clamp flags planted by the cast step (reference
-    // ErrValueOutOfRange -> MySQL 1264 on non-strict numeric writes)
-    df0.columns.filter(c => c.startsWith("__oor_") && c.endsWith("__"))
-      .foreach { f =>
-        val c = f.stripPrefix("__oor_").stripSuffix("__")
-        warns += ((f, 1264, s"Out of range value for column '$c'"))
-      }
+    var df = image
     val present = df.columns.map(c => c.toLowerCase -> c).toMap
-    // ENUM truncate-to-'' / SET element drop, flagged
-    columnVocab.toSeq.foreach {
-      case ((t, cLower), (isSet, vocab)) if t == table &&
-          present.contains(cLower) =>
+    def flag(code: Int, name: String, cond: org.apache.spark.sql.Column,
+             value: org.apache.spark.sql.Column, coerced: => org.apache.spark.sql.Column): Unit = {
+      val f = s"__w${code}_${name}__"
+      df = df.withColumn(f, when(gate && cond, value.cast("string")))
+      if (!strict) df = df.withColumn(name,
+        when(col(s"`$f`").isNotNull, coerced).otherwise(col(s"`$name`")))
+    }
+    if (!strict) columnVocab.toSeq.foreach {
+      case ((t, cLower), (isSet, vocab)) if t == table && present.contains(cLower) =>
         val ci = vocabCi((t, cLower))
         val name = present(cLower)
-        val dtv = df.schema(name).dataType
         val c = col(s"`$name`")
         val cp = c.cast(org.apache.spark.sql.types.StringType)
-        val flag = s"__vt_${name}__"
-        if (isSet) {
-          val badElems = size(filter(split(cp, ","),
-            e => e =!= lit("") && !vocabMember(e, vocab, ci))) > 0
-          df = df.withColumn(flag, gate && c.isNotNull && badElems)
-            .withColumn(name, when(col(s"`$flag`"), array_join(
-              filter(split(cp, ","), e => vocabMember(e, vocab, ci)), ","))
-              .otherwise(c).cast(dtv))
-        } else {
-          df = df.withColumn(flag,
-              gate && c.isNotNull && !vocabMember(c, vocab, ci))
-            .withColumn(name,
-              when(col(s"`$flag`"), lit("")).otherwise(c))
-        }
-        warns += ((flag, 1265, s"Data truncated for column '$name'"))
+        if (isSet) flag(1265, name, c.isNotNull && size(filter(split(cp, ","),
+            e => e =!= lit("") && !vocabMember(e, vocab, ci))) > 0, c,
+          array_join(filter(split(cp, ","), e => vocabMember(e, vocab, ci)), ",")
+            .cast(df.schema(name).dataType))
+        else flag(1265, name, c.isNotNull && !vocabMember(c, vocab, ci), c, lit(""))
       case _ =>
     }
-    // NULL into NOT NULL: declared NOT NULL plus implicit PK NOT NULL
-    val target = spark.table(table)
-    val pkCols = tableKeys.getOrElse(table, Seq.empty)
-      .map(_.toLowerCase).toSet
-    target.schema.fields
-      .filter(f => !f.nullable || pkCols.contains(f.name.toLowerCase))
-      .foreach { f =>
-        present.get(f.name.toLowerCase).foreach { name =>
-          zeroValueLit(f.dataType).foreach { z =>
-            val c = col(s"`$name`")
-            val flag = s"__nn_${name}__"
-            df = df.withColumn(flag, gate && c.isNull)
-              .withColumn(name, when(col(s"`$flag`"), z).otherwise(c))
-            warns += ((flag, 1048, s"Column '$name' cannot be null"))
-          }
+    val pk = tableKeys.getOrElse(table, Seq.empty).map(_.toLowerCase).toSet
+    spark.table(table).schema.fields.foreach { f =>
+      val lo = f.name.toLowerCase
+      if (written(lo) && (notNullCols((table, lo)) || pk(lo) || (!strict && !f.nullable)))
+        present.get(lo).foreach { name =>
+          val zero = zeroValueLit(f.dataType)
+          if (strict || zero.isDefined)
+            flag(1048, name, col(s"`$name`").isNull, lit("NULL"), zero.get)
         }
-      }
-    // CHAR/VARCHAR over-length truncation
+    }
     charLimits.toSeq.foreach {
       case ((t, cLower), n) if t == table && present.contains(cLower) =>
         val name = present(cLower)
-        val c = col(s"`$name`")
-        val flag = s"__cl_${name}__"
-        df = df.withColumn(flag,
-            gate && c.isNotNull && length(c.cast("string")) > n)
-          .withColumn(name,
-            when(col(s"`$flag`"), substring(c.cast("string"), 1, n))
-              .otherwise(c))
-        warns += ((flag, 1105, s"string is too large for column '$name'"))
+        val c = col(s"`$name`").cast("string")
+        flag(1406, name, c.isNotNull && length(c) > n, c, substring(c, 1, n))
       case _ =>
     }
-    (df, warns.result())
-  }
-
-  /** Count every flag column in one aggregate, emit the warnings, drop
-    * the flags. One Spark job regardless of how many coercions fired. */
-  private[graft] def emitFlagWarnings(df: DataFrame,
-      warns: Seq[(String, Int, String)]): DataFrame = {
-    if (warns.isEmpty) return df
-    import org.apache.spark.sql.functions._
-    val aggs = warns.map { case (f, _, _) =>
-      sum(col(s"`$f`").cast("long")).as(f)
+    val Flag = """__w(\d{4})_(.+)__""".r
+    val rank = Map(1366 -> 0, 1292 -> 0, 1264 -> 1, 1265 -> 2, 1048 -> 3, 1406 -> 4)
+    val flags = df.columns.toSeq.collect { case f @ Flag(code, c) => (f, code.toInt, c) }
+      .sortBy(f => rank(f._2))
+    if (flags.isEmpty) return df
+    val aggs = flags.map { case (f, _, _) =>
+      if (strict) max(col(s"`$f`")) else count(col(s"`$f`")) }
+    val row = localRows(df.agg(aggs.head, aggs.tail: _*)).head
+    flags.zipWithIndex.foreach { case ((_, code, c), i) =>
+      if (strict && !row.isNullAt(i)) {
+        val v = row.getUTF8String(i).toString
+        throw new IllegalArgumentException(code match {
+          case 1366 => s"Incorrect value: '$v' for column '$c' (MySQL error 1366)"
+          case 1292 =>
+            val kind = if (image.schema(c).dataType == org.apache.spark.sql.types.DateType) "date"
+              else "datetime"
+            s"Incorrect $kind value: '$v' (MySQL 1292)"
+          case 1264 => image.schema(c).dataType match {
+            case d: org.apache.spark.sql.types.DecimalType =>
+              "Out of range value for column of Decimal type " +
+                s"('$c' DECIMAL(${d.precision},${d.scale}) cannot hold $v — MySQL error 1264)"
+            case _ => s"Out of range value for column '$c' (MySQL error 1264)"
+          }
+          case 1048 => s"Column '$c' cannot be null (MySQL error 1048)"
+          case _ => s"string '$v' is too large for column '$c' (MySQL error 1406)"
+        })
+      }
+      if (!strict && row.getLong(i) > 0) code match {
+        case 1366 => warnN(row.getLong(i), 1366,
+          s"Incorrect value for column '$c': stored the type zero value")
+        case 1264 => warnN(row.getLong(i), 1264, s"Out of range value for column '$c'")
+        case 1265 => warnN(row.getLong(i), 1265, s"Data truncated for column '$c'")
+        case 1048 => warnN(row.getLong(i), 1048, s"Column '$c' cannot be null")
+        case _ => warnN(row.getLong(i), 1105, s"string is too large for column '$c'")
+      }
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    warns.zipWithIndex.foreach { case ((_, code, msg), i) =>
-      val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-      if (n > 0) warnN(n, code, msg)
-    }
-    df.drop(warns.map(_._1): _*)
+    df.drop(flags.map(_._1): _*)
   }
 
   // columns whose declared collation is case-insensitive (*_ci): member
@@ -5105,8 +4908,9 @@ class Engine(val spark: SparkSession) {
     // cast, like the reference's column coercion on load. A file with
     // FEWER columns than the table NULL-fills the tail (MySQL warning
     // 1261 "Row N doesn't contain data for all columns"); a file with
-    // MORE columns truncates the extras (warning 1262). The load always
-    // APPENDS through insertDf — it never replaces the table.
+    // MORE columns truncates the extras (warning 1262). The load
+    // appends through insertDf, or replaceRows in REPLACE mode — it never
+    // replaces the table.
     val target = scala.util.Try(spark.table(table)).toOption
     // explicit (col | @var, …) item list: fields bind POSITIONALLY to
     // the items; @vars capture their field for the SET clause
@@ -5218,37 +5022,9 @@ class Engine(val spark: SparkSession) {
       case Some(_) =>
         mode match {
           case "REPLACE" =>
-            // REPLACE semantics: rows sharing the declared key drop
-            // first, then the batch inserts (load_queries.go "Load data
-            // can replace row with existing primary key"); affected
-            // counts both, like REPLACE INTO. The delete is committed
-            // before insertDf so its uniqueness probes see the post-
-            // delete table, but the statement must stay atomic: if any
-            // insert-phase validation (CHECK/FK/NOT NULL/vector-dim)
-            // throws, the pre-statement snapshot is restored — `t`
-            // captures the view's plan before the re-point, so the
-            // rollback is a cheap view re-point, not a data copy.
-            val keys = tableKeys.getOrElse(table, Seq.empty)
-            var deleted = 0L
-            val snapshot = spark.table(table)
-            if (keys.nonEmpty) {
-              import org.apache.spark.sql.functions.col
-              val keyRows = coerced
-                .select(keys.map(k => col(s"`$k`")).toIndexedSeq: _*)
-                .distinct()
-              deleted = snapshot.join(keyRows, keys.toIndexedSeq, "left_semi").count()
-              replaceTable(table,
-                snapshot.join(keyRows, keys.toIndexedSeq, "left_anti"),
-                bumpDepth = true)
-            }
-            try deleted + insertDf(table, coerced,
-              fillMissing = shaped.nonEmpty)
-            catch {
-              case ex: Throwable =>
-                if (keys.nonEmpty)
-                  replaceTable(table, snapshot, bumpDepth = false)
-                throw ex
-            }
+            // REPLACE INTO's semantics (load_queries.go "Load data can
+            // replace row with existing primary key")
+            replaceRows(table, coerced, fillMissing = shaped.nonEmpty)
           case "IGNORE" =>
             insertDf(table, coerced, fillMissing = shaped.nonEmpty,
               ignoreDups = true)

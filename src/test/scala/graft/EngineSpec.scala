@@ -290,6 +290,30 @@ class EngineSpec extends AnyFunSuite {
     assert(named == positional && named > 0)
   }
 
+  test("queryPrepared gives the text form's result: MySQL comparisons, LIMIT markers and DML") {
+    val e = new Engine(spark.newSession())
+    e.runScript(
+      """CREATE TABLE ps_t (id INT PRIMARY KEY, i INT, d DATE, s VARCHAR(10));
+        |INSERT INTO ps_t VALUES (1, 1, '2019-12-31', '3x'), (2, 2, '2020-01-01', 'y'),
+        |  (3, 3, '2020-01-02', 'z')""".stripMargin)
+    def count(df: org.apache.spark.sql.DataFrame): Long = df.collect()(0).getLong(0)
+    Seq(
+      ("SELECT COUNT(*) FROM ps_t WHERE i - ?", Seq[Any](1), "SELECT COUNT(*) FROM ps_t WHERE i - 1", 2L),
+      ("SELECT COUNT(*) FROM ps_t WHERE d = ?", Seq[Any](20191231),
+        "SELECT COUNT(*) FROM ps_t WHERE d = 20191231", 1L),
+      ("SELECT COUNT(*) FROM ps_t WHERE s = ?", Seq[Any](3), "SELECT COUNT(*) FROM ps_t WHERE s = 3", 1L)
+    ).foreach { case (ps, params, text, want) =>
+      assert(count(e.query(text)) == want, text)
+      assert(count(e.queryPrepared(ps, params)) == want, ps)
+    }
+    assert(count(e.queryPrepared("SELECT COUNT(*) FROM ps_t WHERE i - :k AND s <> :s",
+      Map("k" -> 1, "s" -> "it's"))) == 2L)
+    assert(e.queryPrepared("SELECT id FROM ps_t ORDER BY id LIMIT ?, ?", Seq(1, 2))
+      .collect().map(_.getInt(0)).toSeq == Seq(2, 3))
+    assert(count(e.queryPrepared("UPDATE ps_t SET i = ? WHERE id = ?", Seq(10, 1))) == 1L)
+    assert(e.query("SELECT i FROM ps_t WHERE id = 1").collect()(0).getInt(0) == 10)
+  }
+
   test("SQL-text PREPARE / EXECUTE / DEALLOCATE (prepare.go surface)") {
     engine.query(
       "PREPARE q1 FROM 'SELECT count(*) AS n FROM region WHERE r_regionkey < ?'")
@@ -1098,6 +1122,24 @@ class EngineSpec extends AnyFunSuite {
     ).map(_.collect()(0).getLong(0)))
     assert(counts == Seq(1L, 1L, 1L), "premise: the keys are present")
     assert(compiles == 0L, s"writes by fresh key literals compiled $compiles classes")
+  }
+
+  test("DELETE then INSERT of a fresh key on a stored generation compile no class and run no job") {
+    val (e, _, _) = storedOrders("insert_compile_free")
+    val k = rowsOf(e, "SELECT o_orderkey FROM insert_compile_free ORDER BY o_orderkey").map(_.head)
+    // oltp_mix's write pair: the INSERT puts the deleted key back
+    def cycle(i: Int): Seq[Long] = Seq(
+      s"DELETE FROM insert_compile_free WHERE o_orderkey = ${k(i)}",
+      s"INSERT INTO insert_compile_free VALUES (${k(i)}, ${i + 7}, ${1000 + i}.25, '$i-LOW')"
+    ).map(e.query(_).collect()(0).getLong(0))
+    // the first statement of each shape may compile what all keys share
+    cycle(20)
+    val ((counts, jobs), compiles) = Compiles.count(Jobs.count(e.spark)(cycle(30) ++ cycle(31)))
+    assert(counts == Seq(1L, 1L, 1L, 1L), "premise: the keys are present")
+    assert(compiles == 0L, s"DELETE and INSERT by fresh key literals compiled $compiles classes")
+    assert(jobs == 0, s"DELETE and INSERT by fresh key literals ran $jobs jobs")
+    assert(rowsOf(e, s"SELECT o_custkey, o_orderpriority FROM insert_compile_free " +
+      s"WHERE o_orderkey = ${k(31)}") == Seq(Seq(38L, "31-LOW")))
   }
 
   test("point, BETWEEN, IN-list and LIKE reads by fresh literals compile no class and run no job") {
