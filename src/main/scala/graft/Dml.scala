@@ -3933,14 +3933,18 @@ object Dml {
     }
   }
 
+  /** The table's BEFORE triggers on `event` (INSERT, UPDATE, DELETE). */
+  private def beforeTriggers(e: Engine, table: String, event: String): Seq[e.Trigger] =
+    e.triggers.values.toSeq.filter(t =>
+      t.table == table && t.timing == "BEFORE" && t.event == event)
+
   /** Fold the table's BEFORE UPDATE trigger layers over the
     * post-assignment row image, gated to the matched rows. Declaration
     * order; each layer sees the values the previous layers produced
     * (reference rowexec trigger iteration). */
   private def applyBeforeUpdateTriggers(e: Engine, table: String,
       df: DataFrame, gate: org.apache.spark.sql.Column): DataFrame = {
-    val trgs = e.triggers.values.toSeq.filter(t =>
-      t.table == table && t.timing == "BEFORE" && t.event == "UPDATE")
+    val trgs = beforeTriggers(e, table, "UPDATE")
     if (trgs.isEmpty) return df
     val actual = df.columns.map(c => c.toLowerCase -> c).toMap
     trgs.foldLeft(df) { (d, trg) =>
@@ -4117,8 +4121,7 @@ object Dml {
         (schema.fieldNames.find(_.equalsIgnoreCase(cl)).get, p)
     }
     // the columns the statement writes, whose NULLs settle checks
-    private val written = (assigned ++ e.triggers.values.toSeq
-      .filter(t => t.table == table && t.timing == "BEFORE" && t.event == "UPDATE")
+    private val written = (assigned ++ beforeTriggers(e, table, "UPDATE")
       .flatMap(_.actions.map(_._2))).map(_.toLowerCase).toSet
 
     /** The image of `base` (the table's columns and `__rid__`): rows

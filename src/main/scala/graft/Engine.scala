@@ -328,6 +328,28 @@ object Engine {
   private[graft] final case class InsertBatch(table: String, rows: DataFrame,
       provided: Set[String], fillMissing: Boolean, ignore: Boolean)
 
+  /** The most rows an IGNORE key visit (`Engine.ignoreKeySkips`) brings
+    * to the driver from one frame: the visit is row by row, an OLTP
+    * shape, not a 100 TB one. */
+  private[graft] val DriverVisitRows = 100000
+
+  /** A key value as the driver compares it: a BINARY or VARBINARY value
+    * arrives as a byte array, which compares and hashes by reference, so
+    * it is wrapped to compare by its bytes. */
+  private[graft] def keyValue(v: Any): Any = v match {
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case other => other
+  }
+
+  /** A key value as a 1062 message quotes it: a binary value byte by
+    * byte, printable ASCII as itself and any other byte as \xHH. */
+  private[graft] def entryText(v: Any): String = v match {
+    case b: java.nio.ByteBuffer => entryText(b.array)
+    case b: Array[Byte] => b.map(x =>
+      if (x >= 0x20 && x < 0x7f) x.toChar.toString else f"\\x${x & 0xff}%02X").mkString
+    case other => String.valueOf(other)
+  }
+
   /** Exact JVM-global registry of information_schema scaffolding view
     * names (the views live in the shared SparkSession): catalog listings
     * hide these by MEMBERSHIP, never by name prefix, so a user table
@@ -2100,12 +2122,14 @@ class Engine(val spark: SparkSession) {
       } else {
         var rows = batch.rows.withColumn("__rid__", monotonically_increasing_id())
           .localCheckpoint()
-        def skip(rids: Set[Long]): Unit =
-          if (rids.nonEmpty) rows = rows.filter(!col("__rid__").isin(rids.toSeq: _*))
+        // the failing rows still kept are counted and dropped where they
+        // lie; only the key visit brings rows to the driver
         def failing(bad: DataFrame, code: Int, msg: String): Unit = {
-          val rids = bad.select("__rid__").collect().map(_.getLong(0)).toSet
-          if (rids.nonEmpty) warnN(rids.size, code, msg)
-          skip(rids)
+          val n = rows.join(bad.select("__rid__"), Seq("__rid__"), "left_semi").count()
+          if (n > 0) {
+            warnN(n, code, msg)
+            rows = rows.join(bad.select("__rid__"), Seq("__rid__"), "left_anti")
+          }
         }
         checkConstraints.toSeq.collect { case (t, _, ex, true) if t == table => ex }
           .foreach { ex =>
@@ -2115,7 +2139,8 @@ class Engine(val spark: SparkSession) {
         fkChildViolations(table, None, rows).foreach { case (_, bad) =>
           failing(bad, 1452, "Cannot add or update a child row: a foreign key constraint fails")
         }
-        skip(ignoreKeySkips(table, against, None, rows))
+        val skipped = ignoreKeySkips(table, against, None, rows)
+        if (skipped.nonEmpty) rows = rows.filter(!col("__rid__").isin(skipped.toSeq: _*))
         rows.drop("__rid__")
       }
     () => {
@@ -2191,28 +2216,23 @@ class Engine(val spark: SparkSession) {
     if (keys.isEmpty) return checkInsert(batch)()
     val rows = batch.rows.withColumn("__rid__", monotonically_increasing_id())
       .localCheckpoint()
-    val keyCols = keys.flatMap(_._2).distinct
-    val seen = keys.map(_ => scala.collection.mutable.Set.empty[Seq[Any]])
-    // from the last row back: a row is replaced by any later row sharing
-    // one of its keys (a NULL UNIQUE key shares nothing)
-    val replaced = rows.select(col("__rid__") +: keyCols.map(k => col(s"`$k`")): _*)
-      .orderBy("__rid__").collect().reverseIterator.filter { r =>
-        val tuples = keys.map { case (_, ks, nullExempt) =>
-          Some(ks.map(k => r.get(1 + keyCols.indexOf(k))))
-            .filterNot(t => nullExempt && t.contains(null))
-        }
-        val hit = tuples.zip(seen).exists { case (t, s) => t.exists(s) }
-        tuples.zip(seen).foreach { case (t, s) => s ++= t }
-        hit
-      }.map(_.getLong(0)).toSeq
+    // a row is replaced by any later row sharing one of its keys (a NULL
+    // UNIQUE key shares nothing), whether or not that row is replaced in
+    // turn: one window per key, no visit in order
+    val replaced = keys.map { case (_, ks, nullExempt) =>
+      val kcols = ks.map(k => col(s"`$k`"))
+      val r = if (nullExempt) rows.filter(kcols.map(_.isNotNull).reduce(_ && _)) else rows
+      r.withColumn("__last__", max("__rid__").over(
+          org.apache.spark.sql.expressions.Window.partitionBy(kcols: _*)))
+        .filter(col("__rid__") < col("__last__")).select("__rid__")
+    }.reduce(_ union _)
     val current = spark.table(table)
     val kept = keys.foldLeft(current) { case (d, (_, ks, _)) =>
       val hit = rows.select(ks.map(k => col(s"`$k`").as(s"__k_$k")): _*)
       d.join(hit, ks.map(k => d(s"`$k`") === hit(s"`__k_$k`")).reduce(_ && _), "left_anti")
     }
     val deleted = current.count() - kept.count()
-    val survivors = if (replaced.isEmpty) rows
-      else rows.filter(!col("__rid__").isin(replaced: _*))
+    val survivors = rows.join(replaced, Seq("__rid__"), "left_anti")
     val write = checkInsert(batch.copy(rows = survivors.drop("__rid__")), Some(kept))
     val finalKept = enforceParentDelete(table, kept)
     if (deleted > 0) replaceTable(table, finalKept, bumpDepth = true)
@@ -2250,7 +2270,7 @@ class Engine(val spark: SparkSession) {
 
   private def duplicateEntry(table: String, keyName: String,
       r: org.apache.spark.sql.Row, width: Int): Nothing = {
-    val entry = (0 until width).map(i => String.valueOf(r.get(i))).mkString("-")
+    val entry = (0 until width).map(i => Engine.entryText(r.get(i))).mkString("-")
     throw new IllegalArgumentException(
       s"Duplicate entry '$entry' for key '$table.$keyName' (MySQL error 1062)")
   }
@@ -2351,9 +2371,14 @@ class Engine(val spark: SparkSession) {
     * are visited in storage order (the key order Spark sorts by, which
     * replaceTable keeps a keyed table in). Without `oldDf` the rows are
     * new rows visited in `__rid__` (batch) order. The visit is
-    * sequential (each decision feeds the next), so it runs on the driver
-    * over the statement's rows and the stored rows that share a key with
-    * one of them. Returns the `__rid__`s of the skipped rows. */
+    * sequential (each decision feeds the next), so it runs on the driver,
+    * over the rows that can take part in a collision only: for an UPDATE
+    * the rows whose key changes (a row that keeps its keys neither
+    * collides nor frees a key), for new rows those holding a key another
+    * new row or a stored row holds. Those rows, and the stored rows that
+    * share a key with one of them, are bounded by `Engine.DriverVisitRows`,
+    * past which the statement fails before it writes. Returns the
+    * `__rid__`s of the skipped rows. */
   private[graft] def ignoreKeySkips(table: String, stored: DataFrame,
       oldDf: Option[DataFrame], newDf: DataFrame): Set[Long] = {
     import org.apache.spark.sql.functions.col
@@ -2361,12 +2386,38 @@ class Engine(val spark: SparkSession) {
       .filter(_._2.forall(k => newDf.columns.exists(_.equalsIgnoreCase(k))))
     if (declared.isEmpty) return Set.empty
     val keyCols = declared.flatMap(_._2).distinct
-    val keySel = keyCols.map(c => col(s"`$c`"))
+    def cols(keys: Seq[String]) = keys.map(k => col(s"`$k`"))
+    val newKeys = newDf.select(col("__rid__") +: cols(keyCols): _*)
+    val candidates = oldDf match {
+      case Some(o) =>
+        val oldKeys = o.select(col("__rid__") +: keyCols.map(k => col(s"`$k`").as(s"__o_$k")): _*)
+        newKeys.join(oldKeys, "__rid__")
+          .filter(keyCols.map(k => !(col(s"`$k`") <=> col(s"`__o_$k`"))).reduce(_ || _))
+          .select(newKeys.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+      case None =>
+        declared.map { case (_, keys, nullExempt) =>
+          val mine = newDf.select(cols(keys): _*)
+          val held = if (nullExempt) mine.filter(cols(keys).map(_.isNotNull).reduce(_ && _)) else mine
+          val shared = held.union(stored.join(held.distinct(), keys, "left_semi").select(cols(keys): _*))
+            .groupBy(cols(keys): _*).count().filter(col("count") > 1).drop("count")
+          newKeys.join(shared, keys, "left_semi")
+            .select(newKeys.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+        }.reduce(_ union _).distinct()
+    }
+    def visit(df: DataFrame): Seq[org.apache.spark.sql.Row] = {
+      val rs = df.limit(Engine.DriverVisitRows + 1).collect().toSeq
+      require(rs.size <= Engine.DriverVisitRows,
+        s"IGNORE key-collision visit over more than ${Engine.DriverVisitRows} rows " +
+          "exceeds the driver gate: not a supported batch-analytics shape")
+      rs
+    }
     def keyed(df: DataFrame): Seq[(Long, Seq[Any])] =
-      df.collect().toSeq.map(r => r.getLong(0) -> (1 until r.length).map(r.get))
-    val news = keyed(newDf.select(col("__rid__") +: keySel: _*))
-    val olds = oldDf.map(o => keyed(o.select(col("__rid__") +: keySel: _*)
-      .orderBy(declared.head._2.map(k => col(s"`$k`")) :+ col("__rid__"): _*)))
+      visit(df).map(r => r.getLong(0) -> (1 until r.length).map(i => Engine.keyValue(r.get(i))))
+    val news = keyed(candidates)
+    if (news.isEmpty) return Set.empty
+    val olds = oldDf.map(o => keyed(o.select(col("__rid__") +: cols(keyCols): _*)
+      .join(candidates.select("__rid__"), Seq("__rid__"), "left_semi")
+      .orderBy(cols(declared.head._2) :+ col("__rid__"): _*)))
     val order = olds.fold(news.map(_._1).sorted)(_.map(_._1))
     val oldOf = olds.map(_.toMap)
     val newOf = news.toMap
@@ -2375,9 +2426,9 @@ class Engine(val spark: SparkSession) {
       keys.map(k => vals(colIdx(k)))
     val current = declared.map { case (_, keys, _) =>
       val m = scala.collection.mutable.Map.empty[Seq[Any], Int].withDefaultValue(0)
-      stored.join(newDf.select(keys.map(k => col(s"`$k`")): _*).distinct(), keys, "left_semi")
-        .select(keys.map(k => col(s"`$k`")): _*).collect()
-        .foreach(r => m(r.toSeq) += 1)
+      visit(stored.join(candidates.select(cols(keys): _*).distinct(), keys, "left_semi")
+        .select(cols(keys): _*))
+        .foreach(r => m(r.toSeq.map(Engine.keyValue)) += 1)
       m
     }
     val skipped = Set.newBuilder[Long]
@@ -2398,7 +2449,7 @@ class Engine(val spark: SparkSession) {
           // diagnostics-area feed (reference rowexec/update.go ignore
           // path converts the duplicate-key error into a warning)
           warn(1062, s"Duplicate entry " +
-            s"'${nt.map(String.valueOf).mkString("-")}' for key " +
+            s"'${nt.map(Engine.entryText).mkString("-")}' for key " +
             s"'$table.$kname'")
         case None =>
           declared.zip(current).foreach { case ((_, keys, _), m) =>
@@ -4515,13 +4566,14 @@ class Engine(val spark: SparkSession) {
     * NULL or key column the statement writes (`written`, lower-case),
     * 1048; a CHAR/VARCHAR value over its declared length, 1406; and under
     * IGNORE or non-strict mode an ENUM/SET value outside its vocabulary,
-    * 1265. Strict, the first failure (conversions, then ranges, NULLs
-    * and lengths) is MySQL's error. Otherwise each value coerces — ENUM
+    * 1265. Strict, the first class of failure any row has (conversions,
+    * then ranges, NULLs and lengths) is MySQL's error, quoting the value
+    * of the first row that has it. Otherwise each value coerces — ENUM
     * to '', SET elements dropped, NULL to the type zero, long strings
     * truncated — and each flag becomes its warning, the length one as
     * 1105 like the reference's ErrLengthBeyondLimit (reference
-    * rowexec/insert.go and update.go ignore paths). One aggregate either
-    * way; the flags are dropped. */
+    * rowexec/insert.go and update.go ignore paths). One aggregate counts
+    * the flags either way; the flags are dropped. */
   private[graft] def settleWrite(table: String, image: DataFrame, strict: Boolean,
       gateCol: Option[String] = None, written: Set[String] = Set.empty): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4570,12 +4622,15 @@ class Engine(val spark: SparkSession) {
     val flags = df.columns.toSeq.collect { case f @ Flag(code, c) => (f, code.toInt, c) }
       .sortBy(f => rank(f._2))
     if (flags.isEmpty) return df
-    val aggs = flags.map { case (f, _, _) =>
-      if (strict) max(col(s"`$f`")) else count(col(s"`$f`")) }
+    val aggs = flags.map { case (f, _, _) => count(col(s"`$f`")) }
     val row = localRows(df.agg(aggs.head, aggs.tail: _*)).head
-    flags.zipWithIndex.foreach { case ((_, code, c), i) =>
-      if (strict && !row.isNullAt(i)) {
-        val v = row.getUTF8String(i).toString
+    flags.zipWithIndex.foreach { case ((f, code, c), i) =>
+      if (strict && row.getLong(i) > 0) {
+        // the value of the first row that sets the flag, in `__rid__`
+        // order where the image has one, else in the rows' own order
+        val setting = df.filter(col(s"`$f`").isNotNull)
+        val v = localRows((if (df.columns.contains("__rid__")) setting.orderBy("__rid__")
+          else setting).select(col(s"`$f`")).limit(1)).head.getUTF8String(0).toString
         throw new IllegalArgumentException(code match {
           case 1366 => s"Incorrect value: '$v' for column '$c' (MySQL error 1366)"
           case 1292 =>

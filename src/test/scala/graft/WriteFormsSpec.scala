@@ -149,4 +149,55 @@ class WriteFormsSpec extends AnyFunSuite {
       Seq(Seq("2")))
     assert(rows(e, "SELECT * FROM wf_trg") == Seq(Seq("1", "3", "30")))
   }
+
+  test("INSERT IGNORE skips a duplicate VARBINARY primary key in the batch and against a stored row") {
+    val e = engine()
+    e.runScript("CREATE TABLE wf_b (id VARBINARY(16) PRIMARY KEY, v INT); INSERT INTO wf_b VALUES (x'01', 1)")
+    assert(rows(e, "INSERT IGNORE INTO wf_b VALUES (x'01', 2), (x'02', 3), (x'02', 4)") == Seq(Seq("1")))
+    assert(warnCodes(e) == Seq(1062, 1062))
+    assert(rows(e, "SELECT HEX(id), v FROM wf_b ORDER BY id") == Seq(Seq("01", "1"), Seq("02", "3")))
+  }
+
+  test("REPLACE keeps the last row of a duplicate VARBINARY key in the batch") {
+    val e = engine()
+    e.runScript("CREATE TABLE wf_rb (id VARBINARY(16) PRIMARY KEY, v INT); INSERT INTO wf_rb VALUES (x'01', 1)")
+    e.query("REPLACE INTO wf_rb VALUES (x'02', 1), (x'02', 2), (x'01', 9)").collect()
+    assert(rows(e, "SELECT HEX(id), v FROM wf_rb ORDER BY id") == Seq(Seq("01", "9"), Seq("02", "2")))
+  }
+
+  test("UPDATE IGNORE keeps a row whose new VARBINARY key collides, with warning 1062") {
+    val e = engine()
+    e.runScript("CREATE TABLE wf_ub (id VARBINARY(16) PRIMARY KEY, v INT); INSERT INTO wf_ub VALUES (x'01', 1), (x'02', 2)")
+    e.query("UPDATE IGNORE wf_ub SET id = x'01' WHERE v = 2").collect()
+    assert(warnCodes(e) == Seq(1062))
+    assert(rows(e, "SELECT HEX(id), v FROM wf_ub ORDER BY id") == Seq(Seq("01", "1"), Seq("02", "2")))
+  }
+
+  test("INSERT IGNORE visits rows in batch order: a skipped row frees its other keys") {
+    // (2, 1) collides on u with (1, 1) and is skipped, so (2, 2) takes id 2
+    val e = engine()
+    e.runScript("CREATE TABLE wf_ku (id INT PRIMARY KEY, u INT UNIQUE)")
+    assert(rows(e, "INSERT IGNORE INTO wf_ku VALUES (1, 1), (2, 1), (2, 2)") == Seq(Seq("2")))
+    assert(warnCodes(e) == Seq(1062))
+    assert(rows(e, "SELECT * FROM wf_ku ORDER BY id") == Seq(Seq("1", "1"), Seq("2", "2")))
+  }
+
+  test("INSERT IGNORE brings only colliding rows to the driver, and fails past its gate") {
+    val e = new Engine(spark.newSession())
+    e.runScript("CREATE TABLE wf_big (id BIGINT PRIMARY KEY)")
+    val n = Engine.DriverVisitRows + 10
+    assert(e.insertDf("wf_big", e.spark.range(n).toDF("id"), fillMissing = false, ignoreDups = true) == n)
+    val ex = intercept[IllegalArgumentException](
+      e.insertDf("wf_big", e.spark.range(n).toDF("id"), fillMissing = false, ignoreDups = true))
+    assert(ex.getMessage.contains("driver gate"), ex.getMessage)
+    assert(rows(e, "SELECT COUNT(*) FROM wf_big") == Seq(Seq(n.toString)))
+  }
+
+  test("a strict failure quotes the value of the first row that fails") {
+    val e = engine()
+    val ins = intercept[Exception](e.query("INSERT INTO wf_i VALUES (3, 'abc'), (4, 'zzz')").collect())
+    assert(ins.getMessage.contains("'abc'"), ins.getMessage)
+    val upd = intercept[Exception](e.query("UPDATE wf_i SET v = CONCAT('x', id)").collect())
+    assert(upd.getMessage.contains("'x1'"), upd.getMessage)
+  }
 }
