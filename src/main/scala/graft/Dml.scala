@@ -158,9 +158,9 @@ object Dml {
   private val RenamePair =
     """(?is)^\s*(`?[A-Za-z_][A-Za-z0-9_]*`?)\s+TO\s+(`?[A-Za-z_][A-Za-z0-9_]*`?)\s*$""".r
   private val DropTv =
-    re("""(?is)^\s*DROP\s+(?:TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?<T>\s*$""")
+    re("""(?is)^\s*DROP\s+(?:(?:TEMPORARY\s+)?TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?<T>\s*$""")
   private val DropMulti =
-    """(?is)^\s*DROP\s+(TABLE|VIEW)\s+(IF\s+EXISTS\s+)?((?:`?[A-Za-z0-9_.]+`?\s*,\s*)+`?[A-Za-z0-9_.]+`?)\s*$""".r
+    """(?is)^\s*DROP\s+(?:TEMPORARY\s+)?(TABLE|VIEW)\s+(IF\s+EXISTS\s+)?((?:`?[A-Za-z0-9_.]+`?\s*,\s*)+`?[A-Za-z0-9_.]+`?)\s*$""".r
   private val Trunc =
     re("""(?is)^\s*TRUNCATE\s+(?:TABLE\s+)?<T>\s*$""")
   private val SetVar =
@@ -616,7 +616,7 @@ object Dml {
       val table = normName(tableRaw)
       val hasList = colList != null && colList.trim
         .stripPrefix("(").stripSuffix(")").trim.nonEmpty
-      if (!e.tableKeys.contains(table) && !e.uniqueKeys.exists(_._1 == table))
+      if (e.tableDef(table).keys.isEmpty)
         throw new IllegalArgumentException(
           s"REPLACE INTO needs a declared key on '$table' (Engine.declareKey)")
       Some(ok(e, e.replaceRows(table, insertSource(e, table, colList, hasList, body),
@@ -706,7 +706,7 @@ object Dml {
         .filter { case (_, img) => !img.queryExecution.analyzed.exists(
           _.expressions.exists(x => !graft.plans.FoldLocalRows.evaluable(x))) }
         .getOrElse { val r = frame(); (r, image(r.before, r.gate)) }
-      checkUpdate(e, table, image, rows, img)._3()
+      checkUpdate(e, table, image, rows, img)._4()
       // UPDATE, IGNORE too, reports the rows it matched (dml_iters.go:761)
       e.foundRowsSet(rows.matched)
       Some(ok(e, rows.matched))
@@ -767,7 +767,7 @@ object Dml {
       // MySQL existence semantics (view_queries.go:26 "existing views"):
       // IF NOT EXISTS over an existing view OR table is a silent no-op;
       // a plain CREATE VIEW over an existing object is error 1050.
-      val exists = e.viewDefs.contains(n) || e.createdRelations.contains(n)
+      val exists = e.created(n)
       if (exists && orReplace == null) {
         if (ifNotExists != null) Some(ok(e, 0L))
         else throw new IllegalArgumentException(s"Table '$n' already exists (MySQL 1050)")
@@ -798,23 +798,15 @@ object Dml {
       else { e.ctas(normName(name), body); Some(ok(e, 0L)) }
 
     case CreateTableLike(temp, ine, nameRaw, srcRaw) =>
-      // same schema, empty; declared metadata carries over (reference
-      // ddl.go buildCreateTableLike copies schema + keys + defaults)
+      // same schema, empty, and the source's definition (reference
+      // ddl.go buildCreateTableLike copies the whole schema: keys,
+      // defaults, CHECKs — the "Validate that CREATE LIKE preserves
+      // checks" corpus — lengths, vocab, types, comments)
       val name = normName(nameRaw)
       val src = normName(srcRaw)
       if (!createPrecheck(e, name, ine != null, temp != null)) {
+        e.tables(name) = e.tableDef(src).likeCopy
         e.replaceTable(name, e.spark.table(src).limit(0), bumpDepth = false)
-        e.noteRelation(name)
-        e.tableKeys.get(src).foreach(k => e.declareKey(name, k))
-        e.autoIncCols.get(src).foreach(c => e.declareAutoInc(name, c))
-        e.columnDefaults.toSeq.collect {
-          case ((t, c), d) if t == src => e.declareDefault(name, c, d)
-        }
-        // LIKE copies the full column/constraint surface: CHECKs (the
-        // "Validate that CREATE LIKE preserves checks" corpus), declared
-        // lengths, NOT NULL, vocab, comments, precision markers — but
-        // NOT foreign keys (MySQL LIKE never copies FKs)
-        e.copyColumnMeta(src, name)
       }
       Some(ok(e, 0L))
 
@@ -824,20 +816,20 @@ object Dml {
         val t = normName(name)
         val (optsText, selOpt) = splitSelectTail(tail)
         // options first: charset drives bytes-per-char in the row-size
-        // limit that createFromDefs validates (a failed create clears
-        // them again via clearTableMeta)
+        // limit that createFromDefs validates (a failed create removes
+        // the table's entry again)
         val aiStart = parseTableOptions(e, t, optsText)
         selOpt match {
           case Some(sel) =>
             try createDefsWithSelect(e, t, body, sel)
-            catch { case ex: Throwable => e.clearTableMeta(t); throw ex }
+            catch { case ex: Throwable => e.tables.remove(t); throw ex }
           case None => createFromDefs(e, t, body)
         }
         // AUTO_INCREMENT=n option seeds the counter — ignored when the
         // table has no auto-inc column (create_table_queries.go "table
         // with auto_increment table option")
-        aiStart.filter(_ => e.autoIncCols.contains(t))
-          .foreach(n => e.autoIncCounter(t) = n)
+        aiStart.filter(_ => e.tableDef(t).autoInc.isDefined)
+          .foreach(n => e.alterDef(t)(_.copy(autoIncCounter = Some(n))))
         Some(ok(e, 0L))
       }
 
@@ -898,17 +890,22 @@ object Dml {
     case CreateTrigger(name, timing, event, tableRaw, body) =>
       val table = e.canonicalTable(normName(tableRaw))
       e.spark.table(table) // target must exist (MySQL 1146)
-      if (e.triggers.contains(name.toLowerCase))
+      def named(t: Trigger) = t.name.equalsIgnoreCase(name)
+      if (e.tables.valuesIterator.exists(_.triggers.exists(named)))
         throw new IllegalArgumentException(
           s"Trigger '$name' already exists (MySQL error 1359)")
-      e.triggers(name.toLowerCase) = e.Trigger(name, timing.toUpperCase,
-        event.toUpperCase, table, parseTriggerBody(body))
+      val trg = Trigger(name, timing.toUpperCase, event.toUpperCase, parseTriggerBody(body))
+      e.alterDef(table)(d => d.copy(triggers = d.triggers :+ trg))
       Some(ok(e, 0L))
 
     case DropTrigger(ifExists, name) =>
-      if (e.triggers.remove(name.toLowerCase).isEmpty && ifExists == null)
-        throw new IllegalArgumentException(
-          s"Trigger does not exist (MySQL error 1360)")
+      def named(t: Trigger) = t.name.equalsIgnoreCase(name)
+      e.tables.find(_._2.triggers.exists(named)) match {
+        case Some((t, d)) => e.tables(t) = d.copy(triggers = d.triggers.filterNot(named))
+        case None if ifExists == null =>
+          throw new IllegalArgumentException(s"Trigger does not exist (MySQL error 1360)")
+        case None =>
+      }
       Some(ok(e, 0L))
 
     case AlterTable(name, actions) =>
@@ -929,11 +926,11 @@ object Dml {
         val df = scala.util.Try(e.spark.table(oldN)).getOrElse(
           throw new IllegalArgumentException(
             s"Table '$oldN' doesn't exist"))
-        if (e.createdRelations.contains(newN) || e.viewDefs.contains(newN))
+        if (e.created(newN))
           throw new IllegalArgumentException(
             s"Table '$newN' already exists (MySQL 1050)")
+        e.renameTableDef(oldN, newN)
         e.replaceTable(newN, df, bumpDepth = false)
-        e.renameTableMeta(oldN, newN)
         e.spark.catalog.dropTempView(oldN)
         // views naming the old table must re-resolve (and break) now
         e.refreshViews(oldN)
@@ -971,8 +968,9 @@ object Dml {
           s"Cannot truncate a table referenced in a foreign key " +
           s"constraint (MySQL error 1701)")
       e.replaceTable(table, t.limit(0), bumpDepth = true)
-      e.autoIncCounter.remove(table) // TRUNCATE resets AUTO_INCREMENT
-      e.autoIncShown.remove(table)
+      // TRUNCATE resets AUTO_INCREMENT
+      e.tables.get(table).foreach(d =>
+        e.tables(table) = d.copy(autoIncCounter = None, autoIncShown = None))
       Some(ok(e, 0L))
 
     // comma-separated SET list over user AND system variables
@@ -1426,7 +1424,7 @@ object Dml {
               s"THEN NULL ELSE struct(${parts.mkString(", ")}) END"
           // prefix-only composites still render as a plain UNIQUE KEY
           if (exprItems.isEmpty) e.declareUnique(table, name, colSeq)
-          e.uniqueExprIdx += ((table, name, combined))
+          e.declareUniqueExpr(table, name, combined)
           try e.enforceUniqueExprsPost(table, e.spark.table(table))
           catch { case ex: Throwable => e.dropIndex(table, name); throw ex }
         }
@@ -1445,8 +1443,8 @@ object Dml {
       // collect stats for the declared key columns, like the reference's
       // analyze pass over index leaves (stats_queries.go)
       e.analyzedColumns(table).foreach { c =>
-        e.columnStats((table, c.toLowerCase)) =
-          e.computeColumnStats(table, c)
+        val h = e.computeColumnStats(table, c)
+        e.alterDef(table)(d => d.copy(stats = d.stats.updated(c.toLowerCase, h)))
       }
       val s = e.spark
       import s.implicits._
@@ -1460,12 +1458,13 @@ object Dml {
         .filter(_.nonEmpty)
       op.trim.toUpperCase match {
         case "DROP" =>
-          cols.foreach(c => e.columnStats.remove((table, c.toLowerCase)))
+          e.alterDef(table)(d => d.copy(stats = d.stats -- cols.map(_.toLowerCase)))
         case _ =>
           cols.foreach { c =>
-            e.columnStats((table, c.toLowerCase)) = Option(dataOpt)
+            val h = Option(dataOpt)
               .map(_.replace("\\\"", "\"").replace("''", "'"))
               .getOrElse(e.computeColumnStats(table, c))
+            e.alterDef(table)(d => d.copy(stats = d.stats.updated(c.toLowerCase, h)))
           }
       }
       val s = e.spark
@@ -1502,7 +1501,7 @@ object Dml {
           e.spark.table(qualified).queryExecution.optimizedPlan.stats.rowCount
             .map(_.toLong)).toOption.flatten.map(Long.box).orNull
         val ai: java.lang.Long =
-          e.autoIncCounter.get(t.name).map(Long.box).orNull
+          e.tableDef(t.name).autoIncCounter.map(Long.box).orNull
         (t.name, "graft-spark", 10L, "Dynamic", est,
           ai, "utf8mb4_0900_ai_ci", "")
       }
@@ -1611,7 +1610,7 @@ object Dml {
                   c._2.contains("text") || c._2.startsWith("enum") ||
                   c._2.startsWith("set")) "utf8mb4_0900_bin" else null,
               c._3, c._4, c._5.orNull, c._6, "",
-              e.columnComments.getOrElse((table, c._1.toLowerCase), "")))
+              e.colDef(table, c._1).comment.getOrElse("")))
             .toDF("Field", "Type", "Collation", "Null", "Key", "Default",
               "Extra", "Privileges", "Comment")
       val filtered = filterLike(base, "Field", like)
@@ -1630,11 +1629,11 @@ object Dml {
         else (Option(p3), p1)
       val infoSchemaDb =
         dbOpt.exists(_.equalsIgnoreCase("information_schema"))
-      // metadata maps key db-qualified tables by their qualified name
+      // table entries key db-qualified tables by their qualified name
       val table =
         if (infoSchemaDb) bare
         else dbOpt.map(d => e.canonicalTable(s"$d.$bare"))
-          .filter(q => e.tableKeys.contains(q) ||
+          .filter(q => e.tableDef(q).key.isDefined ||
             scala.util.Try(e.spark.table(q)).isSuccess)
           .getOrElse(e.canonicalTable(bare))
       // info-schema tables carry no SHOW-able indexes (ref
@@ -1644,34 +1643,30 @@ object Dml {
       val nullable = if (t == null) Map.empty[String, Boolean]
         else t.schema.fields.map(f =>
           f.name.toLowerCase -> f.nullable).toMap
-      // Null reports the DECLARED state (notNullCols/PK), not the
+      // Null reports the DECLARED state (NOT NULL / PK), not the
       // physical frame flag; Table reports the STORED name case
-      val pkColsIdx = e.tableKeys.getOrElse(table, Seq.empty)
-        .map(_.toLowerCase).toSet
+      val pkColsIdx = e.tableDef(table).keyLower
       val shownName = table.split('.').last
-      val uniqueNames = e.uniqueKeys.collect {
-        case (tt, n, _) if tt == table => n.toLowerCase }.toSet
+      val defn = e.tableDef(table)
+      val uniqueNames = defn.uniques.map(_._1.toLowerCase).toSet
       def rows(keyName: String, nonUnique: Int, cols: Seq[String],
                expr: Option[String]) =
         if (infoSchemaDb) Seq.empty
         else cols.zipWithIndex.map { case (c, i) =>
           val nn = if (expr.isEmpty &&
               nullable.getOrElse(c.toLowerCase, true) &&
-              !e.notNullCols((table, c.toLowerCase)) &&
+              !e.colDef(table, c).notNull &&
               !pkColsIdx(c.toLowerCase)) "YES" else ""
           (shownName, nonUnique, keyName, i + 1,
             if (expr.isDefined) null else c,
             null: String, 0L, null: String, null: String, nn, "BTREE",
             "", "", "YES", expr.orNull)
         }
-      val pk = e.tableKeys.get(table).toSeq
+      val pk = e.tableDef(table).key.toSeq
         .flatMap(k => rows("PRIMARY", 0, k, None))
-      val uk = e.uniqueKeys.toSeq.collect {
-        case (tt, n, cols) if tt == table => rows(n, 0, cols, None)
-      }.flatten
-      val sec = e.secondaryIndexes.toSeq.collect {
-        case (tt, n, cols) if tt == table &&
-            !uniqueNames(n.toLowerCase) && !n.equalsIgnoreCase("PRIMARY") =>
+      val uk = defn.uniques.flatMap { case (n, cols) => rows(n, 0, cols, None) }
+      val sec = defn.indexes.collect {
+        case (n, cols) if !uniqueNames(n.toLowerCase) && !n.equalsIgnoreCase("PRIMARY") =>
           cols.zipWithIndex.flatMap { case (c, i) =>
             if (c.startsWith("(")) rows(n, 1, Seq(c), Some(c)).map(r =>
               r.copy(_4 = i + 1))
@@ -1762,7 +1757,7 @@ object Dml {
         // MySQL bounds (reference sql/types/decimal.go:58): p <= 65,
         // s <= 30, s <= p. Spark's DecimalType caps at 38 — wider
         // declarations store canonical fixed-scale text (StringType);
-        // the caller records (p, s) in Engine.wideDecCols and the
+        // the caller records (p, s) in the column's ColumnDef and the
         // write/compare paths go through functions.WideDecimal.
         if (p > graft.functions.WideDecimal.MaxPrecision)
           throw new IllegalArgumentException(
@@ -1815,16 +1810,15 @@ object Dml {
     * MODIFY/CHANGE column spec — COLLATE name, or the deprecated
     * `CHARACTER SET x BINARY` attribute = x_bin. */
   private def recordSpecCollation(e: Engine, table: String, colName: String,
-                                  spec: String): Unit =
-    ("""(?i)\bCOLLATE\s+[`']?([A-Za-z0-9_]+)""".r.findFirstMatchIn(spec)
+                                  spec: String): Unit = {
+    val c = """(?i)\bCOLLATE\s+[`']?([A-Za-z0-9_]+)""".r.findFirstMatchIn(spec)
       .map(_.group(1).toLowerCase)
       .orElse {
         """(?i)\b(?:CHARACTER\s+SET|CHARSET)\s+[`']?([A-Za-z0-9_]+)[`']?\s+BINARY\b""".r
           .findFirstMatchIn(spec).map(_.group(1).toLowerCase + "_bin")
-      }) match {
-      case Some(c) => e.columnCollations((table, colName.toLowerCase)) = c
-      case None => e.columnCollations.remove((table, colName.toLowerCase))
-    }
+      }
+    e.alterCol(table, colName)(_.copy(collation = c))
+  }
 
   private def applyCollation(dt: org.apache.spark.sql.types.DataType,
                              spec: String): org.apache.spark.sql.types.DataType = {
@@ -1973,7 +1967,7 @@ object Dml {
               // over-limit beats the PK-unsupported error (reference
               // IndexPrefixQueries "string index prefix errors": v(11)
               // on varchar(10) is 1089 even inside a PRIMARY KEY)
-              if (e.charLimitOf(table, c).exists(n > _)) throw invalid(c)
+              if (e.colDef(table, c).charLimit.exists(n > _)) throw invalid(c)
               // InnoDB's 3072-byte key cap: text chars weigh 4 bytes
               // (utf8mb4), blob bytes weigh 1 (blob_queries.go
               // BlobErrors: b(3073) and t(769) are both 1071)
@@ -1990,7 +1984,7 @@ object Dml {
               // except the MariaDB-compat no-prefix UNIQUE the
               // reference allows (index_queries.go "unique indexes on
               // TEXT/BLOB columns with no prefix length")
-              if (kind != "unique" && e.isBlobText(table, c))
+              if (kind != "unique" && e.colDef(table, c).blobText)
                 throw new IllegalArgumentException(
                   s"blob/text column '$c' used in key specification " +
                   "without a key length (MySQL 1170)")
@@ -2015,7 +2009,7 @@ object Dml {
   /** Declare index metadata (+ prefix lengths) and, for UNIQUE, the
     * matching enforcement: full-tuple via declareUnique plus — when any
     * part carries a prefix — a substring-tuple probe through
-    * uniqueExprIdx (prefix uniqueness is strictly tighter than
+    * declareUniqueExpr (prefix uniqueness is strictly tighter than
     * whole-column uniqueness, so both can coexist). */
   private def declareParsedKey(e: Engine, table: String, name: String,
       parts: Seq[(String, Option[Int])], unique: Boolean): Unit = {
@@ -2028,7 +2022,7 @@ object Dml {
     if (unique) {
       e.declareUnique(table, name, cols)
       if (parts.exists(_._2.nonEmpty))
-        e.uniqueExprIdx += ((table, name, prefixProbe(parts)))
+        e.declareUniqueExpr(table, name, prefixProbe(parts))
     }
   }
 
@@ -2054,12 +2048,12 @@ object Dml {
               "DATETIME columns take ON UPDATE CURRENT_TIMESTAMP " +
               "(MySQL ErrInvalidOnUpdate)")
             val declP = Option(prec).filter(_.nonEmpty).map(_.toInt).getOrElse(0)
-            val colP = e.timePrecisions.getOrElse((table, colName.toLowerCase), 0)
+            val colP = e.colDef(table, colName).timePrecision.getOrElse(0)
             if (declP != colP) throw new IllegalArgumentException(
               s"Invalid ON UPDATE clause for '$colName': " +
               s"CURRENT_TIMESTAMP($declP) does not match the column's " +
               s"precision $colP (MySQL ErrInvalidOnUpdate)")
-            e.declareOnUpdate(table, colName, declP)
+            e.alterCol(table, colName)(_.copy(onUpdate = Some(declP)))
           case other if other.startsWith("(") =>
             throw new IllegalArgumentException(
               s"syntax error near 'update' (general expressions are not " +
@@ -2104,7 +2098,7 @@ object Dml {
         if (w < 0) throw new IllegalArgumentException(
           s"syntax error near '${mm.group(1).toLowerCase}'")
         if (mm.group(1).equalsIgnoreCase("tinyint") && w == 1)
-          e.tinyint1Cols += ((table, colName.toLowerCase))
+          e.alterCol(table, colName)(_.copy(tinyint1 = true))
       }
     // DATETIME/TIMESTAMP/TIME fractional precision is 0-6
     // (create_table_queries.go "datetime precision" / "timestamp
@@ -2117,7 +2111,7 @@ object Dml {
         if (p > 6) throw new IllegalArgumentException(
           s"${mm.group(1).toUpperCase} supports precision from 0 to 6")
         if (p > 0 && !mm.group(1).equalsIgnoreCase("time"))
-          e.timePrecisions((table, colName.toLowerCase)) = p
+          e.alterCol(table, colName)(_.copy(timePrecision = Some(p)))
       }
     // VECTOR(n): n > 0 required, the dimension validates on write
     // (vector_ddl_queries.go); a declared vector column also gates the
@@ -2129,9 +2123,9 @@ object Dml {
             val n = mm.group(1).toInt
             if (n <= 0) throw new IllegalArgumentException(
               s"syntax error near 'vector': dimension must be positive")
-            e.vecDims((table, colName.toLowerCase)) = n
+            e.alterCol(table, colName)(_.copy(vecDim = Some(n)))
           case None =>
-            e.vecDims((table, colName.toLowerCase)) = -1
+            e.alterCol(table, colName)(_.copy(vecDim = Some(-1)))
         }
     }
     // charset/collation attach only to character types: a COLLATE on the
@@ -2162,12 +2156,11 @@ object Dml {
           """(?i)\b(?:CHARACTER\s+SET|CHARSET)\s+[`']?([A-Za-z0-9_]+)[`']?\s+BINARY\b""".r
             .findFirstMatchIn(rest).map(_.group(1).toLowerCase + "_bin")
         }
-        .foreach(c => e.columnCollations((table, colName.toLowerCase)) = c)
+        .foreach(c => e.alterCol(table, colName)(_.copy(collation = Some(c))))
     // column COMMENT survives into SHOW CREATE TABLE
     """(?is)\bCOMMENT\s+('(?:\\.|''|[^'\\])*'|"(?:\\.|""|[^"\\])*")""".r
       .findFirstMatchIn(rest).foreach { mm =>
-        e.columnComments((table, colName.toLowerCase)) =
-          unquoteSqlString(mm.group(1))
+        e.alterCol(table, colName)(_.copy(comment = Some(unquoteSqlString(mm.group(1)))))
       }
     val (dt0, vocab) = mysqlDataType(typeText)
     val dt1 = applyCollation(dt0, rest)
@@ -2179,7 +2172,7 @@ object Dml {
       case org.apache.spark.sql.types.StringType
           if charFamily(baseLower) &&
             """(?i)\bCOLLATE\s""".r.findFirstIn(rest).isEmpty =>
-        e.tableCollations.get(table).map { tc =>
+        e.tableDef(table).collation.map { tc =>
           val mapped = scala.util.Try(Dialect.mapCollation(tc))
             .getOrElse("UTF8_BINARY")
           if (mapped.equalsIgnoreCase("UTF8_BINARY")) dt1
@@ -2194,7 +2187,7 @@ object Dml {
           "bigint")(baseLower))
       e.declareUnsigned(table, colName, baseLower)
     // declared CHAR/VARCHAR length: parquet strings are unbounded, so the
-    // limit lives on the engine and the write paths enforce it
+    // limit lives in the column's definition and the write paths enforce it
     // (reference sql/types/strings.go:465 ErrLengthBeyondLimit)
     """(?i)^(n?(?:var)?char)\s*\(\s*(\d+)\s*\)""".r
       .findFirstMatchIn(typeText.trim)
@@ -2202,9 +2195,9 @@ object Dml {
         e.declareCharLimit(table, colName, mm.group(2).toInt)
         // CHAR(n) vs VARCHAR(n) keyword survives into the catalog render
         if (!mm.group(1).toLowerCase.contains("var"))
-          e.charKindCols += ((table, colName.toLowerCase))
+          e.alterCol(table, colName)(_.copy(fixedChar = true))
       }
-    if (baseLower == "year") e.yearCols += ((table, colName.toLowerCase))
+    if (baseLower == "year") e.alterCol(table, colName)(_.copy(year = true))
     // DECIMAL wider than Spark's 38-digit cap: record the declared
     // (p, s) — storage is canonical fixed-scale text (WideDecimal)
     if (Set("decimal", "numeric", "dec", "fixed")(baseLower))
@@ -2212,12 +2205,12 @@ object Dml {
         .findFirstMatchIn(typeText.trim).foreach { mm =>
           val p = mm.group(1).toInt
           val s = Option(mm.group(2)).map(_.toInt).getOrElse(0)
-          if (p > 38) e.wideDecCols((table, colName.toLowerCase)) = (p, s)
+          if (p > 38) e.alterCol(table, colName)(_.copy(wideDec = Some((p, s))))
         }
     if (baseLower == "bit")
-      e.bitWidths((table, colName.toLowerCase)) =
+      e.alterCol(table, colName)(_.copy(bitWidth = Some(
         """(?i)^bit\s*\(\s*(\d+)\s*\)""".r.findFirstMatchIn(typeText.trim)
-          .map(_.group(1).toInt).getOrElse(1)
+          .map(_.group(1).toInt).getOrElse(1))))
     // TEXT(m) picks the smallest text type that fits m (strings.go):
     // the DECLARED KIND survives into DESCRIBE
     if (baseLower == "text")
@@ -2227,18 +2220,18 @@ object Dml {
           val kind =
             if (m < 256) "tinytext" else if (m < 65536) "text"
             else if (m < 16777216) "mediumtext" else "longtext"
-          e.textKindCols((table, colName.toLowerCase)) = kind
+          e.alterCol(table, colName)(_.copy(textKind = Some(kind)))
         }
     // signed MEDIUMINT stores as Spark int; keep the declared kind for
     // the catalog render (DESCRIBE/information_schema expect mediumint)
     if (baseLower == "mediumint" && !typeText.toLowerCase.contains("unsigned"))
-      e.textKindCols((table, colName.toLowerCase)) = "mediumint"
+      e.alterCol(table, colName)(_.copy(textKind = Some("mediumint")))
     // fixed BINARY(n): stored values zero-pad to the declared width
     """(?i)^binary\s*(?:\(\s*(\d+)\s*\))?(?:\s|$)""".r
       .findFirstMatchIn(typeText.trim)
       .foreach { mm =>
-        e.binPadLens((table, colName.toLowerCase)) =
-          Option(mm.group(1)).map(_.toInt).getOrElse(1)
+        e.alterCol(table, colName)(_.copy(binPad = Some(
+          Option(mm.group(1)).map(_.toInt).getOrElse(1))))
       }
     vocab.foreach { case (isSet, vs) =>
       // *_ci collations hash member lookup case-insensitively
@@ -2258,10 +2251,10 @@ object Dml {
     // BLOB/TEXT family columns key only with a prefix length (1170)
     if (Set("tinytext", "text", "mediumtext", "longtext", "tinyblob",
         "blob", "mediumblob", "longblob")(baseLower))
-      e.declareBlobText(table, colName)
-    if (baseLower == "json") e.declareJsonCol(table, colName)
+      e.alterCol(table, colName)(_.copy(blobText = true))
+    if (baseLower == "json") e.alterCol(table, colName)(_.copy(json = true))
     if (up.contains("PRIMARY KEY")) {
-      if (e.isBlobText(table, colName))
+      if (e.colDef(table, colName).blobText)
         throw new IllegalArgumentException(
           s"blob/text column '$colName' used in key specification " +
           "without a key length (MySQL 1170)")
@@ -2345,8 +2338,7 @@ object Dml {
             .findFirstMatchIn(t).foreach { mm =>
               val defP = Option(mm.group(1)).filter(_.nonEmpty)
                 .map(_.toInt).getOrElse(0)
-              val colP = e.timePrecisions
-                .getOrElse((table, colName.toLowerCase), 0)
+              val colP = e.colDef(table, colName).timePrecision.getOrElse(0)
               val isTime = dt == org.apache.spark.sql.types.TimestampNTZType ||
                 dt == org.apache.spark.sql.types.TimestampType
               if (isTime && defP != colP)
@@ -2378,7 +2370,7 @@ object Dml {
     // column-level CHECK (MySQL 8.0.16 enforcement semantics)
     extractCheck(rest).foreach { case (nm, ex) =>
       e.declareCheck(table, nm.getOrElse(
-        s"${table}_chk_${e.checkConstraints.count(_._1 == table) + 1}"), ex)
+        s"${table}_chk_${e.tableDef(table).checks.size + 1}"), ex)
     }
     if (up.contains("NOT NULL")) e.declareNotNull(table, colName)
     // PRIMARY KEY / AUTO_INCREMENT columns are implicitly NOT NULL
@@ -2494,7 +2486,7 @@ object Dml {
 
   /** CREATE TABLE options tail: [DEFAULT] CHARSET/CHARACTER SET,
     * COLLATE, COMMENT, AUTO_INCREMENT (ENGINE is accepted and ignored).
-    * Declares charset/collation/comment on the engine, validates the
+    * Declares charset/collation/comment in the table's entry, validates the
     * charset-collation pair, and returns the AUTO_INCREMENT start if
     * present. */
   private def parseTableOptions(e: Engine, table: String,
@@ -2512,11 +2504,10 @@ object Dml {
             l.toLowerCase.startsWith(c.toLowerCase + "_")))
         throw new IllegalArgumentException(
           s"$c is not a valid character set for $l")
-    cs.foreach(c => e.tableCharsets(table) = c)
-    coll.foreach(l => e.tableCollations(table) = l)
-    """(?is)\bCOMMENT\s*=?\s*('(?:\\.|''|[^'\\])*'|"(?:\\.|""|[^"\\])*")""".r
-      .findFirstMatchIn(tail)
-      .foreach(m => e.tableComments(table) = unquoteSqlString(m.group(1)))
+    val cmt = """(?is)\bCOMMENT\s*=?\s*('(?:\\.|''|[^'\\])*'|"(?:\\.|""|[^"\\])*")""".r
+      .findFirstMatchIn(tail).map(m => unquoteSqlString(m.group(1)))
+    e.alterDef(table)(d => d.copy(charset = cs.orElse(d.charset),
+      collation = coll.orElse(d.collation), comment = cmt.orElse(d.comment)))
     """(?is)\bAUTO_INCREMENT\s*=?\s*(\d+)""".r
       .findFirstMatchIn(tail).map(_.group(1).toLong)
   }
@@ -2524,17 +2515,20 @@ object Dml {
   private def createPrecheck(e: Engine, table: String, ifNotExists: Boolean,
                              temporary: Boolean = false): Boolean = {
     checkIdent(table)
-    val exists = e.createdRelations.contains(table) ||
-      e.viewDefs.contains(table)
+    val exists = e.created(table)
     if (temporary) {
       // CREATE TEMPORARY TABLE shadows an existing base table instead of
       // raising 1050 (reference buildCreateTable skips the existence
-      // check for temp tables); snapshot the base frame so DROP reveals
-      // it again. DataFrames analyze eagerly, so the snapshot binds the
-      // base's plan before the temp view replaces it.
-      if (exists && !e.tempShadow.contains(table))
-        scala.util.Try(e.spark.table(table))
-          .foreach(df => e.tempShadow(table) = df)
+      // check for temp tables); the base's frame and entry are kept so
+      // DROP reveals it again. DataFrames analyze eagerly, so the frame
+      // binds the base's plan before the temp view replaces it. The
+      // temporary table starts with an entry of its own.
+      if (exists) {
+        val base = e.tables.remove(table)
+        if (!e.tempShadow.contains(table))
+          scala.util.Try(e.spark.table(table))
+            .foreach(df => e.tempShadow(table) = (df, base))
+      }
       return false
     }
     if (exists && !ifNotExists)
@@ -2546,11 +2540,11 @@ object Dml {
   private def createFromDefs(e: Engine, table: String, body: String): Unit =
     try createFromDefsInner(e, table, body)
     catch { case ex: Throwable =>
-      // a failed CREATE must not leave declared metadata behind
+      // a failed CREATE must not leave its entry behind
       // (row_limit_queries.go re-runs CREATE with the same name).
       // Safe against live tables: createPrecheck rejected any CREATE
       // over an existing name before this path can run.
-      e.clearTableMeta(table)
+      e.tables.remove(table)
       throw ex
     }
 
@@ -2567,12 +2561,12 @@ object Dml {
     val df = e.spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       StructType(fields))
+    e.tables.getOrElseUpdate(table, TableDef.Empty)
     e.replaceTable(table, df, bumpDepth = false)
-    e.noteRelation(table)
   }
 
   /** Parse the parenthesized def list: declares all key/constraint
-    * metadata on the engine and returns the column StructFields (with
+    * metadata in the table's entry and returns the column StructFields (with
     * the post-checks both CREATE forms share — duplicate columns,
     * PK-implied NOT NULL, auto-inc-must-be-keyed). */
   private def parseDefItems(e: Engine, table: String,
@@ -2607,8 +2601,7 @@ object Dml {
             c => fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType))
           // MySQL's default index name: the first key column, deduped
           // with _2/_3 against already-declared indexes
-          val taken = e.secondaryIndexes.collect {
-            case (t, n, _) if t == table => n.toLowerCase }.toSet
+          val taken = e.tableDef(table).indexes.map(_._1.toLowerCase).toSet
           val base = parts.head._1
           val name = Option(mm.group(1)).getOrElse(
             if (!taken(base.toLowerCase)) base
@@ -2625,7 +2618,7 @@ object Dml {
         extractCheck(item).foreach { case (nm, ex) =>
           nm.foreach(checkIdent)
           e.declareCheck(table, nm.getOrElse(
-            s"${table}_chk_${e.checkConstraints.count(_._1 == table) + 1}"), ex,
+            s"${table}_chk_${e.tableDef(table).checks.size + 1}"), ex,
             enforced)
         }
       } else if (up.startsWith("KEY") || up.startsWith("INDEX")) {
@@ -2640,8 +2633,7 @@ object Dml {
             c => fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType))
           val base = Option(mm.group(1)).getOrElse(parts.head._1)
           checkIdent(base)
-          val taken = e.secondaryIndexes.collect {
-            case (t, n, _) if t == table => n.toLowerCase }.toSet
+          val taken = e.tableDef(table).indexes.map(_._1.toLowerCase).toSet
           val name = if (!taken(base.toLowerCase)) base
             else Iterator.from(2).map(i => s"${base}_$i")
               .find(n => !taken(n.toLowerCase)).get
@@ -2670,31 +2662,25 @@ object Dml {
     }.foreach(d => throw new IllegalArgumentException(
       s"Duplicate column name '$d' (MySQL 1060)"))
     // table-level PRIMARY KEY columns become NOT NULL like inline ones
-    val pkSet = e.tableKeys.getOrElse(table, Seq.empty)
-      .map(_.toLowerCase).toSet
+    val pkSet = e.tableDef(table).keyLower
     // a VIRTUAL generated column cannot join the primary key
     // (generated_columns.go "illegal table definitions"; MySQL 3106)
-    e.generatedCols.toSeq.foreach { case (t, c, _) =>
-      if (t == table && pkSet(c.toLowerCase) &&
-          !e.storedGeneratedCols((table, c.toLowerCase))) {
-        e.clearTableMeta(table)
+    e.tableDef(table).generated.foreach { case (c, _) =>
+      if (pkSet(c) && !e.colDef(table, c).stored)
         throw new IllegalArgumentException(
           "Defining a virtual generated column as part of the primary " +
           "key is not supported (MySQL 3106)")
-      }
     }
     if (pkSet.nonEmpty) fields.mapInPlace(f =>
       if (pkSet(f.name.toLowerCase)) f.copy(nullable = false) else f)
     // an AUTO_INCREMENT column must be the leftmost column of SOME key
     // (reference ErrInvalidAutoIncCols; create_table_queries.go "missing
     // unique key" block)
-    e.autoIncCols.get(table).foreach { c =>
+    val defn = e.tableDef(table)
+    defn.autoInc.foreach { c =>
       val keyed =
-        e.tableKeys.get(table).exists(_.exists(_.equalsIgnoreCase(c))) ||
-        e.uniqueKeys.exists(u => u._1 == table &&
-          u._3.headOption.exists(_.equalsIgnoreCase(c))) ||
-        e.secondaryIndexes.exists(s => s._1 == table &&
-          s._3.headOption.exists(_.equalsIgnoreCase(c)))
+        defn.key.exists(_.exists(_.equalsIgnoreCase(c))) ||
+        (defn.uniques ++ defn.indexes).exists(_._2.headOption.exists(_.equalsIgnoreCase(c)))
       if (!keyed) throw new IllegalArgumentException(
         "there can be only one auto_increment column and it must be " +
         "defined as a key (MySQL ErrInvalidAutoIncCols)")
@@ -2712,20 +2698,17 @@ object Dml {
     * parseDefItems cannot see. */
   private def validateCheckRefs(e: Engine, table: String,
       colSet: Set[String]): Unit =
-    e.checkConstraints.toSeq.foreach { case (t, n, ex, _) =>
-      if (t == table) {
-        val refs =
-          try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-            .parseExpression(ex).collect {
-              case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-                a.name.toLowerCase
-            }
-          catch { case _: Exception => Seq.empty[String] }
-        refs.find(r => !colSet(r)).foreach { missing =>
-          e.checkConstraints.filterInPlace(_._1 != table)
-          throw new IllegalArgumentException(
-            s"Unknown column '$missing' in check constraint '$n' (MySQL 1054)")
-        }
+    e.tableDef(table).checks.foreach { case (n, ex, _) =>
+      val refs =
+        try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+          .parseExpression(ex).collect {
+            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+              a.name.toLowerCase
+          }
+        catch { case _: Exception => Seq.empty[String] }
+      refs.find(r => !colSet(r)).foreach { missing =>
+        throw new IllegalArgumentException(
+          s"Unknown column '$missing' in check constraint '$n' (MySQL 1054)")
       }
     }
 
@@ -2755,8 +2738,7 @@ object Dml {
     }
     val merged = df0.select(
       fresh.map(f => lit(null).cast(f.dataType).as(f.name)) ++ selCols: _*)
-    val pkSet = e.tableKeys.getOrElse(table, Seq.empty)
-      .map(_.toLowerCase).toSet
+    val pkSet = e.tableDef(table).keyLower
     val schema = StructType(merged.schema.fields.map { f =>
       val want = overrides.get(f.name.toLowerCase)
       f.copy(nullable = want.map(_.nullable).getOrElse(f.nullable) &&
@@ -2765,8 +2747,8 @@ object Dml {
     e.validateRowLength(table, schema)
     // rdd + explicit schema: the only way to pin nullability on the result
     val df = e.spark.createDataFrame(merged.rdd, schema)
+    e.tables.getOrElseUpdate(table, TableDef.Empty)
     e.replaceTable(table, df, bumpDepth = false)
-    e.noteRelation(table)
   }
 
   /** ALTER TABLE actions (reference sql/planbuilder/ddl.go buildAlterTable):
@@ -2786,15 +2768,15 @@ object Dml {
     if (e.viewDefs.contains(e.canonicalTable(table)))
       throw new IllegalArgumentException(
         s"'$table' is not BASE TABLE (MySQL error 1347)")
-    // a failed ALTER must not keep ANY half-applied declared metadata:
-    // an early action may have renamed columns (renameColumnMeta),
-    // dropped keys, or declared defaults before a later action or the
-    // final validateRowLength threw — the data change rolls back with
-    // the un-replaced DataFrame already, so the declarations must too
-    val metaBefore = e.tableMetaSnapshot(table)
+    // a failed ALTER keeps no half-applied declaration: an early action
+    // may have renamed columns, dropped keys, or declared defaults before
+    // a later action or the final validateRowLength threw — the data
+    // change rolls back with the un-replaced DataFrame already, and the
+    // old entry goes back in place
+    val before = e.tables.get(table)
     try alterTableInner(e, table, actions)
     catch { case ex: Throwable =>
-      e.restoreTableMeta(table, metaBefore)
+      before.fold(e.tables.remove(table))(d => e.tables.put(table, d))
       throw ex
     }
   }
@@ -2865,11 +2847,10 @@ object Dml {
       action match {
         // index/constraint actions first: they'd otherwise parse as an
         // ADD COLUMN named PRIMARY/UNIQUE/INDEX
-        case AddPk(cols) if e.generatedCols.exists(g => g._1 == table &&
-            !e.storedGeneratedCols((table, g._2.toLowerCase)) &&
+        case AddPk(cols) if e.tableDef(table).generated.exists { case (g, _) =>
+            !e.colDef(table, g).stored &&
             cols.toLowerCase.matches(
-              "(?s).*\\b" + java.util.regex.Pattern.quote(g._2.toLowerCase) +
-              "\\b.*")) =>
+              "(?s).*\\b" + java.util.regex.Pattern.quote(g) + "\\b.*") } =>
           throw new IllegalArgumentException(
             "Defining a virtual generated column as part of the primary " +
             "key is not supported (MySQL 3106)")
@@ -2908,8 +2889,7 @@ object Dml {
                 "(MySQL ErrKeyColumnDoesNotExist)")
           }
           // default name: first key column, deduped _2/_3 (MySQL rule)
-          val takenIdx = e.secondaryIndexes.collect {
-            case (t, n, _) if t == table => n.toLowerCase }.toSet
+          val takenIdx = e.tableDef(table).indexes.map(_._1.toLowerCase).toSet
           val name = Option(nameOpt).getOrElse {
             val base = colSeq.head
             if (!takenIdx(base.toLowerCase)) base
@@ -2930,7 +2910,7 @@ object Dml {
         case a if a.toUpperCase.matches("(?s)^DROP\\s+PRIMARY\\s+KEY$") =>
           // ordinal_ddl_queries.go: the PK declaration goes away; the
           // columns stay (MySQL drops the index, not the data)
-          e.tableKeys.remove(table)
+          e.alterDef(table)(_.copy(key = None))
         case DropIdx(name) =>
           // guards even with FOREIGN_KEY_CHECKS=0 ("Delayed foreign key
           // still does some validation")
@@ -2939,14 +2919,9 @@ object Dml {
               s"Cannot drop index '${stripTick(name)}': needed in a " +
               "foreign key constraint (MySQL ErrForeignKeyDropIndex)")
           val nm = stripTick(name)
-          val known =
-            e.secondaryIndexes.exists(x => x._1 == table &&
-              x._2.equalsIgnoreCase(nm)) ||
-            e.uniqueKeys.exists(x => x._1 == table &&
-              x._2.equalsIgnoreCase(nm)) ||
-            e.uniqueExprIdx.exists(x => x._1 == table &&
-              x._2.equalsIgnoreCase(nm)) ||
-            nm.equalsIgnoreCase("primary")
+          val d = e.tableDef(table)
+          val known = (d.indexes ++ d.uniques ++ d.uniqueExprs)
+            .exists(_._1.equalsIgnoreCase(nm)) || nm.equalsIgnoreCase("primary")
           // dropping a nonexistent index fails the WHOLE statement
           // (script_queries.go "Multialter DDL with ADD/DROP INDEX":
           // ErrCantDropFieldOrKey 1091)
@@ -2954,7 +2929,7 @@ object Dml {
             throw new IllegalArgumentException(
               s"Can't DROP '$nm'; check that column/key exists " +
               "(MySQL error 1091)")
-          if (nm.equalsIgnoreCase("primary")) e.tableKeys.remove(table)
+          if (nm.equalsIgnoreCase("primary")) e.alterDef(table)(_.copy(key = None))
           else e.dropIndex(table, nm)
         case a if a.toUpperCase.matches("(?s)^ADD\\s+(?:CONSTRAINT\\s+\\S+\\s+)?FOREIGN\\s+KEY\\b.*") =>
           // ADD FOREIGN KEY validates existing rows before registering
@@ -2983,7 +2958,7 @@ object Dml {
             .trim.endsWith("NOT ENFORCED")
           extractCheck(action).foreach { case (nm, ex) =>
             val name = nm.getOrElse(
-              s"${table}_chk_${e.checkConstraints.count(_._1 == table) + 1}")
+              s"${table}_chk_${e.tableDef(table).checks.size + 1}")
             if (!notEnforced) {
               val bad = e.spark.table(table)
                 .filter(expr(ex).cast("boolean") === lit(false)).limit(1).count()
@@ -2996,18 +2971,13 @@ object Dml {
           // DROP CHECK/CONSTRAINT by name: checks first, then FK/unique
           // (MySQL's generic DROP CONSTRAINT form); an unknown name is
           // error 3940 (check_scripts.go Drop "error cases")
-          val hadCheck = e.checkConstraints.exists(c =>
-            c._1 == table && c._2.equalsIgnoreCase(name))
-          if (hadCheck)
-            e.checkConstraints.filterInPlace(c =>
-              !(c._1 == table && c._2.equalsIgnoreCase(name)))
-          else if (e.foreignKeys.exists(f =>
-              f.child == table && f.name.equalsIgnoreCase(name)))
+          val d = e.tableDef(table)
+          if (d.checks.exists(_._1.equalsIgnoreCase(name)))
+            e.tables(table) = d.copy(checks = d.checks.filterNot(_._1.equalsIgnoreCase(name)))
+          else if (d.fks.exists(_.name.equalsIgnoreCase(name)))
             e.dropForeignKey(table, name)
-          else if (e.uniqueKeys.exists(u =>
-              u._1 == table && u._2.equalsIgnoreCase(name)))
-            e.uniqueKeys.filterInPlace(u =>
-              !(u._1 == table && u._2.equalsIgnoreCase(name)))
+          else if (d.uniques.exists(_._1.equalsIgnoreCase(name)))
+            e.tables(table) = d.copy(uniques = d.uniques.filterNot(_._1.equalsIgnoreCase(name)))
           else throw new IllegalArgumentException(
             s"Constraint '$name' does not exist (MySQL error 3940)")
         case a if a.toUpperCase.matches("(?s)^AUTO_INCREMENT\\s*=?\\s*\\d+(\\.\\d+)?$") =>
@@ -3015,17 +2985,18 @@ object Dml {
           // below the current next value; a no-op on tables without an
           // AUTO_INCREMENT key (insert_queries.go:1075,1107;
           // alter_table_queries.go:738)
-          if (e.autoIncCols.contains(table)) {
+          if (e.tableDef(table).autoInc.isDefined) {
             val v = BigDecimal(a.replaceAll("(?i)AUTO_INCREMENT|=", "").trim)
               .toLong
-            e.autoIncCounter(table) = math.max(e.autoIncNext(table), v)
+            val next = math.max(e.autoIncNext(table), v)
+            e.alterDef(table)(_.copy(autoIncCounter = Some(next)))
           }
         case a if """(?is)^COMMENT\s*=?\s*['"].*$""".r.matches(a.trim) =>
           // ALTER TABLE t COMMENT [=] '…' replaces the table comment
           // (alter_table_queries.go "alter table comment")
           """(?is)^COMMENT\s*=?\s*('(?:\\.|''|[^'\\])*'|"(?:\\.|""|[^"\\])*")""".r
             .findFirstMatchIn(a.trim)
-            .foreach(m => e.tableComments(table) = unquoteSqlString(m.group(1)))
+            .foreach(m => e.alterDef(table)(_.copy(comment = Some(unquoteSqlString(m.group(1))))))
         case a if a.trim.toUpperCase.matches("(?s)^(?:DISABLE|ENABLE)\\s+KEYS$") =>
           () // index maintenance toggles: declared keys always enforce here
         case IndexDdl() => () // metadata-only
@@ -3050,7 +3021,7 @@ object Dml {
           if (Set("tinytext", "text", "mediumtext", "longtext", "tinyblob",
               "blob", "mediumblob", "longblob")(
               spec.trim.toLowerCase.takeWhile(c => c.isLetter || c == '_')))
-            e.declareBlobText(table, stripTick(cn))
+            e.alterCol(table, stripTick(cn))(_.copy(blobText = true))
           // inline attributes on ADD COLUMN declare like CREATE's column
           // defs (alter_table_queries.go "add column unique index" /
           // "add column with inline check constraint definition")
@@ -3060,7 +3031,7 @@ object Dml {
           }
           extractCheck(spec).foreach { case (nm, ex) =>
             e.declareCheck(table, nm.getOrElse(
-              s"${table}_chk_${e.checkConstraints.count(_._1 == table) + 1}"),
+              s"${table}_chk_${e.tableDef(table).checks.size + 1}"),
               ex)
           }
           if ("""(?i)\bNOT\s+NULL\b""".r.findFirstIn(spec).isDefined)
@@ -3123,7 +3094,10 @@ object Dml {
           }
           // an auto-inc backfill advances the counter past the table so
           // SHOW CREATE renders AUTO_INCREMENT=n+1 immediately
-          if (hasAI) e.autoIncCounter(table) = df.count() + 1
+          if (hasAI) {
+            val next = df.count() + 1
+            e.alterDef(table)(_.copy(autoIncCounter = Some(next)))
+          }
         case AlterColDefault(cn, d) =>
           // the column must exist (script_queries.go "ALTER TABLE, ALTER
           // COLUMN SET, DROP DEFAULT": ErrTableColumnNotFound)
@@ -3137,7 +3111,7 @@ object Dml {
             throw new IllegalArgumentException(
               s"table '$table' does not have column '${stripTick(cn)}' " +
               "(MySQL ErrTableColumnNotFound)")
-          e.columnDefaults.remove((table, stripTick(cn).toLowerCase))
+          e.alterCol(table, stripTick(cn))(_.copy(default = None))
         case DropCol(cn) =>
           val lc = stripTick(cn).toLowerCase
           if (!originalCols(lc) || renamedAway(lc))
@@ -3167,18 +3141,17 @@ object Dml {
                   a.name.toLowerCase
               }.toSet
             catch { case _: Exception => Set.empty[String] }
-          e.checkConstraints.find(c => c._1 == table && {
-            val r = refsOf(c._3); r.contains(lc) && r.exists(_ != lc)
-          }).foreach { c =>
+          e.tableDef(table).checks.find { c =>
+            val r = refsOf(c._2); r.contains(lc) && r.exists(_ != lc)
+          }.foreach { c =>
             throw new IllegalArgumentException(
-              s"check constraint '${c._2}' references column " +
+              s"check constraint '${c._1}' references column " +
               s"'${stripTick(cn)}' and others; drop the constraint first " +
               s"(MySQL 3959)")
           }
-          e.checkConstraints.filterInPlace(c =>
-            !(c._1 == table && refsOf(c._3) == Set(lc)))
           df = df.drop(stripTick(cn))
-          e.columnDefaults.remove((table, lc))
+          e.alterDef(table)(d => d.dropCol(lc)
+            .copy(checks = d.checks.filterNot(c => refsOf(c._2) == Set(lc))))
         case RenameCol(a, b) =>
           val lcA = stripTick(a).toLowerCase
           if (!originalCols(lcA) || renamedAway(lcA))
@@ -3187,7 +3160,7 @@ object Dml {
               s"(MySQL 1054: multi-ALTER actions resolve against the " +
               s"statement-start schema)")
           renamedAway += lcA
-          e.renameColumnMeta(table, stripTick(a), stripTick(b))
+          e.renameColumnDef(table, stripTick(a), stripTick(b))
           df = df.withColumnRenamed(stripTick(a), stripTick(b))
         case Modify(cn, spec) =>
           val dt = applyCollation(mysqlDataType(spec)._1, spec)
@@ -3208,7 +3181,7 @@ object Dml {
           // the new declared precision applies first
           """(?i)^(?:timestamp|datetime)\s*\(\s*(\d+)\s*\)""".r
             .findFirstMatchIn(spec.trim).foreach(p =>
-              e.timePrecisions((table, name.toLowerCase)) = p.group(1).toInt)
+              e.alterCol(table, name)(_.copy(timePrecision = Some(p.group(1).toInt))))
           parseOnUpdateClause(e, table, name, spec, dt)
           if (!originalCols(name.toLowerCase) ||
               renamedAway(name.toLowerCase))
@@ -3230,7 +3203,7 @@ object Dml {
               .takeWhile(c => c.isLetter || c == '_').toLowerCase
             val newBase = spec.trim.toLowerCase
               .takeWhile(c => c.isLetter || c == '_')
-            val oldLimit = e.charLimitOf(table, name)
+            val oldLimit = e.colDef(table, name).charLimit
             val newLimit = """^[A-Za-z_]+\s*\(\s*(\d+)\s*\)""".r
               .findFirstMatchIn(spec.trim).map(_.group(1).toInt)
             val stringish =
@@ -3259,25 +3232,22 @@ object Dml {
             "longblob")(specBase)
           if (toBlobText) {
             val nl = name.toLowerCase
+            val d = e.tableDef(table)
             val keyed =
-              e.tableKeys.getOrElse(table, Seq.empty)
-                .exists(_.equalsIgnoreCase(name)) ||
-              (e.uniqueKeys ++ e.secondaryIndexes).exists { case (t, n, cs) =>
-                t == table && cs.exists(_.equalsIgnoreCase(name)) &&
-                  !e.indexPrefixes.contains((table, n, nl))
+              d.key.getOrElse(Seq.empty).exists(_.equalsIgnoreCase(name)) ||
+              (d.uniques ++ d.indexes).exists { case (n, cs) =>
+                cs.exists(_.equalsIgnoreCase(name)) && !d.indexPrefixes.contains((n, nl))
               }
             if (keyed) throw new IllegalArgumentException(
               s"blob/text column '$name' used in key specification " +
               "without a key length (MySQL 1170)")
-            e.declareBlobText(table, name)
-          } else e.blobTextCols.remove((table, name.toLowerCase))
+            e.alterCol(table, name)(_.copy(blobText = true))
+          } else e.alterCol(table, name)(_.copy(blobText = false))
           // MODIFY without the AUTO_INCREMENT attribute REMOVES it
           // (alter_table_queries.go "ALTER TABLE remove AUTO_INCREMENT")
-          if (e.autoIncCols.get(table).exists(_.equalsIgnoreCase(name)) &&
+          if (e.tableDef(table).autoInc.exists(_.equalsIgnoreCase(name)) &&
               """(?i)\bAUTO_INCREMENT\b""".r.findFirstIn(spec).isEmpty) {
-            e.autoIncCols.remove(table)
-            e.autoIncCounter.remove(table)
-            e.autoIncShown.remove(table)
+            e.alterDef(table)(_.copy(autoInc = None, autoIncCounter = None, autoIncShown = None))
           }
           // MODIFY WITH the attribute declares the counter column — an
           // `AUTO_INCREMENT = n` option later in the same statement (or
@@ -3301,7 +3271,7 @@ object Dml {
                 s"Column '$name' backs a SET NULL foreign key action and " +
                 "cannot become NOT NULL (MySQL ErrForeignKeyTypeChangeSetNull)")
             e.declareNotNull(table, name)
-          } else e.notNullCols.remove((table, name.toLowerCase))
+          } else e.alterCol(table, name)(_.copy(notNull = false))
           // integer re-declarations re-derive the UNSIGNED bound and
           // validate EXISTING rows against the new range — MODIFY i2 int
           // unsigned over a -1 value is sql.ErrValueOutOfRange
@@ -3321,9 +3291,9 @@ object Dml {
               val unsignedNow =
                 """(?i)\bUNSIGNED\b""".r.findFirstIn(spec).isDefined
               if (unsignedNow) e.declareUnsigned(table, name, newBase)
-              else e.unsignedBounds.remove((table, name.toLowerCase))
+              else e.alterCol(table, name)(_.copy(unsigned = None))
               val (lo, hi) =
-                if (unsignedNow) e.unsignedBounds((table, name.toLowerCase))
+                if (unsignedNow) e.colDef(table, name).unsigned.get
                 else intBases(newBase)
               val oldIsNumeric = df.schema.fields
                 .find(_.name.equalsIgnoreCase(name))
@@ -3378,11 +3348,11 @@ object Dml {
           }
           if (!stripTick(a).equalsIgnoreCase(stripTick(b))) {
             renamedAway += stripTick(a).toLowerCase
-            e.renameColumnMeta(table, stripTick(a), stripTick(b))
+            e.renameColumnDef(table, stripTick(a), stripTick(b))
           }
           if ("""(?i)\bNOT\s+NULL\b""".r.findFirstIn(spec).isDefined)
             e.declareNotNull(table, stripTick(b))
-          else e.notNullCols.remove((table, stripTick(b).toLowerCase))
+          else e.alterCol(table, stripTick(b))(_.copy(notNull = false))
           recordSpecCollation(e, table, stripTick(b), spec)
           val dt = applyCollation(mysqlDataType(spec)._1, spec)
           df = df.withColumn(stripTick(a), col(s"`${stripTick(a)}`").cast(dt))
@@ -3394,14 +3364,11 @@ object Dml {
           val parts = a.trim.split("\\s+")
           val oldN = stripTick(parts(parts.length - 3))
           val newN = stripTick(parts.last)
-          val hadFk = e.foreignKeys.exists(f =>
-            f.child == table && f.name.equalsIgnoreCase(oldN))
-          if (hadFk)
-            e.foreignKeys.mapInPlace(f =>
-              if (f.child == table && f.name.equalsIgnoreCase(oldN))
-                f.copy(name = newN) else f)
-          else if (e.checkConstraints.exists(c =>
-              c._1 == table && c._2.equalsIgnoreCase(oldN)))
+          val d = e.tableDef(table)
+          if (d.fks.exists(_.name.equalsIgnoreCase(oldN)))
+            e.tables(table) = d.copy(fks = d.fks.map(f =>
+              if (f.name.equalsIgnoreCase(oldN)) f.copy(name = newN) else f))
+          else if (d.checks.exists(_._1.equalsIgnoreCase(oldN)))
             // the reference supports renaming FOREIGN KEY constraints
             // only ("rename check constraints" -> ErrUnsupportedFeature)
             throw new IllegalArgumentException(
@@ -3419,11 +3386,11 @@ object Dml {
     e.validateRowLength(table, df.schema)
     renameTo match {
       case Some(n) =>
-        // table rename MOVES the declared metadata (constraints, keys,
-        // defaults, comments, stats) — it must not drop it with the
-        // old name (alter_table_queries.go rename blocks)
+        // table rename MOVES the entry (constraints, keys, defaults,
+        // comments, stats) — it must not drop it with the old name
+        // (alter_table_queries.go rename blocks)
+        e.renameTableDef(table, n)
         e.replaceTable(n, df, bumpDepth = false)
-        e.renameTableMeta(table, n)
         e.spark.catalog.dropTempView(table)
         e.refreshViews(table)
       case None => e.replaceTable(table, df, bumpDepth = true)
@@ -3475,7 +3442,7 @@ object Dml {
         }.toSet
       catch { case _: Exception => Set.empty }
     val refPositions = cols.zipWithIndex.collect {
-      case (c, i) if e.columnDefaults.get((table, c.toLowerCase))
+      case (c, i) if e.colDef(table, c).default
         .exists(d => refsOf(d).nonEmpty) => i
     }
     val rebuilt = tuples.map { tup =>
@@ -3485,7 +3452,7 @@ object Dml {
         if (it.trim.equalsIgnoreCase("DEFAULT")) {
           if (refPositions.contains(i)) "NULL"
           else cols.lift(i).flatMap(c =>
-            e.columnDefaults.get((table, c.toLowerCase))).getOrElse("NULL")
+            e.colDef(table, c).default).getOrElse("NULL")
         } else it
       }
       val markers = refPositions.map(i =>
@@ -3499,7 +3466,7 @@ object Dml {
       val innerNames = cols ++ refPositions.map(i => s"__d_$i")
       val projs = cols.zipWithIndex.map { case (c, i) =>
         if (refPositions.contains(i)) {
-          val d = e.columnDefaults((table, c.toLowerCase))
+          val d = e.colDef(table, c).default.get
           s"CASE WHEN `__d_$i` THEN ($d) ELSE `$c` END AS `$c`"
         } else s"`$c`"
       }
@@ -3572,7 +3539,7 @@ object Dml {
     * `default (UUID())` pk arrives here as an explicit UUID() call. */
   private def preGenUuids(e: Engine, table: String, cols: Seq[String],
                           values: String): String = {
-    val pk = e.tableKeys.getOrElse(table, Seq.empty).map(_.toLowerCase).toSet
+    val pk = e.tableDef(table).keyLower
     if (pk.isEmpty || !values.trim.toUpperCase.startsWith("VALUES") ||
         """(?i)\buuid\s*\(\s*\)""".r.findFirstIn(values).isEmpty)
       return values
@@ -3643,9 +3610,7 @@ object Dml {
     // keyless tables upsert through their unique indexes). With no keys
     // at all the update clause can never fire — plain INSERT.
     val keysList: Seq[Seq[String]] =
-      (e.tableKeys.get(table).toSeq ++
-        e.uniqueKeys.toSeq.collect { case (t2, _, cols) if t2 == table =>
-          cols }).distinct
+      e.tableDef(table).keys.map(_._2).distinct
     val batch = e.imageInsert(table, incoming0, fillMissing = true, ignore)
     if (keysList.isEmpty) return ok(e, e.checkInsert(batch)())
     // last-in-batch wins per EVERY declared key (not just the PK — two
@@ -3808,10 +3773,19 @@ object Dml {
     val gate = Some(coalesce(col("__hit__"), lit(false)))
     val image = new RowImage(e, table, assigns, ignore)
     val nMatched = matched.count()
-    val (kept, updated, writeUpdate) =
-      if (nMatched == 0) (0L, t, () => ())
-      else checkUpdate(e, table, image, frameRows(e, table, rows, gate, nMatched),
-        image(rows, gate).drop(matched.columns.filter(_.startsWith("__i_")) :+ "__hit__": _*))
+    val (updated, changed, writeUpdate) =
+      if (nMatched == 0) (t, 0L, () => ())
+      else {
+        val (_, whole, after, write) = checkUpdate(e, table, image,
+          frameRows(e, table, rows, gate, nMatched),
+          image(rows, gate).drop(matched.columns.filter(_.startsWith("__i_")) :+ "__hit__": _*))
+        // a matched row whose new values equal its old ones is not
+        // affected (MySQL counts 0 for it, 2 for a changed row)
+        val old = tR.join(matched.select("__rid__"), Seq("__rid__"), "left_semi")
+          .select(col("__rid__") +: t.columns.map(c => col(s"`$c`").as(s"__o_$c")).toIndexedSeq: _*)
+        val differs = t.columns.map(c => !(col(s"`$c`") <=> col(s"`__o_$c`"))).reduce(_ || _)
+        (whole, after.join(old, Seq("__rid__")).filter(differs).count(), write)
+      }
     // the insert phase: the incoming rows left after every key pass
     val inserted = pool.select(incoming.columns.map(c =>
       col(s"`__i_$c`").as(c)).toIndexedSeq: _*)
@@ -3819,7 +3793,7 @@ object Dml {
       else e.checkInsert(batch.copy(rows = inserted), Some(updated))
     writeUpdate()
     val nInserted = writeInsert()
-    ok(e, nInserted + 2 * (nMatched - kept))
+    ok(e, nInserted + 2 * changed)
   }
 
   /** `CONSTRAINT name UNIQUE|PRIMARY KEY …` → the canonical key-item
@@ -3934,17 +3908,16 @@ object Dml {
   }
 
   /** The table's BEFORE triggers on `event` (INSERT, UPDATE, DELETE). */
-  private def beforeTriggers(e: Engine, table: String, event: String): Seq[e.Trigger] =
-    e.triggers.values.toSeq.filter(t =>
-      t.table == table && t.timing == "BEFORE" && t.event == event)
+  private[graft] def beforeTriggers(e: Engine, table: String, event: String): Seq[Trigger] =
+    e.tableDef(table).triggers.filter(t => t.timing == "BEFORE" && t.event == event)
 
-  /** Fold the table's BEFORE UPDATE trigger layers over the
-    * post-assignment row image, gated to the matched rows. Declaration
-    * order; each layer sees the values the previous layers produced
-    * (reference rowexec trigger iteration). */
-  private def applyBeforeUpdateTriggers(e: Engine, table: String,
+  /** Fold the table's BEFORE `event` trigger layers over the row image
+    * (after INSERT's fill, or UPDATE's assignments), gated to the
+    * matched rows. Declaration order; each layer sees the values the
+    * previous layers produced (reference rowexec trigger iteration). */
+  private[graft] def applyBeforeTriggers(e: Engine, table: String, event: String,
       df: DataFrame, gate: org.apache.spark.sql.Column): DataFrame = {
-    val trgs = beforeTriggers(e, table, "UPDATE")
+    val trgs = beforeTriggers(e, table, event)
     if (trgs.isEmpty) return df
     val actual = df.columns.map(c => c.toLowerCase -> c).toMap
     trgs.foldLeft(df) { (d, trg) =>
@@ -4024,7 +3997,7 @@ object Dml {
         actual.getOrElse(c.toLowerCase, throw new IllegalArgumentException(
           s"Unknown column '$c' in 'field list'")) -> ex
       }
-      val key = e.tableKeys.getOrElse(table, t.columns.toSeq)
+      val key = e.tableDef(table).key.getOrElse(t.columns.toSeq)
       val keySel = key.map(k => s"`$alias`.`$k` AS `__key_$k`")
       val newCols = asResolved.map { case (c, _) => s"__new_$c" }.distinct
       val newSel = asResolved.map { case (c, ex) => s"($ex) AS `__new_$c`" }
@@ -4065,7 +4038,7 @@ object Dml {
     val checked = work.map { case (table, image, rows, img) =>
       checkUpdate(e, table, image, rows, img)
     }
-    checked.foreach(_._3())
+    checked.foreach(_._4())
     // rows matched; UPDATE IGNORE … JOIN reports the rows it updated
     // (update_queries.go:441 UpdateInfo{Matched:4, Updated:1})
     val n = work.map(_._3.matched).sum - checked.map(_._1).sum
@@ -4096,12 +4069,10 @@ object Dml {
     // shape in generated_columns.go); DEFAULT on a plain column takes
     // its declared default (or NULL)
     private val assigns = assigns0.flatMap { case (c, ex) =>
-      val isGenerated =
-        e.generatedCols.exists(g => g._1 == table && g._2.equalsIgnoreCase(c))
+      val isGenerated = e.tableDef(table).isGenerated(c)
       if (ex.trim.equalsIgnoreCase("DEFAULT")) {
         if (isGenerated) None // computeGenerated recomputes it
-        else Some(c -> e.columnDefaults
-          .get((table, c.toLowerCase)).getOrElse("NULL"))
+        else Some(c -> e.colDef(table, c).default.getOrElse("NULL"))
       } else if (isGenerated)
         throw new IllegalArgumentException(
           s"The value specified for generated column '$c' in table " +
@@ -4114,11 +4085,11 @@ object Dml {
     // updates nothing, dolt issue 10657). The original assigned values
     // ride along as __orig_* so change detection is row-local.
     private val assigned = assigns.map(_._1).distinct
-    private val onUpdCols = e.onUpdateCols.toSeq.collect {
-      case ((t2, cl), p) if t2 == table &&
+    private val onUpdCols = e.tableDef(table).columns.toSeq.collect {
+      case (cl, cd) if cd.onUpdate.isDefined &&
           !assigned.exists(_.equalsIgnoreCase(cl)) &&
           schema.fieldNames.exists(_.equalsIgnoreCase(cl)) =>
-        (schema.fieldNames.find(_.equalsIgnoreCase(cl)).get, p)
+        (schema.fieldNames.find(_.equalsIgnoreCase(cl)).get, cd.onUpdate.get)
     }
     // the columns the statement writes, whose NULLs settle checks
     private val written = (assigned ++ beforeTriggers(e, table, "UPDATE")
@@ -4145,7 +4116,7 @@ object Dml {
           f -> (if (d.columns.contains(f)) coalesce(col(s"`$f`"), cond) else cond)
         } :+ (c -> keep(c, v))).toMap)
       }
-      val triggered = applyBeforeUpdateTriggers(e, table, image, updated)
+      val triggered = applyBeforeTriggers(e, table, "UPDATE", image, updated)
       val stamped =
         if (onUpdCols.isEmpty) triggered
         else {
@@ -4218,10 +4189,11 @@ object Dml {
     *    (1452), PRIMARY and UNIQUE keys (1062), the row-ordered transient
     *    key collisions (strict), unique expression indexes.
     * Returns the number of rows kept at their old values, the whole
-    * post-update table and the write: ON UPDATE actions on child tables,
-    * then the store. Nothing is written before the write runs. */
+    * post-update table, the checked rows with their `__rid__`, and the
+    * write: ON UPDATE actions on child tables, then the store. Nothing
+    * is written before the write runs. */
   private def checkUpdate(e: Engine, table: String, image: RowImage,
-      rows: UpdateRows, img: DataFrame): (Long, DataFrame, () => Unit) = {
+      rows: UpdateRows, img: DataFrame): (Long, DataFrame, DataFrame, () => Unit) = {
     var after = image.settle(img)
     var kept = Set.empty[Long]
     if (image.ignore) {
@@ -4240,7 +4212,7 @@ object Dml {
         if (rids.nonEmpty) e.warnN(rids.size, code, msg)
         keepOld(rids)
       }
-      e.checkConstraints.toSeq.collect { case (t2, _, ex, true) if t2 == table => ex }
+      e.tableDef(table).checks.collect { case (_, ex, true) => ex }
         .foreach { ex =>
           failing(after.filter(updated && !coalesce(expr(ex).cast("boolean"), lit(true))),
             1105, "check constraint violated (row kept old values)")
@@ -4259,7 +4231,7 @@ object Dml {
     e.enforcePkUniquePost(table, newDf)
     if (image.strict) e.enforcePkUniqueTransient(table, rows.before, after)
     e.enforceUniqueExprsPost(table, newDf)
-    (kept.size.toLong, newDf, () => {
+    (kept.size.toLong, newDf, after, () => {
       e.enforceParentUpdate(table, rows.before, after, newTable = Some(newDf))
       write()
     })
@@ -4304,7 +4276,7 @@ object Dml {
           throw new IllegalArgumentException(
             s"Unknown table '$alias' in MULTI DELETE"))
         val t = e.spark.table(table)
-        val key = e.tableKeys.getOrElse(table, t.columns.toSeq)
+        val key = e.tableDef(table).key.getOrElse(t.columns.toSeq)
         val sel = key.map(k => s"`$alias`.`$k` AS `$k`").mkString(", ")
         val hit = e.query(s"SELECT DISTINCT $sel FROM $srcText$whereSql")
         // the analyzed plans bind the current view subtrees, so the

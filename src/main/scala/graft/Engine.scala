@@ -1273,7 +1273,8 @@ class Engine(val spark: SparkSession) {
     // ENUM index / SET bitmask ordering (enum.go / set.go Compare):
     // only sessions that declared a vocabulary pay the token walk
     val rewritten1 =
-      if (columnVocab.isEmpty) rewritten0
+      if (!tables.valuesIterator.exists(_.columns.valuesIterator.exists(_.vocab.isDefined)))
+        rewritten0
       else SqlRewrite.enumOrdinal(rewritten0, vocabLookup(rewritten0))
     // dolt's any_value-without-GROUP-BY keeps per-row semantics
     // (queries.go:9332) — strip the aggregate wrapper in that shape
@@ -1384,7 +1385,7 @@ class Engine(val spark: SparkSession) {
               """(?i)\b(?:FROM|JOIN)\s+`?([A-Za-z_][A-Za-z0-9_.]*)`?"""
                 .r.findAllMatchIn(cur).map(_.group(1)).toList
             val pkGrouped = allFromTbls.exists(t =>
-              tableKeys.get(canonicalTable(t)).exists(pk =>
+              tableDef(canonicalTable(t)).key.exists(pk =>
                 pk.nonEmpty && pk.forall(c => groupWords(c.toLowerCase))))
             // the offending column is also admissible when WHERE pins it
             // (or the table pk) to a constant — functionally single-group
@@ -1400,7 +1401,7 @@ class Engine(val spark: SparkSession) {
             if (dbStripped != cur) attempt(dbStripped, budget - 1)
             else {
             val pkPinned = fromTbl.flatMap(t =>
-              tableKeys.get(canonicalTable(t))).exists(pk =>
+              tableDef(canonicalTable(t)).key).exists(pk =>
               pk.nonEmpty && pk.forall(constPinned))
             val fullGroupBy =
               sqlModeString.toUpperCase.contains("ONLY_FULL_GROUP_BY")
@@ -1571,9 +1572,9 @@ class Engine(val spark: SparkSession) {
       // dolt's clustered-scan tie order: TopN over a pk'd table breaks
       // sort ties by primary key
       val cleaned1 =
-        if (tableKeys.isEmpty) cleaned0
+        if (!tables.valuesIterator.exists(_.key.isDefined)) cleaned0
         else SqlRewrite.stableTopN(cleaned0,
-          t => tableKeys.get(canonicalTable(t)))
+          t => tableDef(canonicalTable(t)).key)
       // branch-local ORDER BY/LIMIT in parenthesized set-op operands
       val cleaned = SqlRewrite.setOpBranchWrap(cleaned1)
       // the pk tiebreaker is best-effort: if the patched text fails
@@ -1853,7 +1854,7 @@ class Engine(val spark: SparkSession) {
   /** CREATE TABLE t AS SELECT ... (TableCopier, sql/plan/table_copier.go).
     * A db-qualified target materializes into the catalog namespace. */
   def ctas(name: String, sql: String): Unit = {
-    createdRelations += name
+    tables(name) = TableDef.Empty
     if (name.contains(".")) replaceTable(name, query(sql), bumpDepth = false)
     else query(sql).createOrReplaceTempView(name)
   }
@@ -1974,60 +1975,79 @@ class Engine(val spark: SparkSession) {
     }
   }
 
+  /** Each table's declared definition, keyed by its canonical (created)
+    * name. A table this engine created has an entry (a CTAS table an
+    * empty one), a `SELECT *` view one holding its source's columns, and
+    * a declaration on an attached relation adds one. */
+  private[graft] val tables =
+    scala.collection.mutable.LinkedHashMap.empty[String, TableDef]
+
+  /** `table`'s definition; the empty one where it declares nothing. */
+  private[graft] def tableDef(table: String): TableDef =
+    tables.getOrElse(table, TableDef.Empty)
+
+  private[graft] def colDef(table: String, column: String): ColumnDef =
+    tableDef(table).col(column)
+
+  private[graft] def alterDef(table: String)(f: TableDef => TableDef): Unit =
+    tables(table) = f(tableDef(table))
+
+  private[graft] def alterCol(table: String, column: String)(
+      f: ColumnDef => ColumnDef): Unit =
+    alterDef(table)(_.withCol(column)(f))
+
+  /** Every table's foreign keys (each held by its child's entry). */
+  private[graft] def foreignKeys: Seq[Engine.ForeignKey] =
+    tables.valuesIterator.flatMap(_.fks).toSeq
+
+  /** Every table's CHECK constraints as (table, name, expression, enforced). */
+  private[graft] def checkConstraints: Seq[(String, String, String, Boolean)] =
+    tables.toSeq.flatMap { case (t, d) => d.checks.map { case (n, ex, en) => (t, n, ex, en) } }
+
   /** Relations THIS engine created (tables + views), for MySQL existence
     * semantics (1050 on duplicate CREATE VIEW, IF NOT EXISTS no-op).
     * Deliberately per-engine, not the shared session catalog: sibling
     * engines on the same SparkSession must not leak existence. */
-  private[graft] val createdRelations =
-    scala.collection.mutable.Set.empty[String]
-  private[graft] def noteRelation(name: String): Unit =
-    createdRelations += name
+  private[graft] def created(name: String): Boolean =
+    tables.contains(name) || viewDefs.contains(name)
 
   /** Statement-level table references are case-insensitive against the
     * created name (the reference's memory catalog lowercases lookups,
-    * sql/catalog.go), but this engine's declared-metadata maps key on
-    * the exact created spelling — resolve to it (insert_queries.go
-    * "explicit DEFAULT": INSERT INTO T4 over CREATE TABLE t4). */
+    * sql/catalog.go), but table entries key on the exact created
+    * spelling — resolve to it (insert_queries.go "explicit DEFAULT":
+    * INSERT INTO T4 over CREATE TABLE t4). */
   private[graft] def canonicalTable(name: String): String =
-    if (createdRelations.contains(name)) name
-    else createdRelations.find(_.equalsIgnoreCase(name)).getOrElse(name)
+    if (created(name)) name
+    else (tables.keysIterator ++ viewDefs.keysIterator)
+      .find(_.equalsIgnoreCase(name)).getOrElse(name)
 
-  /** Base-table frames shadowed by `CREATE TEMPORARY TABLE` of the same
-    * name (the reference's buildCreateTable skips the 1050 existence
-    * check for temp tables — sql/planbuilder/ddl.go). DROP restores the
-    * snapshot. Data only: declared metadata (keys/defaults/checks) of
-    * the shadowed base is not snapshotted — documented divergence. */
+  /** Base tables shadowed by `CREATE TEMPORARY TABLE` of the same name
+    * (the reference's buildCreateTable skips the 1050 existence check
+    * for temp tables — sql/planbuilder/ddl.go): the base's frame and
+    * entry, which DROP restores. */
   private[graft] val tempShadow =
-    scala.collection.mutable.Map.empty[String, DataFrame]
+    scala.collection.mutable.Map.empty[String, (DataFrame, Option[TableDef])]
 
   def createView(name: String, sql: String,
                  columns: Seq[String] = Seq.empty): Unit = {
     val df0 = query(sql)
     val df = if (columns.isEmpty) df0 else df0.toDF(columns: _*)
+    val replaced = viewDefs.contains(name)
     viewDefs(name) = sql
     viewDeps(name) = SqlRewrite.tableRefs(sql)
     if (columns.nonEmpty) viewCols(name) = columns
     brokenViews.remove(name)
-    createdRelations += name
-    // `SELECT * FROM t` views inherit the source's declared column
-    // metadata so DESCRIBE renders varchar(20)/enum shapes, not the
-    // physical string type (rowexec/show.go describes the view's
-    // underlying declared schema)
+    // `SELECT * FROM t` views take the source's column definitions so
+    // DESCRIBE and SHOW CREATE render varchar(20)/enum/year shapes, not
+    // the physical type (rowexec/show.go describes the view's underlying
+    // declared schema)
     val StarFrom =
       """(?is)^\s*SELECT\s+\*\s+FROM\s+`?([A-Za-z_][A-Za-z0-9_]*)`?\s*;?\s*$""".r
+    if (replaced) tables.remove(name)
     if (columns.isEmpty) sql match {
-      case StarFrom(src0) =>
-        val src = canonicalTable(src0)
-        def copyPairs[V](m: scala.collection.mutable.Map[(String, String), V])
-            : Unit =
-          m.toSeq.collect { case ((t, c), v) if t == src => (c, v) }
-            .foreach { case (c, v) => m((name, c)) = v }
-        copyPairs(charLimits); copyPairs(columnVocab)
-        copyPairs(unsignedBounds); copyPairs(timePrecisions)
-        Seq(tinyint1Cols, charKindCols, notNullCols).foreach { set =>
-          set.toSeq.collect { case (t, c) if t == src => c }
-            .foreach(c => set += ((name, c)))
-        }
+      case StarFrom(src0) => tables.get(canonicalTable(src0)).foreach(d =>
+        tables(name) = TableDef(columns = d.columns.map { case (c, cd) =>
+          c -> cd.copy(default = None, onUpdate = None, generated = None, stored = false) }))
       case _ => ()
     }
     if (name.contains(".")) replaceTable(name, df, bumpDepth = false)
@@ -2073,10 +2093,10 @@ class Engine(val spark: SparkSession) {
       fillMissing: Boolean, ignore: Boolean): Engine.InsertBatch = {
     rejectExplicitGenerated(table, incoming0)
     val strict = strictWrites && !ignore
-    var rows = coerceVocab(table, computeGenerated(table,
-      truncateTimePrecision(table,
-        coerceAndFill(table, incoming0, fillMissing, ignoreMode = !strict))))
-    jsonCols.toSeq.collect { case (t2, cl) if t2 == table => cl }
+    val filled = coerceAndFill(table, incoming0, fillMissing, ignoreMode = !strict)
+    var rows = coerceVocab(table, computeGenerated(table, truncateTimePrecision(table,
+      Dml.applyBeforeTriggers(this, table, "INSERT", filled, org.apache.spark.sql.functions.lit(true)))))
+    tableDef(table).columns.collect { case (cl, d) if d.json => cl }
       .foreach { cl =>
         rows.columns.find(_.toLowerCase == cl).foreach { c =>
           val asStr = rows(c).cast("string")
@@ -2092,7 +2112,9 @@ class Engine(val spark: SparkSession) {
       }
     validateVecDims(table, rows)
     val provided = incoming0.columns.map(_.toLowerCase).toSet
-    rows = settleWrite(table, rows, strict, written = provided)
+    val written = provided ++ Dml.beforeTriggers(this, table, "INSERT")
+      .flatMap(_.actions.map(_._2.toLowerCase))
+    rows = settleWrite(table, rows, strict, written = written)
     if (strict) validateVocab(table, rows)
     Engine.InsertBatch(table, rows, provided, fillMissing, ignore)
   }
@@ -2131,7 +2153,7 @@ class Engine(val spark: SparkSession) {
             rows = rows.join(bad.select("__rid__"), Seq("__rid__"), "left_anti")
           }
         }
-        checkConstraints.toSeq.collect { case (t, _, ex, true) if t == table => ex }
+        tableDef(table).checks.collect { case (_, ex, true) => ex }
           .foreach { ex =>
             failing(rows.filter(!coalesce(expr(ex).cast("boolean"), lit(true))),
               1105, "check constraint violated (row skipped)")
@@ -2148,12 +2170,13 @@ class Engine(val spark: SparkSession) {
       // from a uuid-bearing declared default generated a fresh UUID per
       // row — record the first (explicit UUID() calls in VALUES were
       // pre-generated at the text layer, Dml.preGenUuids)
-      tableKeys.getOrElse(table, Seq.empty).find { pk =>
+      val defn = tableDef(table)
+      defn.key.getOrElse(Seq.empty).find { pk =>
         !batch.provided(pk.toLowerCase) &&
-          columnDefaults.get((table, pk.toLowerCase)).exists(d =>
+          defn.col(pk).default.exists(d =>
             """(?i)\buuid\s*\(\s*\)""".r.findFirstIn(d).isDefined)
       }.foreach { pk =>
-        val d = columnDefaults((table, pk.toLowerCase))
+        val d = defn.col(pk).default.get
         val swap = """(?i)uuid_to_bin\s*\(.*,\s*(1|true)\s*\)""".r
           .findFirstIn(d).isDefined
         rows.select(col(s"`$pk`")).limit(1).collect().headOption
@@ -2174,7 +2197,7 @@ class Engine(val spark: SparkSession) {
       }
       // advance the auto-increment counter past the batch (one scalar agg
       // on the insert batch, not the table)
-      autoIncCols.get(table)
+      defn.autoInc
         .filter(c => rows.columns.exists(_.equalsIgnoreCase(c)))
         .foreach { c =>
           // decimal agg: an UNSIGNED BIGINT value past Long.MaxValue
@@ -2186,10 +2209,10 @@ class Engine(val spark: SparkSession) {
             .collect()(0)
           if (!r.isNullAt(0)) {
             val m = BigDecimal(r.getDecimal(0))
-            if (m > BigDecimal(Long.MaxValue)) {
-              autoIncCounter(table) = Long.MaxValue
-              autoIncShown(table) = m
-            } else autoIncObserve(table, m.toLong)
+            if (m > BigDecimal(Long.MaxValue))
+              alterDef(table)(_.copy(autoIncCounter = Some(Long.MaxValue),
+                autoIncShown = Some(m)))
+            else autoIncObserve(table, m.toLong)
           }
         }
       n
@@ -2211,7 +2234,7 @@ class Engine(val spark: SparkSession) {
                                  fillMissing: Boolean): Long = {
     import org.apache.spark.sql.functions._
     val batch = imageInsert(table, incoming, fillMissing, ignore = false)
-    val keys = declaredKeys(table)
+    val keys = tableDef(table).keys
       .filter(_._2.forall(k => batch.rows.columns.exists(_.equalsIgnoreCase(k))))
     if (keys.isEmpty) return checkInsert(batch)()
     val rows = batch.rows.withColumn("__rid__", monotonically_increasing_id())
@@ -2239,24 +2262,12 @@ class Engine(val spark: SparkSession) {
     deleted + write()
   }
 
-  /** Columns DECLARED `NOT NULL` through DDL — Spark's inferred
-    * nullability is unreliable here (a CTAS from literals infers
+  /** Declare `table.column` NOT NULL. Only DDL declares it — Spark's
+    * inferred nullability is unreliable here (a CTAS from literals infers
     * nullable = false, but MySQL CTAS columns accept NULL), so the
     * strict 1048 check keys off explicit declarations only. */
-  private[graft] val notNullCols =
-    scala.collection.mutable.Set.empty[(String, String)]
-
   def declareNotNull(table: String, column: String): Unit =
-    notNullCols += ((table, column.toLowerCase))
-
-  /** `table`'s PRIMARY key and every declared UNIQUE key, as
-    * (key name, columns, NULL-keyed rows exempt): only UNIQUE keys exempt
-    * a row with a NULL key column. */
-  private def declaredKeys(table: String): Seq[(String, Seq[String], Boolean)] =
-    tableKeys.get(table).map(k => ("PRIMARY", k, false)).toSeq ++
-      uniqueKeys.toSeq.collect { case (t, n, cols) if t == table =>
-        (n, cols, true)
-      }
+    alterCol(table, column)(_.copy(notNull = true))
 
   /** The first key of `keys` that more than one row of `df` holds, if
     * any: one group-by-count probe, which folds on the driver over
@@ -2280,7 +2291,7 @@ class Engine(val spark: SparkSession) {
     * every declared UNIQUE key (whose NULL-keyed rows are exempt). */
   private def enforcePkUnique(table: String, batch: DataFrame,
                               target: DataFrame): Unit = {
-    declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
+    tableDef(table).keys.foreach { case (keyName, keys, nullExempt) =>
       if (keys.forall(k => batch.columns.exists(_.equalsIgnoreCase(k)))) {
         import org.apache.spark.sql.functions._
         val kcols = keys.map(k => col(s"`$k`"))
@@ -2304,7 +2315,7 @@ class Engine(val spark: SparkSession) {
     * 1062. */
   private[graft] def enforcePkUniquePost(table: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
-    declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
+    tableDef(table).keys.foreach { case (keyName, keys, nullExempt) =>
       val kcols = keys.map(k => col(s"`$k`"))
       val nonNull = kcols.map(_.isNotNull).reduce(_ && _)
       firstDuplicate(if (nullExempt) df.filter(nonNull) else df, kcols)
@@ -2324,7 +2335,7 @@ class Engine(val spark: SparkSession) {
   private[graft] def enforcePkUniqueTransient(table: String, oldDf: DataFrame,
                                               newDf: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
-    val pk = tableKeys.getOrElse(table, Seq.empty)
+    val pk = tableDef(table).key.getOrElse(Seq.empty)
     if (pk.isEmpty) return
     val cols = spark.table(table).columns.toSeq
     val o = oldDf.select((col("`__rid__`").as("__orid__") +:
@@ -2338,7 +2349,7 @@ class Engine(val spark: SparkSession) {
       .withColumn("__pkord__",
         struct(pk.map(k => col(s"`__o_$k`")).toIndexedSeq: _*))
       .localCheckpoint() // tiny (changed rows' keys); reused per key
-    declaredKeys(table).foreach { case (keyName, keys, nullExempt) =>
+    tableDef(table).keys.foreach { case (keyName, keys, nullExempt) =>
       val newSide = ch.select(col("__pkord__").as("__pi__"),
         struct(keys.map(k => col(s"`__n_$k`")).toIndexedSeq: _*).as("__nt__"))
       val newF = if (nullExempt)
@@ -2382,7 +2393,7 @@ class Engine(val spark: SparkSession) {
   private[graft] def ignoreKeySkips(table: String, stored: DataFrame,
       oldDf: Option[DataFrame], newDf: DataFrame): Set[Long] = {
     import org.apache.spark.sql.functions.col
-    val declared = declaredKeys(table)
+    val declared = tableDef(table).keys
       .filter(_._2.forall(k => newDf.columns.exists(_.equalsIgnoreCase(k))))
     if (declared.isEmpty) return Set.empty
     val keyCols = declared.flatMap(_._2).distinct
@@ -2517,12 +2528,12 @@ class Engine(val spark: SparkSession) {
         var df = incoming0
         var pending = target.schema.fields.filter(f =>
           !present(f.name.toLowerCase) &&
-            columnDefaults.contains((table, f.name.toLowerCase))).toList
+            colDef(table, f.name).default.isDefined).toList
         var progress = true
         while (progress && pending.nonEmpty) {
           progress = false
           val (ready, notReady) = pending.partition { f =>
-            val d = columnDefaults((table, f.name.toLowerCase))
+            val d = colDef(table, f.name).default.get
             val refs =
               try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
                 .parseExpression(d).collect {
@@ -2533,7 +2544,7 @@ class Engine(val spark: SparkSession) {
             refs.forall(r => df.columns.exists(_.equalsIgnoreCase(r)))
           }
           ready.foreach { f =>
-            val d = columnDefaults((table, f.name.toLowerCase))
+            val d = colDef(table, f.name).default.get
             df = df.withColumn(f.name, defaultColumn(d, f.dataType))
             progress = true
           }
@@ -2542,7 +2553,7 @@ class Engine(val spark: SparkSession) {
         // unresolvable references fall through as before (analysis error
         // at write, like a bad default in MySQL)
         pending.foreach { f =>
-          val d = columnDefaults((table, f.name.toLowerCase))
+          val d = colDef(table, f.name).default.get
           df = df.withColumn(f.name, defaultColumn(d, f.dataType))
         }
         df
@@ -2552,11 +2563,11 @@ class Engine(val spark: SparkSession) {
       if (!fillMissing) defaultFilled
       else target.schema.fields.foldLeft(defaultFilled) { (df, f) =>
         if (nowPresent(f.name.toLowerCase)) df
-        else columnDefaults.get((table, f.name.toLowerCase)) match {
+        else colDef(table, f.name).default match {
           case Some(d) =>
             df.withColumn(f.name, defaultColumn(d, f.dataType))
           case None
-              if autoIncCols.get(table).exists(_.equalsIgnoreCase(f.name)) =>
+              if tableDef(table).autoInc.exists(_.equalsIgnoreCase(f.name)) =>
             // next-value fill from the monotonic per-table counter (the
             // reference's auto-increment editor; survives deletes). The
             // window is over the (small) insert batch, not the table.
@@ -2569,8 +2580,8 @@ class Engine(val spark: SparkSession) {
                   monotonically_increasing_id())))
                 .cast(f.dataType))
           case None
-              if notNullCols((table, f.name.toLowerCase)) &&
-                columnVocab.get((table, f.name.toLowerCase))
+              if colDef(table, f.name).notNull &&
+                colDef(table, f.name).vocab
                   .exists(!_._1) =>
             // MySQL's NOT NULL ENUM special case: no declared default →
             // the FIRST member fills omitted inserts (script_queries.go
@@ -2578,12 +2589,11 @@ class Engine(val spark: SparkSession) {
             // stay NULL)
             import org.apache.spark.sql.functions.lit
             df.withColumn(f.name,
-              lit(columnVocab((table, f.name.toLowerCase))._2.head)
+              lit(colDef(table, f.name).vocab.get._2.head)
                 .cast(f.dataType))
           case None
-              if notNullCols((table, f.name.toLowerCase)) &&
-                !generatedCols.exists(g => g._1 == table &&
-                  g._2.equalsIgnoreCase(f.name)) =>
+              if colDef(table, f.name).notNull &&
+                !tableDef(table).isGenerated(f.name) =>
             // a NOT NULL column with no declared default omitted from
             // the insert is MySQL 1364 in strict mode; non-strict /
             // IGNORE stores the type's implicit default with a warning
@@ -2605,7 +2615,7 @@ class Engine(val spark: SparkSession) {
     // NULL (and 0, unless NO_AUTO_VALUE_ON_ZERO) values — MySQL's
     // explicit-NULL form `INSERT INTO auto VALUES (NULL, 10)`
     // (insert_queries.go:1055; sql_mode.go NO_AUTO_VALUE_ON_ZERO)
-    val incomingAi = autoIncCols.get(table) match {
+    val incomingAi = tableDef(table).autoInc match {
       case Some(c) if incoming.columns.exists(_.equalsIgnoreCase(c)) &&
           present(c.toLowerCase) =>
         import org.apache.spark.sql.functions._
@@ -2705,9 +2715,9 @@ class Engine(val spark: SparkSession) {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     import GraftBridge.{column, expression}
-    val key = (table, c.toLowerCase)
+    val cd = colDef(table, c)
     val (raw, src) =
-      if (yearCols(key)) (column(graft.functions.expressions.MySqlYearCast(
+      if (cd.year) (column(graft.functions.expressions.MySqlYearCast(
         expression(raw0))).cast(IntegerType), IntegerType)
       else (raw0, src0)
     // a widening conversion (Cast.canUpCast) or a number into FLOAT or
@@ -2715,20 +2725,20 @@ class Engine(val spark: SparkSession) {
     // MEDIUMINT bounds are narrower than the stored type's
     val canFail = !org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(src, dt) &&
       !(src.isInstanceOf[NumericType] && (dt == FloatType || dt == DoubleType))
-    val bounds = unsignedBounds.get(key)
-      .orElse(if (textKindCols.get(key).contains("mediumint"))
+    val bounds = cd.unsigned
+      .orElse(if (cd.textKind.contains("mediumint"))
         Some((BigDecimal(-8388608), BigDecimal(8388607))) else None)
       .orElse(integralBounds(dt).filter(_ => canFail)
         .map { case (lo, hi) => (BigDecimal(lo), BigDecimal(hi)) })
       .filter(_ => isNumericSource(src))
     val temporal = src.isInstanceOf[StringType] &&
       (dt == DateType || dt == TimestampType || dt == TimestampNTZType)
-    val casted = wideDecCols.get(key) match {
+    val casted = cd.wideDec match {
       case Some((p, s)) =>
         column(graft.functions.WideDecCoerce(expression(raw), p, s, !lenient))
       case _ if src == dt => raw
       case _ => (src, dt) match {
-        case (_, ArrayType(FloatType, _)) if vecDims.contains(key) => src match {
+        case (_, ArrayType(FloatType, _)) if cd.vecDim.isDefined => src match {
           case BinaryType =>
             column(graft.functions.vector.VecCoerce(expression(raw))).cast(dt)
           case _: StringType => throw new IllegalArgumentException(
@@ -2752,7 +2762,7 @@ class Engine(val spark: SparkSession) {
       raw.isNotNull && asDec.isNotNull && (asDec < lit(lo.bigDecimal) || asDec > lit(hi.bigDecimal))
     }
     val failed = raw.isNotNull && casted.isNull
-    val zero = zeroValueLit(dt).filter(_ => canFail && !wideDecCols.contains(key) &&
+    val zero = zeroValueLit(dt).filter(_ => canFail && cd.wideDec.isEmpty &&
       !(src == BinaryType && dt.isInstanceOf[StringType]))
     val decimalOverflow = dt.isInstanceOf[DecimalType] && !lenient &&
       isNumericSource(src) && !src.isInstanceOf[StringType]
@@ -2774,23 +2784,9 @@ class Engine(val spark: SparkSession) {
       case (None, Some(z)) => when(failed, z).otherwise(casted)
       case _ => casted
     }
-    binPadLens.get(key).filter(_ => dt == BinaryType)
+    cd.binPad.filter(_ => dt == BinaryType)
       .fold(value)(n => rpad(value.cast(BinaryType), n, Array[Byte](0))) -> flags
   }
-
-  /** Declared fixed BINARY(n) widths — writes zero-pad to n bytes. */
-  private[graft] val binPadLens =
-    scala.collection.mutable.Map.empty[(String, String), Int]
-
-  /** Declared YEAR columns — writes coerce through the 2-digit window. */
-  private[graft] val yearCols =
-    scala.collection.mutable.Set.empty[(String, String)]
-  /** Declared BIT(n) widths — catalog render only. */
-  private[graft] val bitWidths =
-    scala.collection.mutable.Map.empty[(String, String), Int]
-  /** Declared TEXT(m) kinds (tinytext/text/mediumtext/longtext). */
-  private[graft] val textKindCols =
-    scala.collection.mutable.Map.empty[(String, String), String]
 
   /** Declared DATETIME(p)/TIMESTAMP(p) truncates the stored fractional
     * seconds to p digits on write (bare datetime is datetime(0) — the
@@ -2803,18 +2799,16 @@ class Engine(val spark: SparkSession) {
     import org.apache.spark.sql.types.{TimestampType, TimestampNTZType}
     // only tables this engine created carry MySQL datetime(p) semantics;
     // parquet-backed relations keep their native microseconds
-    if (!createdRelations.contains(table)) return incoming
+    val defn = tables.getOrElse(table, return incoming)
     val target = scala.util.Try(spark.table(table)).toOption
       .getOrElse(return incoming)
     target.schema.fields.foldLeft(incoming) { (df, f) =>
       val isTs =
         f.dataType == TimestampType || f.dataType == TimestampNTZType
       val cOpt = df.columns.find(_.equalsIgnoreCase(f.name))
-      if (!isTs || cOpt.isEmpty ||
-          generatedCols.exists(g => g._1 == table &&
-            g._2.equalsIgnoreCase(f.name))) df
+      if (!isTs || cOpt.isEmpty || defn.isGenerated(f.name)) df
       else {
-        val p = timePrecisions.getOrElse((table, f.name.toLowerCase), 0)
+        val p = defn.col(f.name).timePrecision.getOrElse(0)
         if (p >= 6) df
         else {
           val fdiv = math.pow(10, 6 - p).toLong
@@ -2899,28 +2893,30 @@ class Engine(val spark: SparkSession) {
     // wide DECIMAL columns re-stamp their field-metadata marker on every
     // generation (DML withColumn chains drop metadata) so
     // WideDecCompareRule keeps seeing them on reads
-    val df0a = wideDecCols.toSeq.foldLeft(df00) {
-      case (d, ((t, c), (p, s))) if t == canonicalTable(table) &&
+    val defn = tableDef(canonicalTable(table))
+    val df0a = defn.columns.foldLeft(df00) {
+      case (d, (c, cd)) if cd.wideDec.isDefined &&
           d.columns.exists(_.equalsIgnoreCase(c)) =>
         val actual = d.columns.find(_.equalsIgnoreCase(c)).get
+        val (p, s) = cd.wideDec.get
         d.withMetadata(actual, graft.functions.WideDecimal.metadata(p, s))
       case (d, _) => d
     }
     // declared DATETIME(p)/TIMESTAMP(p) precision rides as field
     // metadata too (UNIX_TIMESTAMP result scaling)
-    val df0 = timePrecisions.toSeq.foldLeft(df0a) {
-      case (d, ((t, c), p)) if p > 0 && t == canonicalTable(table) &&
+    val df0 = defn.columns.foldLeft(df0a) {
+      case (d, (c, cd)) if cd.timePrecision.exists(_ > 0) &&
           d.columns.exists(_.equalsIgnoreCase(c)) =>
         val actual = d.columns.find(_.equalsIgnoreCase(c)).get
         d.withMetadata(actual,
           new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("graft_time_prec", p.toLong).build())
+            .putLong("graft_time_prec", cd.timePrecision.get.toLong).build())
       case (d, _) => d
     }
     // dolt tables are CLUSTERED BY PRIMARY KEY: scans iterate in pk
     // order, which LIMIT/OFFSET-without-ORDER-BY and GROUP_CONCAT
     // observe. Store pk-sorted to match (insertion order otherwise).
-    val df = tableKeys.get(canonicalTable(table)) match {
+    val df = defn.key match {
       case Some(pk) if pk.nonEmpty &&
           pk.forall(c => df0.columns.exists(_.equalsIgnoreCase(c))) =>
         df0.orderBy(pk.map(org.apache.spark.sql.functions.col): _*)
@@ -3117,7 +3113,7 @@ class Engine(val spark: SparkSession) {
     * (replaceTableInner sorts a keyed table by its key, as the
     * reference's tables are clustered by it); None without a key. */
   private def pkOrdering(table: String, output: Seq[Attribute]): Option[Ordering[InternalRow]] =
-    tableKeys.get(canonicalTable(table)).filter(_.nonEmpty).flatMap { pk =>
+    tableDef(canonicalTable(table)).key.filter(_.nonEmpty).flatMap { pk =>
       val keys = pk.flatMap(k => output.find(_.name.equalsIgnoreCase(k)))
       if (keys.size != pk.size) None
       else Some(new InterpretedOrdering(keys.map(SortOrder(_, Ascending)), output))
@@ -3125,51 +3121,35 @@ class Engine(val spark: SparkSession) {
 
   // ---- declared keys (REPLACE INTO / ON DUPLICATE KEY UPDATE) -----------
   // Parquet views carry no PK metadata, so upsert targets declare their
-  // key on the engine (reference: the integrator's sql.PrimaryKeyTable;
+  // key in the table's entry (reference: the integrator's sql.PrimaryKeyTable;
   // plan/insert.go routes REPLACE as delete+insert and ON DUPLICATE KEY
   // UPDATE as a per-row merge).
-
-  private[graft] val tableKeys =
-    scala.collection.mutable.Map.empty[String, Seq[String]]
 
   /** Declare the primary-key columns used by REPLACE INTO and
     * INSERT ... ON DUPLICATE KEY UPDATE against `table`. */
   def declareKey(table: String, cols: Seq[String]): Unit =
-    tableKeys(table) = cols
+    alterDef(table)(_.copy(key = Some(cols)))
 
   // ---- declared column defaults ----------------------------------------
   // (reference sql/plan/insert.go applies column defaults to unmentioned
   // insert columns; sql/expression/wrapped_column_default.go). Stored as
   // SQL text, evaluated per insert batch.
 
-  private[graft] val columnDefaults =
-    scala.collection.mutable.Map.empty[(String, String), String]
-
   /** Declare `table.column DEFAULT <sqlText>` for column-list inserts. */
   def declareDefault(table: String, column: String, sqlText: String): Unit =
-    columnDefaults((table, column.toLowerCase)) = sqlText
-
-  private[graft] val autoIncCols =
-    scala.collection.mutable.Map.empty[String, String]
+    alterCol(table, column)(_.copy(default = Some(sqlText)))
 
   /** Declare `table.column` AUTO_INCREMENT: a column-list insert that
     * omits it takes max(existing)+1.. per batch row (reference
     * sql/plan/insert.go auto-increment editor; a distributed engine
-    * assigns the batch monotonically in one pass, not per row). */
+    * assigns the batch monotonically in one pass, not per row). The
+    * counter is monotonic (reference sql/plan/insert.go
+    * autoIncrementEditor + memory/table.go): it survives deletes
+    * (insert_queries.go "auto increment table handles deletes" — delete
+    * max, insert NULL => old max + 1) and is settable via ALTER TABLE
+    * ... AUTO_INCREMENT = n. */
   def declareAutoInc(table: String, column: String): Unit =
-    autoIncCols(table) = column
-
-  /** Monotonic AUTO_INCREMENT counter per table (reference
-    * sql/plan/insert.go autoIncrementEditor + memory/table.go): survives
-    * deletes (insert_queries.go "auto increment table handles deletes" —
-    * delete max, insert NULL => old max + 1), settable via
-    * ALTER TABLE ... AUTO_INCREMENT = n. */
-  private[graft] val autoIncCounter =
-    scala.collection.mutable.Map.empty[String, Long]
-  /** Exact display value when the observed max exceeds Long range
-    * (UNSIGNED BIGINT tops at 2^64-1; the working counter saturates). */
-  private[graft] val autoIncShown =
-    scala.collection.mutable.Map.empty[String, BigDecimal]
+    alterDef(table)(_.copy(autoInc = Some(column)))
 
   /** LAST_INSERT_ID() / ROW_COUNT() session state (reference
     * sql/session.go lastQueryInfo): first auto-generated id of the most
@@ -3202,16 +3182,18 @@ class Engine(val spark: SparkSession) {
   /** Current next-value, initializing from the table's max on first use
     * (how the reference seeds the editor from storage). */
   private[graft] def autoIncNext(table: String): Long =
-    autoIncCounter.getOrElseUpdate(table, {
-      val c = autoIncCols(table)
-      try {
+    tableDef(table).autoIncCounter.getOrElse {
+      val c = tableDef(table).autoInc.get
+      val n = try {
         val r = spark.table(table)
           .agg(org.apache.spark.sql.functions.max(
             org.apache.spark.sql.functions.col(s"`$c`").cast("long")))
           .collect()(0)
         if (r.isNullAt(0)) 1L else r.getLong(0) + 1L
       } catch { case _: Exception => 1L }
-    })
+      alterDef(table)(_.copy(autoIncCounter = Some(n)))
+      n
+    }
 
   /** 16 stored UUID bytes back to the canonical string; `swap` undoes
     * UUID_TO_BIN(…, 1)'s time-part swap (reference uuidfuncs.go). */
@@ -3227,42 +3209,24 @@ class Engine(val spark: SparkSession) {
 
   /** Advance the counter past an observed inserted value. */
   private[graft] def autoIncObserve(table: String, maxSeen: Long): Unit =
-    if (autoIncCols.contains(table)) {
-      val cur = autoIncCounter.getOrElse(table, 1L)
+    if (tableDef(table).autoInc.isDefined) {
+      val cur = tableDef(table).autoIncCounter.getOrElse(1L)
       // saturating: inserting Long.MaxValue must not wrap the counter
       // (the render caps at the type max anyway)
       val next = if (maxSeen == Long.MaxValue) Long.MaxValue else maxSeen + 1
-      if (next > cur) autoIncCounter(table) = next
+      if (next > cur) alterDef(table)(_.copy(autoIncCounter = Some(next)))
     }
 
   // ---- generated columns + CHECK constraints ----------------------------
   // (reference: generated columns in sql/plan/ddl.go + enginetest
   // generated_columns.go; CHECK enforcement in sql/plan/check_constraint.go)
 
-  /** (table, column, exprText) in declaration order — chained generated
-    * columns (one referencing another) compute in sequence. */
-  private[graft] val generatedCols =
-    scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
-
-  /** Declare `table.column` as GENERATED ALWAYS AS (exprText): writes
-    * recompute it; explicit non-NULL inserts into it are MySQL error 3105. */
+  /** Declare `table.column` as GENERATED ALWAYS AS (exprText) [STORED]:
+    * writes recompute it; explicit non-NULL inserts into it are MySQL
+    * error 3105. SHOW CREATE appends STORED only for stored ones. */
   def declareGenerated(table: String, column: String, exprText: String,
-                       stored: Boolean = true): Unit = {
-    generatedCols += ((table, column, exprText))
-    if (stored) storedGeneratedCols += ((table, column.toLowerCase))
-    else storedGeneratedCols -= ((table, column.toLowerCase))
-  }
-
-  /** Columns declared GENERATED ... STORED (vs the VIRTUAL default) —
-    * SHOW CREATE appends the STORED keyword only for these. */
-  private[graft] val storedGeneratedCols =
-    scala.collection.mutable.Set.empty[(String, String)]
-
-  /** (table, name, exprText, enforced). NOT ENFORCED constraints stay in
-    * the catalog (SHOW CREATE / information_schema render them with
-    * ENFORCED='NO') but admit violating writes. */
-  private[graft] val checkConstraints =
-    scala.collection.mutable.ArrayBuffer.empty[(String, String, String, Boolean)]
+                       stored: Boolean = true): Unit =
+    alterCol(table, column)(_.copy(generated = Some(exprText), stored = stored))
 
   // MySQL rejects non-deterministic / session-dependent functions inside
   // CHECK expressions (check_scripts.go DisallowedCheckConstraintsScripts;
@@ -3279,7 +3243,10 @@ class Engine(val spark: SparkSession) {
     "benchmark", "load_file", "master_pos_wait", "name_const")
 
   /** Declare CHECK (exprText) on table: any write whose rows evaluate the
-    * predicate to FALSE (NULL passes, MySQL semantics) is error 3819. */
+    * predicate to FALSE (NULL passes, MySQL semantics) is error 3819.
+    * NOT ENFORCED constraints stay in the catalog (SHOW CREATE /
+    * information_schema render them with ENFORCED='NO') but admit
+    * violating writes. */
   def declareCheck(table: String, name: String, exprText: String,
                    enforced: Boolean = true): Unit = {
     if ("(?is)\\(\\s*SELECT\\b".r.findFirstIn(exprText).isDefined)
@@ -3300,21 +3267,19 @@ class Engine(val spark: SparkSession) {
           s"An expression of a check constraint '$name' contains " +
           s"disallowed function: ${m.group(1).toLowerCase} (MySQL error 3814)")
       }
-    checkConstraints += ((table, name, exprText, enforced))
+    alterDef(table)(d => d.copy(checks = d.checks :+ ((name, exprText, enforced))))
   }
 
   /** Recompute the table's generated columns over a write batch (insert
     * coercion output or a post-UPDATE view), in declaration order. */
   private[graft] def computeGenerated(table: String, df: DataFrame): DataFrame = {
-    lazy val types = scala.util.Try(spark.table(table)).toOption
-      .map(_.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap)
-      .getOrElse(Map.empty)
-    generatedCols.toSeq.collect { case (t, c, ex) if t == table => (c, ex) }
-      .foldLeft(df) { case (d, (c, ex)) =>
-        val computed = org.apache.spark.sql.functions.expr(ex)
-        d.withColumn(c, types.get(c.toLowerCase)
-          .map(dt => computed.cast(dt)).getOrElse(computed))
-      }
+    lazy val fields = scala.util.Try(spark.table(table)).toOption
+      .map(_.schema.fields.toSeq).getOrElse(Seq.empty)
+    tableDef(table).generated.foldLeft(df) { case (d, (c, ex)) =>
+      val computed = org.apache.spark.sql.functions.expr(ex)
+      val f = fields.find(_.name.equalsIgnoreCase(c))
+      d.withColumn(f.fold(c)(_.name), f.fold(computed)(x => computed.cast(x.dataType)))
+    }
   }
 
   /** MySQL error 3105: a generated column in the incoming batch carrying
@@ -3322,11 +3287,11 @@ class Engine(val spark: SparkSession) {
   private[graft] def rejectExplicitGenerated(table: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.col
     val present = df.columns.map(c => c.toLowerCase -> c).toMap
-    generatedCols.toSeq.foreach {
-      case (t, c, _) if t == table && present.contains(c.toLowerCase) =>
-        val n = df.filter(col(present(c.toLowerCase)).isNotNull).limit(1).count()
+    tableDef(table).generated.foreach {
+      case (c, _) if present.contains(c) =>
+        val n = df.filter(col(present(c)).isNotNull).limit(1).count()
         if (n > 0) throw new IllegalArgumentException(
-          s"The value specified for generated column '$c' in table " +
+          s"The value specified for generated column '${present(c)}' in table " +
           s"'$table' is not allowed. (MySQL error 3105)")
       case _ =>
     }
@@ -3335,8 +3300,7 @@ class Engine(val spark: SparkSession) {
   /** MySQL error 3819 on any row where a CHECK evaluates to FALSE. */
   private[graft] def validateChecks(table: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.{expr, lit}
-    val relevant = checkConstraints.toSeq.collect {
-      case (t, name, ex, true) if t == table => (name, ex) }
+    val relevant = tableDef(table).checks.collect { case (name, ex, true) => (name, ex) }
     if (relevant.isEmpty) return
     // the batch may omit columns that only fill to NULL at the final
     // unionByName — a CHECK over such a column sees NULL (passes, 3VL),
@@ -3361,9 +3325,6 @@ class Engine(val spark: SparkSession) {
   // ---- foreign keys (reference sql/plan/foreign_key_handler.go +
   // enginetest foreign_key_queries.go; write-side enforcement like the
   // CHECK/vocab paths — batch joins, no per-row probes) ------------------
-
-  private[graft] val foreignKeys =
-    scala.collection.mutable.ArrayBuffer.empty[ForeignKey]
 
   /** Is FOREIGN_KEY_CHECKS on for this session? Off defers ALL FK DDL
     * resolution and write-side enforcement (foreign_key_queries.go
@@ -3429,7 +3390,7 @@ class Engine(val spark: SparkSession) {
       fk.childCols.zip(fk.parentCols).foreach { case (cc, pc) =>
         val cf = childField(cc); val pf = parentField(pc)
         // TEXT/BLOB columns cannot carry FKs (InnoDB; ErrForeignKeyTextBlob)
-        if (isBlobText(fk.child, cc) || isBlobText(fk.parent, pc))
+        if (colDef(fk.child, cc).blobText || colDef(fk.parent, pc).blobText)
           throw new IllegalArgumentException(
             s"Foreign key '${fk.name}': TEXT/BLOB columns are not " +
             "supported (MySQL ErrForeignKeyTextBlob)")
@@ -3442,7 +3403,7 @@ class Engine(val spark: SparkSession) {
         def decKind(t: String, c: String,
                     dt: org.apache.spark.sql.types.DataType) =
           dt.isInstanceOf[DecimalType] ||
-            wideDecCols.contains((t, c.toLowerCase))
+            colDef(t, c).wideDec.isDefined
         val cDec = decKind(fk.child, cc, cf.dataType)
         val pDec = decKind(fk.parent, pc, pf.dataType)
         val ok = (cf.dataType == pf.dataType && cDec == pDec) ||
@@ -3464,7 +3425,7 @@ class Engine(val spark: SparkSession) {
           "(MySQL ErrForeignKeyColumnTypeMismatch)")
         // SET NULL actions need nullable child columns
         if ((fk.onDelete == "SET NULL" || fk.onUpdate == "SET NULL") &&
-            (!cf.nullable || notNullCols((fk.child, cc.toLowerCase))))
+            (!cf.nullable || colDef(fk.child, cc).notNull))
           throw new IllegalArgumentException(
             s"Foreign key '${fk.name}': SET NULL on non-nullable column " +
             s"'$cc' (MySQL ErrForeignKeySetNullNonNullable)")
@@ -3473,8 +3434,8 @@ class Engine(val spark: SparkSession) {
         // column foreign keys"; InnoDB restriction)
         val actsOnChild = Seq(fk.onDelete, fk.onUpdate)
           .exists(a => a == "CASCADE" || a == "SET NULL")
-        if (actsOnChild && generatedCols.exists { case (t, gc, ex) =>
-            t == fk.child && storedGeneratedCols((t, gc.toLowerCase)) && {
+        if (actsOnChild && tableDef(fk.child).generated.exists { case (gc, ex) =>
+            colDef(fk.child, gc).stored && {
               val refs = try org.apache.spark.sql.catalyst.parser
                 .CatalystSqlParser.parseExpression(ex).collect {
                   case a2: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
@@ -3494,19 +3455,17 @@ class Engine(val spark: SparkSession) {
       // with the PK columns — "Referenced index includes implicit
       // primary key columns")
       val want = fk.parentCols.map(_.toLowerCase)
-      val pkCols = tableKeys.getOrElse(fk.parent, Seq.empty)
+      val pkCols = tableDef(fk.parent).key.getOrElse(Seq.empty)
         .map(_.toLowerCase)
-      val declared =
-        uniqueKeys.toSeq.collect { case (t, n, cols) if t == fk.parent =>
-          (n, cols.map(_.toLowerCase)) } ++
-        secondaryIndexes.toSeq.collect { case (t, n, cols) if t == fk.parent =>
-          (n, cols.map(_.toLowerCase)) }
+      val parentDef = tableDef(fk.parent)
+      val declared = (parentDef.uniques ++ parentDef.indexes).map { case (n, cols) =>
+        (n, cols.map(_.toLowerCase)) }
       val candidates = Seq(("PRIMARY", pkCols)) ++ declared ++
         declared.map { case (n, cols) =>
           (n, cols ++ pkCols.filterNot(cols.contains)) }
       val covered = candidates.exists { case (n, cols) =>
         cols.size >= want.size && cols.take(want.size) == want &&
-          want.forall(c => !indexPrefixes.contains((fk.parent, n, c)))
+          want.forall(c => !parentDef.indexPrefixes.contains((n, c)))
       }
       if (!covered) throw new IllegalArgumentException(
         s"Foreign key '${fk.name}': missing index over the referenced " +
@@ -3529,29 +3488,26 @@ class Engine(val spark: SparkSession) {
           parentCols = fk.parentCols.map(c =>
             pf.find(_.name.equalsIgnoreCase(c)).map(_.name).getOrElse(c)))
       }
-    foreignKeys += fkCanon
+    alterDef(fk.child)(d => d.copy(fks = d.fks :+ fkCanon))
     // MySQL auto-creates a child-side index named after the constraint
     // when none already leads with the FK columns (SHOW CREATE TABLE
     // renders `KEY fk_name (cols)`; "Naming automatically created FK
     // indexes")
     val wantChild = fkCanon.childCols.map(_.toLowerCase)
-    val childPk = tableKeys.getOrElse(fk.child, Seq.empty).map(_.toLowerCase)
+    val childPk = tableDef(fk.child).key.getOrElse(Seq.empty).map(_.toLowerCase)
+    val childIdx = tableDef(fk.child).uniques ++ tableDef(fk.child).indexes
     val hasIdx =
       (childPk.size >= wantChild.size &&
         childPk.take(wantChild.size) == wantChild) ||
-      uniqueKeys.exists(u => u._1 == fk.child &&
-        u._3.map(_.toLowerCase).take(wantChild.size) == wantChild) ||
-      secondaryIndexes.exists(s => s._1 == fk.child &&
-        s._3.map(_.toLowerCase).take(wantChild.size) == wantChild)
+      childIdx.exists(_._2.map(_.toLowerCase).take(wantChild.size) == wantChild)
     if (!hasIdx) {
       // an explicitly-named FK that needs an auto index under a name an
       // existing index already uses is ErrDuplicateKey ("Naming
       // automatically created FK indexes")
       val isAutoNamed = fk.name.matches("(?i)^" +
         java.util.regex.Pattern.quote(fk.child) + "_ibfk_-?\\d+$")
-      if (!isAutoNamed && (uniqueKeys ++ secondaryIndexes).exists(x =>
-          x._1 == fk.child && x._2.equalsIgnoreCase(fk.name))) {
-        foreignKeys.filterInPlace(_ ne fkCanon)
+      if (!isAutoNamed && childIdx.exists(_._1.equalsIgnoreCase(fk.name))) {
+        alterDef(fk.child)(d => d.copy(fks = d.fks.filterNot(_ eq fkCanon)))
         throw new IllegalArgumentException(
           s"Duplicate key name '${fk.name}' (MySQL ErrDuplicateKey)")
       }
@@ -3564,9 +3520,7 @@ class Engine(val spark: SparkSession) {
             java.util.regex.Pattern.quote(fk.child) + "_ibfk_-?\\d+$"))
           fkCanon.childCols.head
         else fk.name
-      def taken(n: String) =
-        (uniqueKeys ++ secondaryIndexes).exists(x =>
-          x._1 == fk.child && x._2.equalsIgnoreCase(n))
+      def taken(n: String) = childIdx.exists(_._1.equalsIgnoreCase(n))
       val idxName =
         if (!taken(base)) base
         else Iterator.from(2).map(i => s"${base}_$i").find(!taken(_)).get
@@ -3579,13 +3533,13 @@ class Engine(val spark: SparkSession) {
     * foreign_key_queries.go "Indexes used by foreign keys can't be
     * dropped"). */
   private[graft] def indexNeededByFk(table: String, idxName: String): Boolean = {
-    val all = (uniqueKeys ++ secondaryIndexes).toSeq
-      .filter(_._1 == table).distinctBy(_._2.toLowerCase)
-    val target = all.find(_._2.equalsIgnoreCase(idxName))
-      .map(_._3.map(_.toLowerCase)).getOrElse(return false)
-    val others = all.filterNot(_._2.equalsIgnoreCase(idxName))
-      .map(_._3.map(_.toLowerCase))
-    val pk = tableKeys.getOrElse(table, Seq.empty).map(_.toLowerCase)
+    val all = (tableDef(table).uniques ++ tableDef(table).indexes)
+      .distinctBy(_._1.toLowerCase)
+    val target = all.find(_._1.equalsIgnoreCase(idxName))
+      .map(_._2.map(_.toLowerCase)).getOrElse(return false)
+    val others = all.filterNot(_._1.equalsIgnoreCase(idxName))
+      .map(_._2.map(_.toLowerCase))
+    val pk = tableDef(table).key.getOrElse(Seq.empty).map(_.toLowerCase)
     def covers(cols: Seq[String], want: Seq[String]) =
       cols.size >= want.size && cols.take(want.size) == want
     foreignKeys.exists { f =>
@@ -3605,8 +3559,7 @@ class Engine(val spark: SparkSession) {
       throw new IllegalArgumentException(
         s"Foreign key '$name' does not exist on table '$child' " +
         "(MySQL ErrForeignKeyNotFound)")
-    foreignKeys.filterInPlace(f =>
-      !(f.child == child && f.name.equalsIgnoreCase(name)))
+    alterDef(child)(d => d.copy(fks = d.fks.filterNot(_.name.equalsIgnoreCase(name))))
   }
 
   /** FK matching expression for one side: enum-to-enum pairs compare
@@ -3634,8 +3587,8 @@ class Engine(val spark: SparkSession) {
   /** The FK pair's vocabularies, when BOTH ends declare the same kind. */
   private def fkPairVocab(fk: ForeignKey, cc: String, pc: String)
       : (Option[(Boolean, Seq[String])], Option[(Boolean, Seq[String])]) = {
-    val cv = columnVocab.get((fk.child, cc.toLowerCase))
-    val pv = columnVocab.get((fk.parent, pc.toLowerCase))
+    val cv = colDef(fk.child, cc).vocab
+    val pv = colDef(fk.parent, pc).vocab
     (cv, pv) match {
       case (Some((ck, _)), Some((pk, _))) if ck == pk => (cv, pv)
       case _ => (None, None)
@@ -3662,8 +3615,8 @@ class Engine(val spark: SparkSession) {
       def dt(t: String, c: String) = scala.util.Try(spark.table(t).schema
         .fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType))
         .toOption.flatten
-      val cWide = wideDecCols.get((fk.child, cc.toLowerCase))
-      val pWide = wideDecCols.get((fk.parent, pc.toLowerCase))
+      val cWide = colDef(fk.child, cc).wideDec
+      val pWide = colDef(fk.parent, pc).wideDec
       (dt(fk.child, cc), dt(fk.parent, pc)) match {
         // wide DECIMAL against any decimal: representation-exact text
         // compare — a (65,30) child value "1.230000…0" never matches a
@@ -3679,8 +3632,8 @@ class Engine(val spark: SparkSession) {
         // never matches (dolt #9544 — child inserts always violate)
         case (Some(c), Some(p)) if isTsKind(c) && isTsKind(p) &&
             (c != p ||
-              timePrecisions.getOrElse((fk.child, cc.toLowerCase), 0) !=
-                timePrecisions.getOrElse((fk.parent, pc.toLowerCase), 0)) =>
+              colDef(fk.child, cc).timePrecision.getOrElse(0) !=
+                colDef(fk.parent, pc).timePrecision.getOrElse(0)) =>
           lit(false)
         case _ => col(s"`$cc`") === col(s"`$pcName`")
       }
@@ -4016,116 +3969,38 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** Drop per-table declared metadata with the table (otherwise a
-    * re-created table inherits stale constraints). */
-  private[graft] def clearTableMeta(table: String): Unit = {
-    generatedCols.filterInPlace(_._1 != table)
-    storedGeneratedCols.filterInPlace(_._1 != table)
-    checkConstraints.filterInPlace(_._1 != table)
-    secondaryIndexes.filterInPlace(_._1 != table)
-    uniqueKeys.filterInPlace(_._1 != table)
-    foreignKeys.filterInPlace(_.child != table)
-    viewDefs.remove(table)
-    viewDeps.remove(table)
-    createdRelations.remove(table)
-    tableKeys.remove(table)
-    autoIncCols.remove(table)
-    autoIncCounter.remove(table)
-    columnDefaults.filterInPlace { case ((t, _), _) => t != table }
-    columnVocab.filterInPlace { case ((t, _), _) => t != table }
-    vocabCi.filterInPlace { case (t, _) => t != table }
-    charLimits.filterInPlace { case ((t, _), _) => t != table }
-    tableCharsets.remove(table)
-    notNullCols.filterInPlace { case (t, _) => t != table }
-    tableComments.remove(table)
-    tableCollations.remove(table)
-    columnComments.filterInPlace { case ((t, _), _) => t != table }
-    tinyint1Cols.filterInPlace { case (t, _) => t != table }
-    timePrecisions.filterInPlace { case ((t, _), _) => t != table }
-    charKindCols.filterInPlace { case (t, _) => t != table }
-    blobTextCols.filterInPlace { case (t, _) => t != table }
-    unsignedBounds.filterInPlace { case ((t, _), _) => t != table }
-    vecDims.filterInPlace { case ((t, _), _) => t != table }
-    wideDecCols.filterInPlace { case ((t, _), _) => t != table }
-    columnCollations.filterInPlace { case ((t, _), _) => t != table }
-    triggers.filterInPlace { case (_, trg) => trg.table != table }
-    uniqueExprIdx.filterInPlace(_._1 != table)
-    indexPrefixes.filterInPlace { case ((t, _, _), _) => t != table }
-    columnStats.filterInPlace { case ((t, _), _) => t != table }
-    textKindCols.filterInPlace { case ((t, _), _) => t != table }
-    bitWidths.filterInPlace { case ((t, _), _) => t != table }
-    yearCols.filterInPlace { case (t, _) => t != table }
-  }
-
   // ---- ENUM / SET write validation --------------------------------------
   // The reference rejects out-of-vocabulary values at write time
   // (sql/types/enum.go:52 Convert -> ErrConvertingToEnum, set.go:45).
-  // Parquet has no ENUM physical type, so the vocabulary is declared on
-  // the engine and enforced on the write paths (insertIntoSelect /
-  // loadData) — a distributed filter + LIMIT 1 early-out per declared
-  // column, over the incoming batch only.
+  // Parquet has no ENUM physical type, so the vocabulary is declared in
+  // the column's ColumnDef and enforced on the write paths — a
+  // distributed filter + LIMIT 1 early-out per declared column, over the
+  // incoming batch only.
 
-  private val columnVocab =
-    scala.collection.mutable.Map.empty[(String, String), (Boolean, Seq[String])]
-
-  // ---- CHAR/VARCHAR declared lengths ------------------------------------
-  // Parquet strings are unbounded, so declared lengths live on the engine
-  // like the vocabularies. Writes enforce them the reference's way
-  // (sql/types/strings.go:465 ErrLengthBeyondLimit): plain INSERT errors,
-  // IGNORE truncates to the limit with a warning.
-  private val charLimits =
-    scala.collection.mutable.Map.empty[(String, String), Int]
-
-  /** RENAME/CHANGE COLUMN carries every declared-metadata reference to
-    * the new name (ordinal_ddl_queries.go: a renamed PK column still
-    * shows in SHOW KEYS under its new name). */
-  private[graft] def renameColumnMeta(table: String, from: String,
-                                      to: String): Unit = {
-    val fl = from.toLowerCase
+  /** RENAME/CHANGE COLUMN: the column's definition, key and index
+    * memberships follow the new name (ordinal_ddl_queries.go: a renamed
+    * PK column still shows in SHOW KEYS under its new name), and so do
+    * the expression-carried references: CHECK expressions,
+    * generated-column expressions, and FK column lists in BOTH the child
+    * and parent role (MySQL carries all of these through RENAME/CHANGE
+    * COLUMN). */
+  private[graft] def renameColumnDef(table: String, from: String,
+                                     to: String): Unit = {
     def ren(c: String): String = if (c.equalsIgnoreCase(from)) to else c
-    tableKeys.get(table).foreach(ks => tableKeys(table) = ks.map(ren))
-    uniqueKeys.mapInPlace { case (t, n, cols) =>
-      if (t == table) (t, n, cols.map(ren)) else (t, n, cols)
+    alterDef(table) { d =>
+      val r = d.renameCol(from, to)
+      r.copy(
+        checks = r.checks.map { case (n, ex, en) => (n, renameIdent(ex, from, to), en) },
+        columns = r.columns.map { case (c, cd) =>
+          c -> cd.copy(generated = cd.generated.map(renameIdent(_, from, to))) })
     }
-    secondaryIndexes.mapInPlace { case (t, n, cols) =>
-      if (t == table) (t, n, cols.map(ren)) else (t, n, cols)
-    }
-    autoIncCols.get(table).filter(_.equalsIgnoreCase(from))
-      .foreach(_ => autoIncCols(table) = to)
-    charLimits.get((table, fl)).foreach { n =>
-      charLimits.remove((table, fl)); charLimits((table, to.toLowerCase)) = n
-    }
-    columnVocab.get((table, fl)).foreach { v =>
-      columnVocab.remove((table, fl)); columnVocab((table, to.toLowerCase)) = v
-    }
-    if (vocabCi.remove((table, fl))) vocabCi += ((table, to.toLowerCase))
-    if (blobTextCols.remove((table, fl)))
-      blobTextCols += ((table, to.toLowerCase))
-    unsignedBounds.get((table, fl)).foreach { b =>
-      unsignedBounds.remove((table, fl))
-      unsignedBounds((table, to.toLowerCase)) = b
-    }
-    if (notNullCols.remove((table, fl)))
-      notNullCols += ((table, to.toLowerCase))
-    columnDefaults.get((table, fl)).foreach { d =>
-      columnDefaults.remove((table, fl))
-      columnDefaults((table, to.toLowerCase)) = d
-    }
-    // expression-carried references follow the rename too: CHECK
-    // expressions, generated-column expressions, and FK column lists in
-    // BOTH the child and parent role (MySQL carries all of these
-    // through RENAME/CHANGE COLUMN)
-    checkConstraints.mapInPlace { case (t, n, ex, en) =>
-      if (t == table) (t, n, renameIdent(ex, from, to), en) else (t, n, ex, en)
-    }
-    generatedCols.mapInPlace { case (t, c, ex) =>
-      if (t == table) (t, ren(c), renameIdent(ex, from, to)) else (t, c, ex)
-    }
-    foreignKeys.mapInPlace { fk =>
-      var f = fk
-      if (f.child == table) f = f.copy(childCols = f.childCols.map(ren))
-      if (f.parent == table) f = f.copy(parentCols = f.parentCols.map(ren))
-      f
+    tables.mapValuesInPlace { (t, d) =>
+      d.copy(fks = d.fks.map { fk =>
+        var f = fk
+        if (f.child == table) f = f.copy(childCols = f.childCols.map(ren))
+        if (f.parent == table) f = f.copy(parentCols = f.parentCols.map(ren))
+        f
+      })
     }
   }
 
@@ -4153,88 +4028,11 @@ class Engine(val spark: SparkSession) {
     sb.toString
   }
 
-  /** Full copy of one table's declared metadata, for ALTER rollback: a
-    * multi-action ALTER whose early actions renamed columns / dropped
-    * keys / declared defaults must restore ALL of it when a later action
-    * or validateRowLength throws — not just the char limits — or SHOW
-    * KEYS / REPLACE would reference columns that no longer exist. */
-  private[graft] final case class TableMetaSnapshot(
-      keys: Option[Seq[String]], uniques: Seq[(String, String, Seq[String])],
-      indexes: Seq[(String, String, Seq[String])],
-      autoInc: Option[String], autoIncCtr: Option[Long],
-      notNull: Set[(String, String)], defaults: Map[(String, String), String],
-      vocab: Map[(String, String), (Boolean, Seq[String])],
-      vocabCiSnap: Set[(String, String)], chars: Map[(String, String), Int],
-      checks: Seq[(String, String, String, Boolean)],
-      generated: Seq[(String, String, String)],
-      fks: Seq[Engine.ForeignKey], charset: Option[String])
-
-  private[graft] def tableMetaSnapshot(table: String): TableMetaSnapshot =
-    TableMetaSnapshot(
-      tableKeys.get(table),
-      uniqueKeys.filter(_._1 == table).toList,
-      secondaryIndexes.filter(_._1 == table).toList,
-      autoIncCols.get(table), autoIncCounter.get(table),
-      notNullCols.filter(_._1 == table).toSet,
-      columnDefaults.filter(_._1._1 == table).toMap,
-      columnVocab.filter(_._1._1 == table).toMap,
-      vocabCi.filter(_._1 == table).toSet,
-      charLimits.filter(_._1._1 == table).toMap,
-      checkConstraints.filter(_._1 == table).toList,
-      generatedCols.filter(_._1 == table).toList,
-      foreignKeys.filter(_.child == table).toList,
-      tableCharsets.get(table))
-
-  private[graft] def restoreTableMeta(table: String,
-                                      s: TableMetaSnapshot): Unit = {
-    s.keys match {
-      case Some(k) => tableKeys(table) = k
-      case None => tableKeys.remove(table)
-    }
-    uniqueKeys.filterInPlace(_._1 != table); uniqueKeys ++= s.uniques
-    secondaryIndexes.filterInPlace(_._1 != table)
-    secondaryIndexes ++= s.indexes
-    s.autoInc match {
-      case Some(c) => autoIncCols(table) = c
-      case None => autoIncCols.remove(table)
-    }
-    s.autoIncCtr match {
-      case Some(n) => autoIncCounter(table) = n
-      case None => autoIncCounter.remove(table)
-    }
-    notNullCols.filterInPlace(_._1 != table); notNullCols ++= s.notNull
-    columnDefaults.filterInPlace { case ((t, _), _) => t != table }
-    columnDefaults ++= s.defaults
-    columnVocab.filterInPlace { case ((t, _), _) => t != table }
-    columnVocab ++= s.vocab
-    vocabCi.filterInPlace(_._1 != table); vocabCi ++= s.vocabCiSnap
-    charLimits.filterInPlace { case ((t, _), _) => t != table }
-    charLimits ++= s.chars
-    checkConstraints.filterInPlace(_._1 != table)
-    checkConstraints ++= s.checks
-    generatedCols.filterInPlace(_._1 != table); generatedCols ++= s.generated
-    foreignKeys.filterInPlace(_.child != table); foreignKeys ++= s.fks
-    s.charset match {
-      case Some(cs) => tableCharsets(table) = cs
-      case None => tableCharsets.remove(table)
-    }
-  }
-
-  private[graft] def charLimitOf(table: String, column: String): Option[Int] =
-    charLimits.get((table, column.toLowerCase))
-
-  /** Columns declared with an unbounded BLOB/TEXT family type: keyed
-    * only with a prefix length (MySQL 1170), except the MariaDB-compat
-    * no-prefix UNIQUE the reference allows (blob_queries.go BlobErrors
-    * vs index_queries.go "unique indexes on TEXT/BLOB columns"). */
-  /** Declared UNSIGNED integer columns → their MySQL bounds. Spark has
+  /** Declared UNSIGNED integer columns take their MySQL bounds. Spark has
     * no unsigned types (the column stores in the next-wider signed
     * type), so strict-mode range enforcement needs the declared bound
     * (reference types/number.go; script_queries.go "unsigned int with
     * auto_increment" expects 1264 on tinyint-unsigned 999). */
-  private[graft] val unsignedBounds =
-    scala.collection.mutable.Map.empty[(String, String), (BigDecimal, BigDecimal)]
-
   private[graft] def declareUnsigned(table: String, column: String,
                                      base: String): Unit = {
     val hi: BigDecimal = base match {
@@ -4244,37 +4042,13 @@ class Engine(val spark: SparkSession) {
       case "int" | "integer" => BigDecimal(4294967295L)
       case _ => BigDecimal("18446744073709551615") // bigint unsigned
     }
-    unsignedBounds((table, column.toLowerCase)) = (BigDecimal(0), hi)
+    alterCol(table, column)(_.copy(unsigned = Some((BigDecimal(0), hi))))
   }
 
-  private[graft] val blobTextCols =
-    scala.collection.mutable.Set.empty[(String, String)]
-
-  private[graft] def declareBlobText(table: String, column: String): Unit =
-    blobTextCols += ((table, column.toLowerCase))
-
-  private[graft] def isBlobText(table: String, column: String): Boolean =
-    blobTextCols((table, column.toLowerCase))
-
-  /** Declared JSON columns: writes canonicalize into MySQL's
-    * sorted-key binary-JSON display form (functions.json.JsonCanon). */
-  private[graft] val jsonCols =
-    scala.collection.mutable.Set.empty[(String, String)]
-
-  private[graft] def declareJsonCol(table: String, column: String): Unit =
-    jsonCols += ((table, column.toLowerCase))
-
   // ---- ON UPDATE CURRENT_TIMESTAMP --------------------------------------
-  // (table, colLower) -> declared precision (update_queries.go
+  // ColumnDef.onUpdate holds the declared precision (update_queries.go
   // OnUpdateExprScripts; reference sql/planbuilder parses the on-update
   // expression, rowexec/update.go applies it to rows that CHANGE).
-
-  private[graft] val onUpdateCols =
-    scala.collection.mutable.Map.empty[(String, String), Int]
-
-  private[graft] def declareOnUpdate(table: String, column: String,
-                                     precision: Int): Unit =
-    onUpdateCols((table, column.toLowerCase)) = precision
 
   /** Frozen statement clock (the reference harness runs OnUpdateExpr
     * scripts under sql.RunWithNowFunc). None = wall clock. */
@@ -4288,6 +4062,10 @@ class Engine(val spark: SparkSession) {
     if (precision == 0) date_trunc("SECOND", base) else base
   }
 
+  /** CHAR/VARCHAR declared lengths: parquet strings are unbounded, so
+    * writes enforce them the reference's way (sql/types/strings.go:465
+    * ErrLengthBeyondLimit): plain INSERT errors, IGNORE truncates to the
+    * limit with a warning. */
   def declareCharLimit(table: String, column: String, n: Int): Unit = {
     // a single column can never exceed 65535 CHARACTERS regardless of
     // charset (reference sql/types/strings.go ErrLengthTooLarge;
@@ -4295,7 +4073,7 @@ class Engine(val spark: SparkSession) {
     if (n > 65535)
       throw new IllegalArgumentException(
         s"length is $n but max allowed is 65535 (MySQL error 1074)")
-    charLimits((table, column.toLowerCase)) = n
+    alterCol(table, column)(_.copy(charLimit = Some(n)))
   }
 
   // ---- InnoDB row-size limit --------------------------------------------
@@ -4307,62 +4085,6 @@ class Engine(val spark: SparkSession) {
   // check is declaration-time only — faithful to the reference, which
   // also validates the SPEC, not the stored bytes.
 
-  private[graft] val tableCharsets =
-    scala.collection.mutable.Map.empty[String, String]
-
-  // ---- SHOW CREATE TABLE catalog surface --------------------------------
-  // Table/column COMMENTs, an explicit table COLLATE, and the
-  // tinyint(1) display-width marker (the ONE width MySQL preserves)
-  // all survive into the catalog render (reference stores them on the
-  // schema — create_table_queries.go COMMENT / display-width corpus).
-  private[graft] val tableComments =
-    scala.collection.mutable.Map.empty[String, String]
-  private[graft] val tableCollations =
-    scala.collection.mutable.Map.empty[String, String]
-  private[graft] val columnComments =
-    scala.collection.mutable.Map.empty[(String, String), String]
-  private[graft] val tinyint1Cols =
-    scala.collection.mutable.Set.empty[(String, String)]
-  /** Declared DATETIME(p)/TIMESTAMP(p) fractional precision (1-6; bare
-    * datetime is 0 and renders bare). Catalog render + write-path
-    * truncation both read it. */
-  private[graft] val timePrecisions =
-    scala.collection.mutable.Map.empty[(String, String), Int]
-  /** Columns declared CHAR(n) (vs VARCHAR(n)) — the declared length in
-    * charLimits is shared, this marks which keyword to render back. */
-  private[graft] val charKindCols =
-    scala.collection.mutable.Set.empty[(String, String)]
-  /** Declared VECTOR(n) dimension per column (vector_ddl_queries.go:
-    * writes validate the dimension; SHOW CREATE renders it). -1 marks a
-    * declared vector column without a fixed dimension. */
-  private[graft] val vecDims =
-    scala.collection.mutable.Map.empty[(String, String), Int]
-  /** Declared DECIMAL(p, s) with p > 38 — MySQL reaches 65 (reference
-    * sql/types/decimal.go:58), Spark's DecimalType caps at 38. Storage
-    * is canonical fixed-scale plain text; functions.WideDecimal holds
-    * the write coercion + comparison rewrite. replaceTable stamps the
-    * field-metadata marker so WideDecCompareRule sees the columns. */
-  private[graft] val wideDecCols =
-    scala.collection.mutable.Map.empty[(String, String), (Int, Int)]
-
-  /** Declared per-column collation (the MySQL catalog NAME — COLLATE
-    * <name>, or the deprecated `CHARACTER SET x BINARY` attribute =
-    * x_bin). SHOW CREATE / DESCRIBE render it when it differs from the
-    * table collation (reference column catalog rendering). */
-  private[graft] val columnCollations =
-    scala.collection.mutable.Map.empty[(String, String), String]
-
-  /** Row-level triggers (reference sql/plan/triggers.go +
-    * trigger_queries.go; the supported body surface is SET NEW.col =
-    * expr layers, optionally IF-gated — the shapes the script corpus
-    * exercises). `actions` entries are (ifCondition, column, valueExpr)
-    * with NEW./OLD. qualifiers already stripped to bare columns. */
-  private[graft] case class Trigger(name: String, timing: String,
-      event: String, table: String,
-      actions: Seq[(Option[String], String, String)])
-  private[graft] val triggers =
-    scala.collection.mutable.LinkedHashMap.empty[String, Trigger]
-
   /** Stored procedures: name → (IN params as (name, type), body text).
     * CALL substitutes literal arguments for the IN parameters and runs
     * the body statements through the front door sequentially (reference
@@ -4372,121 +4094,30 @@ class Engine(val spark: SparkSession) {
   private[graft] val procedures = scala.collection.mutable.LinkedHashMap
     .empty[String, (Seq[(String, String)], String)]
 
-  /** Move EVERY piece of per-table declared metadata from `oldName` to
-    * `newName` — table rename semantics (ALTER ... RENAME TO and
-    * RENAME TABLE; alter_table_queries.go rename blocks). Constraints,
-    * keys, defaults, comments, stats all follow the table, and foreign
-    * keys elsewhere that referenced the old PARENT name re-point. */
-  private[graft] def renameTableMeta(oldName: String,
-                                     newName: String): Unit = {
-    // name-keyed maps move directly
-    def moveMap[V](m: scala.collection.mutable.Map[String, V]): Unit =
-      m.remove(oldName).foreach(v => m(newName) = v)
-    moveMap(tableKeys); moveMap(autoIncCols)
-    moveMap(autoIncCounter); moveMap(tableCharsets)
-    moveMap(tableComments); moveMap(tableCollations)
-    // (table, column)-keyed maps re-key
-    def moveColMap[V](
-        m: scala.collection.mutable.Map[(String, String), V]): Unit = {
-      val moved = m.toSeq.collect { case ((t, c), v) if t == oldName =>
-        (c, v) }
-      m.filterInPlace { case ((t, _), _) => t != oldName }
-      moved.foreach { case (c, v) => m((newName, c)) = v }
-    }
-    moveColMap(columnDefaults); moveColMap(columnVocab)
-    moveColMap(charLimits); moveColMap(timePrecisions)
-    moveColMap(vecDims); moveColMap(wideDecCols)
-    moveColMap(columnCollations)
-    moveColMap(columnComments); moveColMap(columnStats)
-    moveColMap(unsignedBounds); moveColMap(textKindCols)
-    moveColMap(bitWidths)
-    // (table, column) sets re-key
-    def moveSet(s: scala.collection.mutable.Set[(String, String)]): Unit = {
-      val moved = s.toSeq.collect { case (t, c) if t == oldName => c }
-      s.filterInPlace(_._1 != oldName)
-      moved.foreach(c => s += ((newName, c)))
-    }
-    moveSet(notNullCols); moveSet(vocabCi)
-    moveSet(tinyint1Cols); moveSet(charKindCols); moveSet(blobTextCols)
-    moveSet(storedGeneratedCols)
-    // name-carrying triples rewrite in place
-    def moveTriples(
-        b: scala.collection.mutable.ArrayBuffer[(String, String, String)])
-        : Unit =
-      b.mapInPlace { case (t, n, v) =>
-        if (t == oldName) (newName, n, v) else (t, n, v) }
-    moveTriples(generatedCols)
-    moveTriples(uniqueExprIdx)
-    checkConstraints.mapInPlace { case (t, n, v, en) =>
-      if (t == oldName) (newName, n, v, en) else (t, n, v, en) }
-    indexPrefixes.toSeq.foreach { case ((t, n, c), v) =>
-      if (t == oldName) {
-        indexPrefixes.remove((t, n, c)); indexPrefixes((newName, n, c)) = v
-      }
-    }
-    secondaryIndexes.mapInPlace { case (t, n, c) =>
-      if (t == oldName) (newName, n, c) else (t, n, c) }
-    uniqueKeys.mapInPlace { case (t, n, c) =>
-      if (t == oldName) (newName, n, c) else (t, n, c) }
-    // FKs follow on BOTH roles: this table as child, and any other
-    // table's FK referencing it as parent. Auto-generated constraint
-    // names (<old>_ibfk_N) renumber onto the new table name
-    // (foreign_key_queries.go "RENAME TABLE with autogenerated FK name")
+  /** Move `oldName`'s entry to `newName` — table rename semantics (ALTER
+    * ... RENAME TO and RENAME TABLE; alter_table_queries.go rename
+    * blocks) — and the view definition of that name, if any. Foreign
+    * keys follow on BOTH roles: this table as child, and any other
+    * table's FK referencing it as parent. Auto-generated constraint names
+    * (<old>_ibfk_N) renumber onto the new table name
+    * (foreign_key_queries.go "RENAME TABLE with autogenerated FK name"). */
+  private[graft] def renameTableDef(oldName: String, newName: String): Unit = {
+    tables(newName) = tables.remove(oldName).getOrElse(TableDef.Empty)
     val autoRe = ("(?i)^" + java.util.regex.Pattern.quote(oldName) +
       "_ibfk_(\\d+)$").r
-    foreignKeys.mapInPlace { fk =>
-      var c = if (fk.child == oldName) fk.copy(child = newName) else fk
-      if (c.parent == oldName) c = c.copy(parent = newName)
-      c.name match {
-        case autoRe(n) if c.child == newName =>
-          c.copy(name = s"${newName}_ibfk_$n")
-        case _ => c
-      }
+    tables.mapValuesInPlace { (_, d) =>
+      d.copy(fks = d.fks.map { fk =>
+        var c = if (fk.child == oldName) fk.copy(child = newName) else fk
+        if (c.parent == oldName) c = c.copy(parent = newName)
+        c.name match {
+          case autoRe(n) if c.child == newName =>
+            c.copy(name = s"${newName}_ibfk_$n")
+          case _ => c
+        }
+      })
     }
-    createdRelations.remove(oldName)
-    createdRelations += newName
     viewDefs.remove(oldName).foreach(v => viewDefs(newName) = v)
     viewDeps.remove(oldName).foreach(d => viewDeps(newName) = d)
-  }
-
-  /** Copy the per-column declared surface from `src` to `dst` — CREATE
-    * TABLE ... LIKE semantics (reference ddl.go buildCreateTableLike
-    * copies the whole schema; "Validate that CREATE LIKE preserves
-    * checks" corpus). Foreign keys deliberately excluded: MySQL LIKE
-    * never copies them. */
-  private[graft] def copyColumnMeta(src: String, dst: String): Unit = {
-    checkConstraints ++= checkConstraints.toSeq.collect {
-      case (t, n, ex, en) if t == src => (dst, n, ex, en) }
-    charLimits ++= charLimits.toSeq.collect {
-      case ((t, c), n) if t == src => ((dst, c), n) }
-    notNullCols ++= notNullCols.toSeq.collect {
-      case (t, c) if t == src => (dst, c) }
-    columnVocab ++= columnVocab.toSeq.collect {
-      case ((t, c), v) if t == src => ((dst, c), v) }
-    vocabCi ++= vocabCi.toSeq.collect {
-      case (t, c) if t == src => (dst, c) }
-    columnComments ++= columnComments.toSeq.collect {
-      case ((t, c), v) if t == src => ((dst, c), v) }
-    tinyint1Cols ++= tinyint1Cols.toSeq.collect {
-      case (t, c) if t == src => (dst, c) }
-    storedGeneratedCols ++= storedGeneratedCols.toSeq.collect {
-      case (t, c) if t == src => (dst, c) }
-    generatedCols ++= generatedCols.toSeq.collect {
-      case (t, c, ex) if t == src => (dst, c, ex) }
-    charKindCols ++= charKindCols.toSeq.collect {
-      case (t, c) if t == src => (dst, c) }
-    vecDims ++= vecDims.toSeq.collect {
-      case ((t, c), n) if t == src => ((dst, c), n) }
-    wideDecCols ++= wideDecCols.toSeq.collect {
-      case ((t, c), ps) if t == src => ((dst, c), ps) }
-    columnCollations ++= columnCollations.toSeq.collect {
-      case ((t, c), v) if t == src => ((dst, c), v) }
-    timePrecisions ++= timePrecisions.toSeq.collect {
-      case ((t, c), p) if t == src => ((dst, c), p) }
-    secondaryIndexes ++= secondaryIndexes.toSeq.collect {
-      case (t, n, cols) if t == src => (dst, n, cols) }
-    uniqueKeys ++= uniqueKeys.toSeq.collect {
-      case (t, n, cols) if t == src => (dst, n, cols) }
   }
 
   /** Default collation per charset, as the reference renders it
@@ -4513,7 +4144,7 @@ class Engine(val spark: SparkSession) {
   private[graft] def validateRowLength(table: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     import org.apache.spark.sql.types._
-    val bpc = bytesPerChar(tableCharsets.getOrElse(table, "utf8mb4"))
+    val bpc = bytesPerChar(tableDef(table).charset.getOrElse("utf8mb4"))
     // per-type byte model from the reference's InnoDB simulation
     // (memory/table.go maxRowStorageSize): numbers/datetimes 8,
     // non-blob strings MaxByteLength, blobs 16, DECIMAL counts its
@@ -4523,11 +4154,11 @@ class Engine(val spark: SparkSession) {
     // 16-byte TEXT pointer; YEAR (ref 8) likewise 16 — near-cap specs
     // using those types diverge by a few bytes per column.
     val rowLen = schema.fields.map { f =>
-      val isEnumSet = columnVocab.contains((table, f.name.toLowerCase))
+      val isEnumSet = colDef(table, f.name).vocab.isDefined
       f.dataType match {
         case _ if isEnumSet => 2L
         case _: StringType => // incl. collated strings (Spark 4)
-          charLimits.get((table, f.name.toLowerCase))
+          colDef(table, f.name).charLimit
             .map(_.toLong * bpc).getOrElse(16L) // TEXT = pointer
         case BinaryType => 16L
         case d: DecimalType => math.min(d.precision, 30).toLong
@@ -4587,9 +4218,9 @@ class Engine(val spark: SparkSession) {
       if (!strict) df = df.withColumn(name,
         when(col(s"`$f`").isNotNull, coerced).otherwise(col(s"`$name`")))
     }
-    if (!strict) columnVocab.toSeq.foreach {
-      case ((t, cLower), (isSet, vocab)) if t == table && present.contains(cLower) =>
-        val ci = vocabCi((t, cLower))
+    val defn = tableDef(table)
+    if (!strict) defn.columns.foreach {
+      case (cLower, ColumnDef.Vocab(isSet, vocab, ci)) if present.contains(cLower) =>
         val name = present(cLower)
         val c = col(s"`$name`")
         val cp = c.cast(org.apache.spark.sql.types.StringType)
@@ -4600,18 +4231,19 @@ class Engine(val spark: SparkSession) {
         else flag(1265, name, c.isNotNull && !vocabMember(c, vocab, ci), c, lit(""))
       case _ =>
     }
-    val pk = tableKeys.getOrElse(table, Seq.empty).map(_.toLowerCase).toSet
+    val pk = defn.keyLower
     spark.table(table).schema.fields.foreach { f =>
       val lo = f.name.toLowerCase
-      if (written(lo) && (notNullCols((table, lo)) || pk(lo) || (!strict && !f.nullable)))
+      if (written(lo) && (defn.col(lo).notNull || pk(lo) || (!strict && !f.nullable)))
         present.get(lo).foreach { name =>
           val zero = zeroValueLit(f.dataType)
           if (strict || zero.isDefined)
             flag(1048, name, col(s"`$name`").isNull, lit("NULL"), zero.get)
         }
     }
-    charLimits.toSeq.foreach {
-      case ((t, cLower), n) if t == table && present.contains(cLower) =>
+    defn.columns.foreach {
+      case (cLower, cd) if cd.charLimit.isDefined && present.contains(cLower) =>
+        val n = cd.charLimit.get
         val name = present(cLower)
         val c = col(s"`$name`").cast("string")
         flag(1406, name, c.isNotNull && length(c) > n, c, substring(c, 1, n))
@@ -4659,26 +4291,20 @@ class Engine(val spark: SparkSession) {
     df.drop(flags.map(_._1): _*)
   }
 
-  // columns whose declared collation is case-insensitive (*_ci): member
-  // lookup hashes through the collation in the reference
-  // (sql/types/enum.go:86 collation.HashToUint), so 'ABC' matches member
-  // 'abc' and stores the DECLARED spelling. The reference's default
-  // collation is utf8mb4_0900_bin, so sensitivity stays the default here.
-  private val vocabCi = scala.collection.mutable.Set.empty[(String, String)]
-
   /** Declare `table.column` as ENUM(values...): writes reject any value
     * outside the vocabulary (MySQL error 1265, Data truncated). Trailing
     * spaces are deleted from member values at declaration time
     * (enum.go:83 — MySQL strips them unless the binary collation is in
     * use, which parquet-backed string columns never are). `ci`: the
-    * column collation is case-insensitive, so member matching is too. */
+    * column collation is case-insensitive (*_ci), so member matching is
+    * too: lookup hashes through the collation in the reference
+    * (sql/types/enum.go:86 collation.HashToUint), so 'ABC' matches member
+    * 'abc' and stores the DECLARED spelling. The reference's default
+    * collation is utf8mb4_0900_bin, so sensitivity stays the default. */
   def declareEnum(table: String, column: String, values: Seq[String],
-                  ci: Boolean = false): Unit = {
-    columnVocab((table, column.toLowerCase)) =
-      (false, values.map(_.replaceAll(" +$", "")))
-    if (ci) vocabCi += ((table, column.toLowerCase))
-    else vocabCi -= ((table, column.toLowerCase))
-  }
+                  ci: Boolean = false): Unit =
+    alterCol(table, column)(_.copy(
+      vocab = Some((false, values.map(_.replaceAll(" +$", "")))), vocabCi = ci))
 
   /** Declare `table.column` as SET(values...): writes reject any
     * comma-separated element outside the vocabulary. '' is the empty set.
@@ -4694,9 +4320,7 @@ class Engine(val spark: SparkSession) {
         s"Duplicate entry '$d' in SET definition of column '$column' " +
         "(MySQL ErrDuplicateEntrySet)")
     }
-    columnVocab((table, column.toLowerCase)) = (true, vs)
-    if (ci) vocabCi += ((table, column.toLowerCase))
-    else vocabCi -= ((table, column.toLowerCase))
+    alterCol(table, column)(_.copy(vocab = Some((true, vs)), vocabCi = ci))
   }
 
   /** Collation-aware membership test for one scalar value column.
@@ -4731,9 +4355,9 @@ class Engine(val spark: SparkSession) {
     val parts = name.split('.')
     val colName = parts.last
     val tblQ = if (parts.length >= 2) Some(parts(parts.length - 2)) else None
-    val cands = columnVocab.toSeq.collect {
-      case ((t, c), v) if c == colName &&
-        tblQ.forall(q => t.toLowerCase.split('.').last == q) => (t, v)
+    val cands = tables.toSeq.flatMap { case (t, d) =>
+      d.columns.get(colName).flatMap(_.vocab)
+        .filter(_ => tblQ.forall(q => t.toLowerCase.split('.').last == q)).map(t -> _)
     }
     val present = cands.filter { case (t, _) =>
       val bare = java.util.regex.Pattern.quote(t.split('.').last)
@@ -4755,10 +4379,8 @@ class Engine(val spark: SparkSession) {
   private[graft] def coerceVocab(table: String, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     val present = df.columns.map(c => c.toLowerCase -> c).toMap
-    columnVocab.toSeq.foldLeft(df) {
-      case (d, ((t, cLower), (isSet, vocab)))
-          if t == table && !isSet && present.contains(cLower) =>
-        val ci = vocabCi((t, cLower))
+    tableDef(table).columns.foldLeft(df) {
+      case (d, (cLower, ColumnDef.Vocab(false, vocab, ci))) if present.contains(cLower) =>
         val name = present(cLower)
         val dt = d.schema(name).dataType
         val c = col(s"`$name`")
@@ -4770,9 +4392,7 @@ class Engine(val spark: SparkSession) {
               element_at(array(vocab.map(lit): _*), idx))
             .otherwise(if (ci) vocabCanonical(c, vocab) else c)
             .cast(dt))
-      case (d, ((t, cLower), (isSet, vocab)))
-          if t == table && isSet && present.contains(cLower) =>
-        val ci = vocabCi((t, cLower))
+      case (d, (cLower, ColumnDef.Vocab(true, vocab, ci))) if present.contains(cLower) =>
         val name = present(cLower)
         val dt = d.schema(name).dataType
         val c = col(s"`$name`")
@@ -4824,7 +4444,8 @@ class Engine(val spark: SparkSession) {
     * (vector_ddl_queries.go "VECTOR dimension mismatch"). */
   private[graft] def validateVecDims(table: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.{col, size}
-    vecDims.toSeq.collect { case ((t, c), n) if t == table && n > 0 =>
+    tableDef(table).columns.collect { case (c, cd) if cd.vecDim.exists(_ > 0) =>
+      val n = cd.vecDim.get
       df.columns.find(_.equalsIgnoreCase(c)).foreach { cn =>
         val bad = df.filter(col(s"`$cn`").isNotNull &&
             size(col(s"`$cn`")) =!= n)
@@ -4838,9 +4459,8 @@ class Engine(val spark: SparkSession) {
   private[graft] def validateVocab(table: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     val present = df.columns.map(c => c.toLowerCase -> c).toMap
-    columnVocab.foreach {
-      case ((t, cLower), (isSet, vocab)) if t == table && present.contains(cLower) =>
-        val ci = vocabCi((t, cLower))
+    tableDef(table).columns.foreach {
+      case (cLower, ColumnDef.Vocab(isSet, vocab, ci)) if present.contains(cLower) =>
         val c = col(present(cLower))
         val cp = c.cast(org.apache.spark.sql.types.StringType)
         val offending =
@@ -4860,9 +4480,10 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** DROP TABLE/VIEW (db-qualified names drop the catalog view).
-    * Declared per-table metadata (keys, defaults, vocab, generated
-    * columns, checks) drops with it. */
+  /** DROP TABLE/VIEW (db-qualified names drop the catalog view). The
+    * table's entry, or the view's definition, drops with it; a table
+    * that shadowed a base table (CREATE TEMPORARY TABLE) brings the base
+    * back with its entry. */
   def drop(name: String): Unit = {
     // MySQL errno 3730: a parent with referencing children cannot drop
     // (suspended while FOREIGN_KEY_CHECKS=0, like InnoDB)
@@ -4871,11 +4492,13 @@ class Engine(val spark: SparkSession) {
       throw new IllegalArgumentException(
         s"Cannot drop table '$name': referenced by a foreign key " +
         s"constraint (MySQL error 3730)")
-    clearTableMeta(name)
+    tables.remove(name)
+    viewDefs.remove(name)
+    viewDeps.remove(name)
     tempShadow.remove(name) match {
-      case Some(df) => // un-shadow: the base table becomes visible again
+      case Some((df, base)) => // un-shadow: the base table becomes visible again
         df.createOrReplaceTempView(name)
-        createdRelations += name
+        tables(name) = base.getOrElse(TableDef.Empty)
       case None =>
         if (name.contains(".")) {
           val Array(db, t) = name.split("\\.", 2)
@@ -4959,8 +4582,10 @@ class Engine(val spark: SparkSession) {
       case "parquet" => spark.read.parquet(path)
       case other => throw new IllegalArgumentException(s"LOAD DATA format $other")
     }
-    // an existing declared table keeps its schema and its rows: positional
-    // cast, like the reference's column coercion on load. A file with
+    // an existing declared table keeps its schema and its rows: fields
+    // bind positionally and reach insertDf as read, so each column's
+    // write conversion (writeConversion: 1366 strict, a zero value with
+    // a warning otherwise) applies as on INSERT. A file with
     // FEWER columns than the table NULL-fills the tail (MySQL warning
     // 1261 "Row N doesn't contain data for all columns"); a file with
     // MORE columns truncates the extras (warning 1262). The load
@@ -4996,7 +4621,7 @@ class Engine(val spark: SparkSession) {
             val cn = tcols.getOrElse(it.toLowerCase,
               throw new IllegalArgumentException(
                 s"Unknown column '$it' in 'field list' (MySQL 1054)"))
-            src.cast(t.schema(cn).dataType).as(cn)
+            src.as(cn)
           }
         }
         var cur = df.select(bound.toIndexedSeq: _*)
@@ -5054,8 +4679,7 @@ class Engine(val spark: SparkSession) {
         val srcCols = df.columns
         val cols = t.schema.fields.zipWithIndex.map { case (f, i) =>
           if (i < srcCols.length)
-            org.apache.spark.sql.functions.col(s"`${srcCols(i)}`")
-              .cast(f.dataType).as(f.name)
+            org.apache.spark.sql.functions.col(s"`${srcCols(i)}`").as(f.name)
           else org.apache.spark.sql.functions.lit(null)
             .cast(f.dataType).as(f.name)
         }
@@ -5121,7 +4745,7 @@ class Engine(val spark: SparkSession) {
 
   /** SHOW TABLES (catalog read; info-schema scaffolding excluded).
     * Spark lowercases temp-view names; the created spelling is restored
-    * from createdRelations (script_queries.go rename blocks expect
+    * from the table entries and views (script_queries.go rename blocks expect
     * newTableName back, not newtablename). */
   def showTables(): Seq[String] =
     (spark.catalog.listTables().collect().map(_.name).toSeq
@@ -5149,9 +4773,7 @@ class Engine(val spark: SparkSession) {
   // MySQL information_schema.column_statistics). The JSON shape follows
   // MySQL's USING DATA grammar: row_count / distinct_count / null_count
   // / buckets[{row_count, distinct_count, upper_bound, bound_count}].
-
-  private[graft] val columnStats =
-    scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
+  // Each table's histograms live in its entry (TableDef.stats).
 
   /** One distributed pass per column: total/null/distinct counts plus an
     * equi-height histogram capped at 20 buckets — at scale the groupBy
@@ -5235,12 +4857,8 @@ class Engine(val spark: SparkSession) {
     * primary key plus every declared secondary/unique index column. */
   private[graft] def analyzedColumns(table: String): Seq[String] = {
     val t = scala.util.Try(spark.table(table)).toOption
-    val declared =
-      tableKeys.getOrElse(table, Seq.empty) ++
-        secondaryIndexes.toSeq.collect { case (tt, _, cols) if tt == table =>
-          cols }.flatten ++
-        uniqueKeys.toSeq.collect { case (tt, _, cols) if tt == table =>
-          cols }.flatten
+    val d = tableDef(table)
+    val declared = d.key.getOrElse(Seq.empty) ++ (d.indexes ++ d.uniques).flatMap(_._2)
     declared.distinct.filter(c =>
       t.exists(_.columns.exists(_.equalsIgnoreCase(c))))
   }
@@ -5254,7 +4872,7 @@ class Engine(val spark: SparkSession) {
     import spark.implicits._
     // the information_schema_* views themselves are catalog
     // infrastructure, not user tables — never enumerate them
-    val tables = spark.catalog.listTables().collect()
+    val listed = spark.catalog.listTables().collect()
       .filterNot(t => infoSchemaViews(t.name.toLowerCase))
     val db = sessionDb
 
@@ -5277,7 +4895,7 @@ class Engine(val spark: SparkSession) {
     // MySQL's full 21-column TABLES shape (tables_table.go; the
     // information_schema_queries.go "column specific tests" blocks pin
     // version=10, row_format=Dynamic, empty create_options/comment)
-    tables.map { t =>
+    listed.map { t =>
       val isView = t.tableType == "VIEW" || viewDefs.contains(t.name)
       // table_rows: the optimized plan's row count, read without a job.
       // Exact when the rows are stored on the driver (a LocalRelation
@@ -5303,13 +4921,12 @@ class Engine(val spark: SparkSession) {
         if (isView) null else java.lang.Long.valueOf(0L),
         // AUTO_INCREMENT: the NEXT counter value once one has been
         // allocated or ALTERed, NULL before (insert_queries.go)
-        autoIncCounter.get(t.name).map(java.lang.Long.valueOf).orNull,
+        tableDef(t.name).autoIncCounter.map(java.lang.Long.valueOf).orNull,
         if (isView) null
-          else tableCollations.getOrElse(t.name,
-            defaultCollation(tableCharsets.getOrElse(t.name, "utf8mb4"))),
+          else tableDef(t.name).collation.getOrElse(defaultCollation(tableDef(t.name).charset.getOrElse("utf8mb4"))),
         null: java.lang.Long,
         if (isView) null else "",
-        if (isView) "VIEW" else tableComments.getOrElse(t.name, "")))
+        if (isView) "VIEW" else tableDef(t.name).comment.getOrElse("")))
     }.toSeq
       .map { case ((a1, a2, a3, a4, a5, a6, a7, a8),
                    (b1, b2, b3, b4, b5, b6, b7, b8, b9, b10)) =>
@@ -5331,20 +4948,17 @@ class Engine(val spark: SparkSession) {
         "table_comment")
       .asInfoView("information_schema_tables")
 
-    tables.flatMap { t =>
+    listed.flatMap { t =>
       // column_key renders like DESCRIBE's Key column (PRI/UNI/MUL;
       // ordinal_ddl_queries.go filters on column_key = 'PRI')
-      val pk = tableKeys.getOrElse(t.name, Seq.empty).map(_.toLowerCase).toSet
-      val uni = uniqueKeys.toSeq.collect {
-        case (tt, _, Seq(c)) if tt == t.name => c.toLowerCase
-      }.toSet
-      val mul = secondaryIndexes.toSeq.collect {
-        case (tt, _, cols) if tt == t.name => cols.head.toLowerCase
-      }.toSet
+      val defn = tableDef(t.name)
+      val pk = defn.keyLower
+      val uni = defn.uniques.collect { case (_, Seq(c)) => c.toLowerCase }.toSet
+      val mul = defn.indexes.map(_._2.head.toLowerCase).toSet
       spark.table(t.name).schema.fields.zipWithIndex.map { case (f, i) =>
         // a declared vocabulary surfaces as data_type enum/set with the
         // full member list in column_type (reference columns_table.go)
-        val dataType = columnVocab.get((t.name, f.name.toLowerCase)) match {
+        val dataType = colDef(t.name, f.name).vocab match {
           case Some((true, _)) => "set"
           case Some((false, _)) => "enum"
           // MySQL DATA_TYPE is the bare type keyword of the DECLARED
@@ -5358,7 +4972,7 @@ class Engine(val spark: SparkSession) {
         val colType = renderColumnType(t.name, f)
         import org.apache.spark.sql.types._
         // COLUMN_DEFAULT displays unquoted literals / bare expressions
-        val dflt = columnDefaults.get((t.name, lc)).map { d =>
+        val dflt = colDef(t.name, lc).default.map { d =>
           val tr = d.trim
           if (tr.length >= 2 && tr.startsWith("'") && tr.endsWith("'"))
             tr.substring(1, tr.length - 1).replace("\\'", "'")
@@ -5377,7 +4991,7 @@ class Engine(val spark: SparkSession) {
         }
         val charMax: Integer = f.dataType match {
           case _: StringType if dataType != "enum" && dataType != "set" =>
-            charLimits.get((t.name, lc)).map(Integer.valueOf)
+            colDef(t.name, lc).charLimit.map(Integer.valueOf)
               .getOrElse(Integer.valueOf(65535))
           case _ => null
         }
@@ -5385,34 +4999,31 @@ class Engine(val spark: SparkSession) {
           if (charMax == null) null else Integer.valueOf(charMax * 4)
         val dtPrec: Integer = f.dataType match {
           case TimestampType | TimestampNTZType =>
-            Integer.valueOf(timePrecisions.getOrElse((t.name, lc), 0))
+            Integer.valueOf(colDef(t.name, lc).timePrecision.getOrElse(0))
           case DateType => null
           case _ => null
         }
         val (csName, collName) = f.dataType match {
           case _: StringType =>
-            ("utf8mb4", tableCollations.getOrElse(t.name, "utf8mb4_0900_bin"))
+            ("utf8mb4", tableDef(t.name).collation.getOrElse("utf8mb4_0900_bin"))
           case _ => (null, null)
         }
-        val isGen = generatedCols.exists(g =>
-          g._1 == t.name && g._2.toLowerCase == lc)
-        val genExpr = generatedCols.collectFirst {
-          case (tt, c, ex) if tt == t.name && c.toLowerCase == lc =>
-            graft.functions.CheckExprRender.render(ex)
-        }.getOrElse("")
+        val isGen = defn.isGenerated(lc)
+        val genExpr = defn.col(lc).generated
+          .map(graft.functions.CheckExprRender.render).getOrElse("")
         val extra =
-          if (autoIncCols.get(t.name).exists(_.toLowerCase == lc))
+          if (tableDef(t.name).autoInc.exists(_.toLowerCase == lc))
             "auto_increment"
           else if (isGen)
-            if (storedGeneratedCols((t.name, lc))) "STORED GENERATED"
+            if (colDef(t.name, lc).stored) "STORED GENERATED"
             else "VIRTUAL GENERATED"
-          else if (dflt != null && columnDefaults.get((t.name, lc))
+          else if (dflt != null && colDef(t.name, lc).default
               .exists(_.trim.startsWith("("))) "DEFAULT_GENERATED"
           else ""
         (("def", Option(t.database).getOrElse(db), t.name, f.name, i + 1,
           dflt,
           // declared nullability, not the physical frame's flag
-          if (f.nullable && !notNullCols((t.name, lc)) && !pk(lc)) "YES"
+          if (f.nullable && !colDef(t.name, lc).notNull && !pk(lc)) "YES"
           else "NO", dataType),
          (charMax, charOctet, numPrec, numScale, dtPrec, csName, collName,
           colType, key, extra, "insert,references,select,update", "",
@@ -5435,22 +5046,24 @@ class Engine(val spark: SparkSession) {
 
     // declared keys AND secondary/unique index declarations surface
     // (reference statistics_table.go; non_unique = 0 for PK/UNIQUE)
+    val allKeys = tables.toSeq.collect { case (t, d) if d.key.isDefined => (t, d.key.get) }
+    val allUniques = tables.toSeq.flatMap { case (t, d) => d.uniques.map { case (n, c) => (t, n, c) } }
     val statRows =
-      tableKeys.toSeq.flatMap { case (t, cols) =>
+      allKeys.flatMap { case (t, cols) =>
         cols.zipWithIndex.map { case (c, i) =>
           (db, t, 0, "PRIMARY", i + 1, c) }
       } ++
-      uniqueKeys.toSeq.flatMap { case (t, n, cols) =>
+      allUniques.flatMap { case (t, n, cols) =>
         cols.zipWithIndex.map { case (c, i) => (db, t, 0, n, i + 1, c) }
       } ++
-      secondaryIndexes.toSeq
-        .filter(si => !uniqueKeys.exists(u => u._1 == si._1 && u._2 == si._2))
-        .flatMap { case (t, n, cols) =>
+      tables.toSeq.flatMap { case (t, d) =>
+        d.indexes.filter(si => !d.uniques.exists(_._1 == si._1)).flatMap { case (n, cols) =>
           cols.zipWithIndex.map { case (c, i) => (db, t, 1, n, i + 1, c) }
         }
+      }
     statRows
       .map { case (sch0, t, nu, idx, seq, c) =>
-        val sub: Integer = indexPrefixes.get((t, idx, c.toLowerCase))
+        val sub: Integer = tableDef(t).indexPrefixes.get((idx, c.toLowerCase))
           .map(Integer.valueOf).orNull
         val nullable = scala.util.Try(spark.table(t).schema
           .fields.find(_.name.equalsIgnoreCase(c)).exists(_.nullable))
@@ -5471,11 +5084,11 @@ class Engine(val spark: SparkSession) {
     // key_column_usage: PK + UNIQUE + FK child columns with their
     // referenced parent (reference key_column_usage_table.go)
     val kcuRows =
-      tableKeys.toSeq.flatMap { case (t, cols) =>
+      allKeys.flatMap { case (t, cols) =>
         cols.zipWithIndex.map { case (c, i) =>
           ("PRIMARY", t, c, i + 1, null: String, null: String) }
       } ++
-      uniqueKeys.toSeq.flatMap { case (t, n, cols) =>
+      allUniques.flatMap { case (t, n, cols) =>
         cols.zipWithIndex.map { case (c, i) =>
           (n, t, c, i + 1, null: String, null: String) }
       } ++
@@ -5521,11 +5134,11 @@ class Engine(val spark: SparkSession) {
       val (sch, bare) = schemaOf(t.toLowerCase)
       ("def", sch, n, sch, bare, typ, en)
     }
-    val pkRows = tableKeys.keys.toSeq.map(t =>
-      tcRow(t, "PRIMARY", "PRIMARY KEY", "YES"))
-    val ckRows = checkConstraints.toSeq.map { case (t, n, _, en) =>
+    val pkRows = allKeys.map { case (t, _) =>
+      tcRow(t, "PRIMARY", "PRIMARY KEY", "YES") }
+    val ckRows = checkConstraints.map { case (t, n, _, en) =>
       tcRow(t, n, "CHECK", if (en) "YES" else "NO") }
-    val ukRows = uniqueKeys.toSeq.map { case (t, n, _) =>
+    val ukRows = allUniques.map { case (t, n, _) =>
       tcRow(t, n, "UNIQUE", "YES") }
     val fkRows = foreignKeys.toSeq.map(f =>
       tcRow(f.child, f.name, "FOREIGN KEY", "YES"))
@@ -5537,12 +5150,12 @@ class Engine(val spark: SparkSession) {
     // *_EXTENSIONS catalog tables (MySQL 8 engine-attribute surface —
     // information_schema_queries.go extensions blocks): one row per
     // schema/table/column/constraint, NULL attribute columns
-    tables.toSeq.map(t => ("def", Option(t.database).getOrElse(db), t.name,
+    listed.toSeq.map(t => ("def", Option(t.database).getOrElse(db), t.name,
         null: String, null: String))
       .toDF("table_catalog", "table_schema", "table_name",
         "engine_attribute", "secondary_engine_attribute")
       .asInfoView("information_schema_tables_extensions")
-    tables.flatMap { t =>
+    listed.flatMap { t =>
       scala.util.Try(spark.table(t.name).schema.fields).toOption
         .getOrElse(Array.empty).map(f =>
           ("def", Option(t.database).getOrElse(db), t.name, f.name,
@@ -5551,10 +5164,10 @@ class Engine(val spark: SparkSession) {
       .toDF("table_catalog", "table_schema", "table_name", "column_name",
         "engine_attribute", "secondary_engine_attribute")
       .asInfoView("information_schema_columns_extensions")
-    (tableKeys.keys.toSeq.map(t => ("def", db, "PRIMARY", t.toLowerCase)) ++
-      foreignKeys.toSeq.map(f => ("def", db, f.name, f.child.toLowerCase)) ++
-      uniqueKeys.toSeq.map { case (t, n, _) => ("def", db, n, t.toLowerCase) } ++
-      checkConstraints.toSeq.map { case (t, n, _, _) =>
+    (allKeys.map { case (t, _) => ("def", db, "PRIMARY", t.toLowerCase) } ++
+      foreignKeys.map(f => ("def", db, f.name, f.child.toLowerCase)) ++
+      allUniques.map { case (t, n, _) => ("def", db, n, t.toLowerCase) } ++
+      checkConstraints.map { case (t, n, _, _) =>
         ("def", db, n, t.toLowerCase) })
       .map { case (a, b, c, d) => (a, b, c, d, null: String, null: String) }
       .toDF("constraint_catalog", "constraint_schema", "constraint_name",
@@ -5571,11 +5184,10 @@ class Engine(val spark: SparkSession) {
         // UNIQUE key's name (referential_constraints_table.go)
         val pCols = f.parentCols.map(_.toLowerCase)
         val ucn =
-          if (tableKeys.get(f.parent).exists(_.map(_.toLowerCase) == pCols))
+          if (tableDef(f.parent).key.exists(_.map(_.toLowerCase) == pCols))
             "PRIMARY"
-          else uniqueKeys.collectFirst {
-            case (t, n, cols) if t == f.parent &&
-              cols.map(_.toLowerCase) == pCols => n
+          else tableDef(f.parent).uniques.collectFirst {
+            case (n, cols) if cols.map(_.toLowerCase) == pCols => n
           }.orNull
         ("def", db, f.name, "def", db, ucn, "NONE", f.onUpdate, f.onDelete,
           f.child, f.parent)
@@ -5606,7 +5218,7 @@ class Engine(val spark: SparkSession) {
     // COLUMN_STATISTICS: MySQL's 4-column shape (schema, table, column,
     // histogram JSON) — dolt renders its Go statistic struct instead;
     // the JSON here follows the USING DATA grammar (stats_queries.go)
-    columnStats.toSeq.map { case ((t, c), h) => (db, t, c, h) }
+    tables.toSeq.flatMap { case (t, d) => d.stats.map { case (c, h) => (db, t, c, h) } }
       .toDF("schema_name", "table_name", "column_name", "histogram")
       .asInfoView("information_schema_column_statistics")
 
@@ -5682,38 +5294,33 @@ class Engine(val spark: SparkSession) {
   /** SHOW COLUMNS FROM t — MySQL Field/Type/Null/Key/Default/Extra shape
     * (reference sql/rowexec/show.go showColumns). */
   def showColumns(table: String): Seq[(String, String, String, String, Option[String], String)] = {
-    val pk0 = tableKeys.getOrElse(table, Seq.empty).map(_.toLowerCase).toSet
-    val uni0 = uniqueKeys.toSeq.collect {
-      case (t, _, Seq(c)) if t == table => c.toLowerCase
-    }.toSet
+    val defn = tableDef(table)
+    val pk0 = defn.keyLower
+    val uni0 = defn.uniques.collect { case (_, Seq(c)) => c.toLowerCase }.toSet
     // MySQL promotes the FIRST single-column NOT NULL UNIQUE key to the
     // PRI display when the table has no primary key (show.go)
     val promoted: Set[String] =
       if (pk0.nonEmpty) Set.empty
-      else uniqueKeys.toSeq.collectFirst {
-        case (t, _, Seq(c)) if t == table &&
-            notNullCols((table, c.toLowerCase)) => c.toLowerCase
+      else defn.uniques.collectFirst {
+        case (_, Seq(c)) if defn.col(c).notNull => c.toLowerCase
       }.toSet
     val pk = pk0 ++ promoted
     val uni = uni0 -- promoted
-    val mul = secondaryIndexes.toSeq.collect {
-      case (t, _, cols) if t == table => cols.head.toLowerCase
-    }.toSet
+    val mul = defn.indexes.map(_._2.head.toLowerCase).toSet
     spark.table(table).schema.fields.toSeq.map { f =>
       val lc = f.name.toLowerCase
       val key = if (pk(lc)) "PRI" else if (uni(lc)) "UNI"
         else if (mul(lc)) "MUL" else ""
       val extra =
-        if (autoIncCols.get(table).exists(_.equalsIgnoreCase(f.name)))
+        if (tableDef(table).autoInc.exists(_.equalsIgnoreCase(f.name)))
           "auto_increment"
-        else if (generatedCols.exists(g =>
-          g._1 == table && g._2.equalsIgnoreCase(f.name))) "STORED GENERATED"
+        else if (defn.isGenerated(f.name)) "STORED GENERATED"
         else ""
       // expression defaults render re-parsed with backticked identifiers
       // and mark Extra DEFAULT_GENERATED (show.go — script_queries.go
       // "Describe with expressions": DEFAULT (pk * 2) shows
       // ((`pk` * 2)) / DEFAULT_GENERATED)
-      val (defOut, exprDefault) = columnDefaults.get((table, lc)) match {
+      val (defOut, exprDefault) = colDef(table, lc).default match {
         case Some(d) if d.trim.startsWith("(") && d.trim.endsWith(")") =>
           val rendered =
             try "(" + backtickIdents(org.apache.spark.sql.catalyst
@@ -5724,65 +5331,55 @@ class Engine(val spark: SparkSession) {
       }
       val extra2 = if (extra.isEmpty && exprDefault) "DEFAULT_GENERATED"
                    else extra
-      // nullability is the DECLARED state (notNullCols / PK), not the
+      // nullability is the DECLARED state (NOT NULL / PK), not the
       // physical frame's nullable flag — an expression-default fill can
       // make the stored frame nullable while the column stays NOT NULL
-      val notNull = !f.nullable || notNullCols((table, lc)) || pk(lc)
+      val notNull = !f.nullable || colDef(table, lc).notNull || pk(lc)
       (f.name, renderColumnType(table, f) + collateSuffix(table, f.name),
         if (notNull) "NO" else "YES", key,
         defOut, extra2)
     }
   }
 
-  /** SHOW INDEX FROM t — declared primary keys surface as the PRIMARY
-    * index; there are no secondary indexes over parquet. */
-  /** Declared secondary indexes (CREATE INDEX / ALTER ADD INDEX):
+  /** Declare a secondary index (CREATE INDEX / ALTER ADD INDEX):
     * metadata only — Catalyst plans scans; the declaration surfaces
     * through SHOW INDEX like the reference's index catalog. */
-  private[graft] val secondaryIndexes =
-    scala.collection.mutable.ArrayBuffer.empty[(String, String, Seq[String])]
-
   def declareIndex(table: String, name: String, cols: Seq[String]): Unit =
-    secondaryIndexes += ((table, name, cols))
+    alterDef(table)(d => d.copy(indexes = d.indexes :+ ((name, cols))))
 
-  /** Declared prefix lengths for index key parts — (table, indexName,
-    * columnLower) → length, from `KEY k (col(10))` (reference
-    * IndexPrefixQueries). Drives SHOW CREATE rendering; prefix UNIQUE
-    * enforcement goes through uniqueExprIdx substring probes. */
-  private[graft] val indexPrefixes =
-    scala.collection.mutable.Map.empty[(String, String, String), Int]
-
+  /** Declare a prefix length for an index key part, from `KEY k
+    * (col(10))` (reference IndexPrefixQueries). Drives SHOW CREATE
+    * rendering; prefix UNIQUE enforcement goes through the unique
+    * expression probes (`TableDef.uniqueExprs`). */
   def declareIndexPrefix(table: String, name: String, col: String,
                          len: Int): Unit =
-    indexPrefixes((table, name, col.toLowerCase)) = len
+    alterDef(table)(d => d.copy(indexPrefixes = d.indexPrefixes + ((name, col.toLowerCase) -> len)))
 
-  /** Declared UNIQUE keys (beyond the primary key): enforced on insert
+  /** Declare a UNIQUE key (beyond the primary key): enforced on insert
     * like the PK, except rows with a NULL key column are exempt (MySQL
     * allows any number of NULLs under a unique index). */
-  private[graft] val uniqueKeys =
-    scala.collection.mutable.ArrayBuffer.empty[(String, String, Seq[String])]
-
   def declareUnique(table: String, name: String, cols: Seq[String]): Unit =
-    uniqueKeys += ((table, name, cols))
+    alterDef(table)(d => d.copy(uniques = d.uniques :+ ((name, cols))))
+
+  /** Declare a functional UNIQUE index — CREATE UNIQUE INDEX idx ON t
+    * ((c1*10)) (reference indexed_expressions_queries.go): the
+    * EXPRESSION result must be unique across rows; NULL results are
+    * exempt (MySQL NULL != NULL). */
+  private[graft] def declareUniqueExpr(table: String, name: String, exprText: String): Unit =
+    alterDef(table)(d => d.copy(uniqueExprs = d.uniqueExprs :+ ((name, exprText))))
 
   def dropIndex(table0: String, name: String): Unit = {
     // table + index names are case-insensitive (case insensitive index
     // handling block drops via a differently-cased spelling)
     val table = canonicalTable(table0)
-    def m(t: String, n: String) =
-      t.equalsIgnoreCase(table) && n.equalsIgnoreCase(name)
-    secondaryIndexes.filterInPlace(e => !m(e._1, e._2))
-    uniqueKeys.filterInPlace(e => !m(e._1, e._2))
-    uniqueExprIdx.filterInPlace(e => !m(e._1, e._2))
-    indexPrefixes.filterInPlace { case ((t, n, _), _) => !m(t, n) }
+    tables.get(table).foreach { d =>
+      tables(table) = d.copy(
+        indexes = d.indexes.filterNot(_._1.equalsIgnoreCase(name)),
+        uniques = d.uniques.filterNot(_._1.equalsIgnoreCase(name)),
+        uniqueExprs = d.uniqueExprs.filterNot(_._1.equalsIgnoreCase(name)),
+        indexPrefixes = d.indexPrefixes.filterNot(_._1._1.equalsIgnoreCase(name)))
+    }
   }
-
-  /** Functional UNIQUE indexes — CREATE UNIQUE INDEX idx ON t ((c1*10))
-    * (reference indexed_expressions_queries.go): the EXPRESSION result
-    * must be unique across rows; NULL results are exempt (MySQL
-    * NULL != NULL). Stored as (table, name, exprText). */
-  private[graft] val uniqueExprIdx =
-    scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
 
   /** 1062-style probe for functional unique indexes: duplicates inside
     * the batch, then batch-vs-existing. Error text matches the
@@ -5790,7 +5387,7 @@ class Engine(val spark: SparkSession) {
   private[graft] def enforceUniqueExprs(table: String, batch: DataFrame,
                                         target: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
-    uniqueExprIdx.toSeq.collect { case (t, _, ex) if t == table =>
+    tableDef(table).uniqueExprs.foreach { case (_, ex) =>
       try {
         val b = batch.filter(expr(ex).isNotNull)
           .select(expr(ex).as("__ux"))
@@ -5820,7 +5417,7 @@ class Engine(val spark: SparkSession) {
   private[graft] def enforceUniqueExprsPost(table: String,
                                             df: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
-    uniqueExprIdx.toSeq.collect { case (t, _, ex) if t == table =>
+    tableDef(table).uniqueExprs.foreach { case (_, ex) =>
       firstDuplicate(df.filter(expr(ex).isNotNull), Seq(expr(ex).as("__ux")))
         .foreach(r => throw new IllegalArgumentException(
           s"duplicate unique key given: [${r.get(0)}]"))
@@ -5829,11 +5426,11 @@ class Engine(val spark: SparkSession) {
 
   def showIndex(table: String): Seq[(String, String, Int, String)] = {
     spark.table(table) // validates the table exists, like MySQL
-    tableKeys.get(table).toSeq.flatMap(_.zipWithIndex.map {
+    tableDef(table).key.toSeq.flatMap(_.zipWithIndex.map {
       case (c, i) => (table, "PRIMARY", i + 1, c)
-    }) ++ secondaryIndexes.toSeq.collect { case (t, n, cols) if t == table =>
+    }) ++ tableDef(table).indexes.flatMap { case (n, cols) =>
       cols.zipWithIndex.map { case (c, i) => (table, n, i + 1, c) }
-    }.flatten
+    }
   }
 
   /** Spark type -> MySQL type name (SURVEY §1.2 mapping, reversed). */
@@ -5864,11 +5461,9 @@ class Engine(val spark: SparkSession) {
     * (reverse of the SURVEY §1.2 type mapping; reference answers this from
     * its catalog in sql/rowexec/show.go). */
   def showCreateTable(table: String): String = {
-    val generated = generatedCols.toSeq
-      .collect { case (t, c, ex) if t == table => c.toLowerCase -> ex }.toMap
-    val pkCols = tableKeys.getOrElse(table, Seq.empty)
-      .map(_.toLowerCase).toSet
-    val aiCol = autoIncCols.get(table).map(_.toLowerCase)
+    val defn = tableDef(table)
+    val pkCols = defn.keyLower
+    val aiCol = defn.autoInc.map(_.toLowerCase)
     val fields = spark.table(table).schema.fields.map { f =>
       val lc = f.name.toLowerCase
       // PRIMARY KEY / AUTO_INCREMENT columns are implicitly NOT NULL
@@ -5877,18 +5472,18 @@ class Engine(val spark: SparkSession) {
       // CHANGE/MODIFY re-declare without rebuilding the frame) — the
       // declaration registry is authoritative
       val nn = if (f.nullable && !pkCols(lc) && !aiCol.contains(lc) &&
-          !notNullCols((table, lc))) ""
+          !colDef(table, lc).notNull) ""
         else " NOT NULL"
-      val gen = generated.get(lc)
+      val gen = defn.col(lc).generated
         .map { ex =>
           val suffix =
-            if (storedGeneratedCols((table, lc))) " STORED" else ""
+            if (colDef(table, lc).stored) " STORED" else ""
           s" GENERATED ALWAYS AS " +
             s"(${graft.functions.CheckExprRender.render(ex)})$suffix"
         }
         .getOrElse("")
       val dflt = if (gen.nonEmpty) "" else
-        columnDefaults.get((table, lc)).map { d =>
+        colDef(table, lc).default.map { d =>
           // numeric defaults on temporal columns render BARE (MySQL:
           // `ts` timestamp DEFAULT 0 — OnUpdateExprScripts SHOW CREATE)
           val isTs = f.dataType == org.apache.spark.sql.types.TimestampType ||
@@ -5897,46 +5492,43 @@ class Engine(val spark: SparkSession) {
           else renderDefault(d)
         }.map(d => s" DEFAULT $d").getOrElse("")
       val ai = if (aiCol.contains(lc)) " AUTO_INCREMENT" else ""
-      val onUpd = onUpdateCols.get((table, lc)).map { p =>
+      val onUpd = colDef(table, lc).onUpdate.map { p =>
         if (p == 0) " ON UPDATE CURRENT_TIMESTAMP"
         else s" ON UPDATE CURRENT_TIMESTAMP($p)"
       }.getOrElse("")
-      val cmt = columnComments.get((table, lc))
+      val cmt = colDef(table, lc).comment
         .map(c => s" COMMENT '${c.replace("'", "''")}'").getOrElse("")
       s"  `${f.name}` ${renderColumnType(table, f)}" +
         s"${collateSuffix(table, f.name)}$gen$nn$dflt$onUpd$ai$cmt"
     }
-    val pk = tableKeys.get(table).map(k =>
+    val pk = tableDef(table).key.map(k =>
       s"  PRIMARY KEY (${k.map(c => s"`$c`").mkString(",")})").toSeq
     // prefix key parts render MySQL's `col`(n) form
     def keyPart(n: String, c: String): String =
-      s"`$c`" + indexPrefixes.get((table, n, c.toLowerCase))
+      s"`$c`" + defn.indexPrefixes.get((n, c.toLowerCase))
         .map(l => s"($l)").getOrElse("")
     // all non-PRIMARY indexes render sorted by name, UNIQUE and plain
     // interleaved (foreign_key_queries.go "Referenced index includes
     // implicit primary key columns": KEY `fk4` before KEY `idx4`;
     // "Reordered foreign key columns do match": KEY `fk` before
     // UNIQUE KEY `id`)
-    val uniqueNames = uniqueKeys.collect {
-      case (t, n, _) if t == table => n.toLowerCase }.toSet
+    val uniqueNames = defn.uniques.map(_._1.toLowerCase).toSet
     val namedIdx =
-      uniqueKeys.toSeq.collect { case (t, n, cols) if t == table =>
+      defn.uniques.map { case (n, cols) =>
         (n, s"  UNIQUE KEY `$n` (${cols.map(keyPart(n, _)).mkString(",")})")
       } ++
-      secondaryIndexes.toSeq.collect {
-        case (t, n, cols) if t == table && !uniqueNames(n.toLowerCase) &&
+      defn.indexes.collect {
+        case (n, cols) if !uniqueNames(n.toLowerCase) &&
             !n.equalsIgnoreCase("PRIMARY") =>
           (n, s"  KEY `$n` (${cols.map(keyPart(n, _)).mkString(",")})")
       }
     val uks = namedIdx.sortBy(_._1.toLowerCase).map(_._2)
     val keys = Seq.empty[String]
-    val cks = checkConstraints.toSeq.collect {
-      case (t, n, ex, en) if t == table =>
+    val cks = defn.checks.map { case (n, ex, en) =>
         val suffix = if (en) "" else " /*!80016 NOT ENFORCED */"
         s"  CONSTRAINT `$n` CHECK (${graft.functions.CheckExprRender.render(ex)})$suffix"
     }
-    val fks = foreignKeys.toSeq.filter(_.child == table)
-      .sortBy(_.name).map { fk =>
+    val fks = defn.fks.sortBy(_.name).map { fk =>
       // MySQL omits the default actions (both spellings) in SHOW CREATE
       val onDel = if (fk.onDelete == "RESTRICT" || fk.onDelete == "NO ACTION") ""
         else s" ON DELETE ${fk.onDelete}"
@@ -5951,8 +5543,8 @@ class Engine(val spark: SparkSession) {
     // options tail, rendered the way the reference's catalog does
     // (rowexec/show.go): AUTO_INCREMENT only once the counter moved,
     // charset defaults to the server's utf8mb4/_0900_bin pair
-    val aiOpt = autoIncCols.get(table)
-      .flatMap(c => autoIncCounter.get(table).map(n => (c, n)))
+    val aiOpt = tableDef(table).autoInc
+      .flatMap(c => tableDef(table).autoIncCounter.map(n => (c, n)))
       .filter(_._2 > 1L)
       .map { case (c, n) =>
         // the displayed next value caps at the column type's max
@@ -5960,21 +5552,21 @@ class Engine(val spark: SparkSession) {
         // stays AUTO_INCREMENT=127, not 128)
         val cl = c.toLowerCase
         val cap: Option[BigDecimal] =
-          unsignedBounds.get((table, cl)).map(_._2)
-            .orElse(if (textKindCols.get((table, cl)).contains("mediumint"))
+          colDef(table, cl).unsigned.map(_._2)
+            .orElse(if (colDef(table, cl).textKind.contains("mediumint"))
               Some(BigDecimal(8388607)) else None)
             .orElse(spark.table(table).schema.fields
               .find(_.name.equalsIgnoreCase(c))
               .flatMap(f => integralBounds(f.dataType))
               .map(b => BigDecimal(b._2)))
-        val raw = autoIncShown.getOrElse(table, BigDecimal(n))
+        val raw = tableDef(table).autoIncShown.getOrElse(BigDecimal(n))
         val shown = cap.filter(_ < raw)
           .map(_.toBigInt.toString).getOrElse(raw.toBigInt.toString)
         s" AUTO_INCREMENT=$shown"
       }.getOrElse("")
-    val cs = tableCharsets.getOrElse(table, "utf8mb4")
-    val coll = tableCollations.getOrElse(table, defaultCollation(cs))
-    val cmt = tableComments.get(table)
+    val cs = tableDef(table).charset.getOrElse("utf8mb4")
+    val coll = tableDef(table).collation.getOrElse(defaultCollation(cs))
+    val cmt = tableDef(table).comment
       .map(c => s" COMMENT='${c.replace("'", "''")}'").getOrElse("")
     s"CREATE TABLE `$table` (\n${lines.mkString(",\n")}\n)" +
       s" ENGINE=InnoDB$aiOpt DEFAULT CHARSET=$cs COLLATE=$coll$cmt"
@@ -6064,33 +5656,33 @@ class Engine(val spark: SparkSession) {
     * from the table collation; empty otherwise. SHOW CREATE TABLE and
     * DESCRIBE append it (info-schema COLUMN_TYPE stays bare). */
   private[graft] def collateSuffix(table: String, col: String): String =
-    columnCollations.get((table, col.toLowerCase)) match {
+    colDef(table, col).collation match {
       case Some(c) if !c.equalsIgnoreCase(
-          tableCollations.getOrElse(table, "utf8mb4_0900_bin")) =>
+          tableDef(table).collation.getOrElse("utf8mb4_0900_bin")) =>
         s" COLLATE $c"
       case _ => ""
     }
 
   private[graft] def renderColumnType(table: String,
       f: org.apache.spark.sql.types.StructField): String =
-    columnVocab.get((table, f.name.toLowerCase)) match {
+    colDef(table, f.name).vocab match {
       case Some((isSet, vs)) =>
         (if (isSet) "set" else "enum") +
           vs.map(v => s"'${v.replace("'", "''")}'").mkString("(", ",", ")")
       case None =>
         // declared CHAR/VARCHAR length survives into the catalog render
-        charLimits.get((table, f.name.toLowerCase)) match {
+        colDef(table, f.name).charLimit match {
           case Some(n)
               if f.dataType.isInstanceOf[org.apache.spark.sql.types.StringType] =>
-            if (charKindCols((table, f.name.toLowerCase))) s"char($n)"
+            if (colDef(table, f.name).fixedChar) s"char($n)"
             else s"varchar($n)"
           // tinyint(1) is the ONE display width MySQL preserves
           // (create_table_queries.go "display width for numeric types")
-          case _ if tinyint1Cols((table, f.name.toLowerCase)) => "tinyint(1)"
+          case _ if colDef(table, f.name).tinyint1 => "tinyint(1)"
           // declared UNSIGNED renders its MySQL type, not the widened
           // storage type (tinyint unsigned stores as smallint)
-          case _ if unsignedBounds.contains((table, f.name.toLowerCase)) =>
-            val hi = unsignedBounds((table, f.name.toLowerCase))._2
+          case _ if colDef(table, f.name).unsigned.isDefined =>
+            val hi = colDef(table, f.name).unsigned.get._2
             (hi.toString match {
               case "255" => "tinyint"
               case "65535" => "smallint"
@@ -6098,22 +5690,22 @@ class Engine(val spark: SparkSession) {
               case "4294967295" => "int"
               case _ => "bigint"
             }) + " unsigned"
-          case _ if yearCols((table, f.name.toLowerCase)) => "year"
-          case _ if bitWidths.contains((table, f.name.toLowerCase)) =>
-            s"bit(${bitWidths((table, f.name.toLowerCase))})"
-          case _ if wideDecCols.contains((table, f.name.toLowerCase)) =>
-            val (p, s) = wideDecCols((table, f.name.toLowerCase))
+          case _ if colDef(table, f.name).year => "year"
+          case _ if colDef(table, f.name).bitWidth.isDefined =>
+            s"bit(${colDef(table, f.name).bitWidth.get})"
+          case _ if colDef(table, f.name).wideDec.isDefined =>
+            val (p, s) = colDef(table, f.name).wideDec.get
             s"decimal($p,$s)"
           // declared JSON columns render their catalog type, not the
           // text storage type ("alter json column default")
-          case _ if jsonCols((table, f.name.toLowerCase)) => "json"
-          case _ if textKindCols.contains((table, f.name.toLowerCase)) =>
-            textKindCols((table, f.name.toLowerCase))
+          case _ if colDef(table, f.name).json => "json"
+          case _ if colDef(table, f.name).textKind.isDefined =>
+            colDef(table, f.name).textKind.get
           case _ =>
-            vecDims.get((table, f.name.toLowerCase)) match {
+            colDef(table, f.name).vecDim match {
               case Some(n) if n > 0 => s"vector($n)"
               case _ =>
-                timePrecisions.get((table, f.name.toLowerCase)) match {
+                colDef(table, f.name).timePrecision match {
                   case Some(p) if p > 0 => s"${mysqlType(f.dataType)}($p)"
                   case _ => mysqlType(f.dataType)
                 }

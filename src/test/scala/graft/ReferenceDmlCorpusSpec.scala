@@ -257,7 +257,7 @@ class ReferenceDmlCorpusSpec extends AnyFunSuite {
       1, "SELECT * FROM one_pk",
       Seq(Seq(1, 10, 11, 12, 13, 14), Seq(2, 20, 21, 22, 23, 24),
         Seq(3, 30, 31, 32, 33, 34), Seq(10, 0, 1, 2, 3, 4)))
-    engine.tableKeys.remove("one_pk")
+    engine.alterDef("one_pk")(_.copy(key = None))
   }
 
   test("DELETE write-query cases (delete_queries.go:25-90)") {

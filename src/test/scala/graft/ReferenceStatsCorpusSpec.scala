@@ -138,7 +138,6 @@ class ReferenceStatsCorpusSpec extends AnyFunSuite {
     // equi-height layout: first bucket covers ranks 1..1500, upper bound 1499
     assert(h.contains("\"upper_bound\": [1499]"))
     assert(h.contains("\"upper_bound\": [29999]"))
-    engine.columnStats.remove(("stbig", "i"))
     engine.query("drop table if exists stbig")
   }
 
