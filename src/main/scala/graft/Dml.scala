@@ -788,14 +788,12 @@ object Dml {
           "collation_connection"))
 
     case CreateTableAs(temp, ine, name, body) =>
-      if (createPrecheck(e, normName(name), ine != null, temp != null))
-        Some(ok(e, 0L))
-      else { e.ctas(normName(name), body); Some(ok(e, 0L)) }
+      createTable(e, normName(name), ine != null, temp != null)(
+        e.ctas(normName(name), body))
 
     case CreateTableSelect(temp, ine, name, body) =>
-      if (createPrecheck(e, normName(name), ine != null, temp != null))
-        Some(ok(e, 0L))
-      else { e.ctas(normName(name), body); Some(ok(e, 0L)) }
+      createTable(e, normName(name), ine != null, temp != null)(
+        e.ctas(normName(name), body))
 
     case CreateTableLike(temp, ine, nameRaw, srcRaw) =>
       // same schema, empty, and the source's definition (reference
@@ -804,25 +802,20 @@ object Dml {
       // checks" corpus — lengths, vocab, types, comments)
       val name = normName(nameRaw)
       val src = normName(srcRaw)
-      if (!createPrecheck(e, name, ine != null, temp != null)) {
+      createTable(e, name, ine != null, temp != null) {
         e.tables(name) = e.tableDef(src).likeCopy
         e.replaceTable(name, e.spark.table(src).limit(0), bumpDepth = false)
       }
-      Some(ok(e, 0L))
 
     case CreateTableDef(name, body, ine, temp, tail) =>
-      if (createPrecheck(e, normName(name), ine, temp)) Some(ok(e, 0L))
-      else {
-        val t = normName(name)
+      val t = normName(name)
+      createTable(e, t, ine, temp) {
         val (optsText, selOpt) = splitSelectTail(tail)
         // options first: charset drives bytes-per-char in the row-size
-        // limit that createFromDefs validates (a failed create removes
-        // the table's entry again)
+        // limit that createFromDefs validates
         val aiStart = parseTableOptions(e, t, optsText)
         selOpt match {
-          case Some(sel) =>
-            try createDefsWithSelect(e, t, body, sel)
-            catch { case ex: Throwable => e.tables.remove(t); throw ex }
+          case Some(sel) => createDefsWithSelect(e, t, body, sel)
           case None => createFromDefs(e, t, body)
         }
         // AUTO_INCREMENT=n option seeds the counter — ignored when the
@@ -830,7 +823,6 @@ object Dml {
         // with auto_increment table option")
         aiStart.filter(_ => e.tableDef(t).autoInc.isDefined)
           .foreach(n => e.alterDef(t)(_.copy(autoIncCounter = Some(n))))
-        Some(ok(e, 0L))
       }
 
     case CreateProcedure(name, paramsText, body0) =>
@@ -2065,30 +2057,32 @@ object Dml {
         }
       }
 
-  private def parseColDef(e: Engine, table: String, item: String)
-      : org.apache.spark.sql.types.StructField = {
-    import org.apache.spark.sql.types._
-    val m = """(?s)^\s*(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)\s+(.*)$""".r
-      .findFirstMatchIn(item)
-      .getOrElse(throw new IllegalArgumentException(s"bad column def: $item"))
-    val colName = stripTick(m.group(1))
-    checkIdent(colName)
-    val rest = m.group(2)
-    // the type spans up to the end of its (args), else the first word
-    val typeText = {
-      val o = rest.indexOf('(')
-      val firstWord = rest.takeWhile(!_.isWhitespace)
-      if (o >= 0 && o <= firstWord.length)
-        rest.substring(0, rest.indexOf(')') + 1) +
-          (if (rest.substring(rest.indexOf(')') + 1).toLowerCase
-                .trim.startsWith("unsigned")) " unsigned" else "")
-      else firstWord +
-        (if (rest.drop(firstWord.length).toLowerCase.trim
-              .startsWith("unsigned")) " unsigned" else "")
-    }
-    val up = rest.toUpperCase
+  /** The type text of a column spec: up to the end of its (args), else
+    * the first word, with a following UNSIGNED. */
+  private def columnTypeText(rest: String): String = {
+    val o = rest.indexOf('(')
+    val firstWord = rest.takeWhile(!_.isWhitespace)
+    if (o >= 0 && o <= firstWord.length)
+      rest.substring(0, rest.indexOf(')') + 1) +
+        (if (rest.substring(rest.indexOf(')') + 1).toLowerCase
+              .trim.startsWith("unsigned")) " unsigned" else "")
+    else firstWord +
+      (if (rest.drop(firstWord.length).toLowerCase.trim
+            .startsWith("unsigned")) " unsigned" else "")
+  }
+
+  /** Declares a column's own attributes from its spec (`rest`, the text
+    * after the name): every `ColumnDef` marker its type text carries —
+    * display width, precision, VECTOR dimension, UNSIGNED bounds,
+    * CHAR/VARCHAR length, YEAR, wide DECIMAL, BIT width, TEXT kind,
+    * BINARY pad, ENUM/SET members, BLOB/TEXT, JSON — and its COMMENT.
+    * CREATE's column definitions, ALTER … ADD and ALTER … MODIFY
+    * declare through it. */
+  private def declareColumnType(e: Engine, table: String, colName: String,
+                                typeText: String, rest: String): Unit = {
     val baseLower = typeText.trim.toLowerCase
       .takeWhile(c => c.isLetter || c == '_')
+    val vocab = mysqlDataType(typeText)._2
     // integer display widths parse but drop — EXCEPT tinyint(1), the one
     // width MySQL preserves; negative widths are syntax errors
     // (create_table_queries.go "display width for numeric types")
@@ -2128,58 +2122,11 @@ object Dml {
             e.alterCol(table, colName)(_.copy(vecDim = Some(-1)))
         }
     }
-    // charset/collation attach only to character types: a COLLATE on the
-    // binary family is ErrBinaryCollation, a CHARACTER SET on any
-    // non-character type is ErrCharacterSetOnInvalidType
-    // (create_table_queries.go "valid character set and collation options")
-    val binaryFamily = Set("binary", "varbinary", "tinyblob", "blob",
-      "mediumblob", "longblob", "bit")
-    val charFamily = Set("char", "varchar", "tinytext", "text",
-      "mediumtext", "longtext", "nchar", "nvarchar", "enum", "set")
-    if (binaryFamily(baseLower) &&
-        """(?i)\bCOLLATE\s""".r.findFirstIn(rest).isDefined)
-      throw new IllegalArgumentException(
-        s"binary types cannot have a collation: column '$colName' " +
-        s"(MySQL ErrBinaryCollation)")
-    if (!charFamily(baseLower) &&
-        """(?i)\b(?:CHARACTER\s+SET|CHARSET)\s""".r.findFirstIn(rest).isDefined)
-      throw new IllegalArgumentException(
-        s"character set may only be declared on character-typed columns: " +
-        s"column '$colName' (MySQL ErrCharacterSetOnInvalidType)")
-    // declared column collation — the MySQL catalog name — survives into
-    // SHOW CREATE / DESCRIBE when it differs from the table collation;
-    // the deprecated `CHARACTER SET x BINARY` attribute means x_bin
-    if (charFamily(baseLower))
-      """(?i)\bCOLLATE\s+[`']?([A-Za-z0-9_]+)""".r.findFirstMatchIn(rest)
-        .map(_.group(1).toLowerCase)
-        .orElse {
-          """(?i)\b(?:CHARACTER\s+SET|CHARSET)\s+[`']?([A-Za-z0-9_]+)[`']?\s+BINARY\b""".r
-            .findFirstMatchIn(rest).map(_.group(1).toLowerCase + "_bin")
-        }
-        .foreach(c => e.alterCol(table, colName)(_.copy(collation = Some(c))))
     // column COMMENT survives into SHOW CREATE TABLE
     """(?is)\bCOMMENT\s+('(?:\\.|''|[^'\\])*'|"(?:\\.|""|[^"\\])*")""".r
       .findFirstMatchIn(rest).foreach { mm =>
         e.alterCol(table, colName)(_.copy(comment = Some(unquoteSqlString(mm.group(1)))))
       }
-    val (dt0, vocab) = mysqlDataType(typeText)
-    val dt1 = applyCollation(dt0, rest)
-    // a column without its own COLLATE inherits the TABLE collation —
-    // including the Spark collated string type, so comparisons are
-    // collation-aware ("subquery with case insensitive collation":
-    // table-level ai_ci must make text IN-probes case-insensitive)
-    val dt = dt1 match {
-      case org.apache.spark.sql.types.StringType
-          if charFamily(baseLower) &&
-            """(?i)\bCOLLATE\s""".r.findFirstIn(rest).isEmpty =>
-        e.tableDef(table).collation.map { tc =>
-          val mapped = scala.util.Try(Dialect.mapCollation(tc))
-            .getOrElse("UTF8_BINARY")
-          if (mapped.equalsIgnoreCase("UTF8_BINARY")) dt1
-          else org.apache.spark.sql.types.StringType(mapped)
-        }.getOrElse(dt1)
-      case other => other
-    }
     // UNSIGNED integer columns keep their MySQL bound for strict-mode
     // range checks (no unsigned types in Spark — storage widens)
     if (typeText.toLowerCase.contains("unsigned") &&
@@ -2253,6 +2200,69 @@ object Dml {
         "blob", "mediumblob", "longblob")(baseLower))
       e.alterCol(table, colName)(_.copy(blobText = true))
     if (baseLower == "json") e.alterCol(table, colName)(_.copy(json = true))
+  }
+
+  private def parseColDef(e: Engine, table: String, item: String)
+      : org.apache.spark.sql.types.StructField = {
+    import org.apache.spark.sql.types._
+    val m = """(?s)^\s*(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)\s+(.*)$""".r
+      .findFirstMatchIn(item)
+      .getOrElse(throw new IllegalArgumentException(s"bad column def: $item"))
+    val colName = stripTick(m.group(1))
+    checkIdent(colName)
+    val rest = m.group(2)
+    val typeText = columnTypeText(rest)
+    val up = rest.toUpperCase
+    val baseLower = typeText.trim.toLowerCase
+      .takeWhile(c => c.isLetter || c == '_')
+    declareColumnType(e, table, colName, typeText, rest)
+    // charset/collation attach only to character types: a COLLATE on the
+    // binary family is ErrBinaryCollation, a CHARACTER SET on any
+    // non-character type is ErrCharacterSetOnInvalidType
+    // (create_table_queries.go "valid character set and collation options")
+    val binaryFamily = Set("binary", "varbinary", "tinyblob", "blob",
+      "mediumblob", "longblob", "bit")
+    val charFamily = Set("char", "varchar", "tinytext", "text",
+      "mediumtext", "longtext", "nchar", "nvarchar", "enum", "set")
+    if (binaryFamily(baseLower) &&
+        """(?i)\bCOLLATE\s""".r.findFirstIn(rest).isDefined)
+      throw new IllegalArgumentException(
+        s"binary types cannot have a collation: column '$colName' " +
+        s"(MySQL ErrBinaryCollation)")
+    if (!charFamily(baseLower) &&
+        """(?i)\b(?:CHARACTER\s+SET|CHARSET)\s""".r.findFirstIn(rest).isDefined)
+      throw new IllegalArgumentException(
+        s"character set may only be declared on character-typed columns: " +
+        s"column '$colName' (MySQL ErrCharacterSetOnInvalidType)")
+    // declared column collation — the MySQL catalog name — survives into
+    // SHOW CREATE / DESCRIBE when it differs from the table collation;
+    // the deprecated `CHARACTER SET x BINARY` attribute means x_bin
+    if (charFamily(baseLower))
+      """(?i)\bCOLLATE\s+[`']?([A-Za-z0-9_]+)""".r.findFirstMatchIn(rest)
+        .map(_.group(1).toLowerCase)
+        .orElse {
+          """(?i)\b(?:CHARACTER\s+SET|CHARSET)\s+[`']?([A-Za-z0-9_]+)[`']?\s+BINARY\b""".r
+            .findFirstMatchIn(rest).map(_.group(1).toLowerCase + "_bin")
+        }
+        .foreach(c => e.alterCol(table, colName)(_.copy(collation = Some(c))))
+    val (dt0, vocab) = mysqlDataType(typeText)
+    val dt1 = applyCollation(dt0, rest)
+    // a column without its own COLLATE inherits the TABLE collation —
+    // including the Spark collated string type, so comparisons are
+    // collation-aware ("subquery with case insensitive collation":
+    // table-level ai_ci must make text IN-probes case-insensitive)
+    val dt = dt1 match {
+      case org.apache.spark.sql.types.StringType
+          if charFamily(baseLower) &&
+            """(?i)\bCOLLATE\s""".r.findFirstIn(rest).isEmpty =>
+        e.tableDef(table).collation.map { tc =>
+          val mapped = scala.util.Try(Dialect.mapCollation(tc))
+            .getOrElse("UTF8_BINARY")
+          if (mapped.equalsIgnoreCase("UTF8_BINARY")) dt1
+          else org.apache.spark.sql.types.StringType(mapped)
+        }.getOrElse(dt1)
+      case other => other
+    }
     if (up.contains("PRIMARY KEY")) {
       if (e.colDef(table, colName).blobText)
         throw new IllegalArgumentException(
@@ -2537,19 +2547,29 @@ object Dml {
     exists
   }
 
-  private def createFromDefs(e: Engine, table: String, body: String): Unit =
-    try createFromDefsInner(e, table, body)
-    catch { case ex: Throwable =>
-      // a failed CREATE must not leave its entry behind
-      // (row_limit_queries.go re-runs CREATE with the same name).
-      // Safe against live tables: createPrecheck rejected any CREATE
-      // over an existing name before this path can run.
-      e.tables.remove(table)
-      throw ex
-    }
+  /** One CREATE TABLE form: `build` declares and stores the table unless
+    * IF NOT EXISTS finds it there. A failed build leaves nothing behind:
+    * its entry goes (row_limit_queries.go re-runs CREATE with the same
+    * name), and a base table this CREATE TEMPORARY shadowed comes back
+    * with its entry, as on DROP. Removing the entry is safe against live
+    * tables: createPrecheck rejected any CREATE over an existing name,
+    * and moved a shadowed base's entry aside. */
+  private def createTable(e: Engine, table: String, ifNotExists: Boolean,
+                          temporary: Boolean)(build: => Unit)
+      : Option[DataFrame] = {
+    val shadowedHere = temporary && !e.tempShadow.contains(table)
+    if (!createPrecheck(e, table, ifNotExists, temporary))
+      try build
+      catch { case ex: Throwable =>
+        e.tables.remove(table)
+        if (shadowedHere) e.unshadow(table)
+        throw ex
+      }
+    Some(ok(e, 0L))
+  }
 
-  private def createFromDefsInner(e: Engine, table: String,
-                                  body: String): Unit = {
+  private def createFromDefs(e: Engine, table: String,
+                             body: String): Unit = {
     import org.apache.spark.sql.types._
     val fields = parseDefItems(e, table, body)
     validateCheckRefs(e, table, fields.map(_.name.toLowerCase).toSet)
@@ -2754,14 +2774,6 @@ object Dml {
   /** ALTER TABLE actions (reference sql/planbuilder/ddl.go buildAlterTable):
     * ADD/DROP/MODIFY/CHANGE/RENAME COLUMN, RENAME TO, ADD PRIMARY KEY;
     * index DDL is metadata-only here. Applied as one view rewrite. */
-  /** declared CHAR/VARCHAR length of an ALTER column spec (same rule as
-    * parseColDef — the row-size limit needs it for ADD/MODIFY too) */
-  private def declareCharLimitFromSpec(e: Engine, table: String,
-                                       colName: String, spec: String): Unit =
-    """(?i)^(?:n?(?:var)?char)\s*\(\s*(\d+)\s*\)""".r
-      .findFirstMatchIn(spec.trim)
-      .foreach(mm => e.declareCharLimit(table, colName, mm.group(1).toInt))
-
   private def alterTable(e: Engine, table: String, actions: String): Unit = {
     // ALTER TABLE rejects views outright (MySQL error 1347 "'v1' is not
     // BASE TABLE"); RENAME TABLE is the statement that may move views
@@ -3017,11 +3029,7 @@ object Dml {
                 s"'${stripTick(cn)}' (MySQL 1067)")
           }
           val (dt, _) = mysqlDataType(spec)
-          declareCharLimitFromSpec(e, table, stripTick(cn), spec)
-          if (Set("tinytext", "text", "mediumtext", "longtext", "tinyblob",
-              "blob", "mediumblob", "longblob")(
-              spec.trim.toLowerCase.takeWhile(c => c.isLetter || c == '_')))
-            e.alterCol(table, stripTick(cn))(_.copy(blobText = true))
+          declareColumnType(e, table, stripTick(cn), columnTypeText(spec), spec)
           // inline attributes on ADD COLUMN declare like CREATE's column
           // defs (alter_table_queries.go "add column unique index" /
           // "add column with inline check constraint definition")
@@ -3176,13 +3184,6 @@ object Dml {
               throw new IllegalArgumentException(
                 s"Incorrect column specifier for column '$name' (MySQL 1063)")
           }
-          // MODIFY re-validates/declares an ON UPDATE clause exactly
-          // like a CREATE column def (OnUpdateExprScripts error cases);
-          // the new declared precision applies first
-          """(?i)^(?:timestamp|datetime)\s*\(\s*(\d+)\s*\)""".r
-            .findFirstMatchIn(spec.trim).foreach(p =>
-              e.alterCol(table, name)(_.copy(timePrecision = Some(p.group(1).toInt))))
-          parseOnUpdateClause(e, table, name, spec, dt)
           if (!originalCols(name.toLowerCase) ||
               renamedAway(name.toLowerCase))
             throw new IllegalArgumentException(
@@ -3220,17 +3221,22 @@ object Dml {
               s"Cannot change column '$name': used in a foreign key " +
               "constraint (MySQL ErrForeignKeyTypeChange)")
           }
-          declareCharLimitFromSpec(e, table, name, spec)
+          // the new spec replaces the whole column definition: its
+          // declared attributes rebuild from nothing, as CREATE declares
+          // them, so no marker of the old type (YEAR, JSON, ENUM, …)
+          // outlives it. The FK check above reads the old definition.
+          e.alterCol(table, name)(_ => ColumnDef.Empty)
+          declareColumnType(e, table, name, columnTypeText(spec), spec)
           recordSpecCollation(e, table, name, spec)
+          // MODIFY re-validates/declares an ON UPDATE clause exactly
+          // like a CREATE column def (OnUpdateExprScripts error cases)
+          parseOnUpdateClause(e, table, name, spec, dt)
+          extractGenerated(spec).foreach(g => e.declareGenerated(table,
+            name, g, """(?i)\bSTORED\b""".r.findFirstIn(spec).isDefined))
           // MODIFY to a BLOB/TEXT family type while the column sits in
           // any prefix-less key is 1170 (blob_queries.go BlobErrors
           // "alter table mytable modify s blob")
-          val specBase = spec.trim.toLowerCase
-            .takeWhile(c => c.isLetter || c == '_')
-          val toBlobText = Set("tinytext", "text", "mediumtext",
-            "longtext", "tinyblob", "blob", "mediumblob",
-            "longblob")(specBase)
-          if (toBlobText) {
+          if (e.colDef(table, name).blobText) {
             val nl = name.toLowerCase
             val d = e.tableDef(table)
             val keyed =
@@ -3241,8 +3247,7 @@ object Dml {
             if (keyed) throw new IllegalArgumentException(
               s"blob/text column '$name' used in key specification " +
               "without a key length (MySQL 1170)")
-            e.alterCol(table, name)(_.copy(blobText = true))
-          } else e.alterCol(table, name)(_.copy(blobText = false))
+          }
           // MODIFY without the AUTO_INCREMENT attribute REMOVES it
           // (alter_table_queries.go "ALTER TABLE remove AUTO_INCREMENT")
           if (e.tableDef(table).autoInc.exists(_.equalsIgnoreCase(name)) &&
@@ -3271,7 +3276,7 @@ object Dml {
                 s"Column '$name' backs a SET NULL foreign key action and " +
                 "cannot become NOT NULL (MySQL ErrForeignKeyTypeChangeSetNull)")
             e.declareNotNull(table, name)
-          } else e.alterCol(table, name)(_.copy(notNull = false))
+          }
           // integer re-declarations re-derive the UNSIGNED bound and
           // validate EXISTING rows against the new range — MODIFY i2 int
           // unsigned over a -1 value is sql.ErrValueOutOfRange
@@ -3288,13 +3293,8 @@ object Dml {
               "integer" -> (BigDecimal(Int.MinValue), BigDecimal(Int.MaxValue)),
               "bigint" -> (BigDecimal(Long.MinValue), BigDecimal(Long.MaxValue)))
             if (intBases.contains(newBase)) {
-              val unsignedNow =
-                """(?i)\bUNSIGNED\b""".r.findFirstIn(spec).isDefined
-              if (unsignedNow) e.declareUnsigned(table, name, newBase)
-              else e.alterCol(table, name)(_.copy(unsigned = None))
-              val (lo, hi) =
-                if (unsignedNow) e.colDef(table, name).unsigned.get
-                else intBases(newBase)
+              val (lo, hi) = e.colDef(table, name).unsigned
+                .getOrElse(intBases(newBase))
               val oldIsNumeric = df.schema.fields
                 .find(_.name.equalsIgnoreCase(name))
                 .exists(_.dataType.isInstanceOf[

@@ -2028,6 +2028,17 @@ class Engine(val spark: SparkSession) {
   private[graft] val tempShadow =
     scala.collection.mutable.Map.empty[String, (DataFrame, Option[TableDef])]
 
+  /** Makes the base table that `name`'s temporary table shadowed visible
+    * again, with its entry; false when `name` shadows nothing. */
+  private[graft] def unshadow(name: String): Boolean =
+    tempShadow.remove(name) match {
+      case Some((df, base)) =>
+        df.createOrReplaceTempView(name)
+        tables(name) = base.getOrElse(TableDef.Empty)
+        true
+      case None => false
+    }
+
   def createView(name: String, sql: String,
                  columns: Seq[String] = Seq.empty): Unit = {
     val df0 = query(sql)
@@ -4495,15 +4506,11 @@ class Engine(val spark: SparkSession) {
     tables.remove(name)
     viewDefs.remove(name)
     viewDeps.remove(name)
-    tempShadow.remove(name) match {
-      case Some((df, base)) => // un-shadow: the base table becomes visible again
-        df.createOrReplaceTempView(name)
-        tables(name) = base.getOrElse(TableDef.Empty)
-      case None =>
-        if (name.contains(".")) {
-          val Array(db, t) = name.split("\\.", 2)
-          spark.sql(s"DROP VIEW IF EXISTS `$db`.`$t`")
-        } else spark.catalog.dropTempView(name)
+    if (!unshadow(name)) {
+      if (name.contains(".")) {
+        val Array(db, t) = name.split("\\.", 2)
+        spark.sql(s"DROP VIEW IF EXISTS `$db`.`$t`")
+      } else spark.catalog.dropTempView(name)
     }
     // views naming the dropped relation re-resolve (and break) now
     refreshViews(name)

@@ -717,94 +717,68 @@ object Similarity {
     // ---- ANN quality evaluation: recall@3 of the LSH-bucket and
     //      IVF(nprobe=2) indexes against the exact brute-force top-3,
     //      per probe — the missing quality metric for the ANN family.
-    //      One (probes × corpus) exact pass (broadcast probes, persisted
-    //      — both index comparisons read it), each index's candidates
-    //      via its usual pruned equi-join, hit counting as a semi-join
-    //      on (probe, neighbor). At 100 TB this is exactly how recall is
-    //      audited: sample probes, one exact scan, all indexes scored
-    //      off it.
+    //      Every LSH or IVF candidate pair is also an exact pair, so all
+    //      three top-3s come off ONE (probes × corpus) scored pass: each
+    //      vector is annotated once with its sign-bit bucket and IVF
+    //      lists, each pair carries its cosine and whether each index
+    //      reaches it, three row_numbers over one probe partitioning rank
+    //      it (an index's candidates first), and one aggregate counts each
+    //      index's hits — no persist, no equi- or semi-join. At 100 TB
+    //      this is how recall is audited: sample probes, one exact scan,
+    //      all indexes scored off it.
     QueryDef(
       "ann_recall",
       (s, d) => {
         val e = emb(s, d)
-        val probes = e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("probe"), col("v").as("pv"),
-            col("nrm").as("pn"))
-        val corpus = e.filter(col("vec_id") >= 5)
-          .select(col("vec_id").as("neighbor"), col("v").as("nv"),
-            col("nrm").as("nn"))
-        def top3(scored: DataFrame): DataFrame = {
-          val w = Window.partitionBy(col("probe"))
-            .orderBy(col("cos").desc, col("neighbor"))
-          scored.withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= 3).select(col("probe"), col("neighbor"))
-        }
-        val exact = CacheScope.track(
-          top3(corpus.crossJoin(broadcast(probes))
-            .select(col("probe"), col("neighbor"),
-              (dot("pv", "nv") / (col("pn") * col("nn"))).as("cos")))
-            .persist())
-        // LSH index candidates (8 sign-bit bucket, sim_lsh_bucket's key)
-        val bucketed = e.withColumn("bucket",
-          // unrolled sign-bit fold: plain conditional sums stay inside
-          // whole-stage codegen, where the aggregate()/lambda higher-order
-          // form is CodegenFallback and pays a lambda frame per element
-          // per row (guide step 4)
+        // the 8 centroids fold into ONE broadcast array row, as in
+        // sim_ivf_nprobe
+        val cands = e.filter(col("vec_id") < 8)
+          .agg(collect_list(struct(col("vec_id").as("cent_id"),
+            col("v").as("cv"))).as("cands"))
+        val annotated = e.crossJoin(broadcast(cands)).select(
+          col("vec_id"), col("v"), col("nrm"),
+          // LSH: sim_lsh_bucket's sign-bit key, unrolled into plain
+          // conditional sums that stay inside whole-stage codegen (the
+          // aggregate()/lambda form is CodegenFallback)
           (0 until 8).map(j =>
             when(element_at(col("v"), j + 1) > 0, lit(1L << j))
-              .otherwise(lit(0L))).reduce(_ + _))
-        val lsh = top3(
-          bucketed.filter(col("vec_id") >= 5)
-            .select(col("vec_id").as("neighbor"), col("v").as("nv"),
-              col("nrm").as("nn"), col("bucket"))
-            .join(broadcast(bucketed.filter(col("vec_id") < 5)
-              .select(col("vec_id").as("probe"), col("v").as("pv"),
-                col("nrm").as("pn"), col("bucket"))), Seq("bucket"))
-            .select(col("probe"), col("neighbor"),
-              (dot("pv", "nv") / (col("pn") * col("nn"))).as("cos")))
-        // IVF(nprobe=2) candidates (sim_ivf_nprobe's assignment)
-        val cents = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-        // IVF assignments mirror sim_ivf_nprobe's optimized shape: the 8
-        // centroids fold into ONE broadcast array row and assignments are
-        // computed NARROWLY inside the scan stage (array_min over
-        // struct(d2, cent_id) for the corpus, array_sort + slice top-2
-        // for the probes) — no explode to K rows, no exchange, no sort
-        // (guide §2.4).
-        // persisted: the single candidate-array row is read by every
-        // branch that assigns or ranks against the centroids — without
-        // the cache each consumer re-plans the centroid scan + fold
-        val cands = CacheScope.track(cents
-          .agg(collect_list(struct(col("cent_id"), col("cv"))).as("cands"))
-          .persist())
-        val icorpus = e.filter(col("vec_id") >= 5)
-          .crossJoin(broadcast(cands))
-          .withColumn("mn", gvec.vecArgminL2Sq(col("v"), col("cands")))
-          .select(col("vec_id").as("neighbor"), col("v").as("nv_v"),
-            col("nrm").as("nn"), col("mn.cid").as("cent"))
-        val iprobes = e.filter(col("vec_id") < 5)
-          .crossJoin(broadcast(cands))
+              .otherwise(lit(0L))).reduce(_ + _).as("bucket"),
+          // IVF(nprobe=2): a corpus vector's nearest list, a probe's two
+          // nearest (array_sort + slice over the 8 candidate structs)
+          gvec.vecArgminL2Sq(col("v"), col("cands")).getField("cid")
+            .as("cent"),
+          transform(slice(array_sort(transform(col("cands"),
+            k => struct(gvec.vecL2Sq(col("v"), k.getField("cv")).as("d2"),
+              k.getField("cent_id").as("cent_id")))), 1, 2),
+            _.getField("cent_id")).as("cents"))
+        val probes = annotated.filter(col("vec_id") < 5)
           .select(col("vec_id").as("probe"), col("v").as("pv"),
-            col("nrm").as("pn"),
-            explode(slice(array_sort(transform(col("cands"),
-              k => struct(gvec.vecL2Sq(col("v"), k.getField("cv")).as("d2"),
-                k.getField("cent_id").as("cent_id")))), 1, 2)).as("mn"))
-          .select(col("probe"), col("pv"), col("pn"),
-            col("mn.cent_id").as("cent"))
-        val ivf = top3(
-          icorpus.join(broadcast(iprobes), Seq("cent"))
-            .select(col("probe"), col("neighbor"),
-              (dot("pv", "nv_v") / (col("pn") * col("nn"))).as("cos"))
-            .distinct())
-        def recallOf(ann: DataFrame, name: String): DataFrame = {
-          val hits = ann.join(exact, Seq("probe", "neighbor"), "left_semi")
-            .groupBy(col("probe")).agg(count(lit(1)).as("h"))
-          probes.select(col("probe")).join(hits, Seq("probe"), "left")
-            .select(lit(name).as("idx"), col("probe"),
-              coalesce(col("h"), lit(0L)).as("hits"),
-              (coalesce(col("h"), lit(0L)).cast("double") / 3.0).as("recall"))
-        }
-        recallOf(ivf, "ivf_nprobe").unionByName(recallOf(lsh, "lsh"))
+            col("nrm").as("pn"), col("bucket").as("pb"),
+            col("cents").as("pcents"))
+        val corpus = annotated.filter(col("vec_id") >= 5)
+          .select(col("vec_id").as("neighbor"), col("v").as("nv"),
+            col("nrm").as("nn"), col("bucket").as("nb"),
+            col("cent").as("ncent"))
+        // in the top-3 by (cos desc, neighbor) among the pairs `ok` admits
+        def top3(ok: Column*): Column = row_number().over(
+          Window.partitionBy(col("probe"))
+            .orderBy(ok.map(not) ++ Seq(col("cos").desc, col("neighbor")): _*)
+        ) <= 3
+        corpus.crossJoin(broadcast(probes))
+          .select(col("probe"), col("neighbor"),
+            (dot("pv", "nv") / (col("pn") * col("nn"))).as("cos"),
+            (col("nb") === col("pb")).as("lsh_ok"),
+            array_contains(col("pcents"), col("ncent")).as("ivf_ok"))
+          .select(col("probe"), top3().as("exact"),
+            (col("lsh_ok") && top3(col("lsh_ok"))).as("lsh"),
+            (col("ivf_ok") && top3(col("ivf_ok"))).as("ivf"))
+          .groupBy(col("probe"))
+          .agg(count(when(col("exact") && col("ivf"), 1)).as("ivf_hits"),
+            count(when(col("exact") && col("lsh"), 1)).as("lsh_hits"))
+          .select(col("probe"), expr(
+            "stack(2, 'ivf_nprobe', ivf_hits, 'lsh', lsh_hits) AS (idx, hits)"))
+          .select(col("idx"), col("probe"), col("hits"),
+            (col("hits").cast("double") / 3.0).as("recall"))
           .orderBy(col("idx"), col("probe"))
       },
       Some("""WITH e AS (

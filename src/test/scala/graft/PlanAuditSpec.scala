@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scale-readiness audit over every declared query's physical plan: the
   * O(n·m) join strategies (cartesian / broadcast-nested-loop) may appear
   * only where the operator's semantics genuinely require them. A new query
   * that accidentally plans a nested loop fails here before it ships. */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SparkSpec.{spark, sfDir}
 
   /** queries whose semantics are inherently non-equi / all-pairs */
@@ -18,7 +19,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "sim_ivf",             // centroid assignment: corpus × 8 centroids (broadcast)
     "sim_ivf_kmeans",      // Lloyd assignment: corpus × k centroids (broadcast)
     "sim_ivf_nprobe",      // centroid assignment: corpus × 8 centroids (broadcast)
-    "ann_recall",          // exact-baseline pass + centroid assignment (broadcast)
+    "ann_recall",          // probes × corpus scored pass + centroid assignment
     "dedup_semantic",      // cluster assignment: corpus × K centroids (broadcast);
                            // the pairwise stage itself is a cid equi-join
     "text_match",          // single aggregated stats row broadcast to the scan
@@ -61,6 +62,26 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(ids.size <= maxN,
         s"$name plans ${ids.size} distinct parquet scans (max $maxN): $ids")
     }
+  }
+
+  test("ann_recall scores exact, LSH and IVF off one pass: no join, no cache") {
+    // all three top-3s rank the same (probe, neighbor) pairs: the plan
+    // holds two nested-loop passes (vectors × centroid row, corpus ×
+    // probes) and five exchanges — the centroid fold's shuffle and its
+    // broadcast (reused by the second scan), the probes' broadcast, the
+    // windows' probe partitioning and the final sort's. No equi- or
+    // semi-join builds a hash relation and nothing is persisted.
+    val df = SparkEntry.queries("ann_recall")(spark, sfDir)
+    try df.collect() finally CacheScope.drain()
+    val nodes = collect(df.queryExecution.executedPlan) {
+      case p => p.getClass.getSimpleName.stripSuffix("Exec")
+    }
+    val banned = Set("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin",
+      "InMemoryTableScan")
+    assert(nodes.filter(banned).isEmpty, nodes)
+    val exchanges =
+      nodes.count(Set("ShuffleExchange", "BroadcastExchange"))
+    assert(exchanges <= 5, s"ann_recall plans $exchanges exchanges: $nodes")
   }
 
   test("sf-linear dims broadcast only while they fit the threshold") {

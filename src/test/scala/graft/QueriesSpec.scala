@@ -49,6 +49,18 @@ class QueriesSpec extends AnyFunSuite {
     byProbe.values.foreach(g => assert(g.map(_.getInt(2)).sorted.toSeq == Seq(1, 2, 3, 4, 5)))
   }
 
+  test("ann_recall reports each index's recall@3 per probe") {
+    val rows = try SparkEntry.queries("ann_recall")(spark, sfDir).collect()
+      finally CacheScope.drain()
+    assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq("ivf_nprobe", "lsh").flatMap(i => (0L to 4L).map(p => (i, p))))
+    rows.foreach { r =>
+      val hits = r.getLong(2)
+      assert(hits >= 0 && hits <= 3, r)
+      assert(r.getDouble(3) == hits / 3.0, r)
+    }
+  }
+
   test("dedup_minhash_sig emits one signature row per document") {
     val n = SparkEntry.queries("dedup_minhash_sig")(spark, sfDir).count()
     val docs = Tables.t(spark, sfDir, "documents").count()

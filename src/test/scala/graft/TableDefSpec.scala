@@ -86,6 +86,18 @@ class TableDefSpec extends AnyFunSuite {
       Seq(Fails("INSERT INTO td6 VALUES (2, 'abcdef')", "1406"),
         Gives("SELECT * FROM td6", Seq(Seq("1", "a"))),
         Shows("td6", Seq("`s` varchar(3)", "PRIMARY KEY")))),
+    Case("a failed CREATE TEMPORARY TABLE leaves the base with its definition",
+      "CREATE TABLE pb (id INT PRIMARY KEY, s VARCHAR(3))",
+      Seq(Fails("CREATE TEMPORARY TABLE pb (s VARCHAR(3), s INT)", "1060"),
+        Fails("INSERT INTO pb VALUES (2, 'abcdef')", "1406"),
+        Shows("pb", Seq("`s` varchar(3)", "PRIMARY KEY")))),
+    Case("MODIFY rebuilds the column's definition from the new type",
+      """CREATE TABLE pm (id INT PRIMARY KEY, y YEAR, j JSON);
+        |ALTER TABLE pm MODIFY y INT;
+        |ALTER TABLE pm MODIFY j TEXT""".stripMargin,
+      Seq(Gives("INSERT INTO pm VALUES (1, 5, 'not json')", Seq(Seq("1"))),
+        Gives("SELECT y, j FROM pm", Seq(Seq("5", "not json"))),
+        Shows("pm", Seq("`y` int", "`j` text"), Seq("year", "json")))),
     Case("a SELECT * view describes its source's declared types",
       """CREATE TABLE td7 (id INT PRIMARY KEY, y YEAR, j JSON);
         |CREATE VIEW td7v AS SELECT * FROM td7""".stripMargin,
