@@ -2548,21 +2548,22 @@ object Dml {
   }
 
   /** One CREATE TABLE form: `build` declares and stores the table unless
-    * IF NOT EXISTS finds it there. A failed build leaves nothing behind:
-    * its entry goes (row_limit_queries.go re-runs CREATE with the same
-    * name), and a base table this CREATE TEMPORARY shadowed comes back
-    * with its entry, as on DROP. Removing the entry is safe against live
-    * tables: createPrecheck rejected any CREATE over an existing name,
-    * and moved a shadowed base's entry aside. */
+    * IF NOT EXISTS finds it there. A failed build leaves the name as it
+    * found it: a new table's entry goes (row_limit_queries.go re-runs
+    * CREATE with the same name), a base table this CREATE TEMPORARY
+    * shadowed comes back with its entry, as on DROP, and a temporary
+    * table it would have replaced keeps its own entry. (createPrecheck
+    * rejects any other CREATE over an existing name before `build`.) */
   private def createTable(e: Engine, table: String, ifNotExists: Boolean,
                           temporary: Boolean)(build: => Unit)
       : Option[DataFrame] = {
     val shadowedHere = temporary && !e.tempShadow.contains(table)
+    val before = e.tables.get(table)
     if (!createPrecheck(e, table, ifNotExists, temporary))
       try build
       catch { case ex: Throwable =>
-        e.tables.remove(table)
-        if (shadowedHere) e.unshadow(table)
+        if (!(shadowedHere && e.unshadow(table)))
+          before.fold(e.tables.remove(table))(d => e.tables.put(table, d))
         throw ex
       }
     Some(ok(e, 0L))
@@ -3171,192 +3172,24 @@ object Dml {
           e.renameColumnDef(table, stripTick(a), stripTick(b))
           df = df.withColumnRenamed(stripTick(a), stripTick(b))
         case Modify(cn, spec) =>
-          val dt = applyCollation(mysqlDataType(spec)._1, spec)
           val name = stripTick(cn)
-          // AUTO_INCREMENT stays integer-only through MODIFY too
-          // (script_queries.go "set with auto increment" ALTER asserts)
-          if ("""(?i)\bAUTO_INCREMENT\b""".r.findFirstIn(spec).isDefined) {
-            val mBase = spec.trim.toLowerCase
-              .takeWhile(c => c.isLetter || c == '_')
-            val autoIncOk = Set("tinyint", "smallint", "mediumint", "int",
-              "integer", "bigint", "bool", "boolean", "serial")
-            if (!autoIncOk(mBase))
-              throw new IllegalArgumentException(
-                s"Incorrect column specifier for column '$name' (MySQL 1063)")
-          }
           if (!originalCols(name.toLowerCase) ||
               renamedAway(name.toLowerCase))
             throw new IllegalArgumentException(
               s"table '$table' does not have column '$name' " +
               s"(MySQL 1054: multi-ALTER actions resolve against the " +
               s"statement-start schema)")
-          // FK-involved columns may only lengthen within the same base
-          // type (foreign_key_queries.go "MODIFY COLUMN type change"
-          // blocks: INT→MEDIUMINT rejected, VARCHAR(20)→(30) allowed)
-          if (e.fkChecksEnabled && e.foreignKeys.exists(f =>
-              (f.child == table &&
-                f.childCols.exists(_.equalsIgnoreCase(name))) ||
-              (f.parent == table &&
-                f.parentCols.exists(_.equalsIgnoreCase(name))))) {
-            val oldField = df.schema.fields
-              .find(_.name.equalsIgnoreCase(name)).get
-            val oldBase = e.renderColumnType(table, oldField)
-              .takeWhile(c => c.isLetter || c == '_').toLowerCase
-            val newBase = spec.trim.toLowerCase
-              .takeWhile(c => c.isLetter || c == '_')
-            val oldLimit = e.colDef(table, name).charLimit
-            val newLimit = """^[A-Za-z_]+\s*\(\s*(\d+)\s*\)""".r
-              .findFirstMatchIn(spec.trim).map(_.group(1).toInt)
-            val stringish =
-              Set("char", "varchar", "binary", "varbinary")(newBase)
-            // BinaryType renders as blob-family text, so BINARY/VARBINARY
-            // re-declarations compare family-wise
-            val binFam = Set("binary", "varbinary", "blob", "tinyblob",
-              "mediumblob", "longblob")
-            val baseOk = oldBase == newBase ||
-              (binFam(oldBase) && binFam(newBase))
-            val ok = baseOk && (!stringish ||
-              (oldLimit.isEmpty || newLimit.exists(_ >= oldLimit.get)))
-            if (!ok) throw new IllegalArgumentException(
-              s"Cannot change column '$name': used in a foreign key " +
-              "constraint (MySQL ErrForeignKeyTypeChange)")
-          }
-          // the new spec replaces the whole column definition: its
-          // declared attributes rebuild from nothing, as CREATE declares
-          // them, so no marker of the old type (YEAR, JSON, ENUM, …)
-          // outlives it. The FK check above reads the old definition.
-          e.alterCol(table, name)(_ => ColumnDef.Empty)
-          declareColumnType(e, table, name, columnTypeText(spec), spec)
-          recordSpecCollation(e, table, name, spec)
-          // MODIFY re-validates/declares an ON UPDATE clause exactly
-          // like a CREATE column def (OnUpdateExprScripts error cases)
-          parseOnUpdateClause(e, table, name, spec, dt)
-          extractGenerated(spec).foreach(g => e.declareGenerated(table,
-            name, g, """(?i)\bSTORED\b""".r.findFirstIn(spec).isDefined))
-          // MODIFY to a BLOB/TEXT family type while the column sits in
-          // any prefix-less key is 1170 (blob_queries.go BlobErrors
-          // "alter table mytable modify s blob")
-          if (e.colDef(table, name).blobText) {
-            val nl = name.toLowerCase
-            val d = e.tableDef(table)
-            val keyed =
-              d.key.getOrElse(Seq.empty).exists(_.equalsIgnoreCase(name)) ||
-              (d.uniques ++ d.indexes).exists { case (n, cs) =>
-                cs.exists(_.equalsIgnoreCase(name)) && !d.indexPrefixes.contains((n, nl))
-              }
-            if (keyed) throw new IllegalArgumentException(
-              s"blob/text column '$name' used in key specification " +
-              "without a key length (MySQL 1170)")
-          }
-          // MODIFY without the AUTO_INCREMENT attribute REMOVES it
-          // (alter_table_queries.go "ALTER TABLE remove AUTO_INCREMENT")
-          if (e.tableDef(table).autoInc.exists(_.equalsIgnoreCase(name)) &&
-              """(?i)\bAUTO_INCREMENT\b""".r.findFirstIn(spec).isEmpty) {
-            e.alterDef(table)(_.copy(autoInc = None, autoIncCounter = None, autoIncShown = None))
-          }
-          // MODIFY WITH the attribute declares the counter column — an
-          // `AUTO_INCREMENT = n` option later in the same statement (or
-          // the next generating INSERT) then sees it ("ALTER TABLE
-          // MULTI ADD/DROP COLUMN": MODIFY pk BIGINT AUTO_INCREMENT,
-          // AUTO_INCREMENT = 100)
-          if ("""(?i)\bAUTO_INCREMENT\b""".r.findFirstIn(spec).isDefined)
-            e.declareAutoInc(table, name)
-          // MODIFY may re-declare the DEFAULT and reposition the column
-          // (column_default_queries.go t22/t23: MODIFY ... DEFAULT (x) FIRST)
-          extractDefault(spec).foreach(d => e.declareDefault(table, name, d))
-          // the full column spec re-declares nullability; an FK with a
-          // SET NULL action pins the column nullable
-          // (ErrForeignKeyTypeChangeSetNull)
-          if ("""(?i)\bNOT\s+NULL\b""".r.findFirstIn(spec).isDefined) {
-            if (e.fkChecksEnabled && e.foreignKeys.exists(f =>
-                f.child == table &&
-                f.childCols.exists(_.equalsIgnoreCase(name)) &&
-                (f.onDelete == "SET NULL" || f.onUpdate == "SET NULL")))
-              throw new IllegalArgumentException(
-                s"Column '$name' backs a SET NULL foreign key action and " +
-                "cannot become NOT NULL (MySQL ErrForeignKeyTypeChangeSetNull)")
-            e.declareNotNull(table, name)
-          }
-          // integer re-declarations re-derive the UNSIGNED bound and
-          // validate EXISTING rows against the new range — MODIFY i2 int
-          // unsigned over a -1 value is sql.ErrValueOutOfRange
-          // (script_queries.go "alter table out of range value error of
-          // column type change")
-          locally {
-            val newBase = spec.trim.toLowerCase
-              .takeWhile(c => c.isLetter || c == '_')
-            val intBases = Map(
-              "tinyint" -> (BigDecimal(-128), BigDecimal(127)),
-              "smallint" -> (BigDecimal(-32768), BigDecimal(32767)),
-              "mediumint" -> (BigDecimal(-8388608), BigDecimal(8388607)),
-              "int" -> (BigDecimal(Int.MinValue), BigDecimal(Int.MaxValue)),
-              "integer" -> (BigDecimal(Int.MinValue), BigDecimal(Int.MaxValue)),
-              "bigint" -> (BigDecimal(Long.MinValue), BigDecimal(Long.MaxValue)))
-            if (intBases.contains(newBase)) {
-              val (lo, hi) = e.colDef(table, name).unsigned
-                .getOrElse(intBases(newBase))
-              val oldIsNumeric = df.schema.fields
-                .find(_.name.equalsIgnoreCase(name))
-                .exists(_.dataType.isInstanceOf[
-                  org.apache.spark.sql.types.NumericType])
-              if (oldIsNumeric) {
-                val bad = df.filter(col(s"`$name`") < lit(lo.underlying) ||
-                    col(s"`$name`") > lit(hi.underlying)).limit(1).count()
-                if (bad > 0) throw new IllegalArgumentException(
-                  s"Out of range value for column '$name' " +
-                  "(MySQL error 1264, sql.ErrValueOutOfRange)")
-              }
-            }
-          }
-          df = df.withColumn(name, col(s"`$name`").cast(dt))
-          val afterRe =
-            """(?is).*\bAFTER\s+(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)\s*$""".r
-          df = spec match {
-            case _ if spec.toUpperCase.trim.endsWith("FIRST") =>
-              df.select((col(s"`$name`") +: df.columns.filter(_ != name)
-                .map(c => col(s"`$c`")).toSeq): _*)
-            case afterRe(a) =>
-              val rest = df.columns.filter(_ != name)
-              val before = rest.takeWhile(_ != stripTick(a)) :+ stripTick(a)
-              val tail = rest.drop(before.length)
-              df.select((before.map(c => col(s"`$c`")) ++
-                Seq(col(s"`$name`")) ++ tail.map(c => col(s"`$c`"))).toSeq: _*)
-            case _ => df
-          }
+          df = redefineColumn(e, table, name, spec, df)
         case Change(a, b, spec) =>
-          // CHANGE = rename + MODIFY: the FK guards apply to the spec
-          // half too (foreign_key_queries.go "Disallow change column to
-          // nullable with ON UPDATE/DELETE SET NULL")
-          if ("""(?i)\bAUTO_INCREMENT\b""".r.findFirstIn(spec).isDefined) {
-            val cBase = spec.trim.toLowerCase
-              .takeWhile(c => c.isLetter || c == '_')
-            if (!Set("tinyint", "smallint", "mediumint", "int", "integer",
-                "bigint", "bool", "boolean", "serial")(cBase))
-              throw new IllegalArgumentException(
-                s"Incorrect column specifier for column " +
-                s"'${stripTick(b)}' (MySQL 1063)")
+          // CHANGE = rename + MODIFY: the renamed column is redefined
+          // whole, under the guards MODIFY applies
+          val (from, to) = (stripTick(a), stripTick(b))
+          if (!from.equalsIgnoreCase(to)) {
+            renamedAway += from.toLowerCase
+            e.renameColumnDef(table, from, to)
           }
-          if ("""(?i)\bNOT\s+NULL\b""".r.findFirstIn(spec).isDefined) {
-            if (e.fkChecksEnabled && e.foreignKeys.exists(f =>
-                f.child == table &&
-                f.childCols.exists(_.equalsIgnoreCase(stripTick(a))) &&
-                (f.onDelete == "SET NULL" || f.onUpdate == "SET NULL")))
-              throw new IllegalArgumentException(
-                s"Column '${stripTick(a)}' backs a SET NULL foreign key " +
-                "action and cannot become NOT NULL " +
-                "(MySQL ErrForeignKeyTypeChangeSetNull)")
-          }
-          if (!stripTick(a).equalsIgnoreCase(stripTick(b))) {
-            renamedAway += stripTick(a).toLowerCase
-            e.renameColumnDef(table, stripTick(a), stripTick(b))
-          }
-          if ("""(?i)\bNOT\s+NULL\b""".r.findFirstIn(spec).isDefined)
-            e.declareNotNull(table, stripTick(b))
-          else e.alterCol(table, stripTick(b))(_.copy(notNull = false))
-          recordSpecCollation(e, table, stripTick(b), spec)
-          val dt = applyCollation(mysqlDataType(spec)._1, spec)
-          df = df.withColumn(stripTick(a), col(s"`${stripTick(a)}`").cast(dt))
-            .withColumnRenamed(stripTick(a), stripTick(b))
+          df = redefineColumn(e, table, to, spec,
+            df.withColumnRenamed(from, to))
         case a if """(?is)^RENAME\s+CONSTRAINT\s+(?:FOREIGN\s+KEY\s+)?\S+\s+TO\s+\S+$""".r
             .matches(a.trim) =>
           // ALTER TABLE t RENAME CONSTRAINT [FOREIGN KEY] old TO new
@@ -3394,6 +3227,160 @@ object Dml {
         e.spark.catalog.dropTempView(table)
         e.refreshViews(table)
       case None => e.replaceTable(table, df, bumpDepth = true)
+    }
+  }
+
+  /** ALTER TABLE … MODIFY / CHANGE: `spec` redefines column `name` of
+    * `df` (after CHANGE has renamed it) from nothing, as a CREATE column
+    * definition declares it, and returns the frame with the column cast
+    * to the new type and placed per FIRST/AFTER. */
+  private def redefineColumn(e: Engine, table: String, name: String,
+                             spec: String, df0: DataFrame): DataFrame = {
+    var df = df0
+    val dt = applyCollation(mysqlDataType(spec)._1, spec)
+    // AUTO_INCREMENT stays integer-only through MODIFY/CHANGE too
+    // (script_queries.go "set with auto increment" ALTER asserts)
+    if ("""(?i)\bAUTO_INCREMENT\b""".r.findFirstIn(spec).isDefined) {
+      val mBase = spec.trim.toLowerCase
+        .takeWhile(c => c.isLetter || c == '_')
+      val autoIncOk = Set("tinyint", "smallint", "mediumint", "int",
+        "integer", "bigint", "bool", "boolean", "serial")
+      if (!autoIncOk(mBase))
+        throw new IllegalArgumentException(
+          s"Incorrect column specifier for column '$name' (MySQL 1063)")
+    }
+    // FK-involved columns may only lengthen within the same base
+    // type (foreign_key_queries.go "MODIFY COLUMN type change"
+    // blocks: INT→MEDIUMINT rejected, VARCHAR(20)→(30) allowed)
+    if (e.fkChecksEnabled && e.foreignKeys.exists(f =>
+        (f.child == table &&
+          f.childCols.exists(_.equalsIgnoreCase(name))) ||
+        (f.parent == table &&
+          f.parentCols.exists(_.equalsIgnoreCase(name))))) {
+      val oldField = df.schema.fields
+        .find(_.name.equalsIgnoreCase(name)).get
+      val oldBase = e.renderColumnType(table, oldField)
+        .takeWhile(c => c.isLetter || c == '_').toLowerCase
+      val newBase = spec.trim.toLowerCase
+        .takeWhile(c => c.isLetter || c == '_')
+      val oldLimit = e.colDef(table, name).charLimit
+      val newLimit = """^[A-Za-z_]+\s*\(\s*(\d+)\s*\)""".r
+        .findFirstMatchIn(spec.trim).map(_.group(1).toInt)
+      val stringish =
+        Set("char", "varchar", "binary", "varbinary")(newBase)
+      // BinaryType renders as blob-family text, so BINARY/VARBINARY
+      // re-declarations compare family-wise
+      val binFam = Set("binary", "varbinary", "blob", "tinyblob",
+        "mediumblob", "longblob")
+      val baseOk = oldBase == newBase ||
+        (binFam(oldBase) && binFam(newBase))
+      val ok = baseOk && (!stringish ||
+        (oldLimit.isEmpty || newLimit.exists(_ >= oldLimit.get)))
+      if (!ok) throw new IllegalArgumentException(
+        s"Cannot change column '$name': used in a foreign key " +
+        "constraint (MySQL ErrForeignKeyTypeChange)")
+    }
+    // the new spec replaces the whole column definition: its
+    // declared attributes rebuild from nothing, as CREATE declares
+    // them, so no marker of the old type (YEAR, JSON, ENUM, …)
+    // outlives it. The FK check above reads the old definition.
+    e.alterCol(table, name)(_ => ColumnDef.Empty)
+    declareColumnType(e, table, name, columnTypeText(spec), spec)
+    recordSpecCollation(e, table, name, spec)
+    // MODIFY re-validates/declares an ON UPDATE clause exactly
+    // like a CREATE column def (OnUpdateExprScripts error cases)
+    parseOnUpdateClause(e, table, name, spec, dt)
+    extractGenerated(spec).foreach(g => e.declareGenerated(table,
+      name, g, """(?i)\bSTORED\b""".r.findFirstIn(spec).isDefined))
+    // MODIFY to a BLOB/TEXT family type while the column sits in
+    // any prefix-less key is 1170 (blob_queries.go BlobErrors
+    // "alter table mytable modify s blob")
+    if (e.colDef(table, name).blobText) {
+      val nl = name.toLowerCase
+      val d = e.tableDef(table)
+      val keyed =
+        d.key.getOrElse(Seq.empty).exists(_.equalsIgnoreCase(name)) ||
+        (d.uniques ++ d.indexes).exists { case (n, cs) =>
+          cs.exists(_.equalsIgnoreCase(name)) && !d.indexPrefixes.contains((n, nl))
+        }
+      if (keyed) throw new IllegalArgumentException(
+        s"blob/text column '$name' used in key specification " +
+        "without a key length (MySQL 1170)")
+    }
+    // MODIFY without the AUTO_INCREMENT attribute REMOVES it
+    // (alter_table_queries.go "ALTER TABLE remove AUTO_INCREMENT")
+    if (e.tableDef(table).autoInc.exists(_.equalsIgnoreCase(name)) &&
+        """(?i)\bAUTO_INCREMENT\b""".r.findFirstIn(spec).isEmpty) {
+      e.alterDef(table)(_.copy(autoInc = None, autoIncCounter = None, autoIncShown = None))
+    }
+    // MODIFY WITH the attribute declares the counter column — an
+    // `AUTO_INCREMENT = n` option later in the same statement (or
+    // the next generating INSERT) then sees it ("ALTER TABLE
+    // MULTI ADD/DROP COLUMN": MODIFY pk BIGINT AUTO_INCREMENT,
+    // AUTO_INCREMENT = 100)
+    if ("""(?i)\bAUTO_INCREMENT\b""".r.findFirstIn(spec).isDefined)
+      e.declareAutoInc(table, name)
+    // MODIFY may re-declare the DEFAULT and reposition the column
+    // (column_default_queries.go t22/t23: MODIFY ... DEFAULT (x) FIRST)
+    extractDefault(spec).foreach(d => e.declareDefault(table, name, d))
+    // the full column spec re-declares nullability; an FK with a
+    // SET NULL action pins the column nullable
+    // (ErrForeignKeyTypeChangeSetNull)
+    if ("""(?i)\bNOT\s+NULL\b""".r.findFirstIn(spec).isDefined) {
+      if (e.fkChecksEnabled && e.foreignKeys.exists(f =>
+          f.child == table &&
+          f.childCols.exists(_.equalsIgnoreCase(name)) &&
+          (f.onDelete == "SET NULL" || f.onUpdate == "SET NULL")))
+        throw new IllegalArgumentException(
+          s"Column '$name' backs a SET NULL foreign key action and " +
+          "cannot become NOT NULL (MySQL ErrForeignKeyTypeChangeSetNull)")
+      e.declareNotNull(table, name)
+    }
+    // integer re-declarations re-derive the UNSIGNED bound and
+    // validate EXISTING rows against the new range — MODIFY i2 int
+    // unsigned over a -1 value is sql.ErrValueOutOfRange
+    // (script_queries.go "alter table out of range value error of
+    // column type change")
+    locally {
+      val newBase = spec.trim.toLowerCase
+        .takeWhile(c => c.isLetter || c == '_')
+      val intBases = Map(
+        "tinyint" -> (BigDecimal(-128), BigDecimal(127)),
+        "smallint" -> (BigDecimal(-32768), BigDecimal(32767)),
+        "mediumint" -> (BigDecimal(-8388608), BigDecimal(8388607)),
+        "int" -> (BigDecimal(Int.MinValue), BigDecimal(Int.MaxValue)),
+        "integer" -> (BigDecimal(Int.MinValue), BigDecimal(Int.MaxValue)),
+        "bigint" -> (BigDecimal(Long.MinValue), BigDecimal(Long.MaxValue)))
+      if (intBases.contains(newBase)) {
+        val (lo, hi) = e.colDef(table, name).unsigned
+          .getOrElse(intBases(newBase))
+        val oldIsNumeric = df.schema.fields
+          .find(_.name.equalsIgnoreCase(name))
+          .exists(_.dataType.isInstanceOf[
+            org.apache.spark.sql.types.NumericType])
+        if (oldIsNumeric) {
+          val bad = df.filter(col(s"`$name`") < lit(lo.underlying) ||
+              col(s"`$name`") > lit(hi.underlying)).limit(1).count()
+          if (bad > 0) throw new IllegalArgumentException(
+            s"Out of range value for column '$name' " +
+            "(MySQL error 1264, sql.ErrValueOutOfRange)")
+        }
+      }
+    }
+    df = df.withColumn(name, col(s"`$name`").cast(dt))
+    val afterRe =
+      """(?is).*\bAFTER\s+(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)\s*$""".r
+    spec match {
+      case _ if spec.toUpperCase.trim.endsWith("FIRST") =>
+        df.select((col(s"`$name`") +: df.columns.filter(_ != name)
+          .map(c => col(s"`$c`")).toSeq): _*)
+      case afterRe(a) =>
+        val rest = df.columns.filter(_ != name)
+        val before = rest.takeWhile(_ != stripTick(a)) :+ stripTick(a)
+        val tail = rest.drop(before.length)
+        df.select((before.map(c => col(s"`$c`")) ++
+          Seq(col(s"`$name`")) ++ tail.map(c => col(s"`$c`"))).toSeq: _*)
+      case _ => df
     }
   }
 

@@ -131,7 +131,8 @@ final case class TableDef(
   def keyLower: Set[String] = key.getOrElse(Seq.empty).map(_.toLowerCase).toSet
 
   /** RENAME/CHANGE COLUMN: the column's declarations, key and index
-    * memberships and AUTO_INCREMENT follow the new name, in place. */
+    * memberships, index prefix lengths and AUTO_INCREMENT follow the new
+    * name, in place. */
   def renameCol(from: String, to: String): TableDef = {
     def ren(c: String): String = if (c.equalsIgnoreCase(from)) to else c
     val fl = from.toLowerCase
@@ -140,6 +141,8 @@ final case class TableDef(
       key = key.map(_.map(ren)),
       uniques = uniques.map { case (n, cs) => (n, cs.map(ren)) },
       indexes = indexes.map { case (n, cs) => (n, cs.map(ren)) },
+      indexPrefixes = indexPrefixes.map { case ((n, c), l) =>
+        (n, if (c == fl) to.toLowerCase else c) -> l },
       autoInc = autoInc.map(ren),
       stats = stats.map { case (c, h) => (if (c == fl) to.toLowerCase else c) -> h })
   }

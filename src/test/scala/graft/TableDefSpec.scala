@@ -91,6 +91,27 @@ class TableDefSpec extends AnyFunSuite {
       Seq(Fails("CREATE TEMPORARY TABLE pb (s VARCHAR(3), s INT)", "1060"),
         Fails("INSERT INTO pb VALUES (2, 'abcdef')", "1406"),
         Shows("pb", Seq("`s` varchar(3)", "PRIMARY KEY")))),
+    Case("a failed CREATE TEMPORARY TABLE over a temporary table leaves it with its definition",
+      """CREATE TABLE pbt (id INT PRIMARY KEY, s VARCHAR(3));
+        |CREATE TEMPORARY TABLE pbt (id INT PRIMARY KEY, s VARCHAR(4))""".stripMargin,
+      Seq(Fails("CREATE TEMPORARY TABLE pbt (s VARCHAR(3), s INT)", "1060"),
+        Fails("INSERT INTO pbt VALUES (2, 'abcdef')", "1406"),
+        Shows("pbt", Seq("`s` varchar(4)", "PRIMARY KEY")))),
+    Case("CHANGE rebuilds the column's definition from the new type",
+      """CREATE TABLE pc (id INT PRIMARY KEY, y YEAR, j JSON, s VARCHAR(3));
+        |ALTER TABLE pc CHANGE y y INT;
+        |ALTER TABLE pc CHANGE j j TEXT;
+        |ALTER TABLE pc CHANGE s s2 VARCHAR(10)""".stripMargin,
+      Seq(Gives("INSERT INTO pc VALUES (1, 5, 'not json', 'abcdefgh')", Seq(Seq("1"))),
+        Fails("INSERT INTO pc VALUES (2, 5, 'x', 'abcdefghijk')", "1406"),
+        Gives("SELECT y, j, s2 FROM pc", Seq(Seq("5", "not json", "abcdefgh"))),
+        Shows("pc", Seq("`y` int", "`j` text", "`s2` varchar(10)"),
+          Seq("year", "json", "varchar(3)")))),
+    Case("a renamed column keeps its index prefix length",
+      """CREATE TABLE pcp (id INT PRIMARY KEY, b TEXT, KEY kb (b(4)));
+        |ALTER TABLE pcp CHANGE b b2 TEXT;
+        |ALTER TABLE pcp RENAME COLUMN b2 TO b3""".stripMargin,
+      Seq(Shows("pcp", Seq("`b3`(4)")))),
     Case("MODIFY rebuilds the column's definition from the new type",
       """CREATE TABLE pm (id INT PRIMARY KEY, y YEAR, j JSON);
         |ALTER TABLE pm MODIFY y INT;

@@ -70,8 +70,6 @@ def main():
     ap.add_argument("log")
     ap.add_argument("--since", default="")
     ap.add_argument("--until", default="")
-    ap.add_argument("--top", type=int, default=20,
-                    help="repeated sources to list (default 20, 0 for all)")
     a = ap.parse_args()
     compiles = collections.Counter()
     threads = collections.defaultdict(collections.Counter)
@@ -94,7 +92,7 @@ def main():
     print(f"compile ms: {ms:.1f}")
     print(f"sources compiled more than once: {len(repeated)} "
           f"({sum(n for n, _ in repeated)} compiles)")
-    for n, src in repeated[:a.top or None]:
+    for n, src in repeated:
         by = ", ".join(f"{k} {v}" for k, v in sorted(threads[src].items()))
         print(f"  {n:4d}  [{by}]  {label(src)[:100]}")
 
