@@ -1732,9 +1732,8 @@ class Engine(val spark: SparkSession) {
       val path = s"$dir/$n.parquet"
       val body =
         if (n == "events") {
-          val isNanoLong =
-            spark.read.parquet(path).schema("ts").dataType ==
-              org.apache.spark.sql.types.LongType
+          val isNanoLong = Tables.schema(spark, path)
+            .exists(_("ts").dataType == org.apache.spark.sql.types.LongType)
           if (isNanoLong)
             s"SELECT * EXCEPT (ts), timestamp_micros(ts div 1000) AS ts FROM parquet.`$path`"
           else
@@ -1887,7 +1886,7 @@ class Engine(val spark: SparkSession) {
     snapshotCounters(table) = v
     val path = durablePath(s"${table}__asof_$v")
     spark.table(table).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path).createOrReplaceTempView(s"${table}__asof_$v")
+    Tables.read(spark, path).createOrReplaceTempView(s"${table}__asof_$v")
     v
   }
 
@@ -2974,7 +2973,7 @@ class Engine(val spark: SparkSession) {
       val g = insertGen(table) + 1
       val path = durablePath(s"${table}__ins_$g")
       df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path).createOrReplaceTempView(table)
+      Tables.read(spark, path).createOrReplaceTempView(table)
       insertGen(table) = g
       insertDepth(table) = 0
     }
@@ -4586,7 +4585,7 @@ class Engine(val spark: SparkSession) {
           base.csv(kept)
         }
       case "json" => spark.read.json(path) // JSON-lines
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => Tables.read(spark, path)
       case other => throw new IllegalArgumentException(s"LOAD DATA format $other")
     }
     // an existing declared table keeps its schema and its rows: fields

@@ -134,7 +134,9 @@ object Dedup {
     // Capped driver-local fast path (the RecursiveCte.collectSmall
     // precedent, same budget reasoning as a broadcast join's driver-side
     // build): probe the edge list with limit(cap+1). At or under the cap
-    // (default 1M edges ≈ 16 MB of longs) union-find labels the graph in
+    // (default 1M edges, collected as boxed `Row`s of two boxed longs:
+    // ~80 bytes an edge, so ~80 MB, plus a boxed map entry and a boxed
+    // long per vertex in `idx` and `ids`) union-find labels the graph in
     // milliseconds where every distributed round is a scheduled join+
     // reduce job — the dominant cost of small candidate graphs. Past the
     // cap the probe stops at cap+1 rows and the pointer-doubling loop
@@ -177,7 +179,9 @@ object Dedup {
         val rows = (0 until n).map(i =>
           org.apache.spark.sql.Row(ids(i), minLbl(find(i))))
         import scala.jdk.CollectionConverters._
-        return (spark.createDataFrame(rows.asJava, outSchema), 0)
+        // one partition, like a one-split table (Tables.read): the
+        // operators above the labels plan no exchange
+        return (spark.createDataFrame(rows.asJava, outSchema).coalesce(1), 0)
       }
     }
     import org.apache.spark.HashPartitioner

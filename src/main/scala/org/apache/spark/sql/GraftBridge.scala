@@ -48,8 +48,17 @@ object GraftBridge {
   def normalizeFloats(e: Expression): Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
-  /** The session's autoBroadcastJoinThreshold in bytes (-1 = disabled). */
-  def autoBroadcastThreshold(spark: SparkSession): Long =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold
+  /** The session's SQL settings. */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  /** A Hadoop configuration carrying the session's settings, as a file
+    * source builds one for its reads. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Whether a file source's listing skips a file of this name: `_`- and
+    * `.`-prefixed names (`_SUCCESS`, `.crc`) but the parquet summaries. */
+  def hiddenFile(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

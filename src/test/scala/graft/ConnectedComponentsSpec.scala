@@ -61,6 +61,21 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     CacheScope.drain()
   }
 
+  test("driver-local labels are one partition and equal the distributed loop's") {
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L), (9L, 9L)).toDF("src", "dst")
+    val (localL, localRounds) = operators.Dedup.connectedComponents(edges)
+    val (distL, _) = operators.Dedup.connectedComponents(edges, localEdgeCap = 0)
+    assert(localRounds == 0)
+    assert(localL.queryExecution.executedPlan.outputPartitioning ==
+      org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
+    assert(localL.rdd.getNumPartitions == 1)
+    val a = localL.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val b = distL.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(a === b)
+    assert(a == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 9L))
+    CacheScope.drain()
+  }
+
   test("edge list one past the cap hands off to the distributed loop") {
     val edges = (0L until 20L).map(i => (i, i + 1)).toDF("src", "dst")
     val (labels, rounds) =
